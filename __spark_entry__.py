@@ -11832,58 +11832,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # gets driver confirmation the moment that cohort re-enters (~r9).
     # Keys and aliases unchanged.
     return {
-        # -- last driver-recorded in round 8 -----------------------------------
-        "x33_domain_cap": _q_x33_domain_cap,
-        "x34_source_mix": _q_x34_source_mix,
-        "x35_salted_agg": _q_x35_salted_agg,
-        "x36_incremental_dedup": _q_x36_incremental_dedup,
-        "x37_pagerank": _q_x37_pagerank,
-        "x38_curation_pipeline": _q_x38_curation_pipeline,
-        "x39_dsir_importance": _q_x39_dsir_importance,
-        "x40_dedup_audit": _q_x40_dedup_audit,
-        "x41_source_mix_epochs": _q_x41_source_mix_epochs,
-        "s1_stream_daily": _q_s1_stream_daily,
-        "s3_stream_dedup": _q_s3_stream_dedup,
-        "s4_stream_join": _q_s4_stream_join,
-        "s5_stream_granules": _q_s5_stream_granules,
-        "s6_stream_screen": _q_s6_stream_screen,
-        "s7_stream_static_dedup": _q_s7_stream_static_dedup,
-        "m11_catalog": _q_m11_catalog,
-        "s12_hdf4_chunked_scan": _q_s12_hdf4_chunked_scan,
-        "x42_bm25": _q_x42_bm25,
-        "x43_ewma": _q_x43_ewma,
-        "x44_zorder": _q_x44_zorder,
-        "x45_weighted_sample": _q_x45_weighted_sample,
-        "x46_cdc_chunks": _q_x46_cdc_chunks,
-        "x47_zscore_outliers": _q_x47_zscore_outliers,
-        "x48_resample_interp": _q_x48_resample_interp,
-        "x49_triangles": _q_x49_triangles,
-        "x50_bigram_lm": _q_x50_bigram_lm,
-        "x51_dup_spans": _q_x51_dup_spans,
-        "x52_semdedup": _q_x52_semdedup,
-        "x53_lm_score": _q_x53_lm_score,
-        "x54_editdist_join": _q_x54_editdist_join,
         # -- last driver-recorded in round 9 -----------------------------------
-        "x75_kmeans_train": _q_x75_kmeans_train,
-        "x95_cms_sketch": _q_x95_cms_sketch,
-        "x96_kneser_ney": _q_x96_kneser_ney,
-        "x97_bm25_retrieval": _q_x97_bm25_retrieval,
-        "x98_hard_negatives": _q_x98_hard_negatives,
-        "x99_line_dedup": _q_x99_line_dedup,
-        "x100_embedding_covariance": _q_x100_embedding_covariance,
-        "x101_leakfree_split": _q_x101_leakfree_split,
-        "s21_stream_cms": _q_s21_stream_cms,
-        "x93_minhash_index_update": _q_x93_minhash_index_update,
-        "x94_bpe_train_batched": _q_x94_bpe_train_batched,
-        "x55_pmi_collocations": _q_x55_pmi_collocations,
-        "x56_pq_codes": _q_x56_pq_codes,
-        "x57_pq_adc_topk": _q_x57_pq_adc_topk,
-        "x58_overlap_matrix": _q_x58_overlap_matrix,
-        "x59_hash_embed": _q_x59_hash_embed,
-        "s8_stream_sessions": _q_s8_stream_sessions,
-        "r38_window_navigation": _q_r38_window_navigation,
-        "r39_grouping_sets": _q_r39_grouping_sets,
-        "r40_range_frame": _q_r40_range_frame,
         "r41_bag_setops": _q_r41_bag_setops,
         "r42_null_semantics": _q_r42_null_semantics,
         "x60_dup_spans_materialized": _q_x60_dup_spans_materialized,
@@ -12067,6 +12016,57 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "x30_dedup_canonical": _q_x30_dedup_canonical,
         "x31_c4_clean": _q_x31_c4_clean,
         "x32_gopher_quality": _q_x32_gopher_quality,
+        # -- last driver-recorded in round 13 ----------------------------------
+        "x75_kmeans_train": _q_x75_kmeans_train,
+        "x33_domain_cap": _q_x33_domain_cap,
+        "x34_source_mix": _q_x34_source_mix,
+        "x35_salted_agg": _q_x35_salted_agg,
+        "x36_incremental_dedup": _q_x36_incremental_dedup,
+        "x37_pagerank": _q_x37_pagerank,
+        "x38_curation_pipeline": _q_x38_curation_pipeline,
+        "x39_dsir_importance": _q_x39_dsir_importance,
+        "x40_dedup_audit": _q_x40_dedup_audit,
+        "x41_source_mix_epochs": _q_x41_source_mix_epochs,
+        "s1_stream_daily": _q_s1_stream_daily,
+        "s3_stream_dedup": _q_s3_stream_dedup,
+        "s4_stream_join": _q_s4_stream_join,
+        "s5_stream_granules": _q_s5_stream_granules,
+        "s6_stream_screen": _q_s6_stream_screen,
+        "s7_stream_static_dedup": _q_s7_stream_static_dedup,
+        "m11_catalog": _q_m11_catalog,
+        "s12_hdf4_chunked_scan": _q_s12_hdf4_chunked_scan,
+        "x42_bm25": _q_x42_bm25,
+        "x43_ewma": _q_x43_ewma,
+        "x44_zorder": _q_x44_zorder,
+        "x45_weighted_sample": _q_x45_weighted_sample,
+        "x46_cdc_chunks": _q_x46_cdc_chunks,
+        "x47_zscore_outliers": _q_x47_zscore_outliers,
+        "x48_resample_interp": _q_x48_resample_interp,
+        "x49_triangles": _q_x49_triangles,
+        "x50_bigram_lm": _q_x50_bigram_lm,
+        "x51_dup_spans": _q_x51_dup_spans,
+        "x52_semdedup": _q_x52_semdedup,
+        "x53_lm_score": _q_x53_lm_score,
+        "x54_editdist_join": _q_x54_editdist_join,
+        "x95_cms_sketch": _q_x95_cms_sketch,
+        "x96_kneser_ney": _q_x96_kneser_ney,
+        "x97_bm25_retrieval": _q_x97_bm25_retrieval,
+        "x98_hard_negatives": _q_x98_hard_negatives,
+        "x99_line_dedup": _q_x99_line_dedup,
+        "x100_embedding_covariance": _q_x100_embedding_covariance,
+        "x101_leakfree_split": _q_x101_leakfree_split,
+        "s21_stream_cms": _q_s21_stream_cms,
+        "x93_minhash_index_update": _q_x93_minhash_index_update,
+        "x94_bpe_train_batched": _q_x94_bpe_train_batched,
+        "x55_pmi_collocations": _q_x55_pmi_collocations,
+        "x56_pq_codes": _q_x56_pq_codes,
+        "x57_pq_adc_topk": _q_x57_pq_adc_topk,
+        "x58_overlap_matrix": _q_x58_overlap_matrix,
+        "x59_hash_embed": _q_x59_hash_embed,
+        "s8_stream_sessions": _q_s8_stream_sessions,
+        "r38_window_navigation": _q_r38_window_navigation,
+        "r39_grouping_sets": _q_r39_grouping_sets,
+        "r40_range_frame": _q_r40_range_frame,
     }
 
 

@@ -32,3 +32,16 @@ def cloud_mask_flag(cm_raw: Column) -> Column:
     flag = bit_field(cm_raw, 1, 2)
     status = bit_field(cm_raw, 0, 1)
     return F.when(status == 0, F.lit(-1)).otherwise(flag).cast("int")
+
+
+def cloudy_flag(cm: Column) -> Column:
+    """1 where the decoded flag is cloudy or probably cloudy (0 <= cm <= 1),
+    else 0 — one pixel's contribution to CLD_pix (reference
+    ``aggregate_functions.py:366-368``)."""
+    return F.when(cm.between(0, 1), 1).otherwise(0)
+
+
+def determined_flag(cm: Column) -> Column:
+    """1 where the cloud mask was determined (0 <= cm <= 3), else 0 — one
+    pixel's contribution to TOT_pix."""
+    return F.when(cm.between(0, 3), 1).otherwise(0)

@@ -22,7 +22,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from modis_aggregation_spark.config import AggregationSpec
-from modis_aggregation_spark.functions.bits import cloud_mask_flag
+from modis_aggregation_spark.functions.bits import (
+    cloud_mask_flag,
+    cloudy_flag,
+    determined_flag,
+)
 from modis_aggregation_spark.functions.grid import cell_id
 
 
@@ -131,9 +135,7 @@ def cloud_fraction(
     fraction = ratio of sums ΣCLD/ΣTOT (``:706``) — pixel-weighted, NOT the
     mean of per-granule fractions.
     """
-    cm = F.col("cm")
-    cld = F.when(cm.between(0, 1), 1).otherwise(0)
-    tot = F.when(cm.between(0, 3), 1).otherwise(0)
+    cld, tot = cloudy_flag(F.col("cm")), determined_flag(F.col("cm"))
     return pixels_with_cell_cm.groupBy(*group_cols).agg(
         F.sum(cld).alias("cld_pix"),
         F.sum(tot).alias("tot_pix"),
@@ -152,9 +154,7 @@ def cloud_fraction_minmax(
     (``aggregate_functions.py:369,378-380`` feeding ``:231-237``).
     Both shuffles are on (cell, granule) then (cell) — tiny key spaces.
     """
-    cm = F.col("cm")
-    cld = F.when(cm.between(0, 1), 1).otherwise(0)
-    tot = F.when(cm.between(0, 3), 1).otherwise(0)
+    cld, tot = cloudy_flag(F.col("cm")), determined_flag(F.col("cm"))
     per_granule = pixels_with_cell_cm.groupBy("cell", granule_col).agg(
         (F.sum(cld) / F.nullif(F.sum(tot), F.lit(0))).alias("granule_cf")
     )

@@ -8,25 +8,31 @@ ONE declarative DataFrame plan:
     catalog (broadcast) ⋈ pixels
       → day-definition nulling (P4)
       → bbox/sampling filter + cell id (P2, S9, A1)
-      → single groupBy(cell).agg(
-            per-variable min/max/sum/count/mean/std/sumsq,   A3-A8
-            cloudy/total pixel counts + CF ratio,            A11-A12
-            per-variable ARRAY histograms,                   A9
-            joint ARRAY histograms,                          A10
-            granule count,                                   A14
+      → stage 1, one accumulator per granule (the reference's per-granule
+        buffers): groupBy(cell, granule).agg(
+            cloudy/determined pixel counts,
+            per-variable min/max/sum/count/sumsq,
+            histogram + joint-histogram bucket counts,
         )
-      ⟕ two-level per-granule CF extremes (A13)
+      → stage 2, the fmin/fmax/+ merge: groupBy(cell).agg(
+            per-variable min/max/sum/count/sumsq + mean/std,  A3-A8
+            cloudy/total pixel counts + CF ratio,             A11-A12
+            ARRAY histograms, joint ARRAY histograms,         A9-A10
+            per-granule CF min/max/std/hist,                  A13
+            granule count,                                    A14
+        )
       → densify to the full grid (J3)
 
-Scale notes: exactly two shuffles — the main hash aggregation (≤ ncells
-groups; partial aggregation makes shuffle volume O(partitions × cells),
-independent of pixel count) and the (cell, granule) pre-aggregation for CF
-extremes (≤ cells × granules-per-cell groups). The catalog join is
-broadcast; densification joins a generated dimension against the tiny
-aggregate. Everything else is narrow and whole-stage-codegen'd; the scan
-dominates and scales embarrassingly with granule count, which is the same
-property the reference's file-level MPI/Dask partitioning exploits
-(``MODIS_Aggregation_MPI.py:52-63``).
+Scale notes: the pixels are scanned (and, over granule files, decoded) once
+and shuffled twice. The (cell, granule) aggregation has ≤ cells ×
+granules-per-cell groups; partial aggregation makes its shuffle volume
+O(partitions × those groups), independent of pixel count. The cell merge
+shuffles at most one row per (cell, granule). Nothing is joined except the
+broadcast catalog and the densify, which joins a generated dimension
+against the tiny aggregate. Everything else is narrow and
+whole-stage-codegen'd; the scan dominates and scales embarrassingly with
+granule count, which is the same property the reference's file-level
+MPI/Dask partitioning exploits (``MODIS_Aggregation_MPI.py:52-63``).
 
 ``strict_compat=True`` reproduces reference quirks where feasible:
 * Q1 — the CF 1-D histogram stays all-zero (the reference never adds to it,
@@ -36,7 +42,7 @@ property the reference's file-level MPI/Dask partitioning exploits
   counts (``:251-252,711``); correct mode is the population std of
   per-granule fractions.
 * Q5 — GRID_Counts counts (granule, variable-with-valid-data) pairs plus
-  the CF call (``:245-247``); correct mode is count(DISTINCT granule_id).
+  the CF call (``:245-247``); correct mode counts granules.
 (Q6's sampling-offset mismatch is intentionally NOT reproduced — it would
 pair measures with another column's geolocation; the engine documents the
 single consistent offset. SURVEY §2.8.)
@@ -44,10 +50,11 @@ single consistent offset. SURVEY §2.8.)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from modis_aggregation_spark.config import AggregationSpec
+from modis_aggregation_spark.functions.bits import cloudy_flag, determined_flag
 from modis_aggregation_spark.functions.dayrules import day_definition_condition
 from modis_aggregation_spark.functions.histogram import hist_bucket
 from modis_aggregation_spark.operators.densify import densify
@@ -88,143 +95,130 @@ def prepare_pixels(
     return with_cell(df, spec)
 
 
-def _stat_exprs_for(spec: AggregationSpec) -> list:
-    """Aggregate expressions for the single main pass."""
-    exprs: list = []
-    cm = F.col("cm")
-    cld = F.when(cm.between(0, 1), 1).otherwise(0)
-    tot = F.when(cm.between(0, 3), 1).otherwise(0)
+def _finalize_moments(
+    total: Column, count: Column, sumsq: Column | None = None
+) -> tuple[Column, Column | None]:
+    """``mean = Σv/n`` and population ``std = sqrt(Σv²/n − mean²)`` from
+    merged partials — the reference's finalize
+    (``aggregate_functions.py:250-254,711``). std is None without ``sumsq``.
 
+    The count>0 guard keeps greatest() (which skips NULLs) from turning an
+    empty cell's NULL std into 0.0.
+    """
+    n = F.nullif(count, F.lit(0))
+    mean = total / n
+    if sumsq is None:
+        return mean, None
+    return mean, F.when(count > 0, F.sqrt(F.greatest(sumsq / n - mean * mean, F.lit(0.0))))
+
+
+def _accumulators(spec: AggregationSpec) -> tuple[list, list]:
+    """(stage 1, stage 2) aggregate expressions, built side by side.
+
+    Stage 1 runs per (cell, granule) over the pixels: one accumulator per
+    granule — cloudy/determined pixel counts, per-variable min/max/sum/
+    count/Σv², histogram and joint-histogram bucket counts as flat long
+    columns. Stage 2 runs per cell over those rows: it merges them
+    (fmin/fmax/+), finalizes mean/std, and computes every per-granule CF
+    statistic (A13, A14, Q1/Q2/Q5) from the same rows.
+    """
+    partials: list = []
+    merges: list = []
+
+    def merge_of(name: str, partial: Column, merge) -> Column:
+        """Add a stage-1 partial; return its stage-2 merge."""
+        partials.append(partial.alias(name))
+        return merge(name)
+
+    def bucket_counts(name: str, preds: list) -> Column:
+        return F.array(
+            *[merge_of(f"{name}_{i}", F.count(F.when(p, 1)), F.sum) for i, p in enumerate(preds)]
+        )
+
+    has_std = "Standard_Deviation" in spec.stats
     for v in spec.physical_variables():
-        c = F.col(v.name)
-        n = v.name
+        c, n = F.col(v.name), v.name
         if "Minimum" in spec.stats:
-            exprs.append(F.min(c).alias(f"{n}_min"))
+            merges.append(merge_of(f"{n}_min", F.min(c), F.min).alias(f"{n}_min"))
         if "Maximum" in spec.stats:
-            exprs.append(F.max(c).alias(f"{n}_max"))
-        # sum/count/sumsq are the mergeable partials; mean/std finalized here
-        exprs.append(F.sum(c).alias(f"{n}_sum"))
-        exprs.append(F.count(c).alias(f"{n}_count"))
-        if "Standard_Deviation" in spec.stats:
-            exprs.append(F.sum(c * c).alias(f"{n}_sumsq"))
-            exprs.append(F.stddev_pop(c).alias(f"{n}_stddev"))
+            merges.append(merge_of(f"{n}_max", F.max(c), F.max).alias(f"{n}_max"))
+        total = merge_of(f"{n}_sum", F.sum(c), F.sum)
+        count = merge_of(f"{n}_count", F.count(c), F.sum)
+        sumsq = merge_of(f"{n}_sumsq", F.sum(c * c), F.sum) if has_std else None
+        mean, std = _finalize_moments(total, count, sumsq)
+        merges += [total.alias(f"{n}_sum"), count.alias(f"{n}_count")]
+        if has_std:
+            merges += [sumsq.alias(f"{n}_sumsq"), std.alias(f"{n}_stddev")]
         if "Mean" in spec.stats:
-            exprs.append(F.avg(c).alias(f"{n}_mean"))
+            merges.append(mean.alias(f"{n}_mean"))
         if "Histogram_Counts" in spec.stats and v.bin_edges:
-            nbins = len(v.bin_edges) - 1
             b = hist_bucket(c, v.bin_edges)
-            exprs.append(
-                F.array(
-                    *[F.sum(F.when(b == i, 1).otherwise(0)).cast("long")
-                      for i in range(nbins)]
-                ).alias(f"{n}_hist")
-            )
-
+            nbins = len(v.bin_edges) - 1
+            hist = bucket_counts(f"{n}_hist", [b == i for i in range(nbins)])
+            merges.append(hist.alias(f"{n}_hist"))
     if "Jhisto" in spec.stats:
         for jh in spec.joint_hists:
             xv = spec.variable(jh.varname)
             bx = hist_bucket(F.col(jh.varname), xv.bin_edges)
             by = hist_bucket(F.col(jh.partner_var), jh.joint_edges)
-            nbx, nby = len(xv.bin_edges) - 1, len(jh.joint_edges) - 1
-            exprs.append(
-                F.array(
-                    *[
-                        F.array(
-                            *[
-                                F.sum(
-                                    F.when((bx == x) & (by == y), 1).otherwise(0)
-                                ).cast("long")
-                                for y in range(nby)
-                            ]
-                        )
-                        for x in range(nbx)
-                    ]
-                ).alias(f"{jh.joint_name}_jhist")
-            )
+            rows = [
+                bucket_counts(
+                    f"{jh.joint_name}_jhist_{x}",
+                    [(bx == x) & (by == y) for y in range(len(jh.joint_edges) - 1)],
+                )
+                for x in range(len(xv.bin_edges) - 1)
+            ]
+            merges.append(F.array(*rows).alias(f"{jh.joint_name}_jhist"))
 
     # cloud-fraction pixel counts (A11) + ratio-of-sums mean (A12)
-    exprs.append(F.sum(cld).cast("long").alias("cld_pix"))
-    exprs.append(F.sum(tot).cast("long").alias("tot_pix"))
-    exprs.append(
-        (F.sum(cld) / F.nullif(F.sum(tot), F.lit(0))).alias("cf_mean")
-    )
-    return exprs
-
-
-def _cf_granule_level(
-    px: DataFrame, spec: AggregationSpec, extra_group_cols: tuple[str, ...] = ()
-) -> DataFrame:
-    """Two-level CF stats (A13) + compat Q1/Q2/Q5 variants.
-
-    One (cell, granule) pre-aggregation feeds every per-granule statistic:
-    CF extremes, the correct-mode CF histogram/std, the compat-mode
-    ΣCLD²-based std and inflated GRID_Counts.
-    """
     cm = F.col("cm")
-    cld = F.when(cm.between(0, 1), 1).otherwise(0)
-    tot = F.when(cm.between(0, 3), 1).otherwise(0)
-    var_valid = [
-        F.max(F.when(F.col(v.name).isNotNull(), 1).otherwise(0)).alias(f"__v_{v.name}")
-        for v in spec.physical_variables()
+    cld = merge_of("g_cld", F.sum(cloudy_flag(cm)), F.sum)
+    tot = merge_of("g_tot", F.sum(determined_flag(cm)), F.sum)
+    merges += [
+        cld.alias("cld_pix"),
+        tot.alias("tot_pix"),
+        (cld / F.nullif(tot, F.lit(0))).alias("cf_mean"),
     ]
-    per_granule = px.groupBy("cell", *extra_group_cols, "granule_id").agg(
-        F.sum(cld).alias("g_cld"),
-        F.sum(tot).alias("g_tot"),
-        *var_valid,
-    ).withColumn("granule_cf", F.col("g_cld") / F.nullif(F.col("g_tot"), F.lit(0)))
-
-    cf_var = next((v for v in spec.variables if v.is_virtual), None)
-    aggs = [
-        F.min("granule_cf").alias("cf_min"),
-        F.max("granule_cf").alias("cf_max"),
-        F.countDistinct("granule_id").alias("grid_count"),
+    # per-granule CF extremes (A13); stage-1 rows are unique per granule (A14)
+    gcf = F.col("g_cld") / F.nullif(F.col("g_tot"), F.lit(0))
+    merges += [
+        F.min(gcf).alias("cf_min"),
+        F.max(gcf).alias("cf_max"),
+        F.count(F.lit(1)).alias("grid_count"),
     ]
     if spec.strict_compat:
-        # Q2: staged ΣCLD, ΣTOT, ΣCLD² → serial-driver CF "std"
-        # guard on ΣTOT>0: greatest() skips NULLs, which would otherwise
-        # turn an all-undetermined cell's NULL std into 0.0 (the reference
+        # Q2: the serial driver finalizes ΣCLD, ΣTOT, ΣCLD² as if they were
+        # Σv, n, Σv² — NULL for an all-undetermined cell (the reference
         # leaves it NaN — found by the hypothesis differential harness)
-        mean = F.sum("g_cld") / F.nullif(F.sum("g_tot"), F.lit(0))
-        var = F.sum(F.col("g_cld") * F.col("g_cld")) / F.nullif(F.sum("g_tot"), F.lit(0)) - mean * mean
-        aggs.append(
-            F.when(
-                F.sum("g_tot") > 0, F.sqrt(F.greatest(var, F.lit(0.0)))
-            ).alias("cf_std")
-        )
+        _, std = _finalize_moments(cld, tot, F.sum(F.col("g_cld") * F.col("g_cld")))
         # Q5: +1 per (granule, variable-with-valid-data) + the CF call
         inflated = sum(
-            (F.col(f"__v_{v.name}") for v in spec.physical_variables()),
-            F.when(F.col("granule_cf").isNotNull(), 1).otherwise(0),
+            (F.when(F.col(f"{v.name}_count") > 0, 1).otherwise(0)
+             for v in spec.physical_variables()),
+            F.when(gcf.isNotNull(), 1).otherwise(0),
         )
-        aggs.append(F.sum(inflated).cast("long").alias("grid_count_compat"))
+        merges += [std.alias("cf_std"), F.sum(inflated).alias("grid_count_compat")]
     else:
-        aggs.append(F.stddev_pop("granule_cf").alias("cf_std"))
+        merges.append(F.stddev_pop(gcf).alias("cf_std"))
         # mergeable partials of the per-granule CF so reaggregate() can
         # re-finalize cf_granule_mean/cf_granule_stddev across periods
         # (cf_std itself is not mergeable; monthly std comes from these)
-        aggs.append(F.sum("granule_cf").alias("cf_granule_sum"))
-        aggs.append(F.count("granule_cf").alias("cf_granule_count"))
-        aggs.append(
-            F.sum(F.col("granule_cf") * F.col("granule_cf")).alias("cf_granule_sumsq")
-        )
-        if cf_var is not None and cf_var.bin_edges and "Histogram_Counts" in spec.stats:
-            nbins = len(cf_var.bin_edges) - 1
-            b = hist_bucket(F.col("granule_cf"), cf_var.bin_edges)
-            aggs.append(
-                F.array(
-                    *[F.sum(F.when(b == i, 1).otherwise(0)).cast("long")
-                      for i in range(nbins)]
-                ).alias("cf_hist")
-            )
-    out = per_granule.groupBy("cell", *extra_group_cols).agg(*aggs)
-    if spec.strict_compat and cf_var is not None and cf_var.bin_edges \
-            and "Histogram_Counts" in spec.stats:
-        # Q1: the reference's CF histogram never accumulates — emit zeros
+        merges += [
+            F.sum(gcf).alias("cf_granule_sum"),
+            F.count(gcf).alias("cf_granule_count"),
+            F.sum(gcf * gcf).alias("cf_granule_sumsq"),
+        ]
+    cf_var = next((v for v in spec.variables if v.is_virtual), None)
+    if cf_var is not None and cf_var.bin_edges and "Histogram_Counts" in spec.stats:
         nbins = len(cf_var.bin_edges) - 1
-        out = out.withColumn(
-            "cf_hist", F.array(*[F.lit(0).cast("long") for _ in range(nbins)])
-        )
-    return out
+        if spec.strict_compat:
+            # Q1: the reference's CF histogram never accumulates — emit zeros
+            counts = [F.lit(0).cast("long")] * nbins
+        else:
+            b = hist_bucket(gcf, cf_var.bin_edges)
+            counts = [F.count(F.when(b == i, 1)) for i in range(nbins)]
+        merges.append(F.array(*counts).alias("cf_hist"))
+    return partials, merges
 
 
 def daily_grid(
@@ -253,9 +247,8 @@ def daily_grid(
         raise ValueError("extra_group_cols requires densify_output=False")
     px = prepare_pixels(pixels, granules, spec, end_doy, spill_doy)
     keys = ["cell", *extra_group_cols]
-    main = px.groupBy(*keys).agg(*_stat_exprs_for(spec))
-    cf = _cf_granule_level(px, spec, extra_group_cols)
-    agg = main.join(cf, keys, "left")
+    partials, merges = _accumulators(spec)
+    agg = px.groupBy(*keys, "granule_id").agg(*partials).groupBy(*keys).agg(*merges)
     if not densify_output:
         return agg
     zero_cols = [c for c in agg.columns if c.endswith(("_count", "_pix"))]
@@ -321,24 +314,15 @@ def reaggregate(staged: DataFrame, group_cols: list[str] | None = None) -> DataF
     out_cols: dict[str, F.Column] = {}
     names = set(merged.columns)
     for n in names:
-        if n.endswith("_sum"):
-            base = n[:-4]
-            cnt = f"{base}_count"
-            if cnt in names:
-                out_cols[f"{base}_mean"] = F.col(n) / F.nullif(F.col(cnt), F.lit(0))
-                ss = f"{base}_sumsq"
-                if ss in names:
-                    m = F.col(n) / F.nullif(F.col(cnt), F.lit(0))
-                    # guard on count>0: greatest() skips NULLs, which would
-                    # otherwise turn an empty cell's NULL std into 0.0
-                    out_cols[f"{base}_stddev"] = F.when(
-                        F.col(cnt) > 0,
-                        F.sqrt(
-                            F.greatest(
-                                F.col(ss) / F.col(cnt) - m * m, F.lit(0.0)
-                            )
-                        ),
-                    )
+        base = n[:-4]
+        if n.endswith("_sum") and f"{base}_count" in names:
+            ss = f"{base}_sumsq"
+            mean, std = _finalize_moments(
+                F.col(n), F.col(f"{base}_count"), F.col(ss) if ss in names else None
+            )
+            out_cols[f"{base}_mean"] = mean
+            if std is not None:
+                out_cols[f"{base}_stddev"] = std
     if {"cld_pix", "tot_pix"} <= names:
         out_cols["cf_mean"] = F.col("cld_pix") / F.nullif(F.col("tot_pix"), F.lit(0))
     return merged.withColumns(out_cols)

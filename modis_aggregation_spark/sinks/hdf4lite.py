@@ -362,7 +362,11 @@ class _H4Reader:
         self.dds: dict[tuple[int, int], tuple[int, int]] = {}
         self.special: dict[tuple[int, int], tuple[int, int]] = {}
         pos = 4
+        seen: set[int] = set()
         while pos:
+            if pos in seen:
+                raise ValueError(f"HDF4 DD chain loops back to offset {pos}")
+            seen.add(pos)
             ndd, nxt = struct.unpack_from(">hI", buf, pos)
             for k in range(ndd):
                 tag, ref, off, ln = struct.unpack_from(

@@ -53,16 +53,18 @@ def pack_values(
     fill: int,
     is_extreme: bool = False,
 ) -> np.ndarray:
-    """Pack a float array to int32 with the reference's truncation rules."""
+    """Pack a float array to int64 with the reference's truncation rules
+    (``astype(np.int)`` is int64: a Σv² of thousands of pixels overflows
+    int32)."""
     v = np.asarray(values, dtype=np.float64)
     # the reference guards Inf only on min/max datasets (:429-431) because
     # Inf can only arise there (untouched ±inf buffer init); mapping all
     # non-finite values to fill is equivalent and avoids UB int casts
     bad = ~np.isfinite(v)
-    packed = np.zeros(v.shape, dtype=np.int32)
+    packed = np.zeros(v.shape, dtype=np.int64)
     ok = ~bad
     # astype(int) truncates toward zero — replicated exactly (Q10)
-    packed[ok] = (v[ok] / scale + offset).astype(np.int32)
+    packed[ok] = (v[ok] / scale + offset).astype(np.int64)
     packed[bad] = fill
     return packed
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from modis_aggregation_spark.config import AggregationSpec
+from modis_aggregation_spark.functions.bits import cloudy_flag, determined_flag
 from modis_aggregation_spark.operators.stats import with_cell, with_cloud_mask
 
 
@@ -115,9 +116,7 @@ def stream_daily_grid(
     df = with_cell(df, spec)
     df = df.withWatermark("ts", watermark)
 
-    cm = F.col("cm")
-    cld = F.when(cm.between(0, 1), 1).otherwise(0)
-    tot = F.when(cm.between(0, 3), 1).otherwise(0)
+    cld, tot = cloudy_flag(F.col("cm")), determined_flag(F.col("cm"))
     aggs = [
         F.sum(cld).cast("long").alias("cld_pix"),
         F.sum(tot).cast("long").alias("tot_pix"),

@@ -2,9 +2,12 @@
 queries(), oracle_sql(), and the documented rows-only allowlist before the
 round driver does."""
 
+import os
 import re
 
 import __spark_entry__ as entry
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Round 6 closed the last no-oracle gaps: s2 via a parquet twin (the
 # s9/s12 pattern), x5/x6 via independent-XXH64 signature goldens, and
@@ -25,7 +28,7 @@ def _latest_record_round():
     import json
 
     latest = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
         for q in json.load(open(path)):
             latest[q] = max(latest.get(q, 0), rnd)
@@ -73,7 +76,7 @@ def test_window_rotation_freshness():
 def test_coverage_mentions_every_extension_query():
     """Every x/s query id must be traceable in COVERAGE.md (the judge's
     line-by-line map)."""
-    cov = open("/root/repo/COVERAGE.md").read()
+    cov = open(os.path.join(REPO, "COVERAGE.md")).read()
     for name in entry.queries():
         if name[0] in "xs":
             qid = name.split("_")[0]  # x51, s8, ...
@@ -81,7 +84,7 @@ def test_coverage_mentions_every_extension_query():
 
 
 def test_readme_query_count_in_sync():
-    readme = open("/root/repo/README.md").read()
+    readme = open(os.path.join(REPO, "README.md")).read()
     n = len(entry.queries())
     assert f"{n} queries" in readme, f"README query count != {n}"
 
@@ -93,14 +96,14 @@ def test_rotation_tool_matches_committed_order():
     script.  x75 heads its cohort via the authorized --front amendment."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.rotate_window import (
         current_entries,
         latest_records,
         required_order,
     )
 
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = open(os.path.join(REPO, "__spark_entry__.py")).read()
     names = [n for n, _ in current_entries(src)]
     latest = latest_records()
     want = required_order(names, latest, ["x75_kmeans_train"])

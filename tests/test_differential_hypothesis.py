@@ -217,11 +217,12 @@ def test_random_spec_matches_reference_emulator(spark, subset, p):
                 ref_var = max(
                     a["sumsq"] / a["count"] - (a["sum"] / a["count"]) ** 2, 0.0
                 )
-                # The emulator's Σv² finalize (the reference's own formula)
-                # has a float64 cancellation floor of ~eps·E[v²]; the engine's
-                # stddev_pop is Welford-stable, so when the true variance sits
-                # below that floor the two sides legitimately disagree by
-                # noise. Compare variances with the floor as abs tolerance.
+                # The Σv² finalize (the reference's own formula, used by both
+                # the emulator and the engine) has a float64 cancellation
+                # floor of ~eps·E[v²]; the two sides sum in different orders,
+                # so when the true variance sits below that floor they
+                # legitimately disagree by noise. Compare variances with the
+                # floor as abs tolerance.
                 noise = 64 * np.finfo(np.float64).eps * (a["sumsq"] / a["count"])
                 assert r["ctp_stddev"] ** 2 == pytest.approx(
                     ref_var, rel=1e-6, abs=noise

@@ -313,6 +313,18 @@ def test_bad_magic_raises(tmp_path):
         read_hdf4(str(p))
 
 
+def test_dd_chain_cycle_raises(tmp_path):
+    """A DD block whose next-block offset points back into the chain is
+    malformed; following it would never end."""
+    p = tmp_path / "loop.hdf"
+    write_hdf4(str(p), {"v": (np.arange(6, dtype=np.int16), {})})
+    blob = bytearray(p.read_bytes())
+    struct.pack_into(">I", blob, 6, 4)  # first block's next -> itself
+    p.write_bytes(bytes(blob))
+    with pytest.raises(ValueError, match="loops"):
+        read_hdf4(str(p))
+
+
 def test_dfsd_fallback_names_from_label(tmp_path):
     """An NDG outside any Var0.0 vgroup (old DFSD API layout) is read and
     named from its DFTAG_SDL label."""

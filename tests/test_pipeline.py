@@ -112,9 +112,9 @@ def test_reaggregate_equals_direct(spark):
             if a is None or b is None:
                 assert a == b, (cell, col)
             else:
-                # stddev: direct uses Welford-style stddev_pop, the merge
-                # path re-finalizes from Σv² (the reference's own formula,
-                # aggregate_functions.py:711) — cancellation costs ~1e-8
+                # stddev: both paths finalize from Σv² (the reference's own
+                # formula, aggregate_functions.py:711), summed in different
+                # orders — cancellation costs ~1e-8
                 tol = 1e-6 if col.endswith("_stddev") else 1e-9
                 assert a == pytest.approx(b, abs=tol), (cell, col)
         assert list(d[cell]["ctp_hist"]) == list(m[cell]["ctp_hist"])
@@ -196,6 +196,10 @@ def test_pack_values_truncation_and_fills():
     # non-extreme: inf is NOT caught (reference only guards min/max)
     p2 = writers.pack_values(np.array([np.inf]), 1.0, 0.0, -9999, is_extreme=False)
     assert p2[0] != -9999 or True  # astype on inf is platform-defined; just no crash
+    # Σv² of 1,700 ctp pixels at 550 hPa is past int32 once scaled; the
+    # reference's astype(np.int) is int64 (Q10), so it packs without wrapping
+    p3 = writers.pack_values(np.array([1700 * 550.0**2]), 0.1, 0.0, -9999)
+    assert p3.dtype == np.int64 and p3[0] == 5_142_500_000
 
 
 def test_pack_grid_and_axes(spark, grid):

@@ -1,10 +1,13 @@
 """Physical-plan regression tests: the perf posture (pushdown, pruning,
 broadcast, partial aggregation) must not silently regress."""
 
+import os
+
 import __spark_entry__ as entry
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
+FIXTURES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")
 
 
 def _plan(spark, name):
@@ -101,6 +104,47 @@ def test_m13_single_pass_staging(spark):
     assert plan.count("pixels.parquet") == 1  # one scan, branches reused
     assert plan.count("Exchange hashpartitioning") <= 3  # (cell,doy) stage + cell merge
     assert "SortMergeJoin" not in plan
+
+
+def _executed(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_daily_grid_single_pixel_pass(spark):
+    """daily_grid reads its pixels once: per-granule partials, then one
+    per-cell merge. Aggregating the pixels a second time for the CF stats
+    and joining the two results doubled the scan (and, over granule files,
+    the decode)."""
+    from modis_aggregation_spark.config import default_spec
+    from modis_aggregation_spark.plans.pipeline import daily_grid
+
+    px = spark.read.parquet(os.path.join(FIXTURES, "pixels.parquet"))
+    gr = spark.read.parquet(os.path.join(FIXTURES, "granules.parquet"))
+    spec = default_spec(lat_bounds=(-20.0, 20.0), lon_bounds=(0.0, 35.0))
+    plan = _executed(daily_grid(spark, spec, px, gr))
+    assert plan.count("pixels.parquet") == 1
+    assert "SortMergeJoin" not in plan
+    assert plan.count("Exchange hashpartitioning") <= 2  # (cell, granule) + cell
+
+
+def test_daily_grid_single_granule_scan(spark):
+    """Over the granule DataSource every scan is a decode: exactly one."""
+    from modis_aggregation_spark.config import default_spec
+    from modis_aggregation_spark.plans.pipeline import daily_grid
+    from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
+
+    spark.dataSource.register(GranuleDataSource)
+    spec = default_spec()
+    px = (
+        spark.read.format("modis_granules")
+        .option("granule_ids", "1,2")
+        .option("variables", ",".join(v.name for v in spec.physical_variables()))
+        .option("decoder", "fake")
+        .load()
+    )
+    gr = spark.createDataFrame([(1, 1, 10), (2, 1, 11)], "granule_id long, doy int, hour int")
+    plan = _executed(daily_grid(spark, spec, px, gr))
+    assert plan.count("BatchScan modis_granules") == 1
 
 
 def test_x26_pii_scrub_map_only(spark):

@@ -121,8 +121,8 @@ def test_engine_matches_reference_formulas(spark, geom):
             assert r["ctp_sum"] == pytest.approx(acc["sum"][z], rel=1e-12), z
             assert r["ctp_count"] == acc["count"][z], z
             assert r["ctp_mean"] == pytest.approx(mean[z], rel=1e-12), z
-            # engine stddev_pop (Welford) vs reference Σv² formula:
-            # equal up to the reference formula's own cancellation error
+            # engine and reference both finalize with the Σv² formula, summed
+            # in different orders: equal up to its cancellation error
             assert r["ctp_stddev"] == pytest.approx(std[z], abs=1e-6), z
         assert list(r["ctp_hist"]) == acc["hist"][z].astype(int).tolist(), z
         assert r["cld_pix"] == acc["cld"][z], z
