@@ -33,6 +33,7 @@ from modis_aggregation_spark.operators import screening as ops_scr
 from modis_aggregation_spark.operators import tokenizer as ops_tok
 from modis_aggregation_spark.operators import similarity as ops_sim
 from modis_aggregation_spark.operators import quantiles as ops_qt
+from modis_aggregation_spark.functions.bits import cloudy_flag, determined_flag
 from modis_aggregation_spark.functions.histogram import hist_bucket_sql
 from modis_aggregation_spark.functions.layout import spread_small_scan as _spread
 from modis_aggregation_spark.functions.dayrules import day_definition_null, day_definition_sql
@@ -122,6 +123,46 @@ def _cents(col):
 
 def _r6(c, dp: int = 6):
     return F.round(c, dp)
+
+
+def _drain_memory(
+    spark: SparkSession, stream: DataFrame, tag: str, mode: str,
+    available_now: bool = True,
+) -> DataFrame:
+    """Run ``stream`` to completion through a memory sink and return its
+    rows as a local DataFrame (so callers may delete the stream's source
+    files afterwards).  ``availableNow`` streams must finish within 300 s;
+    the granule DataSource streams (``available_now=False``) run on a
+    0-second processing-time trigger until ``processAllAvailable()``
+    returns.  The sink's temp view and checkpoint are removed afterwards,
+    so repeated calls leave nothing registered in the session."""
+    import shutil
+    import tempfile
+    import uuid
+
+    name = f"{tag}_{uuid.uuid4().hex[:8]}"
+    ckpt_dir = tempfile.mkdtemp(prefix=f"{tag}_ckpt_")
+    writer = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt_dir)
+    )
+    try:
+        if available_now:
+            q = writer.trigger(availableNow=True).start()
+            if not q.awaitTermination(300):
+                q.stop()
+                raise RuntimeError(f"{tag}: stream did not finish in 300s")
+        else:
+            q = writer.trigger(processingTime="0 seconds").start()
+            q.processAllAvailable()
+            q.stop()
+        sink = spark.table(name)
+        return spark.createDataFrame(sink.collect(), sink.schema)
+    finally:
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -1172,44 +1213,94 @@ GROUP BY n_name
 """
 
 
-_FIXTURE_S2 = "/tmp/spark_graft_s2_twin_1_4.parquet"
+# --------------------------------------------------------------------------
+# Granule family — the paper's scan → decode → grid stage (s2, s5, s9,
+# s10, s12, s16, s17, s19, s23, m16).  Each query reads granules through
+# the GranuleDataSource; its oracle reads a parquet twin of the same
+# content written straight from ``synth_granule`` (never through the
+# reader), so the two sides stay independent.  Granule content is a pure
+# function of the granule id, so keying fixture paths on the ids is
+# staleness-safe.
+# --------------------------------------------------------------------------
 
-
-def _ensure_s2_fixture() -> None:
-    """Parquet twin of granules 1-4 (``decoder=fake``, 5-km shape) so the
-    DuckDB oracle reads byte-identical rows to what the DataSource scan
-    synthesizes — ``synth_granule`` is a pure function of the granule id,
-    so path keying is staleness-safe (the s9/s12 pattern).  NaN measure
-    values become parquet NULLs, matching the scan's NaN→NULL masking."""
-    if os.path.exists(_FIXTURE_S2):
-        return
+def _write_twin(path: str, granules) -> None:
+    """Write ``synth_granule`` outputs as one parquet twin.  NaN measure
+    values become parquet NULLs, matching the scan's NaN→NULL masking
+    (lat/lon are not masked).  The file is written under a per-pid temp
+    name and renamed into place, so a concurrent reader never sees a
+    partial twin."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from modis_aggregation_spark.sources.granule_datasource import synth_granule
+    def column(name, col):
+        measure = col.dtype == np.float64 and name not in ("lat", "lon")
+        return pa.array(col, mask=np.isnan(col) if measure else None)
 
-    tables = []
-    for gid in (1, 2, 3, 4):
-        data = synth_granule(gid, ["ctp"])
-        arrays = {}
-        for name, col in data.items():
-            if col.dtype == np.float64 and name not in ("lat", "lon"):
-                arrays[name] = pa.array(col, mask=np.isnan(col))
-            else:
-                arrays[name] = pa.array(col)
-        tables.append(pa.table(arrays))
-    tmp = f"{_FIXTURE_S2}.{os.getpid()}.tmp"
+    tables = [
+        pa.table({name: column(name, col) for name, col in data.items()})
+        for data in granules
+    ]
+    tmp = f"{path}.{os.getpid()}.tmp"
     pq.write_table(pa.concat_tables(tables), tmp)
-    os.replace(tmp, _FIXTURE_S2)
+    os.replace(tmp, path)
 
 
-def _q_s2_granule_scan(spark, sf_dir):
-    """S3 in the driver contract: the granule Python DataSource end-to-end
-    (deterministic synthetic decode → bbox → per-granule counts).
-    Oracle (since round 6): a parquet twin of the same synthesized
-    content (``_ensure_s2_fixture``) replays the bbox + per-granule
-    aggregation in DuckDB — the s9/s12 pattern."""
+def _ensure_twin(path: str, ids, *shape: int) -> None:
+    """Parquet twin of the ``decoder=fake`` granules ``ids`` (``shape``:
+    swath rows, cols; default the 5-km product)."""
+    if not os.path.exists(path):
+        from modis_aggregation_spark.sources.granule_datasource import synth_granule
+
+        _write_twin(path, (synth_granule(g, ["ctp"], *shape) for g in ids))
+
+
+def _ensure_hdf4_fixture(ids, hdf_dir: str, twin: str, layouts) -> str:
+    """Materialize REAL HDF4 granule files for ``ids`` in ``hdf_dir``
+    (written by ``sinks/hdf4lite.py`` in the MYD06 shape; ``layouts`` =
+    (layout of even ids, layout of odd ids)) plus their parquet twin.
+    ``nbit``/``szip`` granules store ctp as quantized int16, so the twin
+    applies the identical quantization (round(v*10) cast int16,
+    calibrated *0.1 in float64 — the op sequence the reader runs) and the
+    oracle compares like for like."""
+    if os.path.exists(twin) and os.path.isdir(hdf_dir):
+        return hdf_dir
+    import shutil
+
+    import numpy as np
+
+    from modis_aggregation_spark.sources.granule_datasource import (
+        synth_granule,
+        write_granule_hdf4,
+    )
+
+    tmp_dir = f"{hdf_dir}.{os.getpid()}.tmp"
+    os.makedirs(tmp_dir, exist_ok=True)
+    granules = []
+    for gid in ids:
+        layout = layouts[gid % 2]
+        write_granule_hdf4(tmp_dir, gid, ["ctp"], layout=layout)
+        data = synth_granule(gid, ["ctp"])
+        if layout in ("nbit", "szip"):
+            v = data["ctp"]
+            raw = np.where(np.isnan(v), -9999, np.round(v * 10.0)).astype(
+                np.int16
+            )
+            data["ctp"] = np.where(raw == -9999, np.nan, raw * 0.1)
+        granules.append(data)
+    _write_twin(twin, granules)
+    try:
+        os.replace(tmp_dir, hdf_dir)
+    except OSError:
+        # concurrent creator won the rename; its files are identical —
+        # drop ours instead of orphaning a per-pid dir in /tmp
+        shutil.rmtree(tmp_dir, ignore_errors=True)
+    return hdf_dir
+
+
+def _granule_reader(spark, ids, stream: bool = False, **options) -> DataFrame:
+    """The granule DataSource over ``ids`` (variable ctp), batch or
+    streaming, with the given reader options."""
     from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
 
     # the reader implements pushFilters, which Spark rejects unless this
@@ -1218,14 +1309,109 @@ def _q_s2_granule_scan(spark, sf_dir):
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     except Exception:
         pass
-    _ensure_s2_fixture()
     spark.dataSource.register(GranuleDataSource)
-    df = (
-        spark.read.format("modis_granules")
-        .option("granule_ids", "1,2,3,4")
+    reader = spark.readStream if stream else spark.read
+    return (
+        reader.format("modis_granules")
+        .option("granule_ids", ",".join(str(g) for g in ids))
+        .options(**options)
         .option("variables", "ctp")
         .load()
     )
+
+
+def _cell_grid(px: DataFrame, spec, cf_mean: bool = False) -> DataFrame:
+    """Daily-grid cell aggregation of the decoded pixels: ctp stats plus
+    the cloudy/determined pixel counts (and their ratio, ``cf_mean``)."""
+    px = ops_stats.with_cloud_mask(ops_stats.with_cell(px, spec))
+    cld, tot = cloudy_flag(F.col("cm")), determined_flag(F.col("cm"))
+    aggs = [
+        _r6(F.min("ctp")).alias("ctp_min"),
+        _r6(F.max("ctp")).alias("ctp_max"),
+        F.count("ctp").alias("ctp_count"),
+        _r6(F.avg("ctp")).alias("ctp_mean"),
+        F.sum(cld).cast("long").alias("cld_pix"),
+        F.sum(tot).cast("long").alias("tot_pix"),
+    ]
+    if cf_mean:
+        aggs.append(
+            _r6(F.sum(cld) / F.nullif(F.sum(tot), F.lit(0))).alias("cf_mean")
+        )
+    return px.groupBy("cell").agg(*aggs)
+
+
+def _cell_grid_sql(twin: str, where: str = "", cf_mean: bool = False) -> str:
+    """DuckDB twin of ``_cell_grid`` on the global 1° grid over a parquet
+    twin; ``where`` prefixes extra row predicates to the bbox."""
+    cld = f"sum(CASE WHEN {_CM} BETWEEN 0 AND 1 THEN 1 ELSE 0 END)"
+    tot = f"sum(CASE WHEN {_CM} BETWEEN 0 AND 3 THEN 1 ELSE 0 END)"
+    cf = (
+        f",\n       round({cld}\n             / nullif({tot}, 0), 6) AS cf_mean"
+        if cf_mean else ""
+    )
+    return f"""
+WITH t AS (
+  SELECT * FROM read_parquet('{twin}')
+  WHERE {where}lat > -90.0 AND lat < 90.0 AND lon > -180.0 AND lon < 180.0
+)
+SELECT CAST(FLOOR((lat - -90.0) / 1.0) AS BIGINT) * 360
+         + CAST(FLOOR((lon - -180.0) / 1.0) AS BIGINT) AS cell,
+       round(min(ctp), 6) AS ctp_min,
+       round(max(ctp), 6) AS ctp_max,
+       count(ctp) AS ctp_count,
+       round(avg(ctp), 6) AS ctp_mean,
+       CAST({cld} AS BIGINT) AS cld_pix,
+       CAST({tot} AS BIGINT) AS tot_pix{cf}
+FROM t
+GROUP BY 1
+"""
+
+
+def _decode_audit(df: DataFrame, cm_sum: bool = False) -> DataFrame:
+    """Per-granule decode audit: pixel/valid counts, ctp extremes and
+    mean, lat range — plus the raw cloud-mask byte sum (``cm_sum``) for
+    the layouts that re-encode that byte."""
+    aggs = [
+        F.count(F.lit(1)).alias("n_px"),
+        F.count("ctp").alias("n_ctp"),
+        _r6(F.min("ctp")).alias("ctp_min"),
+        _r6(F.max("ctp")).alias("ctp_max"),
+        _r6(F.avg("ctp")).alias("ctp_mean"),
+    ]
+    if cm_sum:
+        aggs.append(F.sum(F.col("cm_raw").cast("long")).alias("cm_sum"))
+    aggs += [_r6(F.min("lat")).alias("lat_min"), _r6(F.max("lat")).alias("lat_max")]
+    return df.groupBy("granule_id").agg(*aggs)
+
+
+def _decode_audit_sql(twin: str, cm_sum: bool = False) -> str:
+    """DuckDB twin of ``_decode_audit`` over a parquet twin."""
+    cm = "       CAST(sum(CAST(cm_raw AS BIGINT)) AS BIGINT) AS cm_sum,\n"
+    return f"""
+SELECT granule_id,
+       count(*) AS n_px,
+       count(ctp) AS n_ctp,
+       round(min(ctp), 6) AS ctp_min,
+       round(max(ctp), 6) AS ctp_max,
+       round(avg(ctp), 6) AS ctp_mean,
+{cm if cm_sum else ""}       round(min(lat), 6) AS lat_min,
+       round(max(lat), 6) AS lat_max
+FROM read_parquet('{twin}')
+GROUP BY granule_id
+"""
+
+
+_FIXTURE_S2 = "/tmp/spark_graft_s2_twin_1_4.parquet"
+
+
+def _q_s2_granule_scan(spark, sf_dir):
+    """S3 in the contract: the granule Python DataSource end-to-end
+    (deterministic synthetic decode → bbox → per-granule counts).
+    Oracle (since round 6): a parquet twin of the same synthesized
+    content replays the bbox + per-granule aggregation in DuckDB — the
+    s9/s12 pattern."""
+    _ensure_twin(_FIXTURE_S2, (1, 2, 3, 4))
+    df = _granule_reader(spark, (1, 2, 3, 4))
     return (
         df.filter((F.col("lat") > -60) & (F.col("lat") < 60))
         .groupBy("granule_id")
@@ -1251,96 +1437,28 @@ GROUP BY granule_id
 _FIXTURE_1KM = "/tmp/spark_graft_1km_granule901.parquet"
 
 
-def _ensure_1km_fixture() -> str:
-    """Materialize the deterministic 1-km granule (id 901) as parquet so
-    the DuckDB oracle reads byte-identical rows to what the DataSource
-    scan synthesizes (``decoder=fake`` is a pure function of granule_id).
-    NaN measure values become parquet NULLs, matching the scan's
-    NaN→NULL masking."""
-    if os.path.exists(_FIXTURE_1KM):
-        return _FIXTURE_1KM
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from modis_aggregation_spark.sources.granule_datasource import (
-        PRODUCT_SHAPES,
-        synth_granule,
-    )
-
-    data = synth_granule(901, ["ctp"], *PRODUCT_SHAPES["1km"])
-    arrays = {}
-    for name, col in data.items():
-        if col.dtype == np.float64 and name not in ("lat", "lon"):
-            arrays[name] = pa.array(col, mask=np.isnan(col))
-        else:
-            arrays[name] = pa.array(col)
-    tmp = f"{_FIXTURE_1KM}.{os.getpid()}.tmp"
-    pq.write_table(pa.table(arrays), tmp)
-    os.replace(tmp, _FIXTURE_1KM)
-    return _FIXTURE_1KM
-
-
 def _q_m16_trim_1km(spark, sf_dir):
     """The 1-km product path end-to-end (S8 + S9 at 1-km shape): the
     granule DataSource emits the 2030×1354 1-km swath (reference
     ``aggregate_functions.py:117-118``), ``trim_cross_track`` drops the
     last 4 cross-track columns (``:119,145``), systematic sampling uses
     the reference's 1-km measure offsets ``[2::5, 3::5]`` (``:120``), and
-    the survivors grid to 1° cells with ctp stats + CF counts."""
-    from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
+    the survivors grid to 1° cells with ctp stats + CF counts.  Oracle
+    reads the parquet twin of granule 901."""
+    from modis_aggregation_spark.sources.granule_datasource import PRODUCT_SHAPES
 
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    spark.dataSource.register(GranuleDataSource)
-    _ensure_1km_fixture()
-    df = (
-        spark.read.format("modis_granules")
-        .option("granule_ids", "901")
-        .option("product", "1km")
-        .option("variables", "ctp")
-        .load()
-    )
+    _ensure_twin(_FIXTURE_1KM, (901,), *PRODUCT_SHAPES["1km"])
+    df = _granule_reader(spark, (901,), product="1km")
     spec = default_spec(sampling=5, sampling_offset=(2, 3))
-    px = ops_stats.with_cloud_mask(
-        ops_stats.with_cell(ops_stats.trim_cross_track(df), spec)
-    )
-    cm = F.col("cm")
-    cld = F.when(cm.between(0, 1), 1).otherwise(0)
-    tot = F.when(cm.between(0, 3), 1).otherwise(0)
-    return px.groupBy("cell").agg(
-        _r6(F.min("ctp")).alias("ctp_min"),
-        _r6(F.max("ctp")).alias("ctp_max"),
-        F.count("ctp").alias("ctp_count"),
-        _r6(F.avg("ctp")).alias("ctp_mean"),
-        F.sum(cld).cast("long").alias("cld_pix"),
-        F.sum(tot).cast("long").alias("tot_pix"),
-        _r6(F.sum(cld) / F.nullif(F.sum(tot), F.lit(0))).alias("cf_mean"),
-    )
+    return _cell_grid(ops_stats.trim_cross_track(df), spec, cf_mean=True)
 
 
-_SQL_M16 = f"""
-WITH t AS (
-  SELECT * FROM read_parquet('{_FIXTURE_1KM}')
-  WHERE j < 1350
-    AND i >= 2 AND j >= 3 AND (i - 2) % 5 = 0 AND (j - 3) % 5 = 0
-    AND lat > -90.0 AND lat < 90.0 AND lon > -180.0 AND lon < 180.0
+_SQL_M16 = _cell_grid_sql(
+    _FIXTURE_1KM,
+    where="j < 1350\n    AND i >= 2 AND j >= 3 AND (i - 2) % 5 = 0"
+    " AND (j - 3) % 5 = 0\n    AND ",
+    cf_mean=True,
 )
-SELECT CAST(FLOOR((lat - -90.0) / 1.0) AS BIGINT) * 360
-         + CAST(FLOOR((lon - -180.0) / 1.0) AS BIGINT) AS cell,
-       round(min(ctp), 6) AS ctp_min,
-       round(max(ctp), 6) AS ctp_max,
-       count(ctp) AS ctp_count,
-       round(avg(ctp), 6) AS ctp_mean,
-       CAST(sum(CASE WHEN {_CM} BETWEEN 0 AND 1 THEN 1 ELSE 0 END) AS BIGINT) AS cld_pix,
-       CAST(sum(CASE WHEN {_CM} BETWEEN 0 AND 3 THEN 1 ELSE 0 END) AS BIGINT) AS tot_pix,
-       round(sum(CASE WHEN {_CM} BETWEEN 0 AND 1 THEN 1 ELSE 0 END)
-             / nullif(sum(CASE WHEN {_CM} BETWEEN 0 AND 3 THEN 1 ELSE 0 END), 0), 6) AS cf_mean
-FROM t
-GROUP BY 1
-"""
 
 
 def _q_r21_having_in(spark, sf_dir):
@@ -2217,7 +2335,6 @@ def _q_s1_stream_daily(spark, sf_dir):
     aggregate is a commutative monoid."""
     import shutil
     import tempfile
-    import uuid
 
     from modis_aggregation_spark.config import VariableSpec, default_spec
     from modis_aggregation_spark.streaming.daily_stream import (
@@ -2237,31 +2354,14 @@ def _q_s1_stream_daily(spark, sf_dir):
     # the file stream source lists a directory; stage the fixture's part
     # files there (each arrives as one micro-batch input file)
     src_dir = tempfile.mkdtemp(prefix="s1_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s1_ckpt_")
-    name = f"s1_stream_{uuid.uuid4().hex[:8]}"
     try:
         for part in os.listdir(PIXELS):
             shutil.copy(os.path.join(PIXELS, part), os.path.join(src_dir, part))
         stream = stream_pixels(spark, src_dir, schema)
         out = stream_daily_grid(stream, granules, spec)
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s1_stream_daily: stream did not finish in 300s")
-        # materialize from the memory sink BEFORE the source dir is removed
-        rows_df = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        rows_df = _drain_memory(spark, out, "s1_stream_daily", "complete")
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return rows_df.select(
         F.col("date").cast("string").alias("date"),
         "cell",
@@ -3139,7 +3239,6 @@ def _q_s27_stream_dhash(spark, sf_dir):
     golden (banded ≡ brute for hamming ≤ 3 < 4 bands)."""
     import shutil
     import tempfile
-    import uuid
 
     import numpy as np
     import pandas as pd
@@ -3156,8 +3255,6 @@ def _q_s27_stream_dhash(spark, sf_dir):
     to_png = _png_fixture((8, 9))
 
     src_dir = tempfile.mkdtemp(prefix="s27_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s27_ckpt_")
-    name = f"s27_dhash_{uuid.uuid4().hex[:8]}"
     try:
         shutil.copy(src, os.path.join(src_dir, "documents.parquet"))
         ham = F.bit_count(F.col("h").bitwiseXOR(F.col("ih")))
@@ -3194,23 +3291,9 @@ def _q_s27_stream_dhash(spark, sf_dir):
             )
             .dropDuplicates(["doc_id", "index_id"])
         )
-        q = (
-            matched.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s27_stream_dhash: stream timeout")
-        rows_df = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        rows_df = _drain_memory(spark, matched, "s27_stream_dhash", "append")
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return rows_df
 
 
@@ -5087,14 +5170,11 @@ def _q_s3_stream_dedup(spark, sf_dir):
     not, so the query emits keys, not rows."""
     import shutil
     import tempfile
-    import uuid
 
     _ensure_utc(spark)
     src = os.path.join(sf_dir, "documents.parquet")
     schema = spark.read.parquet(src).schema
     src_dir = tempfile.mkdtemp(prefix="s3_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s3_ckpt_")
-    name = f"s3_dedup_{uuid.uuid4().hex[:8]}"
     try:
         shutil.copy(src, os.path.join(src_dir, "documents.parquet"))
         stream = (
@@ -5107,23 +5187,9 @@ def _q_s3_stream_dedup(spark, sf_dir):
             .select("norm")
             .dropDuplicates(["norm"])
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s3_stream_dedup: stream did not finish in 300s")
-        rows_df = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        rows_df = _drain_memory(spark, stream, "s3_stream_dedup", "append")
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return rows_df
 
 
@@ -5148,13 +5214,10 @@ def _q_s15_stream_dedup_ttl(spark, sf_dir):
     boundaries and are pinned in tests/test_streaming.py."""
     import shutil
     import tempfile
-    import uuid
 
     _ensure_utc(spark)
     ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     src_dir = tempfile.mkdtemp(prefix="s15_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s15_ckpt_")
-    name = f"s15_ttl_{uuid.uuid4().hex[:8]}"
     try:
         ev.repartition(4, "user_id").write.mode("overwrite").parquet(src_dir)
         schema = spark.read.parquet(src_dir).schema
@@ -5165,23 +5228,9 @@ def _q_s15_stream_dedup_ttl(spark, sf_dir):
             .dropDuplicatesWithinWatermark(["user_id", "event_type"])
             .select("user_id", "event_type")
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s15_stream_dedup_ttl: stream did not finish in 300s")
-        return spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        return _drain_memory(spark, stream, "s15_stream_dedup_ttl", "append")
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
 
 
 _SQL_S15 = """
@@ -5347,14 +5396,11 @@ def _q_s6_stream_screen(spark, sf_dir):
     same screen as plain SQL."""
     import shutil
     import tempfile
-    import uuid
 
     _ensure_utc(spark)
     src = os.path.join(sf_dir, "documents.parquet")
     schema = spark.read.parquet(src).schema
     src_dir = tempfile.mkdtemp(prefix="s6_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s6_ckpt_")
-    name = f"s6_screen_{uuid.uuid4().hex[:8]}"
     try:
         shutil.copy(src, os.path.join(src_dir, "documents.parquet"))
         stream = spark.readStream.schema(schema).parquet(src_dir)
@@ -5368,23 +5414,9 @@ def _q_s6_stream_screen(spark, sf_dir):
         screened = g.filter(F.col("kept") & F.col("gopher_pass")).select(
             "doc_id", "source", "n_chars"
         )
-        q = (
-            screened.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s6_stream_screen: stream did not finish in 300s")
-        rows_df = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        rows_df = _drain_memory(spark, screened, "s6_stream_screen", "append")
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return rows_df
 
 
@@ -5472,7 +5504,6 @@ def _q_s4_stream_join(spark, sf_dir):
     tight watermark for bounded state — see streaming/joins.py."""
     import shutil
     import tempfile
-    import uuid
 
     from modis_aggregation_spark.streaming.joins import stream_interval_join
 
@@ -5480,8 +5511,6 @@ def _q_s4_stream_join(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     a_dir = tempfile.mkdtemp(prefix="s4_a_")
     b_dir = tempfile.mkdtemp(prefix="s4_b_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s4_ckpt_")
-    name = f"s4_join_{uuid.uuid4().hex[:8]}"
     try:
         ev.where(F.col("event_id") % 2 == 0).write.mode("overwrite").parquet(a_dir)
         ev.where(F.col("event_id") % 2 == 1).write.mode("overwrite").parquet(b_dir)
@@ -5497,24 +5526,10 @@ def _q_s4_stream_join(spark, sf_dir):
             "user_id",
             (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("lag_us"),
         )
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s4_stream_join: stream did not finish in 300s")
-        rows_df = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        rows_df = _drain_memory(spark, joined, "s4_stream_join", "append")
     finally:
         shutil.rmtree(a_dir, ignore_errors=True)
         shutil.rmtree(b_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return rows_df
 
 
@@ -5532,34 +5547,6 @@ _FIXTURE_S5 = "/tmp/spark_graft_stream_granules_3000_3011.parquet"
 _S5_IDS = list(range(3000, 3012))
 
 
-def _ensure_s5_fixture() -> str:
-    """Materialize the 12 streamed 5-km granules as one parquet so the
-    DuckDB oracle reads byte-identical rows to what the streaming
-    DataSource decodes (decode is a pure function of granule_id)."""
-    if os.path.exists(_FIXTURE_S5):
-        return _FIXTURE_S5
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from modis_aggregation_spark.sources.granule_datasource import synth_granule
-
-    tables = []
-    for gid in _S5_IDS:
-        data = synth_granule(gid, ["ctp"])
-        arrays = {}
-        for name, col in data.items():
-            if col.dtype == np.float64 and name not in ("lat", "lon"):
-                arrays[name] = pa.array(col, mask=np.isnan(col))
-            else:
-                arrays[name] = pa.array(col)
-        tables.append(pa.table(arrays))
-    tmp = f"{_FIXTURE_S5}.{os.getpid()}.tmp"
-    pq.write_table(pa.concat_tables(tables), tmp)
-    os.replace(tmp, _FIXTURE_S5)
-    return _FIXTURE_S5
-
-
 def _q_s5_stream_granules(spark, sf_dir):
     """Streaming granule SOURCE end-to-end: the Python DataSource's
     streamReader lands 5 granules per micro-batch (simulated arrivals;
@@ -5567,15 +5554,13 @@ def _q_s5_stream_granules(spark, sf_dir):
     daily-grid cell aggregation runs in complete mode, and the final grid
     must equal the batch aggregation of the same granules — oracle reads
     a materialized parquet twin. processAllAvailable() returns once the
-    arrival frontier stops advancing; no sleeps, no timing dependence."""
-    import shutil
-    import tempfile
-    import uuid
-
+    arrival frontier stops advancing; no sleeps, no timing dependence.
+    Unlike the other family queries it registers the source itself and
+    runs under the session's own filterPushdown setting."""
     from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
 
     spark.dataSource.register(GranuleDataSource)
-    _ensure_s5_fixture()
+    _ensure_twin(_FIXTURE_S5, _S5_IDS)
     stream = (
         spark.readStream.format("modis_granules")
         .option("granule_ids", ",".join(str(g) for g in _S5_IDS))
@@ -5583,54 +5568,11 @@ def _q_s5_stream_granules(spark, sf_dir):
         .option("variables", "ctp")
         .load()
     )
-    spec = default_spec()
-    px = ops_stats.with_cloud_mask(ops_stats.with_cell(stream, spec))
-    cm = F.col("cm")
-    agg = px.groupBy("cell").agg(
-        _r6(F.min("ctp")).alias("ctp_min"),
-        _r6(F.max("ctp")).alias("ctp_max"),
-        F.count("ctp").alias("ctp_count"),
-        _r6(F.avg("ctp")).alias("ctp_mean"),
-        F.sum(F.when(cm.between(0, 1), 1).otherwise(0)).cast("long").alias("cld_pix"),
-        F.sum(F.when(cm.between(0, 3), 1).otherwise(0)).cast("long").alias("tot_pix"),
-    )
-    ckpt = tempfile.mkdtemp(prefix="s5_ckpt_")
-    name = f"s5_grid_{uuid.uuid4().hex[:8]}"
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        rows_df = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return rows_df
+    agg = _cell_grid(stream, default_spec())
+    return _drain_memory(spark, agg, "s5_grid", "complete", available_now=False)
 
 
-_SQL_S5 = f"""
-WITH t AS (
-  SELECT * FROM read_parquet('{_FIXTURE_S5}')
-  WHERE lat > -90.0 AND lat < 90.0 AND lon > -180.0 AND lon < 180.0
-)
-SELECT CAST(FLOOR((lat - -90.0) / 1.0) AS BIGINT) * 360
-         + CAST(FLOOR((lon - -180.0) / 1.0) AS BIGINT) AS cell,
-       round(min(ctp), 6) AS ctp_min,
-       round(max(ctp), 6) AS ctp_max,
-       count(ctp) AS ctp_count,
-       round(avg(ctp), 6) AS ctp_mean,
-       CAST(sum(CASE WHEN {_CM} BETWEEN 0 AND 1 THEN 1 ELSE 0 END) AS BIGINT) AS cld_pix,
-       CAST(sum(CASE WHEN {_CM} BETWEEN 0 AND 3 THEN 1 ELSE 0 END) AS BIGINT) AS tot_pix
-FROM t
-GROUP BY 1
-"""
+_SQL_S5 = _cell_grid_sql(_FIXTURE_S5)
 
 
 _HDF4_IDS = list(range(4000, 4006))
@@ -5639,47 +5581,12 @@ _FIXTURE_S9 = "/tmp/spark_graft_hdf4_twin_4000_4005.parquet"
 
 
 def _ensure_s9_fixture() -> str:
-    """Materialize 6 REAL HDF4 granule files (classic-DFTAG containers
-    written by ``sinks/hdf4lite.py`` in the MYD06 shape) plus a parquet
-    twin of the same content so the DuckDB oracle reads byte-identical
-    rows to what ``decoder=hdf`` physically decodes (the decode is proven
-    row-identical to ``synth_granule`` in tests/test_hdf4_codec.py)."""
-    if os.path.exists(_FIXTURE_S9) and os.path.isdir(_HDF4_DIR):
-        return _HDF4_DIR
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from modis_aggregation_spark.sources.granule_datasource import (
-        synth_granule,
-        write_granule_hdf4,
+    """6 contiguous HDF4 granules (classic-DFTAG containers) + twin —
+    shared by s9 and s10 (the decode is proven row-identical to
+    ``synth_granule`` in tests/test_hdf4_codec.py)."""
+    return _ensure_hdf4_fixture(
+        _HDF4_IDS, _HDF4_DIR, _FIXTURE_S9, ("contiguous", "contiguous")
     )
-
-    tmp_dir = f"{_HDF4_DIR}.{os.getpid()}.tmp"
-    os.makedirs(tmp_dir, exist_ok=True)
-    tables = []
-    for gid in _HDF4_IDS:
-        write_granule_hdf4(tmp_dir, gid, ["ctp"])
-        data = synth_granule(gid, ["ctp"])
-        arrays = {}
-        for name, col in data.items():
-            if col.dtype == np.float64 and name not in ("lat", "lon"):
-                arrays[name] = pa.array(col, mask=np.isnan(col))
-            else:
-                arrays[name] = pa.array(col)
-        tables.append(pa.table(arrays))
-    tmp = f"{_FIXTURE_S9}.{os.getpid()}.tmp"
-    pq.write_table(pa.concat_tables(tables), tmp)
-    os.replace(tmp, _FIXTURE_S9)
-    try:
-        os.replace(tmp_dir, _HDF4_DIR)
-    except OSError:
-        # concurrent creator won the rename; its files are identical —
-        # drop ours instead of orphaning a per-pid dir in /tmp
-        import shutil
-
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-    return _HDF4_DIR
 
 
 def _q_s9_hdf4_scan(spark, sf_dir):
@@ -5689,51 +5596,12 @@ def _q_s9_hdf4_scan(spark, sf_dir):
     classic-DFTAG codec — fill→NaN + ``(raw − add_offset) ×
     scale_factor`` calibration — then the daily-grid cell aggregation.
     Oracle reads the parquet twin of the same granule content."""
-    from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
-
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    spark.dataSource.register(GranuleDataSource)
     hdf_dir = _ensure_s9_fixture()
-    df = (
-        spark.read.format("modis_granules")
-        .option("granule_ids", ",".join(str(g) for g in _HDF4_IDS))
-        .option("decoder", "hdf")
-        .option("path", hdf_dir)
-        .option("variables", "ctp")
-        .load()
-    )
-    spec = default_spec()
-    px = ops_stats.with_cloud_mask(ops_stats.with_cell(df, spec))
-    cm = F.col("cm")
-    return px.groupBy("cell").agg(
-        _r6(F.min("ctp")).alias("ctp_min"),
-        _r6(F.max("ctp")).alias("ctp_max"),
-        F.count("ctp").alias("ctp_count"),
-        _r6(F.avg("ctp")).alias("ctp_mean"),
-        F.sum(F.when(cm.between(0, 1), 1).otherwise(0)).cast("long").alias("cld_pix"),
-        F.sum(F.when(cm.between(0, 3), 1).otherwise(0)).cast("long").alias("tot_pix"),
-    )
+    df = _granule_reader(spark, _HDF4_IDS, decoder="hdf", path=hdf_dir)
+    return _cell_grid(df, default_spec())
 
 
-_SQL_S9 = f"""
-WITH t AS (
-  SELECT * FROM read_parquet('{_FIXTURE_S9}')
-  WHERE lat > -90.0 AND lat < 90.0 AND lon > -180.0 AND lon < 180.0
-)
-SELECT CAST(FLOOR((lat - -90.0) / 1.0) AS BIGINT) * 360
-         + CAST(FLOOR((lon - -180.0) / 1.0) AS BIGINT) AS cell,
-       round(min(ctp), 6) AS ctp_min,
-       round(max(ctp), 6) AS ctp_max,
-       count(ctp) AS ctp_count,
-       round(avg(ctp), 6) AS ctp_mean,
-       CAST(sum(CASE WHEN {_CM} BETWEEN 0 AND 1 THEN 1 ELSE 0 END) AS BIGINT) AS cld_pix,
-       CAST(sum(CASE WHEN {_CM} BETWEEN 0 AND 3 THEN 1 ELSE 0 END) AS BIGINT) AS tot_pix
-FROM t
-GROUP BY 1
-"""
+_SQL_S9 = _cell_grid_sql(_FIXTURE_S9)
 
 
 def _q_s10_stream_hdf4(spark, sf_dir):
@@ -5744,57 +5612,13 @@ def _q_s10_stream_hdf4(spark, sf_dir):
     exactly-once (id-range offsets; decode is a pure function of the
     on-disk file). Oracle: the same parquet twin as s9 — the streamed
     grid must equal the batch grid over identical granule content."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
-
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    spark.dataSource.register(GranuleDataSource)
     hdf_dir = _ensure_s9_fixture()
-    stream = (
-        spark.readStream.format("modis_granules")
-        .option("granule_ids", ",".join(str(g) for g in _HDF4_IDS))
-        .option("granules_per_batch", "2")
-        .option("decoder", "hdf")
-        .option("path", hdf_dir)
-        .option("variables", "ctp")
-        .load()
+    stream = _granule_reader(
+        spark, _HDF4_IDS, stream=True,
+        granules_per_batch="2", decoder="hdf", path=hdf_dir,
     )
-    spec = default_spec()
-    px = ops_stats.with_cloud_mask(ops_stats.with_cell(stream, spec))
-    cm = F.col("cm")
-    agg = px.groupBy("cell").agg(
-        _r6(F.min("ctp")).alias("ctp_min"),
-        _r6(F.max("ctp")).alias("ctp_max"),
-        F.count("ctp").alias("ctp_count"),
-        _r6(F.avg("ctp")).alias("ctp_mean"),
-        F.sum(F.when(cm.between(0, 1), 1).otherwise(0)).cast("long").alias("cld_pix"),
-        F.sum(F.when(cm.between(0, 3), 1).otherwise(0)).cast("long").alias("tot_pix"),
-    )
-    ckpt = tempfile.mkdtemp(prefix="s10_ckpt_")
-    name = f"s10_grid_{uuid.uuid4().hex[:8]}"
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        rows_df = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return rows_df
+    agg = _cell_grid(stream, default_spec())
+    return _drain_memory(spark, agg, "s10_grid", "complete", available_now=False)
 
 
 def _corpus_tag(sf_dir: str, table: str = "documents") -> str:
@@ -5828,143 +5652,30 @@ _HDF4C_DIR = "/tmp/spark_graft_hdf4c_granules_4100_4105"
 _FIXTURE_S12 = "/tmp/spark_graft_hdf4c_twin_4100_4105.parquet"
 
 
-def _ensure_s12_fixture() -> str:
-    """Materialize 6 REAL chunked+deflated HDF4 granule files (the
-    storage layout archived NASA MYD06/MYD03 granules actually use —
-    chunked SDS with per-chunk deflate special elements, which the
-    reference reads via netCDF4, reference ``aggregate_functions.py:
-    99-122``) plus a parquet twin of the same content. Content is a pure
-    function of the granule ids (``synth_granule``), so path keying is
-    staleness-safe here."""
-    if os.path.exists(_FIXTURE_S12) and os.path.isdir(_HDF4C_DIR):
-        return _HDF4C_DIR
-    import shutil
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from modis_aggregation_spark.sources.granule_datasource import (
-        synth_granule,
-        write_granule_hdf4,
-    )
-
-    tmp_dir = f"{_HDF4C_DIR}.{os.getpid()}.tmp"
-    os.makedirs(tmp_dir, exist_ok=True)
-    tables = []
-    for gid in _HDF4C_IDS:
-        write_granule_hdf4(tmp_dir, gid, ["ctp"], layout="chunked")
-        data = synth_granule(gid, ["ctp"])
-        arrays = {}
-        for name, col in data.items():
-            if col.dtype == np.float64 and name not in ("lat", "lon"):
-                arrays[name] = pa.array(col, mask=np.isnan(col))
-            else:
-                arrays[name] = pa.array(col)
-        tables.append(pa.table(arrays))
-    tmp = f"{_FIXTURE_S12}.{os.getpid()}.tmp"
-    pq.write_table(pa.concat_tables(tables), tmp)
-    os.replace(tmp, _FIXTURE_S12)
-    try:
-        os.replace(tmp_dir, _HDF4C_DIR)
-    except OSError:
-        shutil.rmtree(tmp_dir, ignore_errors=True)  # concurrent creator won
-    return _HDF4C_DIR
-
-
 def _q_s12_hdf4_chunked_scan(spark, sf_dir):
     """The REAL-archive-layout scan path: granule files stored as
     chunked+deflated HDF4 special elements (SPECIAL_CHUNKED chunk table +
-    per-chunk SPECIAL_COMP deflate — the layout of archived NASA granules)
-    physically decoded per file by ``sinks/hdf4lite.py`` inside each scan
-    partition, then a per-granule decode audit. Oracle reads the parquet
-    twin of the same content; the codec round-trip and the
-    chunked≡compressed≡contiguous scan equality are locked in
-    tests/test_hdf4_codec.py."""
-    from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
-
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    spark.dataSource.register(GranuleDataSource)
-    hdf_dir = _ensure_s12_fixture()
-    df = (
-        spark.read.format("modis_granules")
-        .option("granule_ids", ",".join(str(g) for g in _HDF4C_IDS))
-        .option("decoder", "hdf")
-        .option("path", hdf_dir)
-        .option("variables", "ctp")
-        .load()
+    per-chunk SPECIAL_COMP deflate — the layout of archived NASA granules,
+    which the reference reads via netCDF4, reference
+    ``aggregate_functions.py:99-122``) physically decoded per file by
+    ``sinks/hdf4lite.py`` inside each scan partition, then a per-granule
+    decode audit. Oracle reads the parquet twin of the same content; the
+    codec round-trip and the chunked≡compressed≡contiguous scan equality
+    are locked in tests/test_hdf4_codec.py."""
+    hdf_dir = _ensure_hdf4_fixture(
+        _HDF4C_IDS, _HDF4C_DIR, _FIXTURE_S12, ("chunked", "chunked")
     )
-    return df.groupBy("granule_id").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.count("ctp").alias("n_ctp"),
-        _r6(F.min("ctp")).alias("ctp_min"),
-        _r6(F.max("ctp")).alias("ctp_max"),
-        _r6(F.avg("ctp")).alias("ctp_mean"),
-        _r6(F.min("lat")).alias("lat_min"),
-        _r6(F.max("lat")).alias("lat_max"),
+    return _decode_audit(
+        _granule_reader(spark, _HDF4C_IDS, decoder="hdf", path=hdf_dir)
     )
 
 
-_SQL_S12 = f"""
-SELECT granule_id,
-       count(*) AS n_px,
-       count(ctp) AS n_ctp,
-       round(min(ctp), 6) AS ctp_min,
-       round(max(ctp), 6) AS ctp_max,
-       round(avg(ctp), 6) AS ctp_mean,
-       round(min(lat), 6) AS lat_min,
-       round(max(lat), 6) AS lat_max
-FROM read_parquet('{_FIXTURE_S12}')
-GROUP BY granule_id
-"""
+_SQL_S12 = _decode_audit_sql(_FIXTURE_S12)
 
 
 _HDF4L_IDS = list(range(4200, 4206))
 _HDF4L_DIR = "/tmp/spark_graft_hdf4l_4200_4205"
 _FIXTURE_S16 = "/tmp/spark_graft_hdf4l_twin_4200_4205.parquet"
-
-
-def _ensure_s16_fixture() -> str:
-    """Materialize 6 REAL linked-block HDF4 granule files (SPECIAL_LINKED
-    chained block tables — HDF4's appendable-element layout, round 6)
-    plus a parquet twin of the same content (the s12 pattern)."""
-    if os.path.exists(_FIXTURE_S16) and os.path.isdir(_HDF4L_DIR):
-        return _HDF4L_DIR
-    import shutil
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from modis_aggregation_spark.sources.granule_datasource import (
-        synth_granule,
-        write_granule_hdf4,
-    )
-
-    tmp_dir = f"{_HDF4L_DIR}.{os.getpid()}.tmp"
-    os.makedirs(tmp_dir, exist_ok=True)
-    tables = []
-    for gid in _HDF4L_IDS:
-        write_granule_hdf4(tmp_dir, gid, ["ctp"], layout="linked")
-        data = synth_granule(gid, ["ctp"])
-        arrays = {}
-        for name, col in data.items():
-            if col.dtype == np.float64 and name not in ("lat", "lon"):
-                arrays[name] = pa.array(col, mask=np.isnan(col))
-            else:
-                arrays[name] = pa.array(col)
-        tables.append(pa.table(arrays))
-    tmp = f"{_FIXTURE_S16}.{os.getpid()}.tmp"
-    pq.write_table(pa.concat_tables(tables), tmp)
-    os.replace(tmp, _FIXTURE_S16)
-    try:
-        os.replace(tmp_dir, _HDF4L_DIR)
-    except OSError:
-        shutil.rmtree(tmp_dir, ignore_errors=True)  # concurrent creator won
-    return _HDF4L_DIR
 
 
 def _q_s16_hdf4_linked_scan(spark, sf_dir):
@@ -5976,45 +5687,15 @@ def _q_s16_hdf4_linked_scan(spark, sf_dir):
     each scan partition, then the s12 per-granule decode audit. Oracle
     reads the parquet twin of the same content; geometry/zero-ref/
     malformation behavior is locked in tests/test_hdf4_codec.py."""
-    from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
-
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    spark.dataSource.register(GranuleDataSource)
-    hdf_dir = _ensure_s16_fixture()
-    df = (
-        spark.read.format("modis_granules")
-        .option("granule_ids", ",".join(str(g) for g in _HDF4L_IDS))
-        .option("decoder", "hdf")
-        .option("path", hdf_dir)
-        .option("variables", "ctp")
-        .load()
+    hdf_dir = _ensure_hdf4_fixture(
+        _HDF4L_IDS, _HDF4L_DIR, _FIXTURE_S16, ("linked", "linked")
     )
-    return df.groupBy("granule_id").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.count("ctp").alias("n_ctp"),
-        _r6(F.min("ctp")).alias("ctp_min"),
-        _r6(F.max("ctp")).alias("ctp_max"),
-        _r6(F.avg("ctp")).alias("ctp_mean"),
-        _r6(F.min("lat")).alias("lat_min"),
-        _r6(F.max("lat")).alias("lat_max"),
+    return _decode_audit(
+        _granule_reader(spark, _HDF4L_IDS, decoder="hdf", path=hdf_dir)
     )
 
 
-_SQL_S16 = f"""
-SELECT granule_id,
-       count(*) AS n_px,
-       count(ctp) AS n_ctp,
-       round(min(ctp), 6) AS ctp_min,
-       round(max(ctp), 6) AS ctp_max,
-       round(avg(ctp), 6) AS ctp_mean,
-       round(min(lat), 6) AS lat_min,
-       round(max(lat), 6) AS lat_max
-FROM read_parquet('{_FIXTURE_S16}')
-GROUP BY granule_id
-"""
+_SQL_S16 = _decode_audit_sql(_FIXTURE_S16)
 
 
 _HDF4X_IDS = list(range(4300, 4306))
@@ -6022,99 +5703,26 @@ _HDF4X_DIR = "/tmp/spark_graft_hdf4x_4300_4305"
 _FIXTURE_S17 = "/tmp/spark_graft_hdf4x_twin_4300_4305.parquet"
 
 
-def _ensure_s17_fixture() -> str:
-    """Materialize 6 REAL HDF4 granule files in the two layouts round 7
-    un-gated — byte-run RLE compressed special elements (even ids) and
-    EXTERNAL special elements whose SDS bytes live in companion
-    ``granule_<id>_<var>.dat`` files (odd ids, the SDsetexternalfile
-    multi-file layout) — plus a parquet twin of the same content (the
-    s12/s16 pattern)."""
-    if os.path.exists(_FIXTURE_S17) and os.path.isdir(_HDF4X_DIR):
-        return _HDF4X_DIR
-    import shutil
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from modis_aggregation_spark.sources.granule_datasource import (
-        synth_granule,
-        write_granule_hdf4,
-    )
-
-    tmp_dir = f"{_HDF4X_DIR}.{os.getpid()}.tmp"
-    os.makedirs(tmp_dir, exist_ok=True)
-    tables = []
-    for gid in _HDF4X_IDS:
-        layout = "rle" if gid % 2 == 0 else "external"
-        write_granule_hdf4(tmp_dir, gid, ["ctp"], layout=layout)
-        data = synth_granule(gid, ["ctp"])
-        arrays = {}
-        for name, col in data.items():
-            if col.dtype == np.float64 and name not in ("lat", "lon"):
-                arrays[name] = pa.array(col, mask=np.isnan(col))
-            else:
-                arrays[name] = pa.array(col)
-        tables.append(pa.table(arrays))
-    tmp = f"{_FIXTURE_S17}.{os.getpid()}.tmp"
-    pq.write_table(pa.concat_tables(tables), tmp)
-    os.replace(tmp, _FIXTURE_S17)
-    try:
-        os.replace(tmp_dir, _HDF4X_DIR)
-    except OSError:
-        shutil.rmtree(tmp_dir, ignore_errors=True)  # concurrent creator won
-    return _HDF4X_DIR
-
-
 def _q_s17_hdf4_rle_external_scan(spark, sf_dir):
     """The round-7 codec closures on the real-granule path: granule
     files stored as RLE-compressed special elements (HDF4 byte-run
-    codestream, comp code 1) and as EXTERNAL special elements (SDS
-    bytes in companion .dat files resolved against the .hdf's own
-    directory — ``sinks/hdf4lite.py`` round 7), scanned through the
-    same Python DataSource as s9/s12/s16 and reduced to the per-granule
-    decode audit. Oracle reads the parquet twin of the same content;
-    codestream/companion-file edge behavior is locked in
+    codestream, comp code 1; even ids) and as EXTERNAL special elements
+    (odd ids: SDS bytes in companion ``granule_<id>_<var>.dat`` files
+    resolved against the .hdf's own directory — the SDsetexternalfile
+    multi-file layout, ``sinks/hdf4lite.py`` round 7), scanned through
+    the same Python DataSource as s9/s12/s16 and reduced to the
+    per-granule decode audit. Oracle reads the parquet twin of the same
+    content; codestream/companion-file edge behavior is locked in
     tests/test_hdf4_codec.py."""
-    from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
-
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    spark.dataSource.register(GranuleDataSource)
-    hdf_dir = _ensure_s17_fixture()
-    df = (
-        spark.read.format("modis_granules")
-        .option("granule_ids", ",".join(str(g) for g in _HDF4X_IDS))
-        .option("decoder", "hdf")
-        .option("path", hdf_dir)
-        .option("variables", "ctp")
-        .load()
+    hdf_dir = _ensure_hdf4_fixture(
+        _HDF4X_IDS, _HDF4X_DIR, _FIXTURE_S17, ("rle", "external")
     )
-    return df.groupBy("granule_id").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.count("ctp").alias("n_ctp"),
-        _r6(F.min("ctp")).alias("ctp_min"),
-        _r6(F.max("ctp")).alias("ctp_max"),
-        _r6(F.avg("ctp")).alias("ctp_mean"),
-        _r6(F.min("lat")).alias("lat_min"),
-        _r6(F.max("lat")).alias("lat_max"),
+    return _decode_audit(
+        _granule_reader(spark, _HDF4X_IDS, decoder="hdf", path=hdf_dir)
     )
 
 
-_SQL_S17 = f"""
-SELECT granule_id,
-       count(*) AS n_px,
-       count(ctp) AS n_ctp,
-       round(min(ctp), 6) AS ctp_min,
-       round(max(ctp), 6) AS ctp_max,
-       round(avg(ctp), 6) AS ctp_mean,
-       round(min(lat), 6) AS lat_min,
-       round(max(lat), 6) AS lat_max
-FROM read_parquet('{_FIXTURE_S17}')
-GROUP BY granule_id
-"""
+_SQL_S17 = _decode_audit_sql(_FIXTURE_S17)
 
 
 _HDF4N_IDS = list(range(4400, 4406))
@@ -6122,111 +5730,28 @@ _HDF4N_DIR = "/tmp/spark_graft_hdf4n_4400_4405"
 _FIXTURE_S19 = "/tmp/spark_graft_hdf4n_twin_4400_4405.parquet"
 
 
-def _ensure_s19_fixture() -> str:
-    """Materialize 6 REAL HDF4 granule files in a MIXED archive — N-bit
-    elements (even ids: MYD06-style quantized int16 science variables
-    stored as 15-bit sign-extended fields + a 6-bit cloud-mask byte, the
-    SDsetnbitdataset layout round 8 un-gated in ``sinks/hdf4lite.py``)
-    alongside plain contiguous granules (odd ids) — plus a parquet twin
-    of the same content (the s12/s16/s17 pattern).  The twin replicates
-    the nbit granules' int16 quantization exactly (round(v*10) cast
-    int16, calibrated *0.1 in float64 — the identical op sequence the
-    reader runs), so the oracle compares like for like."""
-    if os.path.exists(_FIXTURE_S19) and os.path.isdir(_HDF4N_DIR):
-        return _HDF4N_DIR
-    import shutil
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from modis_aggregation_spark.sources.granule_datasource import (
-        synth_granule,
-        write_granule_hdf4,
-    )
-
-    tmp_dir = f"{_HDF4N_DIR}.{os.getpid()}.tmp"
-    os.makedirs(tmp_dir, exist_ok=True)
-    tables = []
-    for gid in _HDF4N_IDS:
-        layout = "nbit" if gid % 2 == 0 else "contiguous"
-        write_granule_hdf4(tmp_dir, gid, ["ctp"], layout=layout)
-        data = synth_granule(gid, ["ctp"])
-        if layout == "nbit":
-            v = data["ctp"]
-            raw = np.where(np.isnan(v), -9999, np.round(v * 10.0)).astype(
-                np.int16
-            )
-            data["ctp"] = np.where(raw == -9999, np.nan, raw * 0.1)
-        arrays = {}
-        for name, col in data.items():
-            if col.dtype == np.float64 and name not in ("lat", "lon"):
-                arrays[name] = pa.array(col, mask=np.isnan(col))
-            else:
-                arrays[name] = pa.array(col)
-        tables.append(pa.table(arrays))
-    tmp = f"{_FIXTURE_S19}.{os.getpid()}.tmp"
-    pq.write_table(pa.concat_tables(tables), tmp)
-    os.replace(tmp, _FIXTURE_S19)
-    try:
-        os.replace(tmp_dir, _HDF4N_DIR)
-    except OSError:
-        shutil.rmtree(tmp_dir, ignore_errors=True)  # concurrent creator won
-    return _HDF4N_DIR
-
-
 def _q_s19_hdf4_nbit_scan(spark, sf_dir):
     """The round-8 codec closure on the real-granule path: a MIXED
-    archive of N-bit HDF4 granules (comp code NBIT=2 — quantized int16
-    science variables as 15-bit sign-extended bit fields, the cloud-mask
-    byte as a 6-bit field; ``sinks/hdf4lite.py`` round 8) and plain
-    contiguous granules, scanned through the same Python DataSource as
-    s9/s12/s16/s17 and reduced to the per-granule decode audit (here
-    including the cloud-mask byte, which exercises the unsigned-field
-    path end-to-end).  Oracle reads the parquet twin with the identical
-    quantization; bit-level conventions are pinned by hand-derived
-    vectors in tests/test_hdf4_codec.py."""
-    from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
-
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    spark.dataSource.register(GranuleDataSource)
-    hdf_dir = _ensure_s19_fixture()
-    df = (
-        spark.read.format("modis_granules")
-        .option("granule_ids", ",".join(str(g) for g in _HDF4N_IDS))
-        .option("decoder", "hdf")
-        .option("path", hdf_dir)
-        .option("variables", "ctp")
-        .load()
+    archive of N-bit HDF4 granules (even ids; comp code NBIT=2 —
+    MYD06-style quantized int16 science variables as 15-bit
+    sign-extended bit fields, the cloud-mask byte as a 6-bit field; the
+    SDsetnbitdataset layout, ``sinks/hdf4lite.py`` round 8) and plain
+    contiguous granules (odd ids), scanned through the same Python
+    DataSource as s9/s12/s16/s17 and reduced to the per-granule decode
+    audit (here including the cloud-mask byte, which exercises the
+    unsigned-field path end-to-end).  Oracle reads the parquet twin with
+    the identical quantization; bit-level conventions are pinned by
+    hand-derived vectors in tests/test_hdf4_codec.py."""
+    hdf_dir = _ensure_hdf4_fixture(
+        _HDF4N_IDS, _HDF4N_DIR, _FIXTURE_S19, ("nbit", "contiguous")
     )
-    return df.groupBy("granule_id").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.count("ctp").alias("n_ctp"),
-        _r6(F.min("ctp")).alias("ctp_min"),
-        _r6(F.max("ctp")).alias("ctp_max"),
-        _r6(F.avg("ctp")).alias("ctp_mean"),
-        F.sum(F.col("cm_raw").cast("long")).alias("cm_sum"),
-        _r6(F.min("lat")).alias("lat_min"),
-        _r6(F.max("lat")).alias("lat_max"),
+    return _decode_audit(
+        _granule_reader(spark, _HDF4N_IDS, decoder="hdf", path=hdf_dir),
+        cm_sum=True,
     )
 
 
-_SQL_S19 = f"""
-SELECT granule_id,
-       count(*) AS n_px,
-       count(ctp) AS n_ctp,
-       round(min(ctp), 6) AS ctp_min,
-       round(max(ctp), 6) AS ctp_max,
-       round(avg(ctp), 6) AS ctp_mean,
-       CAST(sum(CAST(cm_raw AS BIGINT)) AS BIGINT) AS cm_sum,
-       round(min(lat), 6) AS lat_min,
-       round(max(lat), 6) AS lat_max
-FROM read_parquet('{_FIXTURE_S19}')
-GROUP BY granule_id
-"""
+_SQL_S19 = _decode_audit_sql(_FIXTURE_S19, cm_sum=True)
 
 
 _HDF4Z_IDS = list(range(4500, 4506))
@@ -6234,112 +5759,29 @@ _HDF4Z_DIR = "/tmp/spark_graft_hdf4z_4500_4505"
 _FIXTURE_S23 = "/tmp/spark_graft_hdf4z_twin_4500_4505.parquet"
 
 
-def _ensure_s23_fixture() -> str:
-    """Materialize 6 REAL HDF4 granule files in a MIXED archive — SZIP
-    granules (even ids: quantized int16 science variables stored as
-    CHUNKED elements with SZIP/CCSDS-121-compressed chunks + a
-    szip-compressed cloud-mask byte, the layout real archived MODIS
-    collections use; ``sinks/sziplite.py`` round 11) alongside plain
-    contiguous granules (odd ids) — plus a parquet twin of the same
-    content (the s19 pattern; the twin replicates the szip granules'
-    int16 quantization exactly)."""
-    if os.path.exists(_FIXTURE_S23) and os.path.isdir(_HDF4Z_DIR):
-        return _HDF4Z_DIR
-    import shutil
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from modis_aggregation_spark.sources.granule_datasource import (
-        synth_granule,
-        write_granule_hdf4,
-    )
-
-    tmp_dir = f"{_HDF4Z_DIR}.{os.getpid()}.tmp"
-    os.makedirs(tmp_dir, exist_ok=True)
-    tables = []
-    for gid in _HDF4Z_IDS:
-        layout = "szip" if gid % 2 == 0 else "contiguous"
-        write_granule_hdf4(tmp_dir, gid, ["ctp"], layout=layout)
-        data = synth_granule(gid, ["ctp"])
-        if layout == "szip":
-            v = data["ctp"]
-            raw = np.where(np.isnan(v), -9999, np.round(v * 10.0)).astype(
-                np.int16
-            )
-            data["ctp"] = np.where(raw == -9999, np.nan, raw * 0.1)
-        arrays = {}
-        for name, col in data.items():
-            if col.dtype == np.float64 and name not in ("lat", "lon"):
-                arrays[name] = pa.array(col, mask=np.isnan(col))
-            else:
-                arrays[name] = pa.array(col)
-        tables.append(pa.table(arrays))
-    tmp = f"{_FIXTURE_S23}.{os.getpid()}.tmp"
-    pq.write_table(pa.concat_tables(tables), tmp)
-    os.replace(tmp, _FIXTURE_S23)
-    try:
-        os.replace(tmp_dir, _HDF4Z_DIR)
-    except OSError:
-        shutil.rmtree(tmp_dir, ignore_errors=True)  # concurrent creator won
-    return _HDF4Z_DIR
-
-
 def _q_s23_hdf4_szip_scan(spark, sf_dir):
     """The round-11 codec closure on the real-granule path (round-10
     VERDICT item 3 — the last storage codec an archived MODIS granule
-    can carry): a MIXED archive of SZIP HDF4 granules (comp code 5 —
-    quantized int16 science variables as chunked elements with
+    can carry): a MIXED archive of SZIP HDF4 granules (even ids; comp
+    code 5 — quantized int16 science variables as chunked elements with
     CCSDS-121 extended-Rice-compressed chunks, plus a szip-compressed
     cloud-mask byte; ``sinks/sziplite.py``) and plain contiguous
-    granules, scanned through the same Python DataSource as
+    granules (odd ids), scanned through the same Python DataSource as
     s9/s12/s16/s17/s19 and reduced to the per-granule decode audit.
     The reference decodes these transparently via its szip C stack
     (reference ``aggregate_functions.py:99-122``).  Oracle reads the
     parquet twin with the identical quantization; bit conventions are
     pinned by hand-derived vectors in tests/test_sziplite.py."""
-    from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
-
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    spark.dataSource.register(GranuleDataSource)
-    hdf_dir = _ensure_s23_fixture()
-    df = (
-        spark.read.format("modis_granules")
-        .option("granule_ids", ",".join(str(g) for g in _HDF4Z_IDS))
-        .option("decoder", "hdf")
-        .option("path", hdf_dir)
-        .option("variables", "ctp")
-        .load()
+    hdf_dir = _ensure_hdf4_fixture(
+        _HDF4Z_IDS, _HDF4Z_DIR, _FIXTURE_S23, ("szip", "contiguous")
     )
-    return df.groupBy("granule_id").agg(
-        F.count(F.lit(1)).alias("n_px"),
-        F.count("ctp").alias("n_ctp"),
-        _r6(F.min("ctp")).alias("ctp_min"),
-        _r6(F.max("ctp")).alias("ctp_max"),
-        _r6(F.avg("ctp")).alias("ctp_mean"),
-        F.sum(F.col("cm_raw").cast("long")).alias("cm_sum"),
-        _r6(F.min("lat")).alias("lat_min"),
-        _r6(F.max("lat")).alias("lat_max"),
+    return _decode_audit(
+        _granule_reader(spark, _HDF4Z_IDS, decoder="hdf", path=hdf_dir),
+        cm_sum=True,
     )
 
 
-_SQL_S23 = f"""
-SELECT granule_id,
-       count(*) AS n_px,
-       count(ctp) AS n_ctp,
-       round(min(ctp), 6) AS ctp_min,
-       round(max(ctp), 6) AS ctp_max,
-       round(avg(ctp), 6) AS ctp_mean,
-       CAST(sum(CAST(cm_raw AS BIGINT)) AS BIGINT) AS cm_sum,
-       round(min(lat), 6) AS lat_min,
-       round(max(lat), 6) AS lat_max
-FROM read_parquet('{_FIXTURE_S23}')
-GROUP BY granule_id
-"""
+_SQL_S23 = _decode_audit_sql(_FIXTURE_S23, cm_sum=True)
 
 
 def _q_s20_stream_minhash(spark, sf_dir):
@@ -6360,7 +5802,6 @@ def _q_s20_stream_minhash(spark, sf_dir):
     banded join from the independent-XXH64 x5 goldens."""
     import shutil
     import tempfile
-    import uuid
 
     _ensure_utc(spark)
     src = os.path.join(sf_dir, "documents.parquet")
@@ -6395,8 +5836,6 @@ def _q_s20_stream_minhash(spark, sf_dir):
     idx_capped = idx_capped.persist()
     idx_sh = idx_sh.persist()
     src_dir = tempfile.mkdtemp(prefix="s20_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s20_ckpt_")
-    name = f"s20_minhash_{uuid.uuid4().hex[:8]}"
     try:
         shutil.copy(src, os.path.join(src_dir, "documents.parquet"))
         stream = (
@@ -6438,20 +5877,7 @@ def _q_s20_stream_minhash(spark, sf_dir):
             )
             .dropDuplicates(["doc_id", "index_id"])
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s20_stream_minhash: stream timeout")
-        rows_df = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        rows_df = _drain_memory(spark, stream, "s20_stream_minhash", "append")
     finally:
         for f in (idx_capped, idx_sh):
             try:
@@ -6459,7 +5885,6 @@ def _q_s20_stream_minhash(spark, sf_dir):
             except Exception:
                 pass
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return rows_df
 
 
@@ -6480,7 +5905,6 @@ def _q_s22_stream_bucketed_index(spark, sf_dir):
     caps, the s20 convention)."""
     import shutil
     import tempfile
-    import uuid
 
     _ensure_utc(spark)
     sigs_t, bands_t, counts_t = _x102_bucketed_index(spark, sf_dir)
@@ -6496,8 +5920,6 @@ def _q_s22_stream_bucketed_index(spark, sf_dir):
     schema = spark.read.parquet(src).schema
     rows_per_band = 32 // 8
     src_dir = tempfile.mkdtemp(prefix="s22_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s22_ckpt_")
-    name = f"s22_bucketed_{uuid.uuid4().hex[:8]}"
     try:
         shutil.copy(src, os.path.join(src_dir, "documents.parquet"))
         stream = (
@@ -6537,23 +5959,9 @@ def _q_s22_stream_bucketed_index(spark, sf_dir):
             )
             .dropDuplicates(["doc_id", "index_id"])
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s22_stream_bucketed_index: stream timeout")
-        rows_df = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        rows_df = _drain_memory(spark, stream, "s22_stream_bucketed_index", "append")
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return rows_df
 
 
@@ -7246,7 +6654,6 @@ def _q_s24_stream_hll(spark, sf_dir):
     independent-XXH64 coordinates (goldens/x111_hll_registers.parquet)."""
     import shutil
     import tempfile
-    import uuid
 
     import pyarrow.compute as pc
     import pyarrow.parquet as papq
@@ -7259,8 +6666,6 @@ def _q_s24_stream_hll(spark, sf_dir):
     src = os.path.join(sf_dir, "documents.parquet")
     schema = spark.read.parquet(src).schema
     src_dir = tempfile.mkdtemp(prefix="s24_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s24_ckpt_")
-    name = f"s24_hll_{uuid.uuid4().hex[:8]}"
     try:
         tbl = papq.read_table(src)
         even = pc.equal(pc.bit_wise_and(tbl.column("doc_id"), 1), 0)
@@ -7277,23 +6682,9 @@ def _q_s24_stream_hll(spark, sf_dir):
             .groupBy("source", "bucket")
             .agg(F.max("__rho").alias("register"))
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s24_stream_hll: stream did not finish in 300s")
-        rows_df = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        rows_df = _drain_memory(spark, stream, "s24_stream_hll", "complete")
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return rows_df
 
 
@@ -7469,7 +6860,6 @@ def _q_s26_stream_qdigest(spark, sf_dir):
     x115's full SQL re-derivation."""
     import shutil
     import tempfile
-    import uuid
 
     import pyarrow.compute as pc
     import pyarrow.parquet as papq
@@ -7478,8 +6868,6 @@ def _q_s26_stream_qdigest(spark, sf_dir):
     src = os.path.join(sf_dir, "documents.parquet")
     schema = spark.read.parquet(src).schema
     src_dir = tempfile.mkdtemp(prefix="s26_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s26_ckpt_")
-    name = f"s26_qdigest_{uuid.uuid4().hex[:8]}"
     try:
         tbl = papq.read_table(src)
         even = pc.equal(pc.bit_wise_and(tbl.column("doc_id"), 1), 0)
@@ -7500,23 +6888,9 @@ def _q_s26_stream_qdigest(spark, sf_dir):
             .groupBy("source", "cell")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s26_stream_qdigest: stream did not finish")
-        leaves = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        leaves = _drain_memory(spark, stream, "s26_stream_qdigest", "complete")
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return ops_scr.qdigest_compress(leaves, ["source"], _QD_U, _QD_K)
 
 
@@ -7541,7 +6915,6 @@ def _q_s25_stream_funnel(spark, sf_dir):
     import shutil
     import tempfile
     import time as _time
-    import uuid
 
     from modis_aggregation_spark.operators.sessions import funnel_stream
 
@@ -7552,8 +6925,6 @@ def _q_s25_stream_funnel(spark, sf_dir):
     row = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
     mid = row["lo"] + (row["hi"] - row["lo"]) / 2
     src_dir = tempfile.mkdtemp(prefix="s25_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s25_ckpt_")
-    name = f"s25_funnel_{uuid.uuid4().hex[:8]}"
     try:
         for tag, part in (
             ("a_early", ev.filter(F.col("ts") < F.lit(mid))),
@@ -7577,23 +6948,9 @@ def _q_s25_stream_funnel(spark, sf_dir):
             .parquet(src_dir),
             ["signup", "view", "click", "purchase"],
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s25_stream_funnel: stream did not finish in 300s")
-        rows_df = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        rows_df = _drain_memory(spark, stream, "s25_stream_funnel", "append")
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return rows_df
 
 
@@ -7635,7 +6992,6 @@ def _q_s21_stream_cms(spark, sf_dir):
     committed independent-XXH64 per-term buckets."""
     import shutil
     import tempfile
-    import uuid
 
     import pyarrow.compute as pc
     import pyarrow.parquet as papq
@@ -7644,8 +7000,6 @@ def _q_s21_stream_cms(spark, sf_dir):
     src = os.path.join(sf_dir, "documents.parquet")
     schema = spark.read.parquet(src).schema
     src_dir = tempfile.mkdtemp(prefix="s21_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s21_ckpt_")
-    name = f"s21_cms_{uuid.uuid4().hex[:8]}"
     try:
         tbl = papq.read_table(src)
         even = pc.equal(pc.bit_wise_and(tbl.column("doc_id"), 1), 0)
@@ -7670,23 +7024,9 @@ def _q_s21_stream_cms(spark, sf_dir):
             .groupBy("r", "b")
             .agg(F.count(F.lit(1)).alias("counter"))
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s21_stream_cms: stream did not finish in 300s")
-        rows_df = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        rows_df = _drain_memory(spark, stream, "s21_stream_cms", "complete")
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return rows_df
 
 
@@ -10314,7 +9654,6 @@ def _q_s7_stream_static_dedup(spark, sf_dir):
     it on the normalized-text key."""
     import shutil
     import tempfile
-    import uuid
 
     _ensure_utc(spark)
     src = os.path.join(sf_dir, "documents.parquet")
@@ -10326,8 +9665,6 @@ def _q_s7_stream_static_dedup(spark, sf_dir):
         .distinct()
     )
     src_dir = tempfile.mkdtemp(prefix="s7_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s7_ckpt_")
-    name = f"s7_dedup_{uuid.uuid4().hex[:8]}"
     try:
         shutil.copy(src, os.path.join(src_dir, "documents.parquet"))
         stream = (
@@ -10337,23 +9674,9 @@ def _q_s7_stream_static_dedup(spark, sf_dir):
             .join(seen, "__fp", "left_anti")
             .select("doc_id", "source", "n_chars")
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s7_stream_static_dedup: stream timeout")
-        rows_df = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        rows_df = _drain_memory(spark, stream, "s7_stream_static_dedup", "append")
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return rows_df
 
 
@@ -11460,34 +10783,18 @@ def _q_s8_stream_sessions(spark, sf_dir):
     exactly (same µs columns)."""
     import shutil
     import tempfile
-    import uuid
 
     from modis_aggregation_spark.operators.sessions import sessionize_stream
 
     _ensure_utc(spark)
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     src_dir = tempfile.mkdtemp(prefix="s8_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s8_ckpt_")
-    name = f"s8_sessions_{uuid.uuid4().hex[:8]}"
     try:
         ev.repartition(4, "user_id").write.mode("overwrite").parquet(src_dir)
         schema = spark.read.parquet(src_dir).schema
         stream = spark.readStream.schema(schema).parquet(src_dir)
         out = sessionize_stream(stream, gap_minutes=360.0, watermark="1 hour")
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s8_stream_sessions: stream did not finish in 300s")
-        emitted = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        emitted = _drain_memory(spark, out, "s8_stream_sessions", "append")
         later = spark.read.parquet(src_dir).select(
             "user_id", F.col("ts").alias("__ts")
         )
@@ -11511,7 +10818,6 @@ def _q_s8_stream_sessions(spark, sf_dir):
         return spark.createDataFrame(rows.collect(), rows.schema)
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
 
 
 def _q_s13_stream_anomaly(spark, sf_dir):
@@ -11528,7 +10834,6 @@ def _q_s13_stream_anomaly(spark, sf_dir):
     round."""
     import shutil
     import tempfile
-    import uuid
 
     from modis_aggregation_spark.streaming.anomaly import zscore_stream
 
@@ -11537,27 +10842,12 @@ def _q_s13_stream_anomaly(spark, sf_dir):
         "event_id", "user_id", "ts", "value"
     )
     src_dir = tempfile.mkdtemp(prefix="s13_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s13_ckpt_")
-    name = f"s13_anomaly_{uuid.uuid4().hex[:8]}"
     try:
         ev.repartition(4, "user_id").write.mode("overwrite").parquet(src_dir)
         schema = spark.read.parquet(src_dir).schema
         stream = spark.readStream.schema(schema).parquet(src_dir)
         out = zscore_stream(stream, min_history=5, threshold=3.0)
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("s13_stream_anomaly: stream did not finish in 300s")
-        emitted = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        emitted = _drain_memory(spark, out, "s13_stream_anomaly", "append")
         return emitted.select(
             "user_id",
             "event_id",
@@ -11569,7 +10859,6 @@ def _q_s13_stream_anomaly(spark, sf_dir):
         )
     finally:
         shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
 
 
 def _q_s14_stream_upsert(spark, sf_dir):

@@ -31,6 +31,7 @@ import os
 
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql.types import ArrayType
 
 from modis_aggregation_spark.config import AggregationSpec
 
@@ -51,7 +52,6 @@ def pack_values(
     scale: float,
     offset: float,
     fill: int,
-    is_extreme: bool = False,
 ) -> np.ndarray:
     """Pack a float array to int64 with the reference's truncation rules
     (``astype(np.int)`` is int64: a Σv² of thousands of pixels overflows
@@ -80,12 +80,29 @@ def _is_cf_col(name: str) -> bool:
     return name.startswith("cf_") and not name.endswith(("_hist", "_jhist"))
 
 
+def _bin_shape(name: str, spec: AggregationSpec) -> tuple[int, ...]:
+    """Per-cell shape of histogram column ``name``, from the spec's bin
+    edges: ``cf_hist`` from the virtual cloud-fraction variable,
+    ``{joint}_jhist`` (x bins, partner bins), ``{var}_hist`` (bins)."""
+    if name == "cf_hist":
+        cf_var = next(v for v in spec.variables if v.is_virtual)
+        return (len(cf_var.bin_edges) - 1,)
+    if name.endswith("_jhist"):
+        jh = next(j for j in spec.joint_hists if f"{j.joint_name}_jhist" == name)
+        nx = len(spec.variable(jh.varname).bin_edges) - 1
+        return (nx, len(jh.joint_edges) - 1)
+    return (len(spec.variable(name[: -len("_hist")]).bin_edges) - 1,)
+
+
 def grid_to_arrays(
     grid_df: DataFrame, spec: AggregationSpec
 ) -> dict[str, np.ndarray]:
     """Collect a DENSIFIED grid DataFrame into ``{name: ndarray}`` shaped
     ``[nlat, nlon]`` (histograms ``[nlat, nlon, bins]``; joint histograms
-    ``[nlat, nlon, bx, by]``) — the reference's output layout (A16)."""
+    ``[nlat, nlon, bx, by]``) — the reference's output layout (A16).
+    Histogram shapes come from the column type and the spec's bin edges,
+    so an empty cell (NULL histogram after the densify left join) reads
+    as zeros even when no cell of the product is occupied."""
     nlat, nlon = spec.nlat, spec.nlon
     rows = grid_df.orderBy("cell").collect()
     if len(rows) != nlat * nlon:
@@ -94,19 +111,17 @@ def grid_to_arrays(
         )
     out: dict[str, np.ndarray] = {}
     skip = {"cell", "lat_idx", "lon_idx"}
-    for fname in grid_df.columns:
+    for field in grid_df.schema.fields:
+        fname = field.name
         if fname in skip:
             continue
         col = [r[fname] for r in rows]
-        # detect array columns from the first NON-NULL value — cell 0 may be
-        # an empty cell whose histogram is NULL after the densify left join
-        first = next((c for c in col if c is not None), None)
-        if isinstance(first, list):
-            zero = np.zeros_like(np.asarray(first, dtype=np.float64))
+        if isinstance(field.dataType, ArrayType):
+            zero = np.zeros(_bin_shape(fname, spec))
             arr = np.array(
-                [c if c is not None else zero for c in col], dtype=np.float64
+                [zero if c is None else c for c in col], dtype=np.float64
             )
-            out[fname] = arr.reshape((nlat, nlon) + arr.shape[1:])
+            out[fname] = arr.reshape((nlat, nlon) + zero.shape)
         else:
             arr = np.array(
                 [np.nan if c is None else float(c) for c in col], dtype=np.float64
@@ -150,9 +165,8 @@ def pack_grid(
             scale, offset, fill = vs.scale_factor, vs.add_offset, int(vs.fill_value)
         except KeyError:
             scale, offset, fill = 1.0, 0.0, -9999
-        is_extreme = name.endswith(("_min", "_max"))
         out[name] = (
-            pack_values(arr, scale, offset, fill, is_extreme),
+            pack_values(arr, scale, offset, fill),
             {
                 "scale_factor": scale,
                 "add_offset": offset,

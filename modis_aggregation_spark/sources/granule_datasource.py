@@ -30,9 +30,11 @@ Spark-side integration:
   files (``granule_<id>.hdf``) through the bundled classic-DFTAG codec
   (``sinks/hdf4lite.py``) — the container format of the original
   MYD06/MYD03 inputs — applying the reference's fill→NaN +
-  ``(raw − add_offset) × scale_factor`` calibration per variable
-  (contiguous classic layout; chunked/compressed special elements
-  raise, see ``hdf4lite`` docstring).
+  ``(raw − add_offset) × scale_factor`` calibration per variable.
+  It decodes contiguous SDS data and the special-element layouts
+  archived granules use: deflate-compressed, chunked, linked-block,
+  RLE, external-file, N-bit and SZIP elements. Only Skipping-Huffman
+  compression raises (see the ``hdf4lite`` docstring).
 
 Usage::
 

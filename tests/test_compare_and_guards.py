@@ -194,8 +194,8 @@ def test_salted_agg_matches_plain(spark):
 
 
 def test_grid_to_arrays_null_first_cell(spark):
-    """Regression: hist columns must be detected from the first NON-NULL
-    value — cell 0 of a densified grid can be empty (NULL array)."""
+    """Regression: hist columns must be detected from the column type —
+    cell 0 of a densified grid, or every cell, can be empty (NULL array)."""
     import numpy as np
 
     from modis_aggregation_spark.config import VariableSpec
@@ -215,6 +215,14 @@ def test_grid_to_arrays_null_first_cell(spark):
     assert np.all(arrays["v_hist"][0, 0] == 0)  # NULL cell -> zeros
     assert arrays["v_hist"][0, 1].tolist() == [1.0, 2.0]
     assert np.isnan(arrays["v_mean"][0, 0])
+    # an empty product (no occupied cell) keeps the histogram shape: the
+    # bin count comes from the spec, not from a non-NULL value
+    empty = spark.createDataFrame(
+        [(0, 0, 0, None, None), (1, 0, 1, None, None)], df.schema
+    )
+    arrays = grid_to_arrays(empty, spec)
+    assert arrays["v_hist"].shape == (1, 2, 2)
+    assert np.all(arrays["v_hist"] == 0)
 
 
 def test_salted_agg_stddev_matches_plain(spark):

@@ -216,3 +216,21 @@ def test_dedup_ttl_suppresses_then_reemits_after_eviction(spark, tmp_path):
     ]
     emitted_ts = [t for u, e, t in got if (u, e) == (1, "click")]
     assert emitted_ts == ["2024-01-01 10:00:00", "2024-01-01 12:45:00"]
+
+
+def test_memory_drain_returns_rows_and_drops_its_view(spark, tmp_path):
+    """The contract's memory-sink drain collects the sink's rows, then
+    drops the sink's temp view: after the call no temporary view is left
+    keeping the rows alive in the session."""
+    import __spark_entry__ as entry
+
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+    stream = spark.readStream.schema("id BIGINT").parquet(src)
+    before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    got = entry._drain_memory(spark, stream, "drain_probe", "append")
+
+    assert sorted(r["id"] for r in got.collect()) == list(range(10))
+    after = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert after == before
