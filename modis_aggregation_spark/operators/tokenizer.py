@@ -140,232 +140,12 @@ def _free_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
-# relative slack on every float bound comparison below: rejects a
-# candidate whenever a competing score could sit within ~1e-9 relative
-# of it (IEEE rounding of the bound chain is a few ulps, ~1e-16) — the
-# safe direction is always "don't batch, recount next round"
-_PROVE_EPS = 1e-9
-
-
-def _select_provable(rows, budget: int, min_count: int, merged_of, truncated: bool):
-    """Select the longest PREFIX of one round's ordered candidate rows
-    that is PROVABLY the exact sequence the sequential (batch-1) argmax
-    rule would pick — bit-identical training, fewer driver rounds
-    (round 13; the WordPiece LIKELIHOOD score is what makes the proof
-    tractable, so this applies to ``wordpiece_train`` only).
-
-    ``rows`` are (l, r, cnt, l_cnt, r_cnt, score) sorted by
-    (score desc, l asc, r asc) — the sequential ranking; ``score`` is
-    the engine's own IEEE division.  Having accepted the prefix A, the
-    next row ``c`` is accepted only when every way a merge in A could
-    change the ranking is bounded BELOW score(c):
-
-    * ``c`` shares no symbol (incl. merged outputs) with A, so its
-      recorded cnt/l_cnt/r_cnt — and its score — are exact under
-      sequential application of A (a merge only touches pairs
-      containing its symbols; adjacency of other symbols is never
-      created, since a merge replaces two adjacent symbols by one);
-    * ANY pair containing a merged output m of j=(l,r)→m — created by
-      the merge, or pre-existing when m collides with an existing unit
-      name (its count may then RISE) — scores at most ``1/u'(m)``:
-      occurrences of a pair (x, m), x ≠ m, consume distinct x units, so
-      cnt' ≤ u'(x) and score = cnt'/(u'(x)·u'(m)) ≤ 1/u'(m); u'(m) is
-      at least the application count, ≥ cnt_j (≥ cnt_j/2 when l == r,
-      where overlapping adjacencies halve it; a name collision only
-      INCREASES u'(m));
-    * every other existing pair is BOOSTED only via its operands' unit
-      counts shrinking (its count cannot rise: a merge replaces two
-      adjacent symbols by one, never creating adjacency between symbols
-      other than m).  For collected rows the exact bound
-      cnt/((l_cnt−Δl)·(r_cnt−Δr)) is checked per row; for the
-      uncollected tail, (score of the last collected row) × (worst
-      unit-shrink factor)² — when the collected list holds EVERY pair
-      (shorter than the requested limit) there is no tail.
-
-    Ties: an unaffected pair with score equal to score(c) sorts after
-    ``c`` in the same (score, l, r) order sequential uses, so only
-    BOOSTED/CREATED pairs need the strict bound.  Returns
-    ``(picked, stop)``; ``stop`` means the proven next argmax fell
-    below ``min_count`` — sequential training would end here.
-    """
-    picked: list = []
-    used: set = set()
-    merged_names: set = set()  # merged outputs of the picked prefix
-    delta: dict[str, int] = {}  # symbol -> proven max unit-count shrink
-    units: dict[str, int] = {}  # symbol -> unit count (from its rows)
-    created_bound = 0.0  # max over picked of the created-pair score bound
-    # ``truncated``: the collect hit its limit, so pairs BEYOND the list
-    # exist and score at most the last collected row's score; a complete
-    # list (shorter than the limit) has no tail to bound
-    tail_score = rows[-1]["score"] if (truncated and rows) else None
-
-    def _boost_factor() -> float | None:
-        worst = 1.0
-        for s, d in delta.items():
-            u = units.get(s)
-            if u is None or u - d <= 0:
-                return None
-            worst = max(worst, u / (u - d))
-        return worst
-
-    for row in rows:
-        if len(picked) >= budget:
-            break
-        l_, r_ = row["l"], row["r"]
-        cnt = int(row["cnt"])
-        m_ = merged_of(l_, r_)
-        score_c = float(row["score"])
-        if picked:
-            # 1. exactness: disjoint from everything A touched
-            if l_ in used or r_ in used or m_ in used:
-                break
-            # 2. created pairs cannot reach score(c)
-            if created_bound * (1.0 + _PROVE_EPS) >= score_c:
-                break
-            # 3a. boosted collected pairs cannot reach score(c) —
-            # rows before c are the picked prefix (their adjacencies
-            # are fully consumed by their own merge), c itself is
-            # disjoint; only rows AFTER c compete
-            ok = True
-            for other in rows[len(picked) + 1:]:
-                if other["l"] in merged_names or other["r"] in merged_names:
-                    continue  # covered by created_bound (condition 2)
-                dl = delta.get(other["l"], 0)
-                dr = delta.get(other["r"], 0)
-                if not dl and not dr:
-                    continue  # unaffected: order vs c preserved
-                ul = int(other["l_cnt"]) - dl
-                ur = int(other["r_cnt"]) - dr
-                bound = (
-                    float("inf")
-                    if ul <= 0 or ur <= 0
-                    else int(other["cnt"]) / (float(ul) * float(ur))
-                )
-                if bound * (1.0 + _PROVE_EPS) >= score_c:
-                    ok = False
-                    break
-            if not ok:
-                break
-            # 3b. the uncollected tail cannot reach score(c)
-            if tail_score is not None:
-                f = _boost_factor()
-                if f is None or tail_score * f * f * (1.0 + _PROVE_EPS) >= score_c:
-                    break
-        if cnt < min_count:
-            # c IS the proven next argmax and it is sub-threshold:
-            # sequential training stops here
-            return picked, True
-        picked.append(row)
-        used.update((l_, r_, m_))
-        merged_names.add(m_)
-        units[l_] = int(row["l_cnt"])
-        units[r_] = int(row["r_cnt"])
-        if l_ == r_:
-            delta[l_] = delta.get(l_, 0) + 2 * cnt
-            created_bound = max(created_bound, 2.0 / cnt)
-        else:
-            delta[l_] = delta.get(l_, 0) + cnt
-            delta[r_] = delta.get(r_, 0) + cnt
-            created_bound = max(created_bound, 1.0 / cnt)
-    return picked, False
-
-
-def _train_local(
-    wc: dict,
-    num_merges: int,
-    min_pair_count: int,
-    batch: int,
-    wordpiece: bool,
-):
-    """Driver-side merge loop over a COLLECTED word-frequency table —
-    the single-node handoff of docs/SCALING.md §tokenizers option (b):
-    the cluster's job is producing ``(word, count)`` (one corpus scan);
-    training then runs here with the SAME exact-integer counts, IEEE
-    score division, ranking keys, ``_select_disjoint`` batching and
-    greedy merge fold as the distributed rounds — bit-identical output
-    for any ``merge_batch``, without one Spark job per merge round.
-    Returns the merge rows in the engine-specific tuple shape."""
-    from collections import Counter
-
-    vocab = {
-        w: ([w[0]] + ["##" + c for c in w[1:]] if wordpiece else list(w))
-        for w in wc
-    }
-    if wordpiece:
-        def merged_of(l_, r_):
-            return l_ + (r_[2:] if r_.startswith("##") else r_)
-    else:
-        def merged_of(l_, r_):
-            return l_ + r_
-
-    merges = []
-    while len(merges) < num_merges:
-        pc: Counter = Counter()
-        uc: Counter = Counter()
-        for w, syms in vocab.items():
-            n = wc[w]
-            if wordpiece:
-                for s in syms:
-                    uc[s] += n
-            for a, b in zip(syms, syms[1:]):
-                pc[(a, b)] += n
-        if not pc:
-            break
-        budget = min(batch, num_merges - len(merges))
-        if wordpiece:
-            # the distributed round's exact score: ONE IEEE division of
-            # exact int64 counts (same doubles -> same order)
-            def key(kv):
-                return (
-                    -(float(kv[1])
-                      / (float(uc[kv[0][0]]) * float(uc[kv[0][1]]))),
-                    kv[0][0],
-                    kv[0][1],
-                )
-        else:
-            def key(kv):
-                return (-kv[1], kv[0][0], kv[0][1])
-        ranked = sorted(pc.items(), key=key)[
-            : (budget if budget == 1 else 8 * budget)
-        ]
-        rows = [
-            {"l": l_, "r": r_, "cnt": c,
-             "l_cnt": uc[l_], "r_cnt": uc[r_]}
-            for (l_, r_), c in ranked
-        ]
-        picked = _select_disjoint(rows, budget, min_pair_count, merged_of)
-        if not picked:
-            break
-        for row in picked:
-            l_, r_ = row["l"], row["r"]
-            m_ = merged_of(l_, r_)
-            for w, syms in vocab.items():
-                out, i = [], 0
-                while i < len(syms):
-                    if i + 1 < len(syms) and syms[i] == l_ and syms[i + 1] == r_:
-                        out.append(m_)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                vocab[w] = out
-            if wordpiece:
-                merges.append(
-                    (len(merges) + 1, l_, r_, m_, int(row["cnt"]),
-                     int(row["l_cnt"]), int(row["r_cnt"]))
-                )
-            else:
-                merges.append((len(merges) + 1, l_, r_, int(row["cnt"])))
-    return merges
-
-
 def bpe_train(
     df: DataFrame,
     text_col: str = "text",
     num_merges: int = 8,
     min_pair_count: int = 2,
     merge_batch: int = 1,
-    engine: str = "rounds",
 ) -> DataFrame:
     """Learn ``num_merges`` BPE merge rules from the corpus.
 
@@ -384,31 +164,11 @@ def bpe_train(
     differ from sequential (a new pair created by an earlier merge in
     the batch can't be seen until the next round).  This is the
     standard count-batched BPE scheduling trade; use it past ~1k merges
-    or hand the word-frequency table to a single-node trainer
-    (bit-identical scores) as SCALING.md describes.
-
-    ``engine="local"`` (round 9) IS that handoff, implemented: the
-    cluster produces ``(word, count)`` (one corpus scan — the only part
-    whose cost scales with the corpus), the table is collected
-    (~10⁷ rows / low-hundreds of MB for a 100 TB web corpus — the
-    documented driver bound), and the merge loop runs driver-side with
-    the same exact-integer arithmetic, ranking keys and batching —
-    bit-identical to ``engine="rounds"`` for any ``merge_batch``
-    (pinned by test), without one Spark job per round.
+    or collect ``word_vocab`` and train off-cluster, as SCALING.md
+    describes.
     """
     spark = df.sparkSession
     batch = max(1, int(merge_batch))
-    if engine == "local":
-        wc = {
-            r["word"]: r["count"]
-            for r in word_vocab(df, text_col).collect()
-        }
-        return spark.createDataFrame(
-            _train_local(wc, num_merges, min_pair_count, batch, False),
-            "rank INT, left STRING, right STRING, pair_count BIGINT",
-        )
-    if engine != "rounds":
-        raise ValueError(f"unknown engine {engine!r} (rounds|local)")
     vocab = (
         word_vocab(df, text_col)
         .select(_chars(F.col("word")).alias("syms"), "count")
@@ -876,7 +636,6 @@ def wordpiece_train(
     num_merges: int = 8,
     min_pair_count: int = 2,
     merge_batch: int = 1,
-    engine: str = "rounds",
 ) -> DataFrame:
     """Learn ``num_merges`` WordPiece merges from the corpus — the
     third tokenizer family next to BPE (x70) and unigram-LM (x77).
@@ -895,17 +654,11 @@ def wordpiece_train(
     pair-count aggregation and one symbol-count aggregation over the
     DISTINCT-WORD vocab (skinny shuffles, corpus text never moves),
     one small argmax-candidate collect, one pure-JVM merge fold per
-    landed merge.  Round 13: the default (``merge_batch=1``) path lands
-    up to ALL remaining merges per round via ``_select_provable`` — a
-    prefix of the collected candidate ranking is accepted only when the
-    WordPiece score bounds PROVE the sequential argmax would pick
-    exactly that prefix, so the merge sequence (and every recorded
-    count) is bit-identical to one-merge-per-round recounting while the
-    driver runs fewer rounds.
+    landed merge.
 
     Determinism: counts are exact int64; the score is one IEEE
     division ``double(cnt) / (double(l_cnt) · double(r_cnt))`` computed
-    identically in any engine; ties break lexicographically on
+    identically in any trainer; ties break lexicographically on
     (left, right) — so the learned table is a pure function of the
     corpus and an independent dict-based trainer (tools/make_goldens)
     reproduces it bit-for-bit. Output rows carry the exact integer
@@ -924,28 +677,8 @@ def wordpiece_train(
     tie-breaks are computed on exact numbers; only the merge ORDER may
     differ from the sequential rule.  Default 1 = exact sequential
     (the contract/golden behavior).
-
-    ``engine="local"`` (round 9): the single-node handoff — see
-    ``bpe_train``; bit-identical to ``engine="rounds"`` for any
-    ``merge_batch`` (the score is the same IEEE division of the same
-    exact int64 counts).
     """
     spark = df.sparkSession
-    if engine == "local":
-        wc = {
-            r["word"]: r["count"]
-            for r in word_vocab(df, text_col).collect()
-        }
-        return spark.createDataFrame(
-            _train_local(
-                wc, num_merges, min_pair_count, max(1, int(merge_batch)),
-                True,
-            ),
-            "rank INT, left STRING, right STRING, merged STRING, "
-            "pair_count BIGINT, left_count BIGINT, right_count BIGINT",
-        )
-    if engine != "rounds":
-        raise ValueError(f"unknown engine {engine!r} (rounds|local)")
     # lazy (round 13): round 1's collect materializes the vocab inside
     # its own job; the eager form paid a dedicated barrier job up front
     vocab = (
@@ -1019,35 +752,13 @@ def wordpiece_train(
             )
         )
         budget = min(batch, num_merges - len(merges))
-        stop = False
-        if batch == 1:
-            # provable batched scheduling (round 13): collect a candidate
-            # list wide enough to PROVE which prefix of it the sequential
-            # argmax rule would pick (see _select_provable) — the merge
-            # sequence stays bit-identical to batch-1 recounting, but one
-            # round can now land several merges, cutting the number of
-            # driver rounds (each round = 2 vocab aggregations + a
-            # collect — the slot is round-count-bound, not data-bound)
-            want = num_merges - len(merges)
-            limit = max(16, 4 * want)
-            top = (
-                scored.orderBy(F.desc("score"), F.asc("l"), F.asc("r"))
-                .limit(limit)
-                .collect()
-            )
-            _free_local_checkpoint(units)
-            picked, stop = _select_provable(
-                top, want, min_pair_count, _wp_merged,
-                truncated=len(top) == limit,
-            )
-        else:
-            top = (
-                scored.orderBy(F.desc("score"), F.asc("l"), F.asc("r"))
-                .limit(budget if budget == 1 else 8 * budget)
-                .collect()
-            )
-            _free_local_checkpoint(units)
-            picked = _select_disjoint(top, budget, min_pair_count, _wp_merged)
+        top = (
+            scored.orderBy(F.desc("score"), F.asc("l"), F.asc("r"))
+            .limit(budget if budget == 1 else 8 * budget)
+            .collect()
+        )
+        _free_local_checkpoint(units)
+        picked = _select_disjoint(top, budget, min_pair_count, _wp_merged)
         if not picked:
             break
         for row in picked:
@@ -1075,10 +786,6 @@ def wordpiece_train(
                 "count",
             )
             applied_since_ckpt += 1
-        if stop:
-            # the proven next argmax fell below min_pair_count —
-            # sequential training ends here
-            break
         if applied_since_ckpt >= 4 and len(merges) < num_merges:
             vocab = vocab.localCheckpoint(eager=False)
             applied_since_ckpt = 0

@@ -18,11 +18,11 @@ Packing rules replicated exactly (quirk Q10):
 * cloud-fraction datasets are forced ``scale=1e-4, offset=0, fill=-9999``
   (``:438-444``).
 
-h5py is not in this container: the numeric packing is pure NumPy (tested),
-and the physical write goes through the bundled pure-Python classic-format
-HDF5 writer (``hdf5lite`` — reader validated against the reference's own
-h5py-produced sample file, writer round-trip-verified through it); h5py is
-used instead when importable.
+The numeric packing is pure NumPy (tested), and the physical write always
+goes through the bundled pure-Python classic-format HDF5 writer
+(``hdf5lite`` — reader validated against the reference's own sample file,
+writer round-trip-verified through it), so every host writes the same
+bytes.
 """
 
 from __future__ import annotations
@@ -305,37 +305,22 @@ def export_hdf5(
     """Write the MYD08-style HDF5 file (reference
     ``aggregate_functions.py:413-453,724-757``).
 
-    Uses h5py when importable; otherwise writes the file with the
-    bundled pure-Python classic-format writer (``hdf5lite`` — reader
-    validated against the reference's own h5py-produced sample output,
-    writer round-trip-verified through that reader), so the physical
-    HDF5 product exists in h5py-free environments too."""
+    Written with the bundled pure-Python classic-format writer
+    (``hdf5lite`` — reader validated against the reference's own sample
+    output, writer round-trip-verified through that reader)."""
     if os.path.exists(path) and not overwrite:
         raise FileExistsError(path)  # S13 output-exists guard
     arrays = grid_to_arrays(grid_df, spec)
     packed = pack_grid(arrays, spec)
     lat_bnd, lon_bnd = axis_bounds(spec)
-    # one dataset->(array, attrs) plan shared by BOTH writers, so the file
-    # contents cannot diverge by environment (the reference sample carries
-    # units/long_name on the bounds vectors — both paths must too)
-    out = {
+    from modis_aggregation_spark.sinks.hdf5lite import write_hdf5
+
+    # the reference sample carries units/long_name on the bounds vectors
+    write_hdf5(path, {
         "lat_bnd": (lat_bnd, {"units": "degrees",
                               "long_name": "Latitude_boundaries"}),
         "lon_bnd": (lon_bnd, {"units": "degrees",
                               "long_name": "Longitude_boundaries"}),
-    }
-    for name, (data, attrs) in packed.items():
-        out[name] = (data, attrs)
-    try:
-        import h5py
-    except ImportError:
-        from modis_aggregation_spark.sinks.hdf5lite import write_hdf5
-
-        write_hdf5(path, out)
-        return path
-    with h5py.File(path, "w") as f:  # pragma: no cover - env-dependent
-        for name, (data, attrs) in out.items():
-            ds = f.create_dataset(name, data=data)
-            for k, v in attrs.items():
-                ds.attrs[k] = v
+        **packed,
+    })
     return path

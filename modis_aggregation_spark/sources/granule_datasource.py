@@ -1,6 +1,6 @@
 """Spark 4 Python DataSource for MODIS-style granule files (S3).
 
-The reference reads granules with netCDF4/h5py per file inside each worker
+The reference reads granules with netCDF4 per file inside each worker
 (``read_MODIS``, reference ``MODIS_Aggregation/aggregate_functions.py:124-223``)
 and parallelizes BY FILE (MPI rank split ``MODIS_Aggregation_MPI.py:52-63``,
 Dask chunks ``MODIS_Aggregation_DASK.py:73-81``). This data source keeps that
@@ -19,15 +19,12 @@ Spark-side integration:
   of the reference's ls-by-time-prefix catalog pruning (S1). All other
   filters are returned to Spark for post-scan evaluation.
 * **Decode** runs vectorized per granule and yields ONE Arrow RecordBatch
-  per file (Arrow transfer, no per-row Python). Three decoders:
+  per file (Arrow transfer, no per-row Python). Two decoders:
   ``decoder=fake`` (default here) synthesizes a deterministic granule
   from the granule id with the real 5-km shape (406×270, reference
-  ``:150``); ``decoder=hdf5`` reads REAL HDF5 granule files
-  (``granule_<id>.h5`` under the ``path`` option) through the bundled
-  pure-Python classic-format codec (``sinks/hdf5lite.py``) — the
-  physical binary-container scan path, proven row-identical to the fake
-  decoder on the same content; ``decoder=hdf`` reads REAL HDF4 granule
-  files (``granule_<id>.hdf``) through the bundled classic-DFTAG codec
+  ``:150``); ``decoder=hdf`` reads REAL HDF4 granule files
+  (``granule_<id>.hdf`` under the ``path`` option) through the bundled
+  classic-DFTAG codec
   (``sinks/hdf4lite.py``) — the container format of the original
   MYD06/MYD03 inputs — applying the reference's fill→NaN +
   ``(raw − add_offset) × scale_factor`` calibration per variable.
@@ -47,7 +44,6 @@ Usage::
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator, Sequence
 
 import numpy as np
@@ -73,6 +69,7 @@ from pyspark.sql.types import StructType
 PRODUCT_SHAPES = {"5km": (406, 270), "1km": (2030, 1354)}
 SWATH_ROWS, SWATH_COLS = PRODUCT_SHAPES["5km"]
 BASE_FIELDS = "granule_id BIGINT, i INT, j INT, lat DOUBLE, lon DOUBLE, cm_raw TINYINT"
+DECODERS = ("fake", "hdf")
 
 
 class GranulePartition(InputPartition):
@@ -111,69 +108,6 @@ def synth_granule(
         vals = rng.uniform(100.0, 1000.0, i.size)
         vals[rng.random(i.size) < 0.05] = np.nan  # fill holes → NULL
         out[v] = vals
-    return out
-
-
-def write_granule_hdf5(
-    dir_path: str,
-    granule_id: int,
-    variables: Sequence[str],
-    rows: int = SWATH_ROWS,
-    cols: int = SWATH_COLS,
-) -> str:
-    """Materialize a granule as a REAL HDF5 file (``granule_<id>.h5``):
-    2-D swath datasets (lat, lon, cm_raw, one per variable) written with
-    the bundled classic-format writer — the binary container shape the
-    reference's HDF4 inputs have, minus the pre-HDF5 container format
-    itself. Content matches ``synth_granule`` exactly, so a
-    ``decoder=hdf5`` scan must equal a ``decoder=fake`` scan row-for-row
-    (the equivalence test for the real file-decode path)."""
-    import os
-
-    from modis_aggregation_spark.sinks.hdf5lite import write_hdf5
-
-    data = synth_granule(granule_id, variables, rows, cols)
-    dsets: dict = {
-        "lat": (data["lat"].reshape(rows, cols), {"units": "degrees_north"}),
-        "lon": (data["lon"].reshape(rows, cols), {"units": "degrees_east"}),
-        "cm_raw": (
-            data["cm_raw"].reshape(rows, cols).astype("<i4"),
-            {"long_name": "Cloud_Mask_1km byte 0"},
-        ),
-    }
-    for v in variables:
-        dsets[v] = (data[v].reshape(rows, cols), {"_FillValue": float("nan")})
-    path = os.path.join(dir_path, f"granule_{granule_id}.h5")
-    write_hdf5(path, dsets)
-    return path
-
-
-def load_granule_hdf5(
-    dir_path: str, granule_id: int, variables: Sequence[str]
-) -> dict[str, np.ndarray]:
-    """Decode ``granule_<id>.h5`` back into the scan's flat row layout
-    (the real-file counterpart of ``synth_granule``)."""
-    import os
-
-    from modis_aggregation_spark.sinks.hdf5lite import read_hdf5
-
-    ds = read_hdf5(os.path.join(dir_path, f"granule_{granule_id}.h5"))
-    lat = ds["lat"].data
-    rows, cols = lat.shape
-    i = np.repeat(np.arange(rows, dtype=np.int32), cols)
-    j = np.tile(np.arange(cols, dtype=np.int32), rows)
-    out = {
-        "granule_id": np.full(i.size, granule_id, dtype=np.int64),
-        "i": i,
-        "j": j,
-        "lat": lat.ravel(),
-        "lon": ds["lon"].data.ravel(),
-        "cm_raw": ds["cm_raw"].data.ravel().astype(np.int8),
-    }
-    for v in variables:
-        if v not in ds:
-            raise KeyError(f"variable {v!r} not in granule_{granule_id}.h5")
-        out[v] = ds[v].data.ravel().astype(np.float64)
     return out
 
 
@@ -380,12 +314,15 @@ class GranuleReader(DataSourceReader):
             )
         self.swath_shape = PRODUCT_SHAPES[product]
         self.decoder = options.get("decoder", "fake")
-        self.path = options.get("path", "")
-        if self.decoder in ("hdf", "hdf5") and not self.path:
+        if self.decoder not in DECODERS:
             raise ValueError(
-                f"decoder={self.decoder} requires the 'path' option "
-                "(directory of granule_<id>"
-                f".{'hdf' if self.decoder == 'hdf' else 'h5'} files)"
+                f"unknown decoder {self.decoder!r}; known: {', '.join(DECODERS)}"
+            )
+        self.path = options.get("path", "")
+        if self.decoder == "hdf" and not self.path:
+            raise ValueError(
+                "decoder=hdf requires the 'path' option "
+                "(directory of granule_<id>.hdf files)"
             )
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -424,10 +361,6 @@ class GranuleReader(DataSourceReader):
 
         if self.decoder == "hdf":
             data = load_granule_hdf4(
-                self.path, partition.granule_id, self.variables
-            )
-        elif self.decoder == "hdf5":
-            data = load_granule_hdf5(
                 self.path, partition.granule_id, self.variables
             )
         else:
@@ -510,9 +443,3 @@ class GranuleDataSource(DataSource):
 def expected_rows(n_granules: int) -> int:
     return n_granules * SWATH_ROWS * SWATH_COLS
 
-
-def granule_count_for_bytes(target_bytes: int) -> int:
-    """Sizing helper: granules needed to reach a target decoded volume
-    (~8 B × 406×270 × (6 + nvars) per granule) — used by scale tests."""
-    per = SWATH_ROWS * SWATH_COLS * 8 * 7
-    return max(1, math.ceil(target_bytes / per))

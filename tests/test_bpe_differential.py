@@ -176,26 +176,3 @@ def test_bpe_train_batch1_identical_to_default(spark):
     assert [
         (r["left"], r["right"], r["pair_count"]) for r in a
     ] == _train_ref(corpus, 5, 2)[0]
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-@given(corpus=_CORPUS, batch=st.sampled_from([1, 3]))
-def test_bpe_train_local_engine_identical(spark, corpus, batch):
-    """engine='local' (the SCALING.md single-node handoff: collect the
-    word-frequency table, train driver-side) must be BIT-IDENTICAL to
-    the distributed rounds for any merge_batch — same integer counts,
-    ranking keys, disjoint batching and merge fold."""
-    df = spark.createDataFrame(
-        list(enumerate(corpus)), "doc_id LONG, text STRING"
-    )
-    rounds = bpe_train(
-        df, "text", num_merges=5, merge_batch=batch
-    ).orderBy("rank").collect()
-    local = bpe_train(
-        df, "text", num_merges=5, merge_batch=batch, engine="local"
-    ).orderBy("rank").collect()
-    assert local == rounds

@@ -198,70 +198,17 @@ def test_datasource_stream_reader_exactly_once(registered, tmp_path):
     assert n_batches >= 3  # 3+3+1 arrival batches, not one big scan
 
 
-def test_hdf5_decoder_equals_fake_scan(spark, tmp_path):
-    """decoder=hdf5 reads REAL HDF5 granule files (written by hdf5lite)
-    and must equal the in-memory fake decoder row-for-row — the
-    equivalence proof for the physical file-decode path."""
-    from modis_aggregation_spark.sources.granule_datasource import (
-        GranuleDataSource,
-        write_granule_hdf5,
-    )
-
-    spark.dataSource.register(GranuleDataSource)
-    for gid in (7, 9):
-        write_granule_hdf5(str(tmp_path), gid, ["ctp"], rows=12, cols=9)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    real = (
-        spark.read.format("modis_granules")
-        .option("granule_ids", "7,9")
-        .option("decoder", "hdf5")
-        .option("path", str(tmp_path))
-        .option("variables", "ctp")
-        .load()
-    )
-    # fake path at the same custom shape is not exposed via options, so
-    # compare against synth_granule directly
-    import numpy as np
-
-    from modis_aggregation_spark.sources.granule_datasource import synth_granule
-
-    got = real.orderBy("granule_id", "i", "j").collect()
-    want = []
-    for gid in (7, 9):
-        d = synth_granule(gid, ["ctp"], rows=12, cols=9)
-        for r in range(d["lat"].size):
-            want.append((gid, d["i"][r], d["j"][r], d["lat"][r], d["lon"][r],
-                         d["cm_raw"][r], d["ctp"][r]))
-    assert len(got) == len(want) == 2 * 12 * 9
-    for g, w in zip(got, want):
-        assert (g["granule_id"], g["i"], g["j"]) == (w[0], w[1], w[2])
-        assert g["lat"] == pytest.approx(w[3]) and g["lon"] == pytest.approx(w[4])
-        assert g["cm_raw"] == w[5]
-        if np.isnan(w[6]):
-            assert g["ctp"] is None  # NaN hole → NULL at the source
-        else:
-            assert g["ctp"] == pytest.approx(w[6])
-
-
-def test_hdf5_decoder_pushdown_prunes_files(spark, tmp_path):
-    """granule_id pushdown must prune which FILES are opened — a missing
-    file for a pruned id proves the partition never read it."""
-    from modis_aggregation_spark.sources.granule_datasource import (
-        GranuleDataSource,
-        write_granule_hdf5,
-    )
-
-    spark.dataSource.register(GranuleDataSource)
-    write_granule_hdf5(str(tmp_path), 3, ["ctp"], rows=6, cols=5)
-    # id 4 is listed but its file does NOT exist; the filter prunes it
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+@pytest.mark.parametrize("decoder", ["hdf4", "hdf5", "HDF"])
+def test_unknown_decoder_rejected(registered, tmp_path, decoder):
+    """A decoder name outside ``fake, hdf`` fails when the read is
+    planned; it never falls back to synthetic pixels."""
     df = (
-        spark.read.format("modis_granules")
-        .option("granule_ids", "3,4")
-        .option("decoder", "hdf5")
+        registered.read.format("modis_granules")
+        .option("granule_ids", "1")
+        .option("decoder", decoder)
         .option("path", str(tmp_path))
         .option("variables", "ctp")
         .load()
-        .filter("granule_id = 3")
     )
-    assert df.count() == 30
+    with pytest.raises(Exception, match=r"unknown decoder .*known: fake, hdf"):
+        df.count()

@@ -227,9 +227,9 @@ def test_pack_grid_and_axes(spark, grid):
 
 
 def test_export_hdf5_writes_real_file(spark, grid, tmp_path):
-    """The physical MYD08-style HDF5 product is written even without
-    h5py (hdf5lite fallback) and round-trips through the reader that is
-    validated against the reference's own sample output."""
+    """The physical MYD08-style HDF5 product is written by hdf5lite and
+    round-trips through the reader that is validated against the
+    reference's own sample output."""
     from modis_aggregation_spark.sinks.hdf5lite import read_hdf5
 
     out = writers.export_hdf5(grid, SPEC, str(tmp_path / "l3.h5"))

@@ -148,56 +148,11 @@ def test_encode_matches_independent_matcher(spark):
         )
 
 
-def _prov_row(l, r, cnt, lc, rc):
-    return {"l": l, "r": r, "cnt": cnt, "l_cnt": lc, "r_cnt": rc,
-            "score": float(cnt) / (float(lc) * float(rc))}
-
-
-def _wp_merged(l, r):
-    return l + (r[2:] if r.startswith("##") else r)
-
-
-def test_select_provable_accepts_only_proven_prefix():
-    """The round-13 batched scheduler must accept a second candidate
-    only when the created-pair bound (1/cnt of every earlier merge)
-    sits strictly below its score, and must reject interaction."""
-    # accept: both pure pairs, second score (1/99) above 1/100
-    rows = [_prov_row("x", "##q", 100, 100, 100),
-            _prov_row("a", "##b", 99, 99, 99)]
-    picked, stop = T._select_provable(rows, 8, 2, _wp_merged, truncated=False)
-    assert [(p["l"], p["r"]) for p in picked] == [("x", "##q"), ("a", "##b")]
-    assert not stop
-    # reject: second candidate's score 90/(1000·1000) is below the
-    # created-pair bound 1/100 — merge 1 could spawn a better pair
-    rows = [_prov_row("x", "##q", 100, 100, 100),
-            _prov_row("a", "##b", 90, 1000, 1000)]
-    picked, _ = T._select_provable(rows, 8, 2, _wp_merged, truncated=False)
-    assert len(picked) == 1
-    # reject: shares a symbol with the first pick (its counts go stale)
-    rows = [_prov_row("x", "##q", 100, 100, 100),
-            _prov_row("xq", "##z", 99, 99, 99)]  # xq = merged output
-    picked, _ = T._select_provable(rows, 8, 2, _wp_merged, truncated=False)
-    assert len(picked) == 1
-    # tail: truncated list forces the tail bound s_last·f² >= score_c
-    # (here the boost factor is even unbounded: u(x) − cnt = 0)
-    rows = [_prov_row("x", "##q", 1000, 1000, 1000),
-            _prov_row("a", "##b", 999, 999, 999)]
-    picked, _ = T._select_provable(rows, 8, 2, _wp_merged, truncated=True)
-    # tail pairs could score up to s_last (≈1e-3) boosted by u(x)
-    # shrink factor (1000/(1000-1000) -> unbounded): must reject
-    assert len(picked) == 1
-    # stop: the proven next argmax is sub-threshold
-    rows = [_prov_row("x", "##q", 100, 100, 100),
-            _prov_row("a", "##b", 1, 1, 1)]
-    picked, stop = T._select_provable(rows, 8, 2, _wp_merged, truncated=False)
-    assert len(picked) == 1 and stop
-
-
 def test_provable_batching_matches_reference_on_random_corpora(spark):
-    """Randomized differential for the round-13 provable batching: mixed
-    corpora with several DISJOINT alphabets (independent merge families,
-    the case where batching can fire) must still reproduce the
-    independent sequential trainer bit-for-bit."""
+    """Randomized differential for the default trainer: mixed corpora
+    with several DISJOINT alphabets (independent merge families, whose
+    scores interleave across rounds) must reproduce the independent
+    sequential trainer bit-for-bit."""
     import random
     import sys
 

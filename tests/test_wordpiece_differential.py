@@ -171,28 +171,3 @@ def test_wordpiece_train_batched_matches_reference(spark, corpus, batch):
         for r in model.orderBy("rank").collect()
     ]
     assert got == _independent_wordpiece_batched(corpus, 6, 2, batch)
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[
-        HealthCheck.function_scoped_fixture,
-        HealthCheck.too_slow,
-    ],
-)
-@given(corpus=_CORPUS, batch=st.sampled_from([1, 3]))
-def test_wordpiece_train_local_engine_identical(spark, corpus, batch):
-    """engine='local' must be BIT-IDENTICAL to the distributed rounds
-    for any merge_batch — the likelihood score is the same IEEE
-    division of the same exact int64 counts on both engines."""
-    df = spark.createDataFrame(
-        list(enumerate(corpus)), "doc_id LONG, text STRING"
-    )
-    rounds = wordpiece_train(
-        df, "text", num_merges=5, merge_batch=batch
-    ).orderBy("rank").collect()
-    local = wordpiece_train(
-        df, "text", num_merges=5, merge_batch=batch, engine="local"
-    ).orderBy("rank").collect()
-    assert local == rounds

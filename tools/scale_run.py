@@ -324,67 +324,17 @@ def run_minhash_curve(spark, sf_dir: str, replicate: int) -> dict:
     }
 
 
-def run_hdf5_scan(spark, n_granules: int, tmp_dir: str | None = None) -> dict:
-    """REAL-file granule scan anchor: write ``n_granules`` physical HDF5
-    granules (5-km swath, hdf5lite), then run the m16-ish shape over a
-    ``decoder=hdf5`` scan — decode px/s for the binary-container path
-    (pure-Python parse per file, Arrow batch out). The fake-decoder curve
-    measures synthesis; this one measures an actual read+parse."""
-    import shutil
-    import tempfile
-
-    from modis_aggregation_spark.sources.granule_datasource import (
-        GranuleDataSource,
-        write_granule_hdf5,
-    )
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(GranuleDataSource)
-    d = tmp_dir or tempfile.mkdtemp(prefix="h5granules_")
-    try:
-        ids = [5000 + i for i in range(n_granules)]
-        for g in ids:
-            write_granule_hdf5(d, g, ["ctp"])
-        df = (
-            spark.read.format("modis_granules")
-            .option("granule_ids", ",".join(map(str, ids)))
-            .option("decoder", "hdf5")
-            .option("path", d)
-            .option("variables", "ctp")
-            .load()
-        )
-        spec = default_spec(lat_bounds=(-90.0, 90.0), lon_bounds=(-180.0, 180.0))
-        t0 = time.perf_counter()
-        n_cells = (
-            ops_stats.cell_stats(
-                ops_stats.with_cloud_mask(ops_stats.with_cell(df, spec)), ["ctp"]
-            ).count()
-        )
-        t = time.perf_counter() - t0
-        n_px = n_granules * 406 * 270
-        return {
-            "granules": n_granules,
-            "pixels": n_px,
-            "cells": n_cells,
-            "sec": round(t, 2),
-            "px_per_sec": int(n_px / t),
-        }
-    finally:
-        if tmp_dir is None:
-            shutil.rmtree(d, ignore_errors=True)
-
-
 def run_hdf4_scan(spark, n_granules: int, tmp_dir: str | None = None) -> dict:
-    """REAL-file HDF4 granule scan anchor (round 4): write ``n_granules``
-    physical classic-DFTAG granules (hdf4lite, the original MYD06/MYD03
-    container format), scan with ``decoder=hdf`` — per-file parse +
-    fill→NaN + calibration, Arrow batch out — into the same grid-stats
-    shape as the HDF5 anchor for a like-for-like px/s comparison."""
+    """REAL-file granule scan anchor: write ``n_granules`` physical
+    classic-DFTAG granules (5-km swath, hdf4lite — the original
+    MYD06/MYD03 container format), then run the m16-ish shape over a
+    ``decoder=hdf`` scan — per-file parse + fill→NaN + calibration,
+    Arrow batch out. The fake-decoder curve measures synthesis; this one
+    measures an actual read+parse."""
     import shutil
     import tempfile
 
     from modis_aggregation_spark.sources.granule_datasource import (
-        GranuleDataSource,
         write_granule_hdf4,
     )
 
@@ -1727,34 +1677,11 @@ def run_ivf_pruned_curve(spark, sf_dir: str, replicate: int) -> dict:
     }
 
 
-def _identity_shared_frame():
-    """Measurement twin (round 13, VERDICT r12 item 5): identity-patch
-    ``shared_frame`` inside an operator module so the multi-consumer
-    frame is NOT materialized — Catalyst then splices the upstream
-    subtree into every consumer, which IS the pre-round-12 shape
-    (plan-verified in plans/r12: bm25 2 tokenize passes, kneser-ney 4
-    corpus scans).  Context manager over the module attribute."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _patch(mod):
-        orig = mod.shared_frame
-        mod.shared_frame = lambda df, eager=False: df
-        try:
-            yield
-        finally:
-            mod.shared_frame = orig
-
-    return _patch
-
-
 def run_bm25_curve(spark, sf_dir: str, replicate: int) -> dict:
     """x42 shape anchor (round 13): BM25 scoring over the cipher-
-    replicated corpus, the round-12 single-tokenize shape vs the
-    pre-round-12 two-pass twin (shared_frame identity-patched).  Claim:
-    the removed corpus tokenize pass dominates as the corpus grows —
-    old/new wall ratio rises toward 2× (both passes are tokenize-bound),
-    and new docs/s holds."""
+    replicated corpus in the single-tokenize shape.  Claim: docs/s holds
+    as the corpus grows.  The pre-round-12 two-pass comparison is frozen
+    in BASELINE.md (round 13)."""
     from modis_aggregation_spark.operators import tfidf as ops_tfidf
 
     docs = _permuted_corpus(spark, sf_dir, replicate)
@@ -1768,26 +1695,21 @@ def run_bm25_curve(spark, sf_dir: str, replicate: int) -> dict:
         ).collect()[0]
         return time.perf_counter() - t0, int(row["n"])
 
-    t_new, n_new = min(_run(), _run())
-    with _identity_shared_frame()(ops_tfidf):
-        t_old, n_old = min(_run(), _run())
-    assert n_new == n_old == n_docs
+    t, n = min(_run(), _run())
+    assert n == n_docs
     return {
         "docs": n_docs,
-        "new_sec": round(t_new, 2),
-        "old_sec": round(t_old, 2),
-        "docs_per_sec_new": int(n_docs / t_new),
-        "old_over_new": round(t_old / t_new, 2),
+        "sec": round(t, 2),
+        "docs_per_sec": int(n_docs / t),
     }
 
 
 def run_kneser_ney_curve(spark, sf_dir: str, replicate: int) -> dict:
     """x96 shape anchor (round 13): Kneser-Ney bigram LM over the
-    cipher-replicated corpus, round-12 materialized-count-table shape
-    (ONE corpus pass) vs the pre-round-12 twin (four corpus scans —
-    shared_frame identity-patched).  Claim: the removed tokenize+bigram
-    passes dominate as the corpus grows (old/new → ~4× on the pass-bound
-    regime); the materialized frame stays vocabulary²-bounded."""
+    cipher-replicated corpus in the materialized-count-table shape (ONE
+    corpus pass).  Claim: docs/s holds as the corpus grows; the
+    materialized frame stays vocabulary²-bounded.  The pre-round-12
+    four-scan comparison is frozen in BASELINE.md (round 13)."""
     from modis_aggregation_spark.operators import tfidf as ops_tfidf
 
     docs = _permuted_corpus(spark, sf_dir, replicate)
@@ -1800,17 +1722,12 @@ def run_kneser_ney_curve(spark, sf_dir: str, replicate: int) -> dict:
         ).collect()[0]
         return time.perf_counter() - t0, int(row["n"])
 
-    t_new, n_new = min(_run(), _run())
-    with _identity_shared_frame()(ops_tfidf):
-        t_old, n_old = min(_run(), _run())
-    assert n_new == n_old
+    t, n = min(_run(), _run())
     return {
         "docs": n_docs,
-        "bigram_rows": n_new,
-        "new_sec": round(t_new, 2),
-        "old_sec": round(t_old, 2),
-        "docs_per_sec_new": int(n_docs / t_new),
-        "old_over_new": round(t_old / t_new, 2),
+        "bigram_rows": n,
+        "sec": round(t, 2),
+        "docs_per_sec": int(n_docs / t),
     }
 
 
@@ -1821,13 +1738,10 @@ def run_merge_upsert_curve(spark, sf_dir: str, replicate: int) -> dict:
     target, both stored tables with real scan statistics; a
     localCheckpoint-backed target was measured first and REJECTED as the
     harness: LogicalRDD has no size stats, so the planner lost the
-    broadcast election BOTH forms and the comparison degenerated to
-    SMJ-vs-SMJ).  The round-12 anti-join+union shape vs the full-outer
-    twin (the r11 form, inlined exactly as merge.py shipped it).
-    Claim: the old form shuffles+sorts the WHOLE target per merge
-    (shuffle rows grow with the target), the new form broadcasts the
-    source keys (target-side shuffle rows 0) — advantage grows with the
-    snapshot."""
+    broadcast election and the plan degenerated to a sort-merge join).
+    Claim: the anti-join+union shape broadcasts the source keys, so its
+    shuffle rows stay flat as the snapshot grows.  The comparison with
+    the r11 full-outer form is frozen in BASELINE.md (round 13)."""
     import shutil
     import tempfile
 
@@ -1863,52 +1777,21 @@ def run_merge_upsert_curve(spark, sf_dir: str, replicate: int) -> dict:
         )
         source = spark.read.parquet(os.path.join(tmp, "source"))
         n_source = source.count()
-        keys = ["o_orderkey"]
-        data_cols = [c for c in target.columns if c not in keys]
-
-        def _time(df_builder):
-            best, recs, n = float("inf"), 0, 0
-            for _ in range(2):
-                df = df_builder()
-                t0 = time.perf_counter()
-                n = df.count()
-                best = min(best, time.perf_counter() - t0)
-                recs = _query_shuffle_records(df)
-            return best, recs, n
-
-        t_new, new_recs, n_new = _time(
-            lambda: merge_upsert(target, source, keys)
-        )
-
-        # the r11 full-outer twin: matched rows take all source values
-        def _old():
-            s = source.select(
-                *keys,
-                *[F.col(c).alias(f"__s_{c}") for c in data_cols],
-                F.lit(True).alias("__m"),
-            )
-            return target.join(s, on=keys, how="full_outer").select(
-                *keys,
-                *[
-                    F.when(F.col("__m").isNotNull(), F.col(f"__s_{c}"))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    for c in data_cols
-                ],
-            )
-
-        t_old, old_recs, n_old = _time(_old)
-        assert n_new == n_old == n_target
+        best, recs, n = float("inf"), 0, 0
+        for _ in range(2):
+            df = merge_upsert(target, source, ["o_orderkey"])
+            t0 = time.perf_counter()
+            n = df.count()
+            best = min(best, time.perf_counter() - t0)
+            recs = _query_shuffle_records(df)
+        assert n == n_target
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return {
         "target_rows": n_target,
         "source_rows": n_source,
-        "new_sec": round(t_new, 2),
-        "old_sec": round(t_old, 2),
-        "new_shuffle_rows": new_recs,
-        "old_shuffle_rows": old_recs,
-        "old_over_new": round(t_old / t_new, 2),
+        "sec": round(best, 2),
+        "shuffle_rows": recs,
     }
 
 
@@ -1920,7 +1803,7 @@ def main() -> None:
         "one_km": [run_1km(spark, n) for n in counts],
         "minhash": run_minhash(spark, sf_dir),
         "minhash_curve": [run_minhash_curve(spark, sf_dir, r) for r in (8, 32, 128)],
-        "hdf5_scan": [run_hdf5_scan(spark, n) for n in (8, 32)],
+        "hdf4_scan": [run_hdf4_scan(spark, n) for n in (8, 32)],
         "dupspan_curve": [run_dupspan_curve(spark, sf_dir, r) for r in (8, 32, 128)],
         "screen": run_screen(spark, sf_dir),
         "pagerank": run_pagerank(spark, sf_dir),
