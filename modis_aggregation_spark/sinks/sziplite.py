@@ -41,6 +41,29 @@ book; the szip/libaec parameter conventions; no code copied):
 * Second extension: J/2 FS-coded gammas, gamma = (d1+d2)(d1+d2+1)/2
   + d2 over consecutive sample pairs.
 
+Decoding is columnar, in three steps:
+
+1. One Python pass over the block HEADERS only: each ID (and its
+   low-entropy selector and reference sample) comes out of a constant
+   8-byte window of the stream, and zero-run lengths are read there too.
+   Coded blocks are not read, only recorded: where their FS codes start
+   and where their LSBs or raw samples lie. An FS code ends at the next
+   one bit, so the pass locates the end of a block's FS codes from the
+   positions of all one bits (``np.flatnonzero`` over the unpacked
+   stream) and a per-byte count of them, without a per-sample step.
+   Every record is bounds-checked here, so the gathers below never
+   index past the stream.
+2. Vectorized gathers over all recorded blocks at once: FS values are
+   differences of one-bit positions (second-extension gammas too,
+   unpaired by an exact integer square root); the k-bit LSBs of split
+   blocks and the n-bit samples of uncompressed blocks are bit-matrix
+   times place-value products, one per width.
+3. The NN inverse predictor steps COLUMN by column across all scanlines
+   at once — exact, because each scanline is its own RSI.
+
+Temporary memory is O(compressed bits): the unpacked stream, its one-bit
+positions and the gather indices.
+
 HONEST LIMITS (documented, loud): (a) the one genuinely ambiguous
 corner in public descriptions is second-extension on a reference
 block — this codec adopts the "reference slot pairs as zero"
@@ -68,6 +91,9 @@ SZ_RAW_OPTION_MASK = 128
 
 _ROS = 4  # FS value meaning "rest of segment" in a zero-block run
 _SEGMENT_BLOCKS = 64
+_M64 = (1 << 64) - 1
+_POPCOUNT = np.unpackbits(
+    np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(axis=1, dtype=np.int64)
 
 
 class _BitWriter:
@@ -105,54 +131,6 @@ class _BitWriter:
             self.acc = 0
             self.nbits = 0
         return bytes(self.out)
-
-
-class _BitReader:
-    """MSB-first bit unpacker."""
-
-    __slots__ = ("buf", "pos", "nbits")
-
-    def __init__(self, buf: bytes) -> None:
-        self.buf = buf
-        self.pos = 0  # bit position
-
-    def read(self, width: int) -> int:
-        end = self.pos + width
-        if end > len(self.buf) * 8:
-            raise ValueError(
-                "szip codestream truncated: needed "
-                f"{width} bits at bit {self.pos}, have {len(self.buf) * 8}"
-            )
-        v = 0
-        pos = self.pos
-        while width:
-            byte = self.buf[pos >> 3]
-            avail = 8 - (pos & 7)
-            take = min(avail, width)
-            v = (v << take) | ((byte >> (avail - take)) & ((1 << take) - 1))
-            pos += take
-            width -= take
-        self.pos = pos
-        return v
-
-    def read_fs(self) -> int:
-        n = 0
-        while True:
-            if self.pos >= len(self.buf) * 8:
-                raise ValueError(
-                    f"szip codestream truncated inside an FS code at bit {self.pos}"
-                )
-            byte = self.buf[self.pos >> 3]
-            avail = 8 - (self.pos & 7)
-            chunk = byte & ((1 << avail) - 1)
-            if chunk == 0:
-                n += avail
-                self.pos += avail
-                continue
-            lead = avail - chunk.bit_length()  # zeros before the first 1
-            n += lead
-            self.pos += lead + 1
-            return n
 
 
 def _id_len(n: int) -> int:
@@ -223,13 +201,6 @@ def _map_deltas(sl: np.ndarray, xmax: int) -> np.ndarray:
     out[0] = 0
     out[1:] = m
     return out
-
-
-def _unmap_delta(m: int, pred: int, xmax: int) -> int:
-    theta = pred if pred <= xmax - pred else xmax - pred
-    if m <= 2 * theta:
-        return pred + (m >> 1) if m % 2 == 0 else pred - ((m + 1) >> 1)
-    return m if theta == pred else xmax - m
 
 
 def szip_encode(
@@ -340,6 +311,45 @@ def szip_encode(
     return w.bytes()
 
 
+def _truncated(width: int, pos: int, nbits: int) -> ValueError:
+    return ValueError(
+        f"szip codestream truncated: needed {width} bits at bit {pos}, "
+        f"have {nbits}"
+    )
+
+
+def _fs_truncated(pos: int) -> ValueError:
+    return ValueError(
+        f"szip codestream truncated inside an FS code at bit {pos}"
+    )
+
+
+def _runs(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """The ranges ``starts[r] .. starts[r] + counts[r] - 1``, concatenated."""
+    offsets = np.cumsum(counts) - counts
+    return np.arange(int(counts.sum())) + np.repeat(starts - offsets, counts)
+
+
+def _fs_values(ones: np.ndarray, first: np.ndarray, starts: np.ndarray,
+               counts: np.ndarray) -> np.ndarray:
+    """Values of runs of back-to-back FS codes: run r starts at bit
+    ``starts[r]`` and its codes end at the one bits ``ones[first[r]]``,
+    ``ones[first[r] + 1]`` … (``counts[r]`` of them)."""
+    idx = _runs(first, counts)
+    ends = ones[idx]
+    begins = ones[idx - 1] + 1
+    begins[np.cumsum(counts) - counts] = starts
+    return ends - begins
+
+
+def _fixed_values(bits: np.ndarray, starts: np.ndarray, counts: np.ndarray,
+                  width: int) -> np.ndarray:
+    """``counts[r]`` back-to-back ``width``-bit fields from bit
+    ``starts[r]``, MSB first: one bit matrix times the place values."""
+    m = bits[_runs(starts, counts * width)].reshape(-1, width)
+    return m @ (1 << np.arange(width - 1, -1, -1, dtype=np.int64))
+
+
 def szip_decode(
     comp: bytes,
     raw_len: int,
@@ -360,24 +370,54 @@ def szip_decode(
     xmax = (1 << n) - 1
     id_len = _id_len(n)
     uncomp_id = (1 << id_len) - 1
-    r = _BitReader(comp)
-    out = np.empty(total, dtype=np.int64)
-    off = 0
-    for ns in _scanline_lengths(total, pps):
-        blocks = -(-ns // J)
-        mapped = np.zeros(blocks * J, dtype=np.int64)
-        ref_val = 0
-        have_ref = False
+    half = J // 2
+    nsl = -(-total // pps)
+    width = -(-pps // J) * J  # a full scanline padded to whole blocks
+    nbits = len(comp) * 8
+    octets = np.frombuffer(comp, dtype=np.uint8)
+    bits = np.unpackbits(octets)
+    ones = np.flatnonzero(bits.view(bool))  # FS codes end at these bits
+    n_ones = len(ones)
+    # ones before each byte: the rank of bit p is before[p >> 3] plus the
+    # ones of its byte ahead of it
+    before = np.concatenate(([0], np.cumsum(_POPCOUNT[octets]))).tolist()
+    window = bytes(comp) + bytes(8)
+    # header pass: walk the blocks, read IDs, references and zero-run
+    # lengths, and record where each coded block's payload lies
+    refs: list[int] = []
+    split: list[int] = []  # (dest, count, first one, start, k, LSB start)
+    second: list[int] = []  # (dest, first one, start)
+    uncomp: list[int] = []  # (dest, count, start)
+    p = 0
+    for s in range(nsl):
+        blocks = -(-min(pps, total - s * pps) // J)
+        row = s * width
         b = 0
         while b < blocks:
-            is_ref = nn and b == 0
-            ident = r.read(id_len)
+            q = p >> 3
+            win = (int.from_bytes(window[q:q + 8], "big") << (p & 7)) & _M64
+            ident = win >> (64 - id_len)
+            used = id_len
             if ident == 0:
-                if r.read(1) == 0:  # zero-block run
-                    if is_ref:
-                        ref_val, have_ref = r.read(n), True
-                    fs = r.read_fs()
-                    z = fs + 1
+                used += 1
+                zero_run = not (win >> (64 - used)) & 1
+            is_ref = nn and b == 0
+            if is_ref:  # whatever its option: one reference per scanline
+                used += n
+                refs.append((win >> (64 - used)) & xmax)
+            if p + used > nbits:
+                raise _truncated(used, p, nbits)
+            p += used
+            dest = row + b * J
+            q = p >> 3
+            i = before[q] + (window[q] >> (8 - (p & 7))).bit_count()
+            if ident == 0:
+                if zero_run:
+                    if i == n_ones:
+                        raise _fs_truncated(p)
+                    end = ones.item(i)
+                    z = end - p + 1
+                    p = end + 1
                     if z == _ROS + 1:
                         z = min(blocks, ((b // _SEGMENT_BLOCKS) + 1)
                                 * _SEGMENT_BLOCKS) - b
@@ -390,52 +430,73 @@ def szip_decode(
                         )
                     b += z
                     continue
-                # second extension; reference slot pairs as zero
-                if is_ref:
-                    ref_val, have_ref = r.read(n), True
-                base = b * J
-                for p in range(J // 2):
-                    gamma = r.read_fs()
-                    # m = floor((sqrt(8g+1)-1)/2) via integer search
-                    m = int((np.sqrt(8.0 * gamma + 1.0) - 1.0) / 2.0)
-                    while m * (m + 1) // 2 > gamma:
-                        m -= 1
-                    while (m + 1) * (m + 2) // 2 <= gamma:
-                        m += 1
-                    d2 = gamma - m * (m + 1) // 2
-                    mapped[base + 2 * p] = m - d2
-                    mapped[base + 2 * p + 1] = d2
-                b += 1
-                continue
-            if is_ref:
-                ref_val, have_ref = r.read(n), True
-            count = J - 1 if is_ref else J
-            base = b * J + (1 if is_ref else 0)
-            if ident == uncomp_id:
-                for i in range(count):
-                    mapped[base + i] = r.read(n)
+                # second extension; the reference slot pairs as zero
+                if i + half > n_ones:
+                    raise _fs_truncated(p)
+                second += (dest, i, p)
+                p = ones.item(i + half - 1) + 1
+            elif ident == uncomp_id:
+                count = J - is_ref
+                uncomp += (dest + is_ref, count, p)
+                p += count * n
+                if p > nbits:
+                    raise _truncated(count * n, p - count * n, nbits)
             else:
-                k = ident - 1
-                for i in range(count):
-                    mapped[base + i] = r.read_fs()
-                if k:
-                    for i in range(count):
-                        mapped[base + i] = (mapped[base + i] << k) | r.read(k)
+                count = J - is_ref
+                if i + count > n_ones:
+                    raise _fs_truncated(p)
+                lsb_at = ones.item(i + count - 1) + 1
+                split += (dest + is_ref, count, i, p, ident - 1, lsb_at)
+                p = lsb_at + count * (ident - 1)
+                if p > nbits:
+                    raise _truncated(p - lsb_at, lsb_at, nbits)
             b += 1
-        if nn:
-            sl = np.empty(blocks * J, dtype=np.int64)
-            if not have_ref:
-                raise ValueError(
-                    "szip NN stream ended a scanline without a reference "
-                    "sample"
-                )
-            sl[0] = ref_val
-            pred = ref_val
-            for i in range(1, blocks * J):
-                pred = _unmap_delta(int(mapped[i]), pred, xmax)
-                sl[i] = pred
-        else:
-            sl = mapped
-        out[off : off + ns] = sl[:ns]
-        off += ns
-    return out.astype(dt).tobytes()
+    # payload gathers, every block of one kind at once
+    mapped = np.zeros(nsl * width, dtype=np.int64)
+    if split:
+        dest, count, first, start, k, lsb_at = (
+            np.array(split, dtype=np.int64).reshape(-1, 6).T)
+        vals = _fs_values(ones, first, start, count)
+        k_of = np.repeat(k, count)
+        for kv in np.unique(k[k > 0]).tolist():
+            sel = k == kv
+            lsbs = _fixed_values(bits, lsb_at[sel], count[sel], kv)
+            at = k_of == kv
+            vals[at] = (vals[at] << kv) | lsbs
+        mapped[_runs(dest, count)] = vals
+    if uncomp:
+        dest, count, start = np.array(uncomp, dtype=np.int64).reshape(-1, 3).T
+        mapped[_runs(dest, count)] = _fixed_values(bits, start, count, n)
+    if second:
+        dest, first, start = np.array(second, dtype=np.int64).reshape(-1, 3).T
+        gamma = _fs_values(ones, first, start, np.full(len(dest), half))
+        # m = floor((sqrt(8g+1)-1)/2), float estimate then exact fix-up
+        m = ((np.sqrt(8.0 * gamma + 1.0) - 1.0) / 2.0).astype(np.int64)
+        m -= m * (m + 1) // 2 > gamma
+        m += (m + 1) * (m + 2) // 2 <= gamma
+        d2 = gamma - m * (m + 1) // 2
+        at = _runs(dest, np.full(len(dest), J))[0::2]
+        mapped[at] = m - d2
+        mapped[at + 1] = d2
+    x = mapped.reshape(nsl, width)
+    if nn:
+        # inverse predictor: each scanline is its own RSI, so step the
+        # sample columns of all scanlines together
+        # (the parts that depend on the mapped value alone go first:
+        # m <= 2*theta iff ceil(m/2) <= theta)
+        m = np.ascontiguousarray(x.T)
+        step = np.where(m & 1, -((m + 1) >> 1), m >> 1)
+        ceil_half = (m + 1) >> 1
+        mirror = xmax - m
+        cols = m.copy()
+        cols[0] = refs
+        for i in range(1, width):
+            pred = cols[i - 1]
+            theta = np.minimum(pred, xmax - pred)
+            cols[i] = np.where(
+                ceil_half[i] <= theta,
+                pred + step[i],
+                np.where(theta == pred, m[i], mirror[i]),
+            )
+        x = cols.T
+    return x[:, :pps].reshape(-1)[:total].astype(dt).tobytes()

@@ -6,8 +6,11 @@ exporter reproduces the reference's MYD08-style output file
 (``addGridEntry`` + writer loop, reference
 ``MODIS_Aggregation/aggregate_functions.py:413-453,724-757``) for users who
 need the legacy format. The L3 grid is tiny (180×360 cells at 1°), so the
-exporter's driver-side ``collect()`` is bounded at ~MBs regardless of input
-scale — the only place the engine ever collects.
+exporter's driver-side collect is bounded at ~MBs regardless of input
+scale — the only place the engine ever collects. The grid comes back as
+one Arrow table (``toArrow``) and each column converts to NumPy whole:
+NULL scalars become NaN, NULL histograms zeros, nested joint histograms
+are flattened — no per-cell ``Row`` objects.
 
 Packing rules replicated exactly (quirk Q10):
 * floats pack as ``int(v / scale + offset)`` — TRUNCATION toward zero, not
@@ -30,6 +33,8 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType
 
@@ -94,20 +99,29 @@ def _bin_shape(name: str, spec: AggregationSpec) -> tuple[int, ...]:
     return (len(spec.variable(name[: -len("_hist")]).bin_edges) - 1,)
 
 
+def _float_values(values: pa.Array) -> np.ndarray:
+    """Arrow values as a float64 array, NULL -> NaN."""
+    values = pc.fill_null(pc.cast(values, pa.float64()), np.nan)
+    return values.to_numpy(zero_copy_only=False, writable=True)
+
+
 def grid_to_arrays(
     grid_df: DataFrame, spec: AggregationSpec
 ) -> dict[str, np.ndarray]:
     """Collect a DENSIFIED grid DataFrame into ``{name: ndarray}`` shaped
     ``[nlat, nlon]`` (histograms ``[nlat, nlon, bins]``; joint histograms
     ``[nlat, nlon, bx, by]``) — the reference's output layout (A16).
-    Histogram shapes come from the column type and the spec's bin edges,
-    so an empty cell (NULL histogram after the densify left join) reads
-    as zeros even when no cell of the product is occupied."""
+    The grid comes to the driver as one Arrow table and every column
+    converts to NumPy whole. Histogram shapes come from the column type
+    and the spec's bin edges, so an empty cell (NULL histogram after the
+    densify left join) reads as zeros even when no cell of the product
+    is occupied."""
     nlat, nlon = spec.nlat, spec.nlon
-    rows = grid_df.orderBy("cell").collect()
-    if len(rows) != nlat * nlon:
+    table = grid_df.orderBy("cell").toArrow()
+    if table.num_rows != nlat * nlon:
         raise ValueError(
-            f"grid must be densified: got {len(rows)} rows, want {nlat * nlon}"
+            f"grid must be densified: got {table.num_rows} rows, "
+            f"want {nlat * nlon}"
         )
     out: dict[str, np.ndarray] = {}
     skip = {"cell", "lat_idx", "lon_idx"}
@@ -115,18 +129,24 @@ def grid_to_arrays(
         fname = field.name
         if fname in skip:
             continue
-        col = [r[fname] for r in rows]
-        if isinstance(field.dataType, ArrayType):
-            zero = np.zeros(_bin_shape(fname, spec))
-            arr = np.array(
-                [zero if c is None else c for c in col], dtype=np.float64
+        col = table.column(fname).combine_chunks()
+        if not isinstance(field.dataType, ArrayType):
+            out[fname] = _float_values(col).reshape(nlat, nlon)
+            continue
+        shape = _bin_shape(fname, spec)
+        valid = col.is_valid().to_numpy(zero_copy_only=False)
+        values = col.flatten()  # skips NULL cells
+        while pa.types.is_list(values.type):
+            values = values.flatten()
+        size = int(np.prod(shape))
+        if len(values) != int(valid.sum()) * size:
+            raise ValueError(
+                f"histogram column {fname!r} does not hold {shape} bins "
+                "in every occupied cell"
             )
-            out[fname] = arr.reshape((nlat, nlon) + zero.shape)
-        else:
-            arr = np.array(
-                [np.nan if c is None else float(c) for c in col], dtype=np.float64
-            )
-            out[fname] = arr.reshape(nlat, nlon)
+        arr = np.zeros((nlat * nlon, size))
+        arr[valid] = _float_values(values).reshape(-1, size)
+        out[fname] = arr.reshape((nlat, nlon) + shape)
     return out
 
 

@@ -225,6 +225,54 @@ def test_grid_to_arrays_null_first_cell(spark):
     assert np.all(arrays["v_hist"] == 0)
 
 
+def test_grid_to_arrays_null_hist_count_and_jhist(spark):
+    """Arrow-collected sink edge cases on a densified 2x2 grid: a NULL
+    histogram in a middle cell reads as zeros, a NULL in a nullable long
+    count column reads as NaN and packs to 0, and a 2-D joint histogram
+    keeps its (x bins, partner bins) shape per cell."""
+    import numpy as np
+
+    from modis_aggregation_spark.config import JointHistSpec, VariableSpec
+    from modis_aggregation_spark.sinks.writers import grid_to_arrays, pack_grid
+
+    spec = AggregationSpec(
+        lat_bounds=(0.0, 2.0),
+        lon_bounds=(0.0, 2.0),
+        variables=(
+            VariableSpec(name="v", bin_edges=(0.0, 1.0, 2.0, 3.0)),
+            VariableSpec(name="w", bin_edges=(0.0, 1.0, 2.0)),
+        ),
+        joint_hists=(JointHistSpec("v", "vw", "w", (0.0, 1.0, 2.0)),),
+    )
+    df = spark.createDataFrame(
+        [
+            (0, 0, 0, 1.5, 4, [1, 2, 1], [[1, 0], [2, 0], [0, 1]]),
+            (1, 0, 1, 2.5, None, None, None),
+            (2, 1, 0, None, 7, [0, 0, 7], [[0, 0], [0, 3], [4, 0]]),
+            (3, 1, 1, 0.5, 2, [2, 0, 0], [[2, 0], [0, 0], [0, 0]]),
+        ],
+        "cell long, lat_idx int, lon_idx int, v_mean double, v_count bigint, "
+        "v_hist array<bigint>, vw_jhist array<array<bigint>>",
+    )
+    arrays = grid_to_arrays(df.repartition(3), spec)
+    assert set(arrays) == {"v_mean", "v_count", "v_hist", "vw_jhist"}
+    assert np.array_equal(
+        arrays["v_mean"], [[1.5, 2.5], [np.nan, 0.5]], equal_nan=True)
+    assert np.array_equal(
+        arrays["v_count"], [[4, np.nan], [7, 2]], equal_nan=True)
+    assert arrays["v_hist"].shape == (2, 2, 3)
+    assert arrays["v_hist"].tolist() == [
+        [[1, 2, 1], [0, 0, 0]], [[0, 0, 7], [2, 0, 0]]]
+    assert arrays["vw_jhist"].shape == (2, 2, 3, 2)
+    assert arrays["vw_jhist"].tolist() == [
+        [[[1, 0], [2, 0], [0, 1]], [[0, 0], [0, 0], [0, 0]]],
+        [[[0, 0], [0, 3], [4, 0]], [[2, 0], [0, 0], [0, 0]]],
+    ]
+    packed, attrs = pack_grid(arrays, spec)["v_count"]
+    assert packed.dtype == np.int64 and packed.tolist() == [[4, 0], [7, 2]]
+    assert attrs["_FillValue"] == 0
+
+
 def test_salted_agg_stddev_matches_plain(spark):
     from modis_aggregation_spark.operators.skew import salted_agg
 

@@ -188,3 +188,210 @@ def test_hdf5_szip_filter_chunk_decode():
         _szip_filter_decode(chunk, (NN, 16))
     with pytest.raises(ValueError, match="size word"):
         _szip_filter_decode(b"\x01", (NN, 16, 16, 32))
+
+
+def test_zero_run_overrun_raises():
+    """A literal zero-block run longer than the blocks left in the
+    scanline is corrupt: fs=5 means 5 zero blocks, the scanline has 2."""
+    with pytest.raises(ValueError, match="zero-block run of 5 blocks overruns"):
+        szip_decode(_bits("000 0 " + _fs(5)), 16, 8, 8, 16, EC)
+    with pytest.raises(ValueError, match="truncated inside an FS code"):
+        szip_decode(_bits("010" + "0" * 12), 8, 8, 8, 8, EC)
+
+
+# ---- every block option, through the encoder and back ---------------------
+
+def _id_len(n):
+    return 3 if n <= 8 else 4 if n <= 16 else 5
+
+
+def _block_options(stream, n, J, pps, total, nn):
+    """Walk the block headers of a codestream (test-local reading of the
+    bit contract) and return the option of every coded block:
+    ``("zero",)`` literal run, ``("ros",)`` rest-of-segment run,
+    ``("segment",)`` a rest-of-segment run that stopped at a 64-block
+    segment boundary before the scanline's end, ``("se",)``,
+    ``("uncomp",)`` or ``("split", k)``."""
+    s = "".join(f"{b:08b}" for b in stream)
+    pos = 0
+
+    def take(w):
+        nonlocal pos
+        pos += w
+        return int(s[pos - w:pos] or "0", 2)
+
+    def fs():
+        nonlocal pos
+        end = s.index("1", pos)
+        v, pos = end - pos, end + 1
+        return v
+
+    id_len = _id_len(n)
+    out = []
+    for start in range(0, total, pps):
+        blocks = -(-min(pps, total - start) // J)
+        b = 0
+        while b < blocks:
+            ref = nn and b == 0
+            ident = take(id_len)
+            se = take(1) if ident == 0 else None
+            if ref:
+                take(n)
+            if se == 0:
+                z = fs() + 1
+                if z == 5:
+                    seg_end = (b // 64 + 1) * 64
+                    out.append(("segment",) if seg_end < blocks else ("ros",))
+                    z = min(blocks, seg_end) - b
+                else:
+                    out.append(("zero",))
+                    z -= z > 5
+                b += z
+                continue
+            if se == 1:
+                out.append(("se",))
+                for _ in range(J // 2):
+                    fs()
+            elif ident == (1 << id_len) - 1:
+                out.append(("uncomp",))
+                take((J - ref) * n)
+            else:
+                out.append(("split", ident - 1))
+                for _ in range(J - ref):
+                    fs()
+                take((J - ref) * (ident - 1))
+            b += 1
+    return out
+
+
+def _unmap(m, pred, xmax):
+    """Inverse of the CCSDS unit-delay mapper for one sample."""
+    theta = min(pred, xmax - pred)
+    if m <= 2 * theta:
+        return pred + m // 2 if m % 2 == 0 else pred - (m + 1) // 2
+    return m if theta == pred else xmax - m
+
+
+def _shaped_mapped(rng, n, J, pps, total):
+    """Mapped residuals laid out block by block so that the encoder's
+    cheapest option is, block for block, one of: a zero run (lengths up
+    to 70 blocks, so runs reach and cross 64-block segments), a
+    second-extension block (one 1 among zeros), an uncompressed block
+    (uniform over the n-bit range) or a split block for each k it can
+    choose (values in [3*2^(k-1), 2^(k+1)) make k strictly cheapest;
+    uncompressed wins once k > n - 3)."""
+    xmax = (1 << n) - 1
+    k_max = min(n - 1, (1 << _id_len(n)) - 3)
+    kinds = ["se", "uncomp"] + [("split", k) for k in range(min(k_max, n - 3) + 1)]
+    out = []
+    for start in range(0, total, pps):
+        ns = min(pps, total - start)
+        row = []
+        # every scanline: one block of each kind, then random kinds and runs
+        todo = list(kinds) + [kinds[i] for i in rng.integers(0, len(kinds), 3)]
+        rng.shuffle(todo)
+        while len(row) < ns:
+            kind = todo.pop() if todo else (
+                "zero" if rng.random() < 0.4 else kinds[rng.integers(len(kinds))])
+            if kind == "zero":
+                row += [0] * (J * int(rng.integers(1, 71)))
+            elif kind == "se":
+                blk = [0] * J
+                blk[int(rng.integers(J))] = 1
+                row += blk
+            elif kind == "uncomp":
+                row += rng.integers(0, xmax + 1, J).tolist()
+            else:
+                k = kind[1]
+                lo = 1 if k == 0 else 3 << (k - 1)
+                row += rng.integers(lo, 2 << k, J).tolist()
+        out.append(row[:ns])
+    return out
+
+
+_EXPECTED_OPTIONS = (
+    {("zero",), ("ros",), ("segment",), ("se",), ("uncomp",)}
+    | {("split", k) for k in range(30)}
+)
+
+
+@pytest.mark.parametrize("mode", ["NN", "EC"])
+def test_roundtrip_every_block_option(mode):
+    """Hypothesis round-trip over every block option: n 1..32, even J
+    2..32, a scanline that is not a whole number of blocks and a total
+    that is not a whole number of scanlines, MSB and LSB order, with
+    residuals shaped so the encoder emits zero runs across 64-block
+    segment boundaries, second-extension, uncompressed and split blocks
+    for every k it can choose. The corpus must actually hit each
+    option, so no decode path goes unexercised."""
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    nn = mode == "NN"
+    hits = set()
+
+    @given(
+        n=st.integers(1, 32),
+        J=st.sampled_from(range(2, 33, 2)),
+        nblk=st.integers(1, 70),
+        nsl=st.integers(1, 3),
+        lsb=st.booleans(),
+        seed=st.integers(0, 2**32 - 1),
+    )
+    @example(n=32, J=16, nblk=70, nsl=1, lsb=False, seed=1)
+    @example(n=16, J=32, nblk=66, nsl=2, lsb=True, seed=2)
+    @example(n=8, J=8, nblk=65, nsl=1, lsb=False, seed=3)
+    @settings(max_examples=40, deadline=None)
+    def prop(n, J, nblk, nsl, lsb, seed):
+        rng = np.random.default_rng(seed)
+        pps = J * nblk + int(rng.integers(1, J))  # not a multiple of J
+        total = pps * nsl + int(rng.integers(1, pps))  # nor of pps
+        xmax = (1 << n) - 1
+        samples = []
+        for row in _shaped_mapped(rng, n, J, pps, total):
+            if nn:
+                x = [int(rng.integers(0, xmax + 1))]
+                for m in row[1:]:
+                    x.append(_unmap(m, x[-1], xmax))
+                row = x
+            samples += row
+        order = "<" if lsb else ">"
+        size = 1 if n <= 8 else 2 if n <= 16 else 4
+        raw = np.array(samples, dtype=np.uint64).astype(f"{order}u{size}").tobytes()
+        mask = (SZ_NN_OPTION_MASK if nn else SZ_EC_OPTION_MASK) | (
+            SZ_LSB_OPTION_MASK if lsb else SZ_MSB_OPTION_MASK)
+        enc = szip_encode(raw, n, J, pps, mask)
+        assert szip_decode(enc, len(raw), n, J, pps, mask) == raw
+        hits.update(_block_options(enc, n, J, pps, len(samples), nn))
+
+    prop()
+    assert hits >= _EXPECTED_OPTIONS, sorted(_EXPECTED_OPTIONS - hits)
+
+
+def test_szip_granule_decodes_to_quantized_synth(tmp_path, monkeypatch):
+    """A ``layout="szip"`` granule (chunked int16 science variables and a
+    whole-element cloud-mask byte, all SZIP) reads back to exactly
+    ``synth_granule``'s int16 x0.1 quantization."""
+    from modis_aggregation_spark.sinks import sziplite
+    from modis_aggregation_spark.sinks.hdf4lite import read_hdf4
+    from modis_aggregation_spark.sources.granule_datasource import (
+        synth_granule,
+        write_granule_hdf4,
+    )
+
+    variables, rows, cols = ["ctp", "cth"], 37, 29
+    write_granule_hdf4(str(tmp_path), 7001, variables, rows=rows, cols=cols,
+                       layout="szip")
+    calls = []
+    decode = sziplite.szip_decode
+    monkeypatch.setattr(sziplite, "szip_decode",
+                        lambda *a: calls.append(a) or decode(*a))
+    ds = read_hdf4(str(tmp_path / "granule_7001.hdf"))
+    assert len(calls) == 1 + 6 * len(variables)  # mask byte + 6 chunks each
+    data = synth_granule(7001, variables, rows, cols)
+    for v in variables:
+        want = np.where(np.isnan(data[v]), -9999, np.round(data[v] * 10.0))
+        got = ds[v].data
+        assert got.dtype == np.int16 and got.shape == (rows, cols)
+        assert np.array_equal(got.ravel(), want.astype(np.int16))
+    assert np.array_equal(ds["Cloud_Mask_Byte0"].data.ravel(), data["cm_raw"])
