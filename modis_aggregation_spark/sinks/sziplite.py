@@ -61,8 +61,11 @@ Decoding is columnar, in three steps:
 3. The NN inverse predictor steps COLUMN by column across all scanlines
    at once — exact, because each scanline is its own RSI.
 
-Temporary memory is O(compressed bits): the unpacked stream, its one-bit
-positions and the gather indices.
+Temporary memory is O(samples + compressed bits): the unpacked stream,
+its one-bit positions, the gather indices and a few int64 arrays of the
+decoded samples. Scanlines are sized by the samples actually present,
+never by ``pixels_per_scanline`` alone, so a corrupt header claiming a
+huge scanline cannot inflate the work.
 
 HONEST LIMITS (documented, loud): (a) the one genuinely ambiguous
 corner in public descriptions is second-extension on a reference
@@ -92,8 +95,6 @@ SZ_RAW_OPTION_MASK = 128
 _ROS = 4  # FS value meaning "rest of segment" in a zero-block run
 _SEGMENT_BLOCKS = 64
 _M64 = (1 << 64) - 1
-_POPCOUNT = np.unpackbits(
-    np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(axis=1, dtype=np.int64)
 
 
 class _BitWriter:
@@ -372,15 +373,18 @@ def szip_decode(
     uncomp_id = (1 << id_len) - 1
     half = J // 2
     nsl = -(-total // pps)
-    width = -(-pps // J) * J  # a full scanline padded to whole blocks
+    if not total:
+        return b""
+    # the longest scanline present, padded to whole blocks
+    width = -(-min(pps, total) // J) * J
     nbits = len(comp) * 8
-    octets = np.frombuffer(comp, dtype=np.uint8)
-    bits = np.unpackbits(octets)
+    bits = np.unpackbits(np.frombuffer(comp, dtype=np.uint8))
     ones = np.flatnonzero(bits.view(bool))  # FS codes end at these bits
     n_ones = len(ones)
     # ones before each byte: the rank of bit p is before[p >> 3] plus the
     # ones of its byte ahead of it
-    before = np.concatenate(([0], np.cumsum(_POPCOUNT[octets]))).tolist()
+    before = np.concatenate(
+        ([0], np.cumsum(bits.reshape(-1, 8).sum(1, dtype=np.int64)))).tolist()
     window = bytes(comp) + bytes(8)
     # header pass: walk the blocks, read IDs, references and zero-run
     # lengths, and record where each coded block's payload lies

@@ -154,6 +154,11 @@ def test_validation_raises():
         szip_decode(b"", 8, 8, 8, 8, EC)
     with pytest.raises(ValueError, match="exceeds bits_per_pixel"):
         szip_encode(bytes([255]), 4, 8, 8, EC)
+    # fs=5 is a literal run of 5 zero blocks; the scanline has 2
+    with pytest.raises(ValueError, match="zero-block run of 5 blocks overruns"):
+        szip_decode(_bits("000 0 " + _fs(5)), 16, 8, 8, 16, EC)
+    with pytest.raises(ValueError, match="truncated inside an FS code"):
+        szip_decode(_bits("010" + "0" * 12), 8, 8, 8, 8, EC)
 
 
 def test_roundtrip_full_range_32bit():
@@ -190,13 +195,22 @@ def test_hdf5_szip_filter_chunk_decode():
         _szip_filter_decode(b"\x01", (NN, 16, 16, 32))
 
 
-def test_zero_run_overrun_raises():
-    """A literal zero-block run longer than the blocks left in the
-    scanline is corrupt: fs=5 means 5 zero blocks, the scanline has 2."""
-    with pytest.raises(ValueError, match="zero-block run of 5 blocks overruns"):
-        szip_decode(_bits("000 0 " + _fs(5)), 16, 8, 8, 16, EC)
-    with pytest.raises(ValueError, match="truncated inside an FS code"):
-        szip_decode(_bits("010" + "0" * 12), 8, 8, 8, 8, EC)
+@pytest.mark.parametrize("mask", [NN, EC])
+def test_oversized_scanline_claim_is_bounded(mask):
+    """pixels_per_scanline comes from the file header unchecked; a value
+    far beyond the samples present (a flipped high bit) must decode the
+    same bytes as the true one, in time and memory bounded by the
+    samples, not by the claimed scanline."""
+    import time
+
+    rng = np.random.default_rng(11)
+    x = (3000 + np.cumsum(rng.integers(-40, 41, 5000))).astype(">u2")
+    raw = x.tobytes()
+    enc = szip_encode(raw, 16, 16, x.size, mask)
+    t0 = time.perf_counter()
+    for pps in (2**24 + x.size, 2**30):
+        assert szip_decode(enc, len(raw), 16, 16, pps, mask) == raw
+    assert time.perf_counter() - t0 < 10.0
 
 
 # ---- every block option, through the encoder and back ---------------------
