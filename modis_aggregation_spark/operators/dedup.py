@@ -24,14 +24,16 @@ size cap.
 
 from __future__ import annotations
 
-import weakref
-
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from modis_aggregation_spark.functions.layout import spread_small_scan
-from modis_aggregation_spark.functions.materialize import shared_frame
+from modis_aggregation_spark.functions.materialize import (
+    loop_frame,
+    release,
+    shared_frame,
+)
 from modis_aggregation_spark.functions.text import char_shingles, fingerprint, tokens
 
 
@@ -144,10 +146,10 @@ def minhash_signatures(
     Bulk pipelines should compute this ONCE, materialize it (write to a
     table, or persist + manage the cache), and hand it to
     ``minhash_lsh_pairs(signatures=…)`` — repeated inline invocations would
-    otherwise re-shingle the corpus and accumulate persisted blocks per
-    call. At 100 TB this table is ~(k·|sh| + 8·num_hashes) B/doc and is the
-    natural incremental artifact: new batches append signatures and join
-    against the existing table's band keys.
+    otherwise re-shingle the corpus on every call. At 100 TB this table is
+    ~(k·|sh| + 8·num_hashes) B/doc and is the natural incremental
+    artifact: new batches append signatures and join against the existing
+    table's band keys.
 
     Hashing is CPU-bound (|shingles| × num_hashes remixes per doc), so the
     stage must run at cluster parallelism: when the scan yields fewer
@@ -163,38 +165,6 @@ def minhash_signatures(
     return _shingle_hash_frame(df, content_col, id_col, k).withColumn(
         "sig", signature_from_hashes(F.col("sh"), num_hashes)
     )
-
-
-# per-session single-slot cache of the last inline-built signatures frame
-# (see minhash_lsh_pairs docstring): bounds executor-storage growth across
-# repeated inline calls in one session. Weak-keyed by SparkSession so (a)
-# concurrent sessions cannot evict each other's persisted blocks and (b)
-# a stopped session's entry is dropped with the session object itself.
-_INLINE_SIG_CACHE: "weakref.WeakKeyDictionary[SparkSession, DataFrame]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _cache_inline_sigs(session: "SparkSession", plan: DataFrame) -> DataFrame:
-    """Persist an inline-built signatures frame through the per-session
-    slot, sameSemantics-guarded (CLAUDE.md rule 3c): CacheManager matches
-    CANONICALIZED plans, so persisting a same-plan frame and then
-    unpersisting the previous slot entry would evict the new registration
-    too — the new frame would silently run uncached (and re-shingle per
-    consumer).  A repeat call with an identical plan therefore reuses the
-    warm slot; only a genuinely different plan evicts."""
-    prev = _INLINE_SIG_CACHE.get(session)
-    if prev is not None:
-        try:
-            if prev.sameSemantics(plan):
-                return prev
-            prev.unpersist()
-        except Exception:
-            pass
-        _INLINE_SIG_CACHE.pop(session, None)
-    out = plan.persist()
-    _INLINE_SIG_CACHE[session] = out
-    return out
 
 
 def minhash_lsh_pairs(
@@ -221,14 +191,10 @@ def minhash_lsh_pairs(
     Pass ``signatures`` (a ``minhash_signatures`` frame, ideally already
     materialized) to skip the shingle/signature computation; its
     ``num_hashes`` must match. Without it, the signatures are built inline
-    and persisted; the cache holds one slot PER SparkSession (weak-keyed,
-    so concurrent sessions never evict each other) — the next inline call
-    on the same session unpersists this one's blocks, so a long-lived
-    session holds at most one signatures frame in executor storage. (A
-    still-referenced earlier result keeps working after eviction — Spark
-    recomputes its lineage — so the trade is recompute, never wrong
-    results. Bulk pipelines should still materialize the signatures table
-    once and pass it in.)
+    as a ``shared_frame`` of this call: both branches read one stored
+    copy, and nothing outlives the returned plan — a repeat call
+    re-shingles.  Bulk pipelines materialize the signatures table once
+    and pass it in.
     """
     rows_per_band = num_hashes // num_bands
     if signatures is not None:
@@ -237,10 +203,9 @@ def minhash_lsh_pairs(
         raise ValueError("pass a source DataFrame or a signatures frame")
     else:
         # reused by the band branch and the candidate-verification branch —
-        # persist so shingling/signatures run once per returned plan
-        base = _cache_inline_sigs(
-            df.sparkSession,
-            minhash_signatures(df, content_col, id_col, num_hashes, k),
+        # shared so shingling/signatures run once per returned plan
+        base = shared_frame(
+            minhash_signatures(df, content_col, id_col, num_hashes, k)
         )
     # the band self-join shuffles ONLY (id, band, key) — the shingle arrays
     # (the wide payload) are fetched once per candidate pair below; at
@@ -385,9 +350,8 @@ def minhash_lsh_incremental(
     elif new_df is None:
         raise ValueError("pass a new-batch DataFrame or new_signatures")
     else:
-        new_sigs = _cache_inline_sigs(
-            new_df.sparkSession,
-            minhash_signatures(new_df, content_col, id_col, num_hashes, k),
+        new_sigs = shared_frame(
+            minhash_signatures(new_df, content_col, id_col, num_hashes, k)
         )
 
     def banded(sigs: DataFrame) -> DataFrame:
@@ -473,39 +437,40 @@ def minhash_lsh_incremental(
             F.lit(True).alias("partner_new"),
         )
     )
-    cand = cand_index.unionByName(cand_batch).dropDuplicates(["nid", "pid"])
+    sh_n = new_sigs.select(F.col("id").alias("nid"), F.col("sh").alias("sh_n"))
 
-    with_n = cand.join(
-        new_sigs.select(F.col("id").alias("nid"), F.col("sh").alias("sh_n")),
-        "nid",
-    )
-    if index_banded is not None:
-        # artifact mode: fetch partner shingles PER SIDE so the index
-        # sigs table is probed by an id-equi-join alone (bucketed by id
-        # → no index-side exchange), never unioned into a shuffle.
-        # partner_new deterministically routes each pid (id spaces are
-        # disjoint between index and batch), so the branch union is the
-        # same row set the single lookup join produced.
-        fetched = with_n.filter(~F.col("partner_new")).join(
-            index_signatures.select(
-                F.col("id").alias("pid"), F.col("sh").alias("sh_p")
-            ),
-            "pid",
-        ).unionByName(
-            with_n.filter(F.col("partner_new")).join(
-                new_sigs.select(
+    def fetch(cand: DataFrame, partner_sigs: DataFrame) -> DataFrame:
+        return (
+            cand.dropDuplicates(["nid", "pid"])
+            .join(sh_n, "nid")
+            .join(
+                partner_sigs.select(
                     F.col("id").alias("pid"), F.col("sh").alias("sh_p")
                 ),
                 "pid",
             )
         )
-    else:
-        sh_lookup = index_signatures.select("id", "sh").unionByName(
-            new_sigs.select("id", "sh")
+
+    if index_banded is not None:
+        # artifact mode: dedupe and fetch partner shingles PER SIDE so the
+        # index sigs table is probed by an id-equi-join alone (bucketed by
+        # id → no index-side exchange), never unioned into a shuffle.  Id
+        # spaces are disjoint between index and batch, so the per-side
+        # dedupe keeps the same pairs as a union-wide one.  Each side's
+        # candidate join also stays a single subtree: split after a shared
+        # union, the batch branch inherits the materialized batch's source
+        # filter as an inferred id constraint, which defeats exchange
+        # reuse and re-ran the whole candidate join (index bands scanned
+        # twice).
+        fetched = fetch(cand_index, index_signatures).unionByName(
+            fetch(cand_batch, new_sigs)
         )
-        fetched = with_n.join(
-            sh_lookup.select(F.col("id").alias("pid"), F.col("sh").alias("sh_p")),
-            "pid",
+    else:
+        fetched = fetch(
+            cand_index.unionByName(cand_batch),
+            index_signatures.select("id", "sh").unionByName(
+                new_sigs.select("id", "sh")
+            ),
         )
     verified = (
         fetched.withColumn("__j", jaccard(F.col("sh_n"), F.col("sh_p")))
@@ -859,12 +824,6 @@ def window_fingerprints(
     ).filter(F.col("fp").isNotNull())
 
 
-# single-slot holder for the most recent inline-persisted fingerprint
-# frame (see duplicate_window_profile) — bounds the session's cache
-# footprint to one corpus
-_INLINE_FP_SLOT: dict = {}
-
-
 def duplicate_window_profile(
     df: DataFrame,
     content_col: str = "text",
@@ -901,52 +860,26 @@ def duplicate_window_profile(
     The Catalyst plan consumes the fingerprint frame TWICE (distinct-doc
     agg and the flag join; the per-doc base reads only the id column of
     ``df``) and the subtrees differ, so no ReusedExchange applies. When
-    the frame is built inline it is therefore PERSISTED
-    (memory-and-disk): both consumers read the one InMemoryRelation —
-    the same RDD, computed once — so the corpus is tokenized and
-    windowed exactly once per call (round 7; previously 3 scans, the
-    slowest bench query). The cache is corpus-sized × ~16 B/token and
-    evicts LRU; a 100 TB pipeline should still materialize
-    ``window_fingerprints`` to parquet once (same pattern as
-    ``minhash_signatures``) and pass it via ``fingerprints=`` so EVERY
-    downstream pass — not just this call — reads the skinny fp table
-    (the x60 posture, plan-locked in tests/test_plan_regressions.py).
+    the frame is built inline it is therefore a ``shared_frame`` of this
+    call: both consumers read the one stored copy, so the corpus is
+    tokenized and windowed exactly once per call (round 7; previously 3
+    scans, the slowest bench query).  Nothing is kept for the next call
+    (~16 B/token of corpus while the result is alive); a 100 TB pipeline
+    materializes ``window_fingerprints`` to parquet once (same pattern
+    as ``minhash_signatures``) and passes it via ``fingerprints=`` so
+    EVERY downstream pass — not just this call — reads the skinny fp
+    table (the x60 posture, plan-locked in
+    tests/test_plan_regressions.py).
 
     No counterpart in the reference (extension surface); complements
     ``exact_dedup`` (whole-doc) and ``minhash_lsh_pairs`` (near-dup) with
     the span-level third axis of the standard LLM dedup battery.
     """
-    if fingerprints is None:
-        from pyspark import StorageLevel
-
-        # single-slot cache discipline: the persist outlives this call
-        # (the returned plan references it lazily, so it cannot be
-        # unpersisted here), but a long-lived session profiling many
-        # corpora must not accumulate corpus-sized cache entries. A
-        # repeat call on the SAME corpus (plan-identical frame) reuses
-        # the slot's warm cache outright; a different corpus evicts it,
-        # bounding the footprint to one corpus. Callers needing tighter
-        # control pass fingerprints= (the x60 posture).
-        plan = window_fingerprints(df, content_col, id_col, window)
-        prev = _INLINE_FP_SLOT.get("fps")
-        same = False
-        if prev is not None:
-            try:
-                same = prev.sameSemantics(plan)
-            except Exception:  # noqa: BLE001 — session may be gone
-                prev = None
-        if same:
-            fps = prev
-        else:
-            if prev is not None:
-                try:
-                    prev.unpersist(blocking=False)
-                except Exception:  # noqa: BLE001
-                    pass
-            fps = plan.persist(StorageLevel.MEMORY_AND_DISK)
-            _INLINE_FP_SLOT["fps"] = fps
-    else:
-        fps = fingerprints
+    fps = (
+        shared_frame(window_fingerprints(df, content_col, id_col, window))
+        if fingerprints is None
+        else fingerprints
+    )
     per_fp = fps.groupBy("fp").agg(
         F.countDistinct("doc_id").alias("__ndocs")
     )
@@ -1060,11 +993,13 @@ def connected_components(
     shortcut label is always the id of a node reachable from x
     (reachability is transitive), so the fixpoint is the identical
     min-reachable-id labeling — exact, layout-invariant.  Lineage is cut
-    with localCheckpoint per round so the plan does not grow
-    exponentially; the previous round's table is checkpointed, so the
-    shortcut join re-reads blocks, never recomputes.  ``max_iter`` is a
-    safety bound, not a truncation in practice; a non-converged graph
-    raises rather than returning wrong labels.
+    with ``loop_frame`` per round so the plan does not grow
+    exponentially; the previous round's table is materialized, so the
+    shortcut join re-reads blocks, never recomputes, and it is released
+    as soon as the next round's table has landed.  Only the returned
+    labels stay stored.  ``max_iter`` is a safety bound, not a
+    truncation in practice; a non-converged graph raises rather than
+    returning wrong labels.
     """
     # materialize the edge list ONCE — it re-enters the join every round,
     # and without the checkpoint each iteration re-executes the entire
@@ -1075,28 +1010,24 @@ def connected_components(
     # does not deduplicate the branches — both used to re-execute the
     # whole pair pipeline inside the edges-checkpoint job.  Lazy
     # shared_frame: the edges job is the first (and only) consumer, and
-    # both union branches read the one stored copy; its blocks are
-    # freed as soon as edges lands.
-    from modis_aggregation_spark.operators.tokenizer import (
-        _free_local_checkpoint,
-    )
-
+    # both union branches read the one stored copy; it is released as
+    # soon as edges lands.
     p0 = shared_frame(
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")),
+        scoped=True,
     )
-    edges = (
+    edges = shared_frame(
         p0.unionByName(
             p0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint()
+        ).distinct(),
+        eager=True,
+        scoped=True,
     )
-    _free_local_checkpoint(p0)
-    labels = (
+    release(p0)
+    table = labels = loop_frame(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("comp", F.col("id"))
-        .localCheckpoint()
     )
     for rnd in range(max_iter):
         neighbor_min = (
@@ -1119,14 +1050,14 @@ def connected_components(
             # is the identity labeling, so comp_prev(comp(x)) == comp(x)
             # — skip the join (shallow star graphs converge in 2-3
             # rounds and would pay it for nothing)
-            new_labels = stepped.localCheckpoint()
+            new_table = loop_frame(stepped)
         else:
             # pointer doubling against the PREVIOUS (checkpointed)
             # table: comp(x) <- min(comp(x), comp_prev(comp(x)))
             parent = labels.select(
                 F.col("id").alias("__pid"), F.col("comp").alias("__pcomp")
             )
-            new_labels = (
+            new_table = loop_frame(
                 stepped.join(parent, stepped["comp"] == parent["__pid"], "left")
                 .select(
                     "id",
@@ -1136,11 +1067,16 @@ def connected_components(
                     ).alias("comp"),
                     "__old",
                 )
-            ).localCheckpoint()
-        changed = new_labels.filter(F.col("comp") != F.col("__old")).limit(1).count()
-        labels = new_labels.drop("__old")
+            )
+        release(table)
+        table = new_table
+        changed = table.filter(F.col("comp") != F.col("__old")).limit(1).count()
+        labels = table.drop("__old")
         if changed == 0:
+            release(edges)
             return labels
+    release(edges)
+    release(table)
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
@@ -1434,11 +1370,6 @@ def simhash_pairs(
 # n-gram Jaccard (exact, candidate-driven)
 # --------------------------------------------------------------------------
 
-# single-slot cache for ngram_jaccard_pairs' inline (id, gram) inverted
-# index (sameSemantics-guarded — CLAUDE.md rule 3c)
-_NGRAM_INV_SLOT: dict = {}
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     content_col: str = "text",
@@ -1458,7 +1389,7 @@ def ngram_jaccard_pairs(
     previous fetch-arrays-then-intersect verification moved ~1 KB per
     candidate pair and measured 20.7 s at sf0.1; this shape measures a
     small multiple of the tokenize pass.  The (id, gram) index is built
-    once (sameSemantics slot persist) and feeds the frequency cap, the
+    once per call (``shared_frame``) and feeds the frequency cap, the
     sizes and the self-join.
 
     ``max_token_freq`` excludes n-grams appearing in more than that many
@@ -1468,9 +1399,9 @@ def ngram_jaccard_pairs(
     result is the classic exact all-shared-gram Jaccard.
 
     The tokenize input is fed through ``spread_small_scan`` (round 13):
-    a single-file corpus otherwise pins the persisted inverted index to
+    a single-file corpus otherwise pins the stored inverted index to
     ONE partition, and the candidate self-join's probe side — the
-    slot's dominant stage, every (gram, id)×(gram, id) match plus the
+    query's dominant stage, every (gram, id)×(gram, id) match plus the
     per-pair partial count — runs on one core (measured 1.44 → 0.79 s
     on the isolated join at sf0.1, local[32]; the x23/x30/x38/x101
     composites share this upstream).  At real corpus scale the scan
@@ -1488,14 +1419,10 @@ def ngram_jaccard_pairs(
             lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
         )
     )
-    from modis_aggregation_spark.operators.tfidf import _slot_persist
-
-    inv = _slot_persist(
-        _NGRAM_INV_SLOT,
-        "inv",
+    inv = shared_frame(
         staged.select(
             "id", F.explode_outer(grams).alias("gram")
-        ).filter(F.col("gram").isNotNull()),
+        ).filter(F.col("gram").isNotNull())
     )
     big = (
         inv.groupBy("gram")

@@ -6,8 +6,9 @@ graph needs (near-dup clusters, centrality-weighted canonical selection).
 Scale shape: every iteration is one equi-join (edges ⋈ ranks, shuffled on
 the node key) plus one aggregation — O(E) shuffle bytes per round, no
 driver-side state beyond the loop counter. Lineage is cut per round with
-``localCheckpoint`` so the plan stays flat (the reference pattern proven by
-``connected_components``); a fixed iteration count keeps the operator
+``materialize.loop_frame`` so the plan stays flat (the pattern proven by
+``connected_components``), and each round's table is released once the
+next has landed; a fixed iteration count keeps the operator
 oracle-checkable (the unrolled form is plain SQL).
 """
 
@@ -16,7 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from modis_aggregation_spark.functions.materialize import shared_frame
+from modis_aggregation_spark.functions.materialize import (
+    loop_frame,
+    release,
+    shared_frame,
+)
 
 
 def degrees(
@@ -51,23 +56,27 @@ def pagerank(
 
     Each round: ranks ⋈ edges on the source key (one hash shuffle), a
     per-target sum, and a left join back onto the node list so zero
-    in-degree nodes keep the (1-d) floor. ``localCheckpoint`` per round
-    cuts lineage — plan size is O(1) in ``iterations``, and at 100 TB the
-    per-round shuffle is bounded by |E| skinny (node, double) rows.
+    in-degree nodes keep the (1-d) floor. ``loop_frame`` per round cuts
+    lineage — plan size is O(1) in ``iterations``, and at 100 TB the
+    per-round shuffle is bounded by |E| skinny (node, double) rows.  Only
+    the returned ranks stay stored.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    nodes = (
+    nodes = shared_frame(
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
+        scoped=iterations > 0,  # zero rounds return a plan over nodes
     )
     out_deg = e.groupBy("src").agg(F.count("*").alias("__outd"))
-    contrib_edges = e.join(out_deg, "src").localCheckpoint()
+    contrib_edges = shared_frame(
+        e.join(out_deg, "src"), eager=True, scoped=True
+    )
 
     ranks = nodes.withColumn("rank", F.lit(1.0))
     base = F.lit(1.0 - damping)
-    for _ in range(iterations):
+    for i in range(iterations):
         inbound = (
             contrib_edges.join(ranks, contrib_edges.src == ranks.id)
             .select(
@@ -77,16 +86,20 @@ def pagerank(
             .groupBy("id")
             .agg(F.sum("__c").alias("__m"))
         )
-        ranks = (
-            nodes.join(inbound, "id", "left")
-            .select(
+        new_ranks = loop_frame(
+            nodes.join(inbound, "id", "left").select(
                 "id",
                 (base + F.lit(damping) * F.coalesce(F.col("__m"), F.lit(0.0))).alias(
                     "rank"
                 ),
             )
-            .localCheckpoint()
         )
+        if i:  # round 0 read the initial projection over ``nodes``
+            release(ranks)
+        ranks = new_ranks
+    release(contrib_edges)
+    if iterations:
+        release(nodes)
     return ranks
 
 
@@ -108,8 +121,8 @@ def triangles(
     Returns one row per triangle with ``(a, b, c)`` sorted by id —
     deterministic regardless of the internal orientation.
 
-    Round 12: ``und`` is ``localCheckpoint``'d (eager) and ``directed``
-    lazily (``eager=False``). The DataFrame graph references ``und``
+    Round 12: ``und`` is materialized eagerly and ``directed`` lazily
+    (``shared_frame``). The DataFrame graph references ``und``
     five times (distinct + two degree-join sides) and ``directed``
     three times (both wedge sides + the closing join), and Spark's
     exchange reuse does NOT deduplicate them — the executed plan re-ran

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from modis_aggregation_spark.functions.layout import spread_small_scan
+from modis_aggregation_spark.functions.materialize import shared_frame
 
 MEDIA_META_SCHEMA = (
     "size_bytes BIGINT, mime STRING, sha256 STRING"
@@ -937,7 +938,7 @@ def dhash_dup_incremental(
             f"({max_hamming} >= {num_bands})"
         )
     src = batch_hashes.select("id", F.col("dhash").alias("h"))
-    batch_banded = (
+    batch_banded = shared_frame(
         src.select(
             "id", "h",
             F.explode(F.array(*_dhash_band_cols(num_bands))).alias("bk"),
@@ -946,8 +947,8 @@ def dhash_dup_incremental(
             "id", "h",
             F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
         )
-        .repartition(buckets, "band", "key")
-        .localCheckpoint()
+        .repartition(buckets, "band", "key"),
+        eager=True,
     )
     ham = F.bit_count(F.col("h").bitwiseXOR(F.col("ih")))
     idx_side = index_banded.select(

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from modis_aggregation_spark.functions import text as fn_text
+from modis_aggregation_spark.functions.materialize import shared_frame
 
 
 def _gram_array(toks: Column, n: int) -> Column:
@@ -566,15 +567,13 @@ def cms_term_estimates(
         # variable-length tokens() array (CLAUDE.md rule 2b)
         F.explode_outer(fn_text.tokens(F.col(content_col))).alias("term")
     ).filter(F.col("term").isNotNull())
-    # localCheckpoint: the vocabulary-sized count table feeds BOTH the
+    # shared_frame: the vocabulary-sized count table feeds BOTH the
     # sketch build and the estimate join, and exchange reuse does not
     # bridge the two branches — without it the corpus-sized
-    # tokenize+explode pass runs twice. The checkpointed table is tiny
+    # tokenize+explode pass runs twice. The stored table is tiny
     # (one row per distinct term) and its stats become truthful.
-    tc = (
-        toks.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("exact"))
-        .localCheckpoint()
+    tc = shared_frame(
+        toks.groupBy("term").agg(F.count(F.lit(1)).alias("exact")), eager=True
     )
     rows = tc.select(
         "term",

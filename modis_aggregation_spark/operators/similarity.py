@@ -24,6 +24,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from modis_aggregation_spark.functions.layout import spread_small_scan
+from modis_aggregation_spark.functions.materialize import (
+    loop_frame,
+    release,
+    shared_frame,
+)
 from modis_aggregation_spark.operators.dedup import cosine
 
 
@@ -351,7 +356,7 @@ def kmeans_train(
         F.col(id_col).alias("__id"),
         F.col(emb_col).cast("array<double>").alias("__e"),
     )
-    emb = emb.persist()
+    emb = shared_frame(emb, scoped=True)
     try:
         init = emb.orderBy("__id").limit(k).collect()
 
@@ -432,7 +437,7 @@ def kmeans_train(
             rows, "list_id INT, size BIGINT, pos INT, val DOUBLE"
         )
     finally:
-        emb.unpersist()
+        release(emb)
 
 
 def ivf_assign(
@@ -941,15 +946,17 @@ def ivf_topk_indexed(
     restriction (a query only scores ITS OWN probe lists, not the
     batch union) still applies inside via the broadcast probe join —
     results are identical to ``ivf_topk`` over the full assigned
-    corpus.  The query batch is MATERIALIZED once (localCheckpoint —
+    corpus.  The query batch is MATERIALIZED once (``loop_frame`` —
     batch-sized, the same frame the probe job consumes) and reused for
     both probe selection and scoring, so a nondeterministic ``queries``
     frame (sample / rand / unordered limit) cannot re-select probe
     lists that were pruned out of the scan."""
-    qa = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(emb_col).cast("array<double>").alias("__qe"),
-    ).localCheckpoint()
+    qa = loop_frame(
+        queries.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(emb_col).cast("array<double>").alias("__qe"),
+        )
+    )
     ids = sorted(
         r["list_id"]
         for r in _probe_lists(qa, centroids, nprobe)
@@ -1149,15 +1156,17 @@ def ivfpq_topk_indexed(
     frames: per-query probe restriction still applies inside via the
     broadcast probe join, and shortlist membership only ever draws
     from probed lists.  The query batch is materialized once
-    (localCheckpoint) so a nondeterministic frame cannot re-select
+    (``loop_frame``) so a nondeterministic frame cannot re-select
     pruned lists.  At 100 TB: probe selection is driver math, the ADC
     stage reads nprobe/nlist of 1/32nd of the corpus bytes, and the
     re-rank reads |q| x shortlist full vectors — nothing else is
     touched."""
-    qa = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(emb_col).cast("array<double>").alias("__qe"),
-    ).localCheckpoint()
+    qa = loop_frame(
+        queries.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(emb_col).cast("array<double>").alias("__qe"),
+        )
+    )
     ids = [
         int(r["list_id"])
         for r in _probe_lists(qa, centroids, nprobe)

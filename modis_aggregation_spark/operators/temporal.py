@@ -26,7 +26,10 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from modis_aggregation_spark.functions.materialize import shared_frame
+from modis_aggregation_spark.functions.materialize import (
+    loop_frame,
+    shared_frame,
+)
 
 _PAYLOAD = "__asof_payload"
 _SIDE = "__asof_side"
@@ -583,12 +586,13 @@ def _ewma_partitioned(
     # (the end-state aggregation on the broadcast side and the final
     # stitch join), and the range partitioner's sampled boundaries —
     # hence pid assignment — are NOT stable across re-executions of the
-    # subtree. localCheckpoint (eager) computes the scan exactly once
-    # and makes a divergent recompute IMPOSSIBLE (block loss fails the
-    # job loudly instead of silently re-sampling); blocks are released
+    # subtree. loop_frame (eager, lineage cut) computes the scan exactly
+    # once and makes a divergent recompute IMPOSSIBLE (a lost local
+    # block fails the job loudly instead of silently re-sampling;
+    # ``reliable`` mode re-reads the checkpoint); blocks are released
     # by the ContextCleaner when the result is garbage-collected, so
     # repeated calls don't accumulate executor storage.
-    local = part.mapInPandas(_local_scan, local_schema).localCheckpoint()
+    local = loop_frame(part.mapInPandas(_local_scan, local_schema))
 
     # segment end-states: one skinny row per (key, pid); partial (map-side)
     # aggregation keeps the shuffle at ≤ #keys + #partitions rows

@@ -119,19 +119,18 @@ def tf_idf(
     never divides by zero, never negative). ``top_k`` keeps the k highest-
     scoring terms per document (ties broken by term for determinism).
 
-    Scale shape (round-8 fix): the tf table is slot-persisted so the
-    corpus tokenizes ONCE — its two consumers (the df aggregation and
-    the score join) read the cache.  Exchange reuse cannot save this
-    one: the count-distinct rewrite + column pruning make the two tf
-    subtrees non-identical, so unpersisted they each re-tokenize.  No
+    Scale shape (round-8 fix): the tf table is a ``shared_frame`` of the
+    call, so the corpus tokenizes ONCE — its two consumers (the df
+    aggregation and the score join) read the stored copy.  Exchange
+    reuse cannot save this one: the count-distinct rewrite + column
+    pruning make the two tf subtrees non-identical, so unshared they
+    each re-tokenize.  No
     broadcast hint on df_ — it is vocabulary-sized, unbounded at corpus
     scale (same rule as the pmi/bigram marginals); AQE may still elect a
     broadcast when actually small.
     """
     n_docs = docs.select(id_col).distinct().count()
-    tf = _slot_persist(
-        _TFIDF_SLOT, "tf", term_frequencies(docs, content_col, id_col)
-    )
+    tf = shared_frame(term_frequencies(docs, content_col, id_col))
     df_ = tf.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     idf = F.log((F.lit(float(n_docs + 1))) / (F.col("df") + 1)) + F.lit(1.0)
     scored = (
@@ -294,41 +293,6 @@ def _doc_bigrams(
     )
 
 
-# One-slot caches for lm_doc_score's inline-built frames, keyed by plan
-# semantics (CLAUDE.md rule 3c: an unconditional unpersist evicts
-# same-plan successors too — CacheManager matches canonicalized plans, so
-# a slot only swaps when the incoming plan genuinely differs).
-_LM_OCC_SLOT: dict = {}
-# Same, for tf_idf's term-frequency table (two consumers: df agg + join).
-_TFIDF_SLOT: dict = {}
-
-
-def _slot_persist(slot: dict, key: str, plan: DataFrame) -> DataFrame:
-    """Persist ``plan`` MEMORY_AND_DISK through a sameSemantics-guarded
-    module slot (the q_dup_spans pattern, dedup.py:_INLINE_FP_SLOT): a
-    repeat call with a semantically-identical plan reuses the warm cache;
-    a different plan evicts the old entry first."""
-    from pyspark import StorageLevel
-
-    prev = slot.get(key)
-    same = False
-    if prev is not None:
-        try:
-            same = prev.sameSemantics(plan)
-        except Exception:  # noqa: BLE001 — session may be gone
-            prev = None
-    if same:
-        return prev
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001
-            pass
-    out = plan.persist(StorageLevel.MEMORY_AND_DISK)
-    slot[key] = out
-    return out
-
-
 def lm_doc_score(
     docs: DataFrame,
     content_col: str = "text",
@@ -346,10 +310,9 @@ def lm_doc_score(
     p via the k·V denominator mass).
 
     Scale shape: the corpus is tokenized EXACTLY ONCE — the (doc_id, w1,
-    w2) occurrence frame is persisted (memory-and-disk, sameSemantics-
-    guarded module slot — the q_dup_spans pattern) and feeds BOTH the LM
-    count aggregation (doc_id dropped) and the occurrence→probability
-    join; V derives from the aggregated count table inside ``bigram_lm``.
+    w2) occurrence frame is a ``shared_frame`` of the call and feeds
+    BOTH the LM count aggregation (doc_id dropped) and the
+    occurrence→probability join; V derives from the aggregated count table inside ``bigram_lm``.
     Three skinny shuffles follow — bigram counts keyed (w1, w2),
     left-token totals keyed w1, and the probability join keyed (w1, w2);
     neither count table is broadcast (vocabulary² is unbounded at corpus
@@ -362,24 +325,14 @@ def lm_doc_score(
     No counterpart in the reference (extension surface); composes
     ``bigram_lm`` into the per-document quality-screen shape.
     """
-    occ = _slot_persist(
-        _LM_OCC_SLOT, "occ", _doc_bigrams(docs, content_col, id_col)
-    )
-    # The count table is vocabulary²-bounded (one row per observed
-    # bigram) — orders of magnitude below the occurrence frame.  It has
-    # three consumers inside the LM (probability join, w1-marginal, V),
-    # and TableCacheQueryStage inputs defeat AQE exchange/stage reuse
-    # (observed: the (w1,w2) agg over the occurrence cache ran 2-4x), so
-    # it is slot-persisted too: one agg pass over the occurrence cache,
-    # three cheap cache reads.
-    # NOT persisted: the count table.  Measured at sf0.1 (warm best-of-5):
-    # occ-only 0.72 s; +persisted count table 1.04 s; +collected-literal V
-    # 1.54 s — the extra cache materializations/jobs cost more than the
-    # 1-2 duplicate agg passes they save, and those duplicates re-read the
-    # SKINNY occurrence cache (post-tokenize), never the corpus.  At scale
-    # the same holds: re-aggregating cached (w1, w2) rows is shuffle-local
-    # work; the expensive parts (text scan, tokenize, bigram formation)
-    # happen exactly once below the cache.
+    occ = shared_frame(_doc_bigrams(docs, content_col, id_col))
+    # NOT materialized: the vocabulary²-bounded count table, although it
+    # has three consumers inside the LM (probability join, w1-marginal,
+    # V).  Measured at sf0.1 (warm best-of-5): occ-only 0.72 s;
+    # +persisted count table 1.04 s; +collected-literal V 1.54 s — the
+    # extra materializations/jobs cost more than the 1-2 duplicate agg
+    # passes they save, and those duplicates re-read the SKINNY stored
+    # occurrence frame (post-tokenize), never the corpus.
     lm = bigram_lm(
         docs, content_col, k_smooth, pairs=occ.select("w1", "w2")
     ).select("w1", "w2", "p")

@@ -20,8 +20,9 @@ and that is exactly what makes it distributable:
    fold that applies the winning merge greedily left-to-right inside
    every word.  Per iteration: one skinny shuffle + a 1-row collect
    (the argmax) — the driver only ever holds the merge rules.
-3. ``localCheckpoint`` per iteration keeps the plan flat (the
-   ``operators/graph.py`` iterative pattern).
+3. ``materialize.loop_frame`` every few merges keeps the plan flat (the
+   ``operators/graph.py`` iterative pattern); each table is released
+   once training no longer reads it.
 
 Ties break deterministically: highest pair count, then lexicographic
 (left, right) — so the learned table is a pure function of the corpus,
@@ -34,6 +35,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from modis_aggregation_spark.functions.materialize import (
+    loop_frame,
+    release,
+    shared_frame,
+)
 from modis_aggregation_spark.functions.text import tokens
 
 __all__ = [
@@ -126,20 +132,6 @@ def _select_disjoint(rows, budget: int, min_count: int, merged_of):
     return picked
 
 
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Release the block-store blocks of a ``localCheckpoint``'d frame —
-    no public DataFrame API exists (ADVICE r12: without this, iterative
-    trainers pin one RDD per round for the session).  The logical plan
-    of a checkpointed frame is a LogicalRDD whose ``rdd()`` is the
-    persisted internal RDD; best-effort (a plan-shape change across
-    Spark versions degrades back to GC-driven cleanup, never an error).
-    """
-    try:
-        df._jdf.queryExecution().logical().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def bpe_train(
     df: DataFrame,
     text_col: str = "text",
@@ -169,10 +161,10 @@ def bpe_train(
     """
     spark = df.sparkSession
     batch = max(1, int(merge_batch))
-    vocab = (
-        word_vocab(df, text_col)
-        .select(_chars(F.col("word")).alias("syms"), "count")
-        .localCheckpoint()
+    base = vocab = loop_frame(
+        word_vocab(df, text_col).select(
+            _chars(F.col("word")).alias("syms"), "count"
+        )
     )
     merges: list[tuple[int, str, str, int]] = []
     applied_since_ckpt = 0
@@ -212,8 +204,11 @@ def bpe_train(
             )
             applied_since_ckpt += 1
         if applied_since_ckpt >= 4 and len(merges) < num_merges:
-            vocab = vocab.localCheckpoint()
+            vocab = loop_frame(vocab)
+            release(base)
+            base = vocab
             applied_since_ckpt = 0
+    release(base)
     return spark.createDataFrame(
         merges, "rank INT, left STRING, right STRING, pair_count BIGINT"
     )
@@ -400,9 +395,9 @@ def unigram_train(
     """
     if num_iters < 1:
         raise ValueError("unigram_train needs num_iters >= 1")
-    vocab = word_vocab(df, text_col).localCheckpoint()
+    vocab = shared_frame(word_vocab(df, text_col), eager=True, scoped=True)
 
-    pieces = (
+    pieces = shared_frame(
         vocab.select(
             F.explode(
                 _substr_pieces(F.col("word"), max_piece_len)
@@ -410,8 +405,9 @@ def unigram_train(
             "count",
         )
         .groupBy("piece")
-        .agg(F.sum("count").alias("cnt"))
-        .localCheckpoint()
+        .agg(F.sum("count").alias("cnt")),
+        eager=True,
+        scoped=True,
     )
     singles = pieces.filter(F.length("piece") == 1)
     multis = (
@@ -423,7 +419,7 @@ def unigram_train(
     total = sum(seed.values())
     probs = {p: c / total for p, c in seed.items()}
 
-    words = vocab  # already checkpointed above
+    words = vocab  # already materialized above
     for _ in range(num_iters):
         cur = dict(probs)  # capture for the closure
 
@@ -489,6 +485,8 @@ def unigram_train(
         tot = sum(cm.values())
         probs = {p: c / tot for p, c in cm.items()}
 
+    release(pieces)
+    release(vocab)
     final = sorted(cm.items(), key=lambda kv: (-kv[1], kv[0]))[:vocab_size]
     tot_f = sum(c for _, c in cm.items())
     spark = df.sparkSession
@@ -681,11 +679,15 @@ def wordpiece_train(
     spark = df.sparkSession
     # lazy (round 13): round 1's collect materializes the vocab inside
     # its own job; the eager form paid a dedicated barrier job up front
-    vocab = (
-        word_vocab(df, text_col)
-        .select(_wp_chars(F.col("word")).alias("syms"), "count")
-        .localCheckpoint(eager=False)
+    vocab = loop_frame(
+        word_vocab(df, text_col).select(
+            _wp_chars(F.col("word")).alias("syms"), "count"
+        ),
+        eager=False,
     )
+    # lazy checkpoints: an older one may feed a newer one until the
+    # next round's jobs run, so all are released when training ends
+    stored = [vocab]
 
     def _wp_merged(l_: str, r_: str) -> str:
         return l_ + (r_[2:] if r_.startswith("##") else r_)
@@ -694,18 +696,19 @@ def wordpiece_train(
     merges: list[tuple[int, str, str, str, int, int, int]] = []
     applied_since_ckpt = 0
     while len(merges) < num_merges:
-        # lazy localCheckpoint: the symbol-count table has TWO consumers
+        # lazy loop_frame: the symbol-count table has TWO consumers
         # (the l_cnt and r_cnt join sides) and Catalyst splices a
         # separate agg subtree into each — the whole explode+agg pass
         # over the vocab ran twice per round (round 12, measured).  The
         # lazy form makes both sides read one shared RDD with no extra
         # barrier job; the table is symbol-level (alphabet + merges) —
-        # trivially small at any corpus scale.  _free_local_checkpoint
-        # releases the blocks after the round's collect (the round-12
-        # form pinned one RDD per round for the session — ADVICE r12).
+        # trivially small at any corpus scale.  It is released after
+        # the round's collect (the round-12 form pinned one RDD per
+        # round for the session — ADVICE r12).
         # Round 13 also measured and REJECTED two sharing variants:
         # persist() (AQE materializes a cached shuffle plan as separate
-        # jobs — 37 → 77 jobs per x90 call) and fusing the unit counts
+        # jobs — 37 → 77 jobs per x90 call; hence loop_frame, which
+        # never persists, in every mode) and fusing the unit counts
         # into the pair pass via end-of-word markers + re-agg of the
         # checkpointed pair table (exact int64, value-identical, ONE
         # vocab explode per round instead of two — but the re-agg over
@@ -713,11 +716,11 @@ def wordpiece_train(
         # round: 37 → 45 jobs, +1.5 s at sf0.1; the slot is driver-
         # latency-bound, and the saved explode is over the Zipf-bounded
         # vocab, not the corpus, so the bytes saved never dominate).
-        units = (
+        units = loop_frame(
             vocab.select(F.explode("syms").alias("s"), "count")
             .groupBy("s")
-            .agg(F.sum("count").alias("u_cnt"))
-            .localCheckpoint(eager=False)
+            .agg(F.sum("count").alias("u_cnt")),
+            eager=False,
         )
         pairs = (
             vocab.select(
@@ -757,7 +760,7 @@ def wordpiece_train(
             .limit(budget if budget == 1 else 8 * budget)
             .collect()
         )
-        _free_local_checkpoint(units)
+        release(units)
         picked = _select_disjoint(top, budget, min_pair_count, _wp_merged)
         if not picked:
             break
@@ -787,8 +790,11 @@ def wordpiece_train(
             )
             applied_since_ckpt += 1
         if applied_since_ckpt >= 4 and len(merges) < num_merges:
-            vocab = vocab.localCheckpoint(eager=False)
+            vocab = loop_frame(vocab, eager=False)
+            stored.append(vocab)
             applied_since_ckpt = 0
+    for t in stored:
+        release(t)
     return spark.createDataFrame(
         merges,
         "rank INT, left STRING, right STRING, merged STRING, "
@@ -835,11 +841,9 @@ def wordpiece_encode(
     # inline form re-tokenized the corpus a third time for the alphabet
     # and char-exploded every word OCCURRENCE before the distinct
     # (round 12, measured — chars of distinct words are the same set).
-    words = (
-        exploded.filter(F.col("word").isNotNull())
-        .select("word")
-        .distinct()
-        .localCheckpoint()
+    words = shared_frame(
+        exploded.filter(F.col("word").isNotNull()).select("word").distinct(),
+        eager=True,
     )
     alphabet = (
         words.select(F.explode(_wp_chars(F.col("word"))).alias("s"))

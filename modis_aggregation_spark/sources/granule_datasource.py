@@ -390,7 +390,9 @@ class GranuleStreamReader(DataSourceStreamReader):
     ``MODIS_Aggregation/aggregate_functions.py:70-71,577``). Replay is
     exactly-once: a micro-batch re-reads ``[start, end)`` by id range, and
     decode is a pure function of granule_id, so recovered batches are
-    byte-identical. One InputPartition per granule — the scan parallelism
+    byte-identical; a restarted query's reader raises its frontier to the
+    replayed or committed offset, so it never re-lands or skips granules
+    across a restart. One InputPartition per granule — the scan parallelism
     is the file split, same as the batch reader.
     """
 
@@ -409,6 +411,9 @@ class GranuleStreamReader(DataSourceStreamReader):
         return {"index": self._frontier}
 
     def partitions(self, start: dict, end: dict) -> list[GranulePartition]:
+        # a restarted query replays its last uncommitted batch here
+        # before asking for new data: never report an offset behind it
+        self._frontier = max(self._frontier, end["index"])
         ids = self.base.granule_ids[start["index"] : end["index"]]
         return [GranulePartition(g) for g in ids]
 
@@ -416,7 +421,7 @@ class GranuleStreamReader(DataSourceStreamReader):
         return self.base.read(partition)
 
     def commit(self, end: dict) -> None:
-        pass
+        self._frontier = max(self._frontier, end["index"])
 
 
 class GranuleDataSource(DataSource):

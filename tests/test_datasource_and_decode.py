@@ -198,6 +198,44 @@ def test_datasource_stream_reader_exactly_once(registered, tmp_path):
     assert n_batches >= 3  # 3+3+1 arrival batches, not one big scan
 
 
+def test_datasource_stream_reader_restart_exactly_once(registered, tmp_path):
+    """A query restarted from its checkpoint resumes after the committed
+    offset: the first run lands one batch and stops, the second run
+    lands the rest, and every granule is counted exactly once (a new
+    reader whose arrival frontier restarts at 0 reported nothing new
+    after a restart and dropped the remaining granules)."""
+    def run(name, once):
+        stream = (
+            registered.readStream.format("modis_granules")
+            .option("granule_ids", "41,42,43,44,45,46")
+            .option("granules_per_batch", "2")
+            .option("variables", "ctp")
+            .load()
+        )
+        w = (
+            stream.groupBy("granule_id").count()
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+        )
+        q = w.trigger(once=True).start() if once else w.start()
+        if once:
+            q.awaitTermination()
+        else:
+            q.processAllAvailable()
+            q.stop()
+        return {r["granule_id"]: r["count"]
+                for r in registered.table(name).collect()}
+
+    assert run("ds_restart_1", once=True) == {
+        41: SWATH_ROWS * SWATH_COLS, 42: SWATH_ROWS * SWATH_COLS
+    }
+    assert run("ds_restart_2", once=False) == {
+        g: SWATH_ROWS * SWATH_COLS for g in (41, 42, 43, 44, 45, 46)
+    }
+
+
 @pytest.mark.parametrize("decoder", ["hdf4", "hdf5", "HDF"])
 def test_unknown_decoder_rejected(registered, tmp_path, decoder):
     """A decoder name outside ``fake, hdf`` fails when the read is

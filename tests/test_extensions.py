@@ -171,57 +171,49 @@ def test_minhash_pairs_from_materialized_signatures(spark):
 
 
 def test_minhash_inline_cache_is_single_slot(spark):
-    """Repeated inline calls must not accumulate persisted signature
-    frames: each call evicts the previous call's cache."""
-    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    """Repeated inline calls keep nothing in the CacheManager: the
+    inline signatures are a per-call ``shared_frame`` (checkpoint
+    blocks freed with the returned plan), not a session-lived cache
+    entry that outlives the call."""
+    spark.catalog.clearCache()  # entries other tests left behind
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
     for _ in range(3):
         D.minhash_lsh_pairs(_docs(spark), threshold=0.5).count()
-    after = len(spark.sparkContext._jsc.getPersistentRDDs())
-    assert after - before <= 1
+    assert cache.isEmpty()
 
 
 def test_minhash_inline_cache_is_per_session(spark):
-    """Concurrent sessions must not evict each other's cached signature
-    frames: the cache is one slot PER SparkSession, not one slot global."""
+    """Inline calls in two sessions of one context are independent pure
+    functions of their input: identical pairs, in either order."""
     other = spark.newSession()
-    D.minhash_lsh_pairs(_docs(spark), threshold=0.5).count()
-    mine = D._INLINE_SIG_CACHE[spark]
-    assert mine.storageLevel.useMemory
-    # a second session's inline call must leave the first session's slot alone
-    D.minhash_lsh_pairs(_docs(other), threshold=0.5).count()
-    assert D._INLINE_SIG_CACHE[spark] is mine
-    assert mine.storageLevel.useMemory
-    assert D._INLINE_SIG_CACHE[other].storageLevel.useMemory
-    # a repeat call with a DIFFERENT canonical plan evicts the slot
-    # (createDataFrame local relations never canonicalize equal, so
-    # each _docs() call is a fresh plan)
-    D.minhash_lsh_pairs(_docs(spark), threshold=0.5).count()
-    assert D._INLINE_SIG_CACHE[spark] is not mine
-    assert not mine.storageLevel.useMemory
-    D._INLINE_SIG_CACHE.pop(other).unpersist()
-    D._INLINE_SIG_CACHE.pop(spark).unpersist()
+
+    def pairs(session):
+        return sorted(
+            (r["id_a"], r["id_b"], r["jaccard"])
+            for r in D.minhash_lsh_pairs(_docs(session), threshold=0.5).collect()
+        )
+
+    first = pairs(spark)
+    assert first and pairs(other) == first == pairs(spark)
 
 
-def test_minhash_inline_cache_warm_reuse_same_plan(spark):
-    """Round 8 (CLAUDE.md rule 3c): a repeat inline call whose signature
-    plan canonicalizes EQUAL to the cached slot must REUSE the warm
-    frame — the previous evict-then-persist order deregistered the new
-    frame from the CacheManager (same canonicalized plan), so it
-    silently ran uncached and re-shingled per consumer.  Needs a
-    deterministic source (parquet scan): createDataFrame plans never
-    canonicalize equal."""
+def test_minhash_inline_cache_warm_reuse_same_plan(spark, tmp_path):
+    """Cross-call reuse is explicit: with ``signatures=`` the returned
+    plan never re-shingles — no leaf of the optimized plan carries the
+    text column, only the (id, sh, sig) artifact — and its pairs equal
+    the inline call's."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    D.minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.5).count()
-    mine = D._INLINE_SIG_CACHE[spark]
-    assert mine.storageLevel.useMemory
-    D.minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.5).count()
-    assert D._INLINE_SIG_CACHE[spark] is mine
-    assert mine.storageLevel.useMemory
-    # a genuinely different plan still evicts
-    D.minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.5, k=4).count()
-    assert D._INLINE_SIG_CACHE[spark] is not mine
-    assert not mine.storageLevel.useMemory
-    D._INLINE_SIG_CACHE.pop(spark).unpersist()
+    path = str(tmp_path / "sigs.parquet")
+    D.minhash_signatures(docs, "text", "doc_id").write.parquet(path)
+    sigs = spark.read.parquet(path)
+    out = D.minhash_lsh_pairs(signatures=sigs, threshold=0.5)
+    leaves = out._jdf.queryExecution().optimizedPlan().collectLeaves()
+    for i in range(leaves.size()):
+        first = leaves.apply(i).toString().splitlines()[0]
+        assert "text#" not in first, first
+    inline = D.minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.5)
+    assert sorted(out.collect()) == sorted(inline.collect())
 
 
 def test_simhash_pairs(spark):

@@ -584,23 +584,26 @@ def test_x90_wordpiece_train_partial_aggs(spark):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
+def _final_plan(df):
+    df.collect()  # finalize AQE so reuse is resolved
+    return df._jdf.queryExecution().executedPlan().toString().split(
+        "+- == Initial Plan =="
+    )[0]
+
+
 def test_x53_lm_score_single_tokenize_pass(spark):
     """lm_doc_score (round-8 fix): the corpus must be tokenized exactly
-    once — the (doc_id, w1, w2) occurrence frame is slot-persisted and
-    every consumer (LM count agg, probability-join probe) reads the ONE
-    InMemoryRelation.  Round 7 shipped four tokenize passes here (occ,
-    the LM's own pairs, and a pairs∪pairs V union).  Assert on the AQE
-    final plan: >= 2 cache consumers, and every documents FileScan /
-    bigram-formation Generate lives only inside the cached-relation
-    description (counts equal InMemoryRelation occurrences)."""
+    once — the (doc_id, w1, w2) occurrence frame is a shared_frame and
+    every consumer (LM count agg, probability-join probe) reads the one
+    stored RDD.  Round 7 shipped four tokenize passes here (occ, the
+    LM's own pairs, and a pairs∪pairs V union).  Assert on the AQE
+    final plan: no documents scan and no bigram formation (zip_with)
+    anywhere, and >= 2 consumers reading the stored frame."""
     df = entry.queries()["x53_lm_score"](spark, SF)
-    df.collect()  # finalize AQE so reuse/caches are resolved
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("+- == Initial Plan ==")[0]
-    n_cache_refs = final.count("InMemoryRelation")
-    assert final.count("InMemoryTableScan") >= 2          # both consumers cached
-    assert final.count("FileScan parquet") == n_cache_refs  # no scan outside cache
-    assert final.count("zip_with") == n_cache_refs          # formation only in cache
+    final = _final_plan(df)
+    assert final.count("FileScan parquet") == 0
+    assert final.count("zip_with") == 0
+    assert final.count("Scan ExistingRDD") >= 2
     assert "CartesianProduct" not in final
     logical = df._jdf.queryExecution().optimizedPlan().toString()
     # only the 1-row V scalar carries a broadcast hint; the count tables
@@ -608,20 +611,36 @@ def test_x53_lm_score_single_tokenize_pass(spark):
     assert logical.count("strategy=broadcast") <= 1
 
 
+def _assert_x13_single_tokenize(df):
+    final = _final_plan(df)
+    assert final.count("FileScan parquet") == 0
+    assert final.count("zip_with") == 0
+    assert final.count("Scan ExistingRDD") >= 2
+
+
 def test_x13_tfidf_single_tokenize_pass(spark):
-    """tf_idf (round-8 audit): the tf table is slot-persisted — its two
-    consumers (df agg, score join) read ONE InMemoryRelation, so the
-    corpus tokenizes once.  (Exchange reuse cannot cover this query: the
-    count-distinct rewrite + pruning de-duplicate the subtrees.)  Also:
-    no broadcast hint anywhere — df_ is vocabulary-sized."""
+    """tf_idf (round-8 audit): the tf table is a shared_frame — its two
+    consumers (df agg, score join) each scan the one stored RDD, so the
+    corpus tokenizes once and the returned plan holds no documents scan.
+    (Exchange reuse cannot cover this query: the count-distinct rewrite
+    + pruning de-duplicate the subtrees.)  Also: no broadcast hint
+    anywhere — df_ is vocabulary-sized."""
     df = entry.queries()["x13_tfidf"](spark, SF)
-    df.collect()
-    final = df._jdf.queryExecution().executedPlan().toString().split(
-        "+- == Initial Plan =="
-    )[0]
-    assert final.count("FileScan parquet") == final.count("InMemoryRelation")
+    _assert_x13_single_tokenize(df)
     logical = df._jdf.queryExecution().optimizedPlan().toString()
     assert "strategy=broadcast" not in logical
+
+
+def test_x13_tfidf_single_tokenize_after_clear_cache(spark):
+    """A same-plan tf_idf call after ``spark.catalog.clearCache()`` (as
+    tools/sweep_contract.py does between queries) still tokenizes once:
+    nothing is kept across calls for clearCache to invalidate behind the
+    operator's back.  A module-level slot holding the first call's
+    frame handed the second call an uncached frame, whose plan scanned
+    documents.parquet twice."""
+    entry.queries()["x13_tfidf"](spark, SF).collect()
+    spark.catalog.clearCache()
+    _assert_x13_single_tokenize(entry.queries()["x13_tfidf"](spark, SF))
 
 
 def test_x42_bm25_single_tokenize_no_shuffle(spark):
@@ -690,29 +709,38 @@ def test_r27_merge_upsert_plan_shape(spark):
     assert plan.count("Exchange hashpartitioning") == 0
 
 
+def _assert_batch_sigs_and_index_leaves(plan):
+    """STRUCTURAL leaf walk: every leaf is either the one checkpoint of
+    the new-batch signature build or a bare (id, sh, sig) parquet
+    relation (the index artifact), and no leaf carries raw text."""
+    import re
+
+    leaves = plan.collectLeaves()
+    ckpt_rdds = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        first = leaf.toString().splitlines()[0]
+        assert "text#" not in first, f"raw text in a leaf: {first}"
+        if leaf.nodeName() == "LogicalRDD":
+            assert re.match(r"LogicalRDD \[id#\d+L?, sh#\d+, sig#\d+\]", first), first
+            ckpt_rdds.add(leaf.rdd().id())
+        else:
+            assert re.match(
+                r"Relation \[id#\d+L?,sh#\d+,sig#\d+\] parquet", first
+            ), first
+    assert len(ckpt_rdds) == 1, ckpt_rdds  # the one new-batch build
+
+
 def test_x92_incremental_no_index_reshingle(spark):
     """Incremental MinHash-LSH (round 8): the INDEX side must read only
     the materialized signatures artifact — every shingle/normalize
     expression and every documents scan in the plan belongs to the (one,
-    cached) NEW-batch signature build; the index enters as bare
+    materialized) NEW-batch signature build; the index enters as bare
     (id, sh, sig) parquet relations.  Bucket caps stay broadcast
     anti-joins; no cartesian anywhere."""
     df = entry.queries()["x92_incremental_minhash"](spark, SF)
     plan = df._jdf.queryExecution().optimizedPlan()
-    # STRUCTURAL leaf walk (string counts are unstable: a materialized
-    # cache prints its adaptive plan twice — final + initial sections):
-    # every leaf carrying raw document text must BE the InMemoryRelation
-    # of the cached new-batch build; the index enters only as bare
-    # (id, sh, sig) parquet relations.
-    leaves = plan.collectLeaves()
-    kinds = []
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        kinds.append(leaf.nodeName())
-        if leaf.nodeName() != "InMemoryRelation":
-            first = leaf.toString().splitlines()[0]
-            assert "text#" not in first, f"raw text outside cache: {first}"
-    assert "InMemoryRelation" in kinds  # the one cached new-batch build
+    _assert_batch_sigs_and_index_leaves(plan)
     import re
 
     logical = plan.toString()
@@ -780,20 +808,12 @@ def test_x93_index_update_never_reshingles(spark, tmp_path):
 
 def test_x93_day2_only_batch_reshingled(spark):
     """The x93 day-2 dedup against the UPDATED index keeps the x92
-    posture: every leaf carrying raw document text is the one cached
-    new-batch signature build; the updated index enters as a bare
-    (id, sh, sig) parquet relation (the compaction artifact)."""
+    posture: the one new-batch signature build is materialized, and the
+    updated index enters as a bare (id, sh, sig) parquet relation (the
+    compaction artifact); no leaf carries raw text."""
     df = entry.queries()["x93_minhash_index_update"](spark, SF)
     plan = df._jdf.queryExecution().optimizedPlan()
-    leaves = plan.collectLeaves()
-    kinds = []
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        kinds.append(leaf.nodeName())
-        if leaf.nodeName() != "InMemoryRelation":
-            first = leaf.toString().splitlines()[0]
-            assert "text#" not in first, f"raw text outside cache: {first}"
-    assert "InMemoryRelation" in kinds
+    _assert_batch_sigs_and_index_leaves(plan)
     import re
 
     logical = plan.toString()
