@@ -31,6 +31,12 @@ per-slot "regressions" (round 12: a 10-slot contiguous block at geomean
   passes (best-of-3 extended to best-of-6 on burst-suspect slots — same
   action, same scale), and the raw first pass plus the re-time land in
   ``queries_first_pass`` / ``retimes`` so both numbers stay on record.
+
+Per-slot engine counters (additions only): ``jobs`` and
+``shuffle_records`` hold what ``observe.measure`` counted over each
+slot's first-pass timed call (all of its best-of-3 passes; the one pass
+of ``q_minhash_sigs``). Job counts do not move with host load, so they
+tell a plan change from a tenancy burst.
 """
 
 from __future__ import annotations
@@ -94,6 +100,8 @@ def _calib_once(spark) -> float:
 def main() -> None:
     import __spark_entry__ as entry
     from modis_aggregation_spark import get_spark
+    from modis_aggregation_spark.observe import measure
+    from modis_aggregation_spark.session import local_cpus
 
     spark = get_spark("bench")
     qs = entry.queries()
@@ -145,10 +153,20 @@ def main() -> None:
     timings: dict[str, float] = {}
     calibrations: dict[str, float] = {}
     retimers: dict[str, object] = {}
+    jobs: dict[str, int] = {}
+    shuffle_records: dict[str, int] = {}
+
+    def _observed(name, timed):
+        """``timed()``'s result, with the slot's counters recorded."""
+        with measure(spark, f"bench/{name}") as m:
+            out = timed()
+        jobs[name], shuffle_records[name] = m["jobs"], m["shuffle_records"]
+        return out
+
     for name, fn in bench_queries.items():
-        timings[name] = _time_noop(fn)
-        calibrations[name] = _calib_once(spark)
         retimers[name] = (lambda f=fn: _time_noop(f))
+        timings[name] = _observed(name, retimers[name])
+        calibrations[name] = _calib_once(spark)
 
     # MinHash LSH in its bulk-pipeline shape: the signatures table is the
     # reusable corpus artifact — built and materialized ONCE (timed as
@@ -175,9 +193,9 @@ def main() -> None:
             best = min(best, time.perf_counter() - t0)
         return round(best, 3)
 
-    timings["q_minhash_sigs"], sigs = _time_minhash_sigs()
+    timings["q_minhash_sigs"], sigs = _observed("q_minhash_sigs", _time_minhash_sigs)
     calibrations["q_minhash_sigs"] = _calib_once(spark)
-    timings["q_minhash_lsh"] = _time_minhash_lsh(sigs)
+    timings["q_minhash_lsh"] = _observed("q_minhash_lsh", lambda: _time_minhash_lsh(sigs))
     calibrations["q_minhash_lsh"] = _calib_once(spark)
     sigs.unpersist()
 
@@ -214,7 +232,7 @@ def main() -> None:
             best = min(best, time.perf_counter() - t0)
         return round(best, 3)
 
-    timings["q_screen"] = _time_screen()
+    timings["q_screen"] = _observed("q_screen", _time_screen)
     calibrations["q_screen"] = _calib_once(spark)
     retimers["q_screen"] = _time_screen
 
@@ -231,7 +249,7 @@ def main() -> None:
         finally:
             shutil.rmtree(out, ignore_errors=True)
 
-    timings["q_cf_grid"] = _time_cf_grid()
+    timings["q_cf_grid"] = _observed("q_cf_grid", _time_cf_grid)
     calibrations["q_cf_grid"] = _calib_once(spark)
     retimers["q_cf_grid"] = _time_cf_grid
 
@@ -270,16 +288,13 @@ def main() -> None:
             best = min(best, time.perf_counter() - t0)
         return round(best, 3)
 
-    timings["q_daily_grid_full"] = _time_daily_grid()
+    timings["q_daily_grid_full"] = _observed("q_daily_grid_full", _time_daily_grid)
     calibrations["q_daily_grid_full"] = _calib_once(spark)
     retimers["q_daily_grid_full"] = _time_daily_grid
 
     # ---- tenancy adjudication pass (round 13, additions-only) ----
     queries_first_pass = dict(timings)
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-    priors = (
-        _committed_priors(int(cpus_env), _sf(SF_DIR)) if cpus_env else {}
-    )
+    priors = _committed_priors(local_cpus(), _sf(SF_DIR))
     suspects = [
         n
         for n in timings
@@ -310,6 +325,8 @@ def main() -> None:
         "calibrations": calibrations,
         "queries_first_pass": queries_first_pass,
         "retimes": retimes,
+        "jobs": jobs,
+        "shuffle_records": shuffle_records,
     }
     if retime_calibration_sec is not None:
         record["retime_calibration_sec"] = retime_calibration_sec

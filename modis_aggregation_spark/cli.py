@@ -5,7 +5,10 @@ The reference takes 15-16 positional args + two config CSVs (reference
 ``examples/local_execution/MODIS_Aggregation_Local_Commands.sh:21``). This
 CLI accepts the same information as named flags (typed, validated in
 ``AggregationSpec``) plus the reference's own CSV formats for the variable
-and joint-histogram configs.
+and joint-histogram configs. As in the reference, the product covers the
+granules from ``--start`` to ``--end`` plus the first ``shift_hours`` (3)
+hours of the day after ``--end``, with the definition-of-day nulling
+applied to the end day and that spill day.
 
 Usage:
     python -m modis_aggregation_spark.cli \
@@ -174,11 +177,12 @@ def main(argv: list[str] | None = None) -> int:
         export_png,
         write_grid_parquet,
     )
+    from modis_aggregation_spark.sources.catalog import spec_window
 
     spark = get_spark("modis_aggregation_cli")
     pixels = spark.read.parquet(args.pixels)
     granules = spark.read.parquet(args.granules)
-    grid = daily_grid(spark, spec, pixels, granules)
+    grid = daily_grid(spark, spec, pixels, *spec_window(granules, spec))
     if args.hdf5 or args.png or args.contour_png:
         # each export collects the (bounded, ~MB) grid on the driver —
         # persist so the extra jobs re-read cached partitions instead of

@@ -107,9 +107,11 @@ def release(df: DataFrame) -> None:
     if plan.getClass().getSimpleName() != "LogicalRDD":
         raise TypeError("release() takes a frame returned by shared_frame or loop_frame")
     rdd = plan.rdd()
-    rdd.unpersist(False)
+    spark = df.sparkSession
+    # drops the blocks as RDD.unpersist does, without its per-RDD warning
+    # that a locally checkpointed RDD cannot be recomputed
+    spark.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
     ckpt = rdd.getCheckpointFile()
     if ckpt.isDefined():
-        spark = df.sparkSession
         path = spark._jvm.org.apache.hadoop.fs.Path(ckpt.get())
         path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)

@@ -10,7 +10,9 @@ The reference serial driver takes 15-16 positional args (reference
     <variable csv> [<jhist csv>]
 
 This module parses that exact layout into an ``AggregationSpec`` and runs
-``daily_grid``. One adaptation, documented: ``data_path.csv`` rows point at
+``daily_grid`` over the reference's date window: start to end plus the
+first 3 hours of the next day, with the definition-of-day nulling
+(``:589-601``). One adaptation, documented: ``data_path.csv`` rows point at
 this engine's pixel/granule parquet stores instead of MYD06/MYD03 HDF
 directories (same whitespace-delimited 2-row file shape the reference
 reads at ``:508-515``).
@@ -106,13 +108,14 @@ def main(argv: list[str] | None = None) -> int:
     from modis_aggregation_spark import get_spark
     from modis_aggregation_spark.plans.pipeline import daily_grid
     from modis_aggregation_spark.sinks.writers import write_grid_parquet
+    from modis_aggregation_spark.sources.catalog import spec_window
 
     spark = get_spark("modis_aggregation_reference_cli")
     grid = daily_grid(
         spark,
         spec,
         spark.read.parquet(pixels_path),
-        spark.read.parquet(granules_path),
+        *spec_window(spark.read.parquet(granules_path), spec),
     )
     write_grid_parquet(grid, out_path)
     print(f"wrote {spec.nlat}x{spec.nlon} grid to {out_path}")

@@ -14,6 +14,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """The core count the bench and sweep record and match priors on:
+    ``SPARK_GRAFT_CPUS``, else the host's."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+
+
 def get_spark(
     app_name: str = "modis_aggregation_spark",
     master: str | None = None,

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType
 
 from modis_aggregation_spark.config import AggregationSpec
+from modis_aggregation_spark.sinks.hdf5lite import write_hdf5
 
 CF_SCALE = 1e-4
 CF_OFFSET = 0.0
@@ -219,45 +220,32 @@ def export_netcdf_cfa(
     MYD08_D3.A2008001CloudFraction.nc`` (180×360 DataArray written by the
     compiled-only ``cfa`` module's ``displayOutput``).
 
-    With xarray present this writes a fully-attributed netCDF-4 file;
-    without it (this container) it falls back to ``hdf5lite`` and emits
-    the same HDF5-inside structure the sample product has — the data
-    variable plus DIMENSION_SCALE-classed coordinate datasets — minus
-    the netCDF4 reference-typed bookkeeping attrs (DIMENSION_LIST /
-    REFERENCE_LIST), which generic HDF5 readers ignore."""
+    Written with ``hdf5lite``: the same HDF5-inside structure the sample
+    product has — the data variable plus DIMENSION_SCALE-classed
+    coordinate datasets — minus the netCDF4 reference-typed bookkeeping
+    attrs (DIMENSION_LIST / REFERENCE_LIST), which generic HDF5 readers
+    ignore."""
     if os.path.exists(path) and not overwrite:
         raise FileExistsError(path)
     arrays = grid_to_arrays(grid_df.select("cell", "lat_idx", "lon_idx", cf_col), spec)
     lat_bnd, lon_bnd = axis_bounds(spec)
     centers = lambda b: (b[:-1] + b[1:]) / 2.0  # noqa: E731
-    try:
-        import xarray as xr
-    except ImportError:
-        from modis_aggregation_spark.sinks.hdf5lite import write_hdf5
-
-        write_hdf5(
-            path,
-            {
-                cf_col: (arrays[cf_col], {"_FillValue": float("nan")}),
-                "lat": (
-                    centers(lat_bnd),
-                    {"CLASS": "DIMENSION_SCALE", "NAME": "lat",
-                     "units": "degrees_north", "_Netcdf4Dimid": 0},
-                ),
-                "lon": (
-                    centers(lon_bnd),
-                    {"CLASS": "DIMENSION_SCALE", "NAME": "lon",
-                     "units": "degrees_east", "_Netcdf4Dimid": 1},
-                ),
-            },
-        )
-        return path
-    da = xr.DataArray(  # pragma: no cover - env-dependent
-        arrays[cf_col],
-        coords={"lat": centers(lat_bnd), "lon": centers(lon_bnd)},
-        dims=("lat", "lon"),
+    write_hdf5(
+        path,
+        {
+            cf_col: (arrays[cf_col], {"_FillValue": float("nan")}),
+            "lat": (
+                centers(lat_bnd),
+                {"CLASS": "DIMENSION_SCALE", "NAME": "lat",
+                 "units": "degrees_north", "_Netcdf4Dimid": 0},
+            ),
+            "lon": (
+                centers(lon_bnd),
+                {"CLASS": "DIMENSION_SCALE", "NAME": "lon",
+                 "units": "degrees_east", "_Netcdf4Dimid": 1},
+            ),
+        },
     )
-    da.to_netcdf(path)  # pragma: no cover - env-dependent
     return path
 
 
@@ -333,8 +321,6 @@ def export_hdf5(
     arrays = grid_to_arrays(grid_df, spec)
     packed = pack_grid(arrays, spec)
     lat_bnd, lon_bnd = axis_bounds(spec)
-    from modis_aggregation_spark.sinks.hdf5lite import write_hdf5
-
     # the reference sample carries units/long_name on the bounds vectors
     write_hdf5(path, {
         "lat_bnd": (lat_bnd, {"units": "degrees",

@@ -77,6 +77,20 @@ def date_range_catalog(
     return catalog.filter(in_range | in_spill)
 
 
+def spec_window(granules: DataFrame, spec) -> tuple[DataFrame, int, int]:
+    """``daily_grid``'s catalog arguments for ``spec``'s dates: the granules
+    of its window (``date_range_catalog``) and the day rule's
+    ``(end_doy, spill_doy)`` — the days of the end date and of the spill
+    day after it."""
+    spill_day, _ = spill_window(spec.start_date, spec.end_date, spec.shift_hours)
+    end = date.fromisoformat(spec.end_date)
+    return (
+        date_range_catalog(granules, spec.start_date, spec.end_date, spec.shift_hours),
+        end.timetuple().tm_yday,
+        spill_day.timetuple().tm_yday,
+    )
+
+
 def validate_hour_coverage(
     catalog: DataFrame,
     start_date: str,

@@ -140,9 +140,9 @@ def test_pipeline_validates_before_job(spark):
 
 
 def test_export_netcdf_writes_hdf5_fallback(spark, tmp_path):
-    """Without xarray the cfa sink writes the sample product's
-    HDF5-inside structure (data variable + DIMENSION_SCALE coords) via
-    hdf5lite."""
+    """The cfa sink writes the sample product's HDF5-inside structure
+    (data variable + DIMENSION_SCALE coords) via hdf5lite, whichever
+    packages are installed."""
     from modis_aggregation_spark.sinks.hdf5lite import read_hdf5
 
     df = spark.createDataFrame(

@@ -7,6 +7,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from modis_aggregation_spark.functions import text as T
+from modis_aggregation_spark.observe import measure
 from modis_aggregation_spark.operators import dedup as D
 from modis_aggregation_spark.operators import multimodal as M
 from modis_aggregation_spark.operators import similarity as S
@@ -783,16 +784,14 @@ def test_connected_components_long_chain(spark):
     id), and in O(log L) label rounds, not O(L) — pinned via the
     driver job count (old shape: ~9 jobs × 25 rounds; doubled: ≤ 9
     rounds' worth).  Measured on a 30-chain: 284 jobs → 71."""
-    store = spark.sparkContext._jsc.sc().statusStore()
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 25)], ["id_a", "id_b"]
     )
-    j0 = store.jobsList(None).size()
-    comps = {r["id"]: r["comp"] for r in D.connected_components(pairs).collect()}
-    jobs = store.jobsList(None).size() - j0
+    with measure(spark, "connected_components/long_chain") as m:
+        comps = {r["id"]: r["comp"] for r in D.connected_components(pairs).collect()}
     assert set(comps.values()) == {1}
     assert len(comps) == 25
-    assert jobs < 120, f"O(L) round regression: {jobs} driver jobs on a 24-round chain"
+    assert m["jobs"] < 120, f"O(L) round regression: {m['jobs']} driver jobs on a 24-round chain"
 
 
 def test_connected_components_chain_beyond_old_iteration_bound(spark):

@@ -276,6 +276,43 @@ def test_cli_end_to_end(spark, tmp_path):
         ])
 
 
+def test_cli_applies_date_window_and_day_rule(spark, tmp_path):
+    """The CLI aggregates --start..--end plus the first 3 hours of the next
+    day, with the definition-of-day nulling: its output equals daily_grid
+    over date_range_catalog with the end and spill days (here doy 1 and 2;
+    the fixtures also hold later doy-2 granules and doy 3)."""
+    from modis_aggregation_spark.cli import build_parser, main, spec_from_args
+    from modis_aggregation_spark.sources.catalog import date_range_catalog
+
+    out = str(tmp_path / "cli_window")
+    argv = [
+        "--pixels", os.path.join(FIXTURES, "pixels.parquet"),
+        "--granules", os.path.join(FIXTURES, "granules.parquet"),
+        "--output", out,
+        "--lat0", "-20", "--lat1", "20", "--lon0", "0", "--lon1", "35",
+        "--start", "2008-01-01", "--end", "2008-01-01", "--var", "ctp", "cee",
+    ]
+    assert main(argv) == 0
+    spec = spec_from_args(build_parser().parse_args(argv))
+    pixels = spark.read.parquet(os.path.join(FIXTURES, "pixels.parquet"))
+    granules = spark.read.parquet(os.path.join(FIXTURES, "granules.parquet"))
+    window = date_range_catalog(granules, "2008-01-01", "2008-01-01")
+    want = daily_grid(spark, spec, pixels, window, end_doy=1, spill_doy=2)
+    got = {r["cell"]: r.asDict() for r in spark.read.parquet(out).collect()}
+    expected = {r["cell"]: r.asDict() for r in want.collect()}
+    assert got.keys() == expected.keys()
+    for cell, row in expected.items():
+        for col, e in row.items():
+            g = got[cell][col]
+            if isinstance(e, float) and isinstance(g, float):
+                assert (math.isnan(e) and math.isnan(g)) or g == pytest.approx(e), (cell, col)
+            else:
+                assert g == e, (cell, col)
+    assert sum(r["tot_pix"] for r in got.values()) < pixels.filter(
+        "lat BETWEEN -20 AND 20 AND lon BETWEEN 0 AND 35"
+    ).count()
+
+
 def test_daily_grid_day_rules_null_measures(spark):
     """End-to-end day-definition path: running with end_doy/spill_doy must
     reduce counted measures (quadrant nulling) but never row counts."""

@@ -6,6 +6,8 @@ import os
 import __spark_entry__ as entry
 from pyspark.sql import functions as F
 
+from modis_aggregation_spark.observe import plan_metric, plan_nodes
+
 SF = "/root/testdata/sf0.001"
 FIXTURES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")
 
@@ -13,6 +15,54 @@ FIXTURES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__
 def _plan(spark, name):
     df = entry.queries()[name](spark, SF)
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+_JOINS = {
+    "SortMergeJoinExec",
+    "BroadcastHashJoinExec",
+    "ShuffledHashJoinExec",
+    "BroadcastNestedLoopJoinExec",
+    "CartesianProductExec",
+}
+
+
+def _assert_no_raw_index_exchange(spark, query, index, n_scans):
+    """The bucketed-index plan lock: ``query`` reads ``n_scans`` scans of
+    the ``index`` tables, all bucketed, and no shuffle moves raw index
+    rows (every path from an exchange down to an index scan crosses a
+    join or an aggregate).  AQE and auto-broadcast are pinned off so the
+    lock is on the deterministic planner shape."""
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        root = entry.queries()[query](spark, SF)._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
+
+    def is_index_scan(n):
+        return n.getClass().getSimpleName() == "FileSourceScanExec" and (
+            index in n.simpleString(120)
+        )
+
+    def moves_raw_index_rows(n):
+        cls = n.getClass().getSimpleName()
+        if cls in _JOINS or "Aggregate" in cls:
+            return False  # past a join/agg: rows are candidate-bound
+        if is_index_scan(n):
+            return True
+        ch = n.children()
+        return any(moves_raw_index_rows(ch.apply(i)) for i in range(ch.size()))
+
+    index_scans = [n for n in plan_nodes(root) if is_index_scan(n)]
+    assert len(index_scans) == n_scans, [s.simpleString(80) for s in index_scans]
+    for s in index_scans:
+        assert "Bucketed: true" in s.simpleString(400), s.simpleString(400)
+    for n in plan_nodes(root):
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec":
+            assert not moves_raw_index_rows(n), n.simpleString(200)
 
 
 def test_m2_scan_pushdown_and_pruning(spark):
@@ -849,16 +899,8 @@ def test_index_update_shuffle_delete_no_index_exchange(spark, tmp_path):
             spark, "t_updb", str(tmp_path / "idx"), buckets=4
         )
         upd = D.minhash_index_update(s_t, srv, broadcast_delete=False)
-        root = upd._jdf.queryExecution().executedPlan()
-
-        def walk(n):
-            yield n
-            ch = n.children()
-            for i in range(ch.size()):
-                yield from walk(ch.apply(i))
-
         n_shuffles = 0
-        for n in walk(root):
+        for n in plan_nodes(upd):
             cls = n.getClass().getSimpleName()
             if cls == "ShuffleExchangeExec":
                 n_shuffles += 1
@@ -866,7 +908,7 @@ def test_index_update_shuffle_delete_no_index_exchange(spark, tmp_path):
                 assert not any(
                     m.getClass().getSimpleName() == "FileSourceScanExec"
                     and "t_updb" in m.simpleString(120)
-                    for m in walk(n)
+                    for m in plan_nodes(n)
                 ), n.simpleString(200)
         assert n_shuffles == 1  # the survivor-id side, nothing else
         bcast = D.minhash_index_update(s_t, srv, broadcast_delete=True)
@@ -965,55 +1007,10 @@ def test_x102_bucketed_index_no_index_exchange(spark):
     the exchange sneaks back in.  AQE and auto-broadcast are pinned
     off so the lock is on the deterministic planner shape (broadcast
     could mask an index-side shuffle at test scale)."""
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        df = entry.queries()["x102_bucketed_index"](spark, SF)
-        root = df._jdf.queryExecution().executedPlan()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-
-    def walk(n):
-        yield n
-        ch = n.children()
-        for i in range(ch.size()):
-            yield from walk(ch.apply(i))
-
-    def is_index_scan(n):
-        return n.getClass().getSimpleName() == "FileSourceScanExec" and (
-            "x102_idx" in n.simpleString(120)
-        )
-
-    joins = {
-        "SortMergeJoinExec",
-        "BroadcastHashJoinExec",
-        "ShuffledHashJoinExec",
-        "BroadcastNestedLoopJoinExec",
-        "CartesianProductExec",
-    }
-
-    def moves_raw_index_rows(n):
-        cls = n.getClass().getSimpleName()
-        if cls in joins or "Aggregate" in cls:
-            return False  # past a join/agg: rows are candidate-bound
-        if is_index_scan(n):
-            return True
-        ch = n.children()
-        return any(moves_raw_index_rows(ch.apply(i)) for i in range(ch.size()))
-
-    index_scans = [n for n in walk(root) if is_index_scan(n)]
     # bands (the daily join), sigs (the sh fetch), bandcounts (the cap
     # check) — the cap path reads the pre-aggregated counts, so the
     # bands table is scanned exactly once
-    assert len(index_scans) == 3, [s.simpleString(80) for s in index_scans]
-    for s in index_scans:
-        assert "Bucketed: true" in s.simpleString(400), s.simpleString(400)
-    for n in walk(root):
-        if n.getClass().getSimpleName() == "ShuffleExchangeExec":
-            assert not moves_raw_index_rows(n), n.simpleString(200)
+    _assert_no_raw_index_exchange(spark, "x102_bucketed_index", "x102_idx", 3)
 
 
 def test_x103_pca_projection_map_only(spark):
@@ -1118,52 +1115,7 @@ def test_x107_compacted_index_no_index_exchange(spark):
     raw index row crossing a shuffle before a join/aggregate boundary
     (same tree-walk criterion as test_x102_bucketed_index_no_index_
     exchange, against the COMPACTED artifact)."""
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        df = entry.queries()["x107_index_compaction"](spark, SF)
-        root = df._jdf.queryExecution().executedPlan()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-
-    def walk(n):
-        yield n
-        ch = n.children()
-        for i in range(ch.size()):
-            yield from walk(ch.apply(i))
-
-    def is_index_scan(n):
-        return n.getClass().getSimpleName() == "FileSourceScanExec" and (
-            "x107_idx" in n.simpleString(120)
-        )
-
-    joins = {
-        "SortMergeJoinExec",
-        "BroadcastHashJoinExec",
-        "ShuffledHashJoinExec",
-        "BroadcastNestedLoopJoinExec",
-        "CartesianProductExec",
-    }
-
-    def moves_raw_index_rows(n):
-        cls = n.getClass().getSimpleName()
-        if cls in joins or "Aggregate" in cls:
-            return False  # past a join/agg: rows are candidate-bound
-        if is_index_scan(n):
-            return True
-        ch = n.children()
-        return any(moves_raw_index_rows(ch.apply(i)) for i in range(ch.size()))
-
-    index_scans = [n for n in walk(root) if is_index_scan(n)]
-    assert len(index_scans) == 3, [s.simpleString(80) for s in index_scans]
-    for s in index_scans:
-        assert "Bucketed: true" in s.simpleString(400), s.simpleString(400)
-    for n in walk(root):
-        if n.getClass().getSimpleName() == "ShuffleExchangeExec":
-            assert not moves_raw_index_rows(n), n.simpleString(200)
+    _assert_no_raw_index_exchange(spark, "x107_index_compaction", "x107_idx", 3)
 
 
 def test_zorder_layout_prunes_row_groups(spark, tmp_path):
@@ -1208,36 +1160,12 @@ def test_zorder_layout_prunes_row_groups(spark, tmp_path):
         # scan node carries the metrics (count() plans a separate query
         # whose metrics would not appear here)
         n = len(df.collect())
-        root = df._jdf.queryExecution().executedPlan()
-
-        def walk(node):
-            if node.getClass().getSimpleName() == "FileSourceScanExec":
-                it = node.metrics().iterator()
-                while it.hasNext():
-                    kv = it.next()
-                    if kv._1() == "numOutputRows":
-                        return int(kv._2().value())
-            ch = node.children()
-            for i in range(ch.size()):
-                got = walk(ch.apply(i))
-                if got is not None:
-                    return got
-            for attr in ("plan", "finalPhysicalPlan"):
-                if hasattr(node, attr):
-                    try:
-                        got = walk(getattr(node, attr)())
-                        if got is not None:
-                            return got
-                    except Exception:
-                        pass
-            return None
-
-        return n, walk(root)
+        return n, plan_metric(df, "FileSourceScanExec", "numOutputRows")
 
     n_z, scan_z = scan_rows(zsorted)
     n_s, scan_s = scan_rows(shuffled)
     assert n_z == n_s and n_z > 0          # identical answers
-    assert scan_z is not None and scan_s is not None
+    assert scan_z > 0
     # the clustered layout must skip most row groups the shuffled one reads
     assert scan_z < scan_s / 2, (scan_z, scan_s)
 
@@ -1283,54 +1211,9 @@ def test_x117_dhash_index_no_index_exchange(spark):
     fetch join at all — the bands scan is the only index input to the
     candidate join.  AQE/auto-broadcast pinned off (broadcast could
     mask an index-side shuffle at test scale)."""
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        df = entry.queries()["x117_dhash_index_incremental"](spark, SF)
-        root = df._jdf.queryExecution().executedPlan()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-
-    def walk(n):
-        yield n
-        ch = n.children()
-        for i in range(ch.size()):
-            yield from walk(ch.apply(i))
-
-    def is_index_scan(n):
-        return n.getClass().getSimpleName() == "FileSourceScanExec" and (
-            "x117_idx" in n.simpleString(120)
-        )
-
-    joins = {
-        "SortMergeJoinExec",
-        "BroadcastHashJoinExec",
-        "ShuffledHashJoinExec",
-        "BroadcastNestedLoopJoinExec",
-        "CartesianProductExec",
-    }
-
-    def moves_raw_index_rows(n):
-        cls = n.getClass().getSimpleName()
-        if cls in joins or "Aggregate" in cls:
-            return False  # past a join/agg: rows are candidate-bound
-        if is_index_scan(n):
-            return True
-        ch = n.children()
-        return any(moves_raw_index_rows(ch.apply(i)) for i in range(ch.size()))
-
-    index_scans = [n for n in walk(root) if is_index_scan(n)]
     # exactly ONE index scan: the bands table (hash carried inline —
     # no sigs/fetch scan, unlike the MinHash 3-table layout)
-    assert len(index_scans) == 1, [s.simpleString(80) for s in index_scans]
-    for s in index_scans:
-        assert "Bucketed: true" in s.simpleString(400), s.simpleString(400)
-    for n in walk(root):
-        if n.getClass().getSimpleName() == "ShuffleExchangeExec":
-            assert not moves_raw_index_rows(n), n.simpleString(200)
+    _assert_no_raw_index_exchange(spark, "x117_dhash_index_incremental", "x117_idx", 1)
 
 
 def test_x49_triangles_single_edge_derivation(spark):

@@ -12,6 +12,11 @@ _SPEC = importlib.util.spec_from_file_location(
 )
 sweep_contract = importlib.util.module_from_spec(_SPEC)
 _SPEC.loader.exec_module(sweep_contract)
+_BENCH_SPEC = importlib.util.spec_from_file_location(
+    "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py"),
+)
+bench = importlib.util.module_from_spec(_BENCH_SPEC)
+_BENCH_SPEC.loader.exec_module(bench)
 
 
 def test_effective_timings_overlays_isolated():
@@ -44,3 +49,16 @@ def test_prev_isolated_is_the_baseline_anchor():
     cur = {"timings": {"q": 12.0}}
     d = sweep_contract.diff_sweeps(prev, cur)
     assert [r["query"] for r in d["regressions"]] == ["q"]
+
+
+def test_cpu_count_falls_back_to_the_host(monkeypatch):
+    """Without SPARK_GRAFT_CPUS the bench and the sweep record the host's
+    core count, so bench.py still finds its same-count re-time priors."""
+    from modis_aggregation_spark.session import local_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "cpu_count", lambda: 8)
+    assert local_cpus() == 8
+    assert bench._committed_priors(local_cpus(), 0.1)  # BENCH_r13_c8.json
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    assert local_cpus() == 32

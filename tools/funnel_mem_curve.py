@@ -29,7 +29,9 @@ import sys
 CHILD = r"""
 import json, sys, time
 rows = int(sys.argv[1]); mode = sys.argv[2]
+sys.path.insert(0, ".")
 from pyspark.sql import SparkSession, functions as F
+from modis_aggregation_spark.observe import measure
 spark = (
     SparkSession.builder.master("local[4]")
     .config("spark.driver.memory", "1g")
@@ -48,58 +50,41 @@ df = spark.range(rows).select(
         F.array(*[F.lit(s) for s in STEPS]), (F.col("id") % 4 + 1).cast("int")
     ).alias("event_type"),
 )
-t0 = time.perf_counter()
-if mode == "collect":
-    idx = {s: i for i, s in enumerate(STEPS)}
-    @F.udf("int")
-    def match_depth(evs):
-        stage, last = 0, None
-        for t, et in sorted(evs, key=lambda e: e[0]):
-            if stage >= 4:
-                break
-            if idx.get(et) != stage:
-                continue
-            if stage > 0 and t <= last:
-                continue
-            last = t
-            stage += 1
-        return stage
-    out = (
-        df.groupBy("user_id")
-        .agg(F.collect_list(F.struct("ts", "event_type")).alias("evs"))
-        .select(match_depth("evs").alias("depth"))
-        .collect()
-    )
-    depth = out[0]["depth"]
-else:
-    sys.path.insert(0, ".")
-    from modis_aggregation_spark.operators.sessions import funnel_steps
-    out = funnel_steps(df, STEPS).collect()
-    depth = out[0]["depth"]
-wall = time.perf_counter() - t0
+with measure(spark, f"{mode}_{rows}") as m:
+    t0 = time.perf_counter()
+    if mode == "collect":
+        idx = {s: i for i, s in enumerate(STEPS)}
+        @F.udf("int")
+        def match_depth(evs):
+            stage, last = 0, None
+            for t, et in sorted(evs, key=lambda e: e[0]):
+                if stage >= 4:
+                    break
+                if idx.get(et) != stage:
+                    continue
+                if stage > 0 and t <= last:
+                    continue
+                last = t
+                stage += 1
+            return stage
+        out = (
+            df.groupBy("user_id")
+            .agg(F.collect_list(F.struct("ts", "event_type")).alias("evs"))
+            .select(match_depth("evs").alias("depth"))
+            .collect()
+        )
+        depth = out[0]["depth"]
+    else:
+        from modis_aggregation_spark.operators.sessions import funnel_steps
+        out = funnel_steps(df, STEPS).collect()
+        depth = out[0]["depth"]
+    wall = time.perf_counter() - t0
 assert depth == 4, depth
-sc = spark.sparkContext
-store = sc._jsc.sc().statusStore()
-jvm = sc._gateway.jvm
-stages = store.stageList(
-    jvm.java.util.ArrayList(), False, False,
-    sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
-)
-it = stages.iterator()
-peak = spill_mem = spill_disk = 0
-while it.hasNext():
-    s = it.next()
-    try:
-        peak = max(peak, s.peakExecutionMemory())
-        spill_mem += s.memoryBytesSpilled()
-        spill_disk += s.diskBytesSpilled()
-    except Exception:
-        pass
 print("RESULT " + json.dumps({
     "depth": depth, "wall_sec": round(wall, 1),
-    "peak_exec_mb": round(peak / 1e6, 1),
-    "spill_mem_mb": round(spill_mem / 1e6, 1),
-    "spill_disk_mb": round(spill_disk / 1e6, 1),
+    "peak_exec_mb": round(m["peak_execution_memory_bytes"] / 1e6, 1),
+    "spill_mem_mb": round(m["spill_memory_bytes"] / 1e6, 1),
+    "spill_disk_mb": round(m["spill_disk_bytes"] / 1e6, 1),
 }))
 spark.stop()
 """

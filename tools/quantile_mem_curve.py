@@ -27,7 +27,9 @@ import sys
 CHILD = r"""
 import json, sys, time
 rows = int(sys.argv[1]); mode = sys.argv[2]
+sys.path.insert(0, ".")
 from pyspark.sql import SparkSession, functions as F
+from modis_aggregation_spark.observe import measure
 spark = (
     SparkSession.builder.master("local[4]")
     .config("spark.driver.memory", "1g")
@@ -41,36 +43,19 @@ df = spark.range(rows).select(
     F.lit(0).alias("g"),
     (F.abs(F.xxhash64("id")) % F.lit(10**12)).cast("double").alias("v"),
 )
-t0 = time.perf_counter()
-if mode == "builtin":
-    out = df.groupBy("g").agg(F.expr("percentile(v, 0.9)").alias("p90")).collect()
-else:
-    sys.path.insert(0, ".")
-    from modis_aggregation_spark.operators.quantiles import group_percentiles
-    out = group_percentiles(df, ["g"], "v", {"p90": 0.9}).collect()
-wall = time.perf_counter() - t0
-sc = spark.sparkContext
-store = sc._jsc.sc().statusStore()
-jvm = sc._gateway.jvm
-stages = store.stageList(
-    jvm.java.util.ArrayList(), False, False,
-    sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
-)
-it = stages.iterator()
-peak = spill_mem = spill_disk = 0
-while it.hasNext():
-    s = it.next()
-    try:
-        peak = max(peak, s.peakExecutionMemory())
-        spill_mem += s.memoryBytesSpilled()
-        spill_disk += s.diskBytesSpilled()
-    except Exception:
-        pass
+with measure(spark, f"{mode}_{rows}") as m:
+    t0 = time.perf_counter()
+    if mode == "builtin":
+        out = df.groupBy("g").agg(F.expr("percentile(v, 0.9)").alias("p90")).collect()
+    else:
+        from modis_aggregation_spark.operators.quantiles import group_percentiles
+        out = group_percentiles(df, ["g"], "v", {"p90": 0.9}).collect()
+    wall = time.perf_counter() - t0
 print("RESULT " + json.dumps({
     "p90": out[0]["p90"], "wall_sec": round(wall, 1),
-    "peak_exec_mb": round(peak / 1e6, 1),
-    "spill_mem_mb": round(spill_mem / 1e6, 1),
-    "spill_disk_mb": round(spill_disk / 1e6, 1),
+    "peak_exec_mb": round(m["peak_execution_memory_bytes"] / 1e6, 1),
+    "spill_mem_mb": round(m["spill_memory_bytes"] / 1e6, 1),
+    "spill_disk_mb": round(m["spill_disk_bytes"] / 1e6, 1),
 }))
 spark.stop()
 """

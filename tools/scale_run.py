@@ -22,6 +22,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from modis_aggregation_spark import get_spark  # noqa: E402
 from modis_aggregation_spark.config import default_spec  # noqa: E402
+from modis_aggregation_spark.observe import measure, plan_metric  # noqa: E402
 from modis_aggregation_spark.operators import stats as ops_stats  # noqa: E402
 from modis_aggregation_spark.operators.dedup import (  # noqa: E402
     minhash_lsh_pairs,
@@ -32,6 +33,10 @@ from modis_aggregation_spark.sources.granule_datasource import (  # noqa: E402
 )
 
 PX_PER_1KM_GRANULE = 2030 * 1354
+# A curve's shuffle volume is either a ``measure`` scope around the phase
+# or, for one DataFrame, the sum of its exchanges' own SQL metrics. Record
+# counts are the scale metric where lz4 flattens low-entropy row payloads.
+EXCHANGE = "ShuffleExchangeExec"
 
 
 def run_1km(spark, n_granules: int) -> dict:
@@ -99,156 +104,6 @@ def run_minhash(spark, sf_dir: str) -> dict:
     }
 
 
-def _shuffle_write_bytes(spark, settle: float = 0.0) -> int:
-    """Cumulative shuffle-write bytes across all completed stages of the
-    app (AppStatusStore — works with the UI disabled). Deltas around a
-    phase isolate that phase's shuffle volume.
-
-    ``settle > 0`` polls until two consecutive reads agree (the status
-    store is fed by an ASYNC event bus — a read right after a job
-    returns can miss its last stages, which zeroes small deltas)."""
-
-    def _read() -> int:
-        sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        jvm = sc._gateway.jvm
-        stages = store.stageList(
-            jvm.java.util.ArrayList(),
-            False,
-            False,
-            sc._gateway.new_array(jvm.double, 0),
-            jvm.java.util.ArrayList(),
-        )
-        it, tot = stages.iterator(), 0
-        while it.hasNext():
-            tot += it.next().shuffleWriteBytes()
-        return tot
-
-    if not settle:
-        return _read()
-    prev = _read()
-    for _ in range(20):
-        time.sleep(settle)
-        cur = _read()
-        if cur == prev:
-            return cur
-        prev = cur
-    return prev
-
-
-def _stage_rows(spark) -> list[tuple[int, int]]:
-    """[(stage_id, shuffle_write_bytes)] for every RETAINED stage."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    jvm = sc._gateway.jvm
-    stages = store.stageList(
-        jvm.java.util.ArrayList(),
-        False,
-        False,
-        sc._gateway.new_array(jvm.double, 0),
-        jvm.java.util.ArrayList(),
-    )
-    it, out = stages.iterator(), []
-    while it.hasNext():
-        s = it.next()
-        out.append((int(s.stageId()), int(s.shuffleWriteBytes())))
-    return out
-
-
-def _max_stage_id(spark) -> int:
-    rows = _stage_rows(spark)
-    return max((sid for sid, _ in rows), default=-1)
-
-
-def _shuffle_bytes_after(spark, stage_floor: int, settle: float = 0.4) -> int:
-    """Shuffle-write bytes summed over stages with id > ``stage_floor``
-    — immune to status-store EVICTION, which silently shrinks the
-    cumulative total a delta of two ``_shuffle_write_bytes`` reads
-    relies on (spark.ui.retainedStages caps the list; a long setup
-    phase between the two reads evicts its own stages and cancels out
-    the measured phase's bytes).  Polls until two consecutive reads
-    agree (async event bus)."""
-    prev = None
-    for _ in range(20):
-        cur = sum(b for sid, b in _stage_rows(spark) if sid > stage_floor)
-        if prev is not None and cur == prev:
-            return cur
-        prev = cur
-        time.sleep(settle)
-    return prev or 0
-
-
-def _query_shuffle_bytes(df) -> int:
-    """Exact shuffle-write bytes of ONE executed query: walk the final
-    physical plan (through AQE query-stage wrappers) and sum each
-    ShuffleExchangeExec's own ``shuffleBytesWritten`` SQL metric,
-    deduplicated by plan id (ReusedExchange).  Ground truth where the
-    app-level stage-store sum proved unreliable (round 11: the plain
-    LSH join's 155 MB of exchanges showed up as 0.85 MB there)."""
-    root = df._jdf.queryExecution().executedPlan()
-    seen: set[int] = set()
-    total = 0
-
-    def walk(n):
-        nonlocal total
-        if n.getClass().getSimpleName() == "ShuffleExchangeExec":
-            pid = n.id()
-            if pid not in seen:
-                seen.add(pid)
-                it = n.metrics().iterator()
-                while it.hasNext():
-                    kv = it.next()
-                    if kv._1() == "shuffleBytesWritten":
-                        total += int(kv._2().value())
-        ch = n.children()
-        for i in range(ch.size()):
-            walk(ch.apply(i))
-        for attr in ("plan", "finalPhysicalPlan"):
-            if hasattr(n, attr):
-                try:
-                    walk(getattr(n, attr)())
-                except Exception:
-                    pass
-
-    walk(root)
-    return total
-
-
-def _query_shuffle_records(df) -> int:
-    """Shuffle-write RECORDS of one executed query (same walk as
-    ``_query_shuffle_bytes``).  The honest scale metric when row
-    payloads are low-entropy (round 12: lz4 compressed 1.28 M
-    replicated tiny-int rows into ~1.4 MB, visually flattening a
-    linearly-growing exchange — record counts cannot be compressed)."""
-    root = df._jdf.queryExecution().executedPlan()
-    seen: set[int] = set()
-    total = 0
-
-    def walk(n):
-        nonlocal total
-        if n.getClass().getSimpleName() == "ShuffleExchangeExec":
-            pid = n.id()
-            if pid not in seen:
-                seen.add(pid)
-                it = n.metrics().iterator()
-                while it.hasNext():
-                    kv = it.next()
-                    if kv._1() == "shuffleRecordsWritten":
-                        total += int(kv._2().value())
-        ch = n.children()
-        for i in range(ch.size()):
-            walk(ch.apply(i))
-        for attr in ("plan", "finalPhysicalPlan"):
-            if hasattr(n, attr):
-                try:
-                    walk(getattr(n, attr)())
-                except Exception:
-                    pass
-
-    walk(root)
-    return total
-
-
 def _permuted_corpus(spark, sf_dir: str, replicate: int):
     """documents replicated ``replicate``× with DISTINCT content per
     replica: each replica maps text through its own random alphanumeric
@@ -304,13 +159,12 @@ def run_minhash_curve(spark, sf_dir: str, replicate: int) -> dict:
         )
         t_sigs = time.perf_counter() - t0
         sigs = spark.read.parquet(sig_path)
-        sh0 = _shuffle_write_bytes(spark)
-        t0 = time.perf_counter()
-        n_pairs = minhash_lsh_pairs(
-            id_col="doc_id", signatures=sigs, threshold=0.6
-        ).count()
-        t_pairs = time.perf_counter() - t0
-        sh1 = _shuffle_write_bytes(spark)
+        with measure(spark, "scale_run/minhash_curve") as shuffle:
+            t0 = time.perf_counter()
+            n_pairs = minhash_lsh_pairs(
+                id_col="doc_id", signatures=sigs, threshold=0.6
+            ).count()
+            t_pairs = time.perf_counter() - t0
     finally:
         shutil.rmtree(sig_path, ignore_errors=True)
     return {
@@ -320,7 +174,7 @@ def run_minhash_curve(spark, sf_dir: str, replicate: int) -> dict:
         "pairs_sec": round(t_pairs, 2),
         "docs_per_sec_pairs": int(n_docs / t_pairs),
         "pairs": n_pairs,
-        "pair_shuffle_mb": round((sh1 - sh0) / 1e6, 1),
+        "pair_shuffle_mb": round(shuffle["shuffle_bytes"] / 1e6, 1),
     }
 
 
@@ -617,13 +471,13 @@ def run_hll_curve(spark, sf_dir: str, replicate: int) -> dict:
     )
     exact = {r["source"]: r["d"] for r in exact_df.collect()}
     t_exact = time.perf_counter() - t0
-    exact_bytes = _query_shuffle_bytes(exact_df)
+    exact_bytes = plan_metric(exact_df, EXCHANGE, "shuffleBytesWritten")
 
     t0 = time.perf_counter()
     sketch_df = hll_stats(hll_sketch(corpus, "text", ["source"]), ["source"])
     stats = sketch_df.collect()
     t_hll = time.perf_counter() - t0
-    hll_bytes = _query_shuffle_bytes(sketch_df)
+    hll_bytes = plan_metric(sketch_df, EXCHANGE, "shuffleBytesWritten")
 
     from modis_aggregation_spark.operators.screening import hll_estimate
 
@@ -685,8 +539,8 @@ def run_qdigest_curve(spark, sf_dir: str, replicate: int) -> dict:
     )
     exact = {r["source"]: (r["q50"], r["q90"]) for r in exact_df.collect()}
     t_exact = time.perf_counter() - t0
-    exact_bytes = _query_shuffle_bytes(exact_df)
-    exact_recs = _query_shuffle_records(exact_df)
+    exact_bytes = plan_metric(exact_df, EXCHANGE, "shuffleBytesWritten")
+    exact_recs = plan_metric(exact_df, EXCHANGE, "shuffleRecordsWritten")
 
     t0 = time.perf_counter()
     sketch_df = qdigest_sketch(corpus, "v", ["source"], u_bits, k)
@@ -695,8 +549,8 @@ def run_qdigest_curve(spark, sf_dir: str, replicate: int) -> dict:
     )
     est = {r["source"]: (r["q50"], r["q90"]) for r in est_df.collect()}
     t_sketch = time.perf_counter() - t0
-    sketch_bytes = _query_shuffle_bytes(est_df)
-    sketch_recs = _query_shuffle_records(est_df)
+    sketch_bytes = plan_metric(est_df, EXCHANGE, "shuffleBytesWritten")
+    sketch_recs = plan_metric(est_df, EXCHANGE, "shuffleRecordsWritten")
 
     n_per = {
         r["source"]: r["n"]
@@ -778,7 +632,7 @@ def run_funnel_curve(spark, sf_dir: str, replicate: int) -> dict:
     op_df = funnel_steps(corpus, steps).filter(F.col("depth") == 4)
     n_op = op_df.count()
     t_op = time.perf_counter() - t0
-    op_bytes = _query_shuffle_bytes(op_df)
+    op_bytes = plan_metric(op_df, EXCHANGE, "shuffleBytesWritten")
 
     # the naive rewrite: per-user sorted event arrays, matched in Python
     idx = {s: i for i, s in enumerate(steps)}
@@ -807,7 +661,7 @@ def run_funnel_curve(spark, sf_dir: str, replicate: int) -> dict:
     )
     n_naive = naive_df.count()
     t_naive = time.perf_counter() - t0
-    naive_bytes = _query_shuffle_bytes(naive_df)
+    naive_bytes = plan_metric(naive_df, EXCHANGE, "shuffleBytesWritten")
     assert n_op == n_naive, (n_op, n_naive)
     return {
         "replicate": replicate,
@@ -831,18 +685,17 @@ def run_kmeans_curve(spark, sf_dir: str, replicate: int) -> dict:
 
     corpus = _jittered_embeddings(spark, sf_dir, replicate)
     n_vecs = corpus.count()
-    sh0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    model = kmeans_train(corpus, k=8, iters=3)
-    n_rows = model.count()
-    t = time.perf_counter() - t0
-    sh1 = _shuffle_write_bytes(spark)
+    with measure(spark, "scale_run/kmeans_curve") as shuffle:
+        t0 = time.perf_counter()
+        model = kmeans_train(corpus, k=8, iters=3)
+        n_rows = model.count()
+        t = time.perf_counter() - t0
     assert n_rows == 8 * 64
     return {
         "vectors": n_vecs,
         "sec": round(t, 2),
         "vecs_per_sec_per_iter": int(3 * n_vecs / t),
-        "shuffle_mb": round((sh1 - sh0) / 1e6, 1),
+        "shuffle_mb": round(shuffle["shuffle_bytes"] / 1e6, 1),
     }
 
 
@@ -860,22 +713,21 @@ def run_bloom_screen(spark, sf_dir: str, replicate: int) -> dict:
     bench = base.filter(F.col("doc_id") % 23 == 0)
     train = _permuted_corpus(spark, sf_dir, replicate)
     n_docs = train.count()
-    sh0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    out = bloom_screen(train, bench, n=3)
-    row = out.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("flagged").cast("long")).alias("hits"),
-    ).collect()[0]
-    t = time.perf_counter() - t0
-    sh1 = _shuffle_write_bytes(spark)
+    with measure(spark, "scale_run/bloom_screen") as shuffle:
+        t0 = time.perf_counter()
+        out = bloom_screen(train, bench, n=3)
+        row = out.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("flagged").cast("long")).alias("hits"),
+        ).collect()[0]
+        t = time.perf_counter() - t0
     return {
         "docs": n_docs,
         "screened": int(row["n"]),
         "flagged": int(row["hits"] or 0),
         "sec": round(t, 2),
         "docs_per_sec": int(n_docs / t),
-        "shuffle_mb": round((sh1 - sh0) / 1e6, 1),
+        "shuffle_mb": round(shuffle["shuffle_bytes"] / 1e6, 1),
     }
 
 
@@ -899,14 +751,13 @@ def run_unigram_encode(spark, sf_dir: str, replicate: int) -> dict:
     }
     docs = _permuted_corpus(spark, sf_dir, replicate)
     n_docs = docs.count()
-    sh0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    out = unigram_encode(docs, model, "text", "doc_id")
-    agg = out.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("n_pieces").alias("pieces")
-    ).collect()[0]
-    t = time.perf_counter() - t0
-    sh1 = _shuffle_write_bytes(spark)
+    with measure(spark, "scale_run/unigram_encode") as shuffle:
+        t0 = time.perf_counter()
+        out = unigram_encode(docs, model, "text", "doc_id")
+        agg = out.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("n_pieces").alias("pieces")
+        ).collect()[0]
+        t = time.perf_counter() - t0
     assert agg["n"] == n_docs
     return {
         "docs": n_docs,
@@ -914,7 +765,7 @@ def run_unigram_encode(spark, sf_dir: str, replicate: int) -> dict:
         "sec": round(t, 2),
         "docs_per_sec": int(n_docs / t),
         "pieces_per_sec": int(agg["pieces"] / t),
-        "shuffle_mb": round((sh1 - sh0) / 1e6, 1),
+        "shuffle_mb": round(shuffle["shuffle_bytes"] / 1e6, 1),
     }
 
 
@@ -1039,18 +890,17 @@ def run_inverted_index(spark, sf_dir: str, replicate: int) -> dict:
 
     docs = _permuted_corpus(spark, sf_dir, replicate)
     n_docs = docs.count()
-    sh0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    out = inverted_index(docs, min_df=2, max_df_ratio=0.9, max_postings=100)
-    n_rows = out.count()
-    t = time.perf_counter() - t0
-    sh1 = _shuffle_write_bytes(spark)
+    with measure(spark, "scale_run/inverted_index") as shuffle:
+        t0 = time.perf_counter()
+        out = inverted_index(docs, min_df=2, max_df_ratio=0.9, max_postings=100)
+        n_rows = out.count()
+        t = time.perf_counter() - t0
     return {
         "docs": n_docs,
         "posting_rows": n_rows,
         "sec": round(t, 2),
         "docs_per_sec": int(n_docs / t),
-        "shuffle_mb": round((sh1 - sh0) / 1e6, 1),
+        "shuffle_mb": round(shuffle["shuffle_bytes"] / 1e6, 1),
     }
 
 
@@ -1071,14 +921,13 @@ def run_bpe_encode(spark, sf_dir: str, replicate: int) -> dict:
     ]
     docs = _permuted_corpus(spark, sf_dir, replicate)
     n_docs = docs.count()
-    sh0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    out = bpe_encode(docs, merges, "text", "doc_id")
-    agg = out.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("n_tokens").alias("toks")
-    ).collect()[0]
-    t = time.perf_counter() - t0
-    sh1 = _shuffle_write_bytes(spark)
+    with measure(spark, "scale_run/bpe_encode") as shuffle:
+        t0 = time.perf_counter()
+        out = bpe_encode(docs, merges, "text", "doc_id")
+        agg = out.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("n_tokens").alias("toks")
+        ).collect()[0]
+        t = time.perf_counter() - t0
     assert agg["n"] == n_docs
     return {
         "docs": n_docs,
@@ -1086,7 +935,7 @@ def run_bpe_encode(spark, sf_dir: str, replicate: int) -> dict:
         "sec": round(t, 2),
         "docs_per_sec": int(n_docs / t),
         "tokens_per_sec": int(agg["toks"] / t),
-        "shuffle_mb": round((sh1 - sh0) / 1e6, 1),
+        "shuffle_mb": round(shuffle["shuffle_bytes"] / 1e6, 1),
     }
 
 
@@ -1157,26 +1006,25 @@ def run_dupspan_curve(spark, sf_dir: str, replicate: int) -> dict:
 
     docs = _permuted_corpus(spark, sf_dir, replicate)
     n_docs = docs.count()
-    sh0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    out = duplicate_window_profile(docs, window=8)
-    # a bare count() lets Catalyst ELIMINATE the flag join (the right side
-    # is an aggregate keyed on doc_id, provably duplicate-free) and with it
-    # the whole fp pipeline — aggregate the computed columns instead so the
-    # measured plan is the real one
-    row = out.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum("n_dup_windows").alias("dups"),
-    ).first()
-    t = time.perf_counter() - t0
-    sh1 = _shuffle_write_bytes(spark)
+    with measure(spark, "scale_run/dupspan_curve") as shuffle:
+        t0 = time.perf_counter()
+        out = duplicate_window_profile(docs, window=8)
+        # a bare count() lets Catalyst ELIMINATE the flag join (the right side
+        # is an aggregate keyed on doc_id, provably duplicate-free) and with it
+        # the whole fp pipeline — aggregate the computed columns instead so the
+        # measured plan is the real one
+        row = out.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.sum("n_dup_windows").alias("dups"),
+        ).first()
+        t = time.perf_counter() - t0
     return {
         "docs": n_docs,
         "rows": row["rows"],
         "dup_windows": row["dups"],
         "sec": round(t, 2),
         "docs_per_sec": int(n_docs / t),
-        "shuffle_mb": round((sh1 - sh0) / 1e6, 1),
+        "shuffle_mb": round(shuffle["shuffle_bytes"] / 1e6, 1),
     }
 
 
@@ -1303,11 +1151,10 @@ def run_pq_curve(spark, sf_dir: str, replicate: int) -> dict:
         .orderBy("query_id")
         .limit(32)
     )
-    sh0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    n_results = pq_adc_topk(codes, books, queries, k=10).count()
-    t_adc = time.perf_counter() - t0
-    sh1 = _shuffle_write_bytes(spark)
+    with measure(spark, "scale_run/pq_curve") as shuffle:
+        t0 = time.perf_counter()
+        n_results = pq_adc_topk(codes, books, queries, k=10).count()
+        t_adc = time.perf_counter() - t0
     return {
         "vectors": n_vecs,
         "fit_sec": round(t_fit, 2),
@@ -1316,7 +1163,7 @@ def run_pq_curve(spark, sf_dir: str, replicate: int) -> dict:
         "code_rows": n_code_rows,
         "adc_sec": round(t_adc, 2),
         "adc_results": n_results,
-        "adc_shuffle_mb": round((sh1 - sh0) / 1e6, 1),
+        "adc_shuffle_mb": round(shuffle["shuffle_bytes"] / 1e6, 1),
     }
 
 
@@ -1355,17 +1202,16 @@ def run_editdist_curve(spark, sf_dir: str, replicate: int) -> dict:
 
     names = _suffixed_names(spark, sf_dir, replicate)
     n = names.count()
-    sh0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    n_pairs = editdist_pairs(names, "name", "id", max_dist=1).count()
-    t = time.perf_counter() - t0
-    sh1 = _shuffle_write_bytes(spark)
+    with measure(spark, "scale_run/editdist_curve") as shuffle:
+        t0 = time.perf_counter()
+        n_pairs = editdist_pairs(names, "name", "id", max_dist=1).count()
+        t = time.perf_counter() - t0
     return {
         "strings": n,
         "pairs": n_pairs,
         "sec": round(t, 2),
         "strings_per_sec": int(n / t),
-        "shuffle_mb": round((sh1 - sh0) / 1e6, 1),
+        "shuffle_mb": round(shuffle["shuffle_bytes"] / 1e6, 1),
     }
 
 
@@ -1400,12 +1246,11 @@ def run_ann_curve(spark, sf_dir: str, replicate: int) -> dict:
         .orderBy("query_id")
         .limit(32)
     )
-    sh0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    topk = ivf_topk(assigned, queries, cents, k=10, nprobe=4)
-    n_results = topk.count()
-    t_topk = time.perf_counter() - t0
-    sh1 = _shuffle_write_bytes(spark)
+    with measure(spark, "scale_run/ann_curve") as shuffle:
+        t0 = time.perf_counter()
+        topk = ivf_topk(assigned, queries, cents, k=10, nprobe=4)
+        n_results = topk.count()
+        t_topk = time.perf_counter() - t0
     # probe pruning: every query scores exactly its 4 probe lists; the
     # mean list holds n_vecs/16 vectors, so the scored fraction is
     # ≈ nprobe/nlist = 0.25 modulo skew (max_list_skew below bounds it)
@@ -1421,7 +1266,7 @@ def run_ann_curve(spark, sf_dir: str, replicate: int) -> dict:
         "nprobe": 4,
         "mean_list_size": int(mean_list),
         "max_list_skew": round(max(list_sizes.values()) / mean_list, 2),
-        "topk_shuffle_mb": round((sh1 - sh0) / 1e6, 1),
+        "topk_shuffle_mb": round(shuffle["shuffle_bytes"] / 1e6, 1),
     }
 
 
@@ -1437,12 +1282,11 @@ def run_pairverify_curve(spark, sf_dir: str, replicate: int) -> dict:
 
     corpus = _jittered_embeddings(spark, sf_dir, replicate)
     n_vecs = corpus.count()
-    sh0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    out = cosine_pairs_exact(corpus, "embedding", "vec_id", threshold=0.35)
-    n_pairs_kept = out.count()
-    t = time.perf_counter() - t0
-    sh1 = _shuffle_write_bytes(spark)
+    with measure(spark, "scale_run/pairverify_curve") as shuffle:
+        t0 = time.perf_counter()
+        out = cosine_pairs_exact(corpus, "embedding", "vec_id", threshold=0.35)
+        n_pairs_kept = out.count()
+        t = time.perf_counter() - t0
     total_pairs = n_vecs * (n_vecs - 1) // 2
     return {
         "vectors": n_vecs,
@@ -1450,7 +1294,7 @@ def run_pairverify_curve(spark, sf_dir: str, replicate: int) -> dict:
         "pairs_kept": n_pairs_kept,
         "wall_sec": round(t, 2),
         "mpairs_per_sec": round(total_pairs / t / 1e6, 1),
-        "shuffle_mb": round((sh1 - sh0) / 1e6, 1),
+        "shuffle_mb": round(shuffle["shuffle_bytes"] / 1e6, 1),
     }
 
 
@@ -1470,21 +1314,20 @@ def run_lsh_pairs_curve(spark, sf_dir: str, replicate: int) -> dict:
 
     corpus = _jittered_embeddings(spark, sf_dir, replicate)
     n_vecs = corpus.count()
-    sh0 = _shuffle_write_bytes(spark)
-    t0 = time.perf_counter()
-    out = embedding_pairs(
-        corpus, "embedding", "vec_id", dim=64,
-        n_planes=64, n_bands=4, threshold=0.4,
-    )
-    n_kept = out.count()
-    t = time.perf_counter() - t0
-    sh1 = _shuffle_write_bytes(spark)
+    with measure(spark, "scale_run/lsh_pairs_curve") as shuffle:
+        t0 = time.perf_counter()
+        out = embedding_pairs(
+            corpus, "embedding", "vec_id", dim=64,
+            n_planes=64, n_bands=4, threshold=0.4,
+        )
+        n_kept = out.count()
+        t = time.perf_counter() - t0
     return {
         "vectors": n_vecs,
         "pairs_kept": n_kept,
         "wall_sec": round(t, 2),
         "vectors_per_sec": int(n_vecs / t),
-        "shuffle_mb": round((sh1 - sh0) / 1e6, 1),
+        "shuffle_mb": round(shuffle["shuffle_bytes"] / 1e6, 1),
     }
 
 
@@ -1565,7 +1408,7 @@ def run_bucketed_incremental_curve(
         t0 = time.perf_counter()
         n_plain = plain_df.count()
         t_plain = time.perf_counter() - t0
-        plain_bytes = _query_shuffle_bytes(plain_df)
+        plain_bytes = plan_metric(plain_df, EXCHANGE, "shuffleBytesWritten")
         bucketed_df = minhash_lsh_incremental(
             batch, s_t, "text", "doc_id", threshold=0.6,
             index_banded=b_t, index_band_counts=c_t, index_buckets=buckets,
@@ -1573,7 +1416,7 @@ def run_bucketed_incremental_curve(
         t0 = time.perf_counter()
         n_bucketed = bucketed_df.count()
         t_bucketed = time.perf_counter() - t0
-        bucketed_bytes = _query_shuffle_bytes(bucketed_df)
+        bucketed_bytes = plan_metric(bucketed_df, EXCHANGE, "shuffleBytesWritten")
         assert n_plain == n_bucketed == n_batch
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
@@ -1612,12 +1455,12 @@ def run_pca_curve(spark, sf_dir: str, replicate: int) -> dict:
     # SQL metrics are populated (round 11: the stage-store delta this
     # curve used through round 10 undercounts AQE queries — see
     # SCALING.md measurement-method note)
-    fit_bytes = _query_shuffle_bytes(cov)
+    fit_bytes = plan_metric(cov, EXCHANGE, "shuffleBytesWritten")
     proj = pca_project(corpus, wq, offs, "embedding", "vec_id")
     t0 = time.perf_counter()
     n_proj = proj.count()
     t_proj = time.perf_counter() - t0
-    proj_bytes = _query_shuffle_bytes(proj)
+    proj_bytes = plan_metric(proj, EXCHANGE, "shuffleBytesWritten")
     assert n_proj == n_vecs
     return {
         "vectors": n_vecs,
@@ -1783,7 +1626,7 @@ def run_merge_upsert_curve(spark, sf_dir: str, replicate: int) -> dict:
             t0 = time.perf_counter()
             n = df.count()
             best = min(best, time.perf_counter() - t0)
-            recs = _query_shuffle_records(df)
+            recs = plan_metric(df, EXCHANGE, "shuffleRecordsWritten")
         assert n == n_target
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

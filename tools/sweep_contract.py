@@ -175,6 +175,7 @@ def main() -> int:
 
     import __spark_entry__ as entry
     from modis_aggregation_spark import get_spark
+    from modis_aggregation_spark.session import local_cpus
 
     spark = get_spark("sweep-contract")
     qs = entry.queries()
@@ -257,7 +258,7 @@ def main() -> int:
     result = {
         "sf_dir": args.sf_dir,
         "sf": _sf(args.sf_dir),
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": local_cpus(),
         "repeat": max(1, args.repeat),
         "timings": timings,
         "errors": errors,
