@@ -14,12 +14,16 @@ exactly like NumPy's silent drop.
 For uniform edges the bucket is computed arithmetically (one floor + clamp,
 no CASE chain); for irregular edges a folded CASE chain is emitted. Both are
 pure JVM expressions — constant-folded, codegen'd, no UDF.
+
+``hist_bucket_np`` is the same bucket over a NumPy array, for the
+per-granule accumulator of ``plans/pipeline.daily_grid``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -68,6 +72,17 @@ def hist_bucket(value: Column, edges: Sequence[float]) -> Column:
 
     in_range = (value >= F.lit(e0)) & (value <= F.lit(eN))
     return F.when(in_range, bucket).cast("int")
+
+
+def hist_bucket_np(values: np.ndarray, edges: Sequence[float]) -> np.ndarray:
+    """``hist_bucket`` over a float array: the 0-based bucket index, or -1
+    where the value is NaN (a NULL) or out of range."""
+    e = np.asarray(edges, dtype=np.float64)
+    nbins = len(e) - 1
+    b = np.searchsorted(e, values, side="right") - 1  # NaN sorts past e[-1]
+    b[values == e[-1]] = nbins - 1  # the last bin is closed
+    b[b >= nbins] = -1
+    return b
 
 
 def hist_bucket_sql(expr: str, edges: Sequence[float]) -> str:

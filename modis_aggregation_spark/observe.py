@@ -98,7 +98,12 @@ def measure(spark, label: str) -> Iterator[dict]:
     """Run the body under job group ``label``; when it ends, fill the
     yielded dict with the group's settled ``COUNTERS`` (CPU in ms, bytes
     and records summed over stages, peak execution memory the largest of
-    any stage). A caller's own job group is restored on exit."""
+    any stage). A caller's own job group is restored on exit.
+
+    Peak execution memory counts only Spark-managed memory: the on-heap
+    buffers of an ``ObjectHashAggregate`` (``percentile``,
+    ``collect_list``, typed aggregators) are not in it, so a scope whose
+    plan runs one reads a peak that leaves them out, often 0."""
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
     floor = _max_stage_id(sc, store)

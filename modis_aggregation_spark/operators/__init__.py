@@ -7,7 +7,7 @@ from modis_aggregation_spark.operators.stats import (
     grid_counts,
     with_cell,
 )
-from modis_aggregation_spark.operators.hist import hist_1d, hist_2d, hist_array
+from modis_aggregation_spark.operators.hist import hist_1d, hist_2d
 from modis_aggregation_spark.operators.densify import cell_dimension, densify
 from modis_aggregation_spark.operators.compare import compare_grids, max_abs_diff
 from modis_aggregation_spark.operators.dedup import (
@@ -39,7 +39,6 @@ __all__ = [
     "with_cell",
     "hist_1d",
     "hist_2d",
-    "hist_array",
     "cell_dimension",
     "densify",
     "compare_grids",

@@ -1,19 +1,14 @@
 """Per-cell 1-D and 2-D (joint) histograms (A9, A10; quirks Q4/Q9).
 
-Two physical shapes, same logical result:
-
-* ``hist_1d`` / ``hist_2d`` — LONG format ``(cell, bucket[, bucket_y], cnt)``:
-  one ``groupBy().count()``, sparse (only occupied buckets), oracle-friendly.
-  This is the scale path — shuffle volume is bounded by
-  cells × occupied-buckets regardless of pixel count.
-* ``hist_array`` — WIDE format: one row per cell with an ``ARRAY<LONG>``
-  histogram column assembled in a SINGLE aggregation pass via conditional
-  sums (no second shuffle, no pivot). Matches the reference's dense
-  per-cell buffer layout (``aggregate_functions.py:553-561``) for the sink.
+Long format ``(cell, bucket[, bucket_y], cnt)``: one ``groupBy().count()``,
+sparse (only occupied buckets), oracle-friendly. Shuffle volume is bounded
+by cells × occupied-buckets regardless of pixel count. The dense per-cell
+arrays of the L3 product (the reference's buffer layout,
+``aggregate_functions.py:553-561``) come from ``plans/pipeline.daily_grid``.
 
 NumPy edge semantics are inherited from ``functions.histogram.hist_bucket``:
 half-open bins, last bin closed, out-of-range → NULL → dropped by the
-``groupBy``/conditional-sum (the silent drop of ``np.histogram``).
+``groupBy`` (the silent drop of ``np.histogram``).
 
 Joint histograms pair x and y ROW-WISE, keeping rows where both are
 non-NULL — the clean semantics of quirk Q4 (the reference drops NaNs from
@@ -65,101 +60,3 @@ def hist_2d(
         .groupBy(*group_cols, "bucket_x", "bucket_y")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def hist_array(
-    pixels_with_cell: DataFrame,
-    var: str,
-    edges: Sequence[float],
-    group_cols: Sequence[str] = ("cell",),
-    out_col: str | None = None,
-) -> DataFrame:
-    """Wide-format histogram: one ARRAY<LONG> per cell, single-pass agg.
-
-    Conditional sums keep this a normal partial+final hash aggregation —
-    each map task emits one partial array per cell; no pivot, no second
-    shuffle. Bin counts are small (≤ 16 in the reference configs) so the
-    row width stays trivial.
-    """
-    out_col = out_col or f"{var}_hist"
-    nbins = len(edges) - 1
-    bucket = hist_bucket(F.col(var), edges)
-    df = pixels_with_cell.select(*group_cols, bucket.alias("__b"))
-    counts = [
-        F.sum(F.when(F.col("__b") == i, 1).otherwise(0)).cast("long")
-        for i in range(nbins)
-    ]
-    return df.groupBy(*group_cols).agg(F.array(*counts).alias(out_col))
-
-
-def hist_array_pandas(
-    pixels_with_cell: DataFrame,
-    var: str,
-    edges: Sequence[float],
-    group_cols: Sequence[str] = ("cell",),
-    out_col: str | None = None,
-) -> DataFrame:
-    """``applyInPandas`` UDAF cross-check of ``hist_array`` (SURVEY §2.7).
-
-    Uses np.histogram directly per group — definitionally the reference's
-    binning — so tests can assert the JVM bucket expression against it.
-    NOT the hot path: applyInPandas shuffles raw rows to groups (no
-    map-side combine); the conditional-sum form ships per-partition
-    partials instead. Kept as the semantic oracle and as the pattern for
-    aggregations that genuinely need NumPy.
-    """
-    import numpy as np
-    import pandas as pd
-
-    out_col = out_col or f"{var}_hist"
-    nbins = len(edges) - 1
-    edge_arr = np.asarray(edges, dtype=np.float64)
-    keys = list(group_cols)
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in pixels_with_cell.schema.fields
-        if f.name in keys
-    )
-    schema = f"{key_schema}, {out_col} array<bigint>"
-
-    def binner(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[var].to_numpy(dtype=np.float64)
-        h, _ = np.histogram(vals[~np.isnan(vals)], bins=edge_arr)
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row[out_col] = [h.astype("int64").tolist()]
-        return pd.DataFrame(row)
-
-    return (
-        pixels_with_cell.select(*keys, var)
-        .groupBy(*keys)
-        .applyInPandas(binner, schema)
-    )
-
-
-def hist_array_2d(
-    pixels_with_cell: DataFrame,
-    var_x: str,
-    var_y: str,
-    edges_x: Sequence[float],
-    edges_y: Sequence[float],
-    group_cols: Sequence[str] = ("cell",),
-    out_col: str | None = None,
-) -> DataFrame:
-    """Wide-format joint histogram: ARRAY<ARRAY<LONG>> [nbx][nby] per cell."""
-    out_col = out_col or f"{var_x}_{var_y}_jhist"
-    nbx, nby = len(edges_x) - 1, len(edges_y) - 1
-    bx = hist_bucket(F.col(var_x), edges_x)
-    by = hist_bucket(F.col(var_y), edges_y)
-    df = pixels_with_cell.select(*group_cols, bx.alias("__bx"), by.alias("__by"))
-    rows = [
-        F.array(
-            *[
-                F.sum(
-                    F.when((F.col("__bx") == x) & (F.col("__by") == y), 1).otherwise(0)
-                ).cast("long")
-                for y in range(nby)
-            ]
-        )
-        for x in range(nbx)
-    ]
-    return df.groupBy(*group_cols).agg(F.array(*rows).alias(out_col))

@@ -9,11 +9,13 @@ ONE declarative DataFrame plan:
       → day-definition nulling (P4)
       → bbox/sampling filter + cell id (P2, S9, A1)
       → stage 1, one accumulator per granule (the reference's per-granule
-        buffers): groupBy(cell, granule).agg(
+        buffers): a NumPy function that mapInArrow applies to each Arrow
+        batch of pixels, one row per (cell, granule) in the batch of
             cloudy/determined pixel counts,
             per-variable min/max/sum/count/sumsq,
             histogram + joint-histogram bucket counts,
-        )
+        then groupBy(cell, granule) merges the rows of a granule that
+        spans batches or partitions (fmin/fmax/+)
       → stage 2, the fmin/fmax/+ merge: groupBy(cell).agg(
             per-variable min/max/sum/count/sumsq + mean/std,  A3-A8
             cloudy/total pixel counts + CF ratio,             A11-A12
@@ -24,15 +26,15 @@ ONE declarative DataFrame plan:
       → densify to the full grid (J3)
 
 Scale notes: the pixels are scanned (and, over granule files, decoded) once
-and shuffled twice. The (cell, granule) aggregation has ≤ cells ×
-granules-per-cell groups; partial aggregation makes its shuffle volume
-O(partitions × those groups), independent of pixel count. The cell merge
-shuffles at most one row per (cell, granule). Nothing is joined except the
-broadcast catalog and the densify, which joins a generated dimension
-against the tiny aggregate. Everything else is narrow and
-whole-stage-codegen'd; the scan dominates and scales embarrassingly with
-granule count, which is the same property the reference's file-level
-MPI/Dask partitioning exploits (``MODIS_Aggregation_MPI.py:52-63``).
+and never shuffled. The accumulator is narrow, and the (cell, granule)
+merge combines its rows map-side, so that shuffle is O(partitions ×
+occupied (cell, granule) pairs), independent of pixel count. The cell
+merge shuffles at most one row per (cell, granule). Nothing is joined
+except the broadcast catalog and the densify, which joins a generated
+dimension against the tiny aggregate. The scan and the accumulator
+dominate and scale embarrassingly with granule count, which is the same
+property the reference's file-level MPI/Dask partitioning exploits
+(``MODIS_Aggregation_MPI.py:52-63``).
 
 ``strict_compat=True`` reproduces reference quirks where feasible:
 * Q1 — the CF 1-D histogram stays all-zero (the reference never adds to it,
@@ -50,13 +52,15 @@ single consistent offset. SURVEY §2.8.)
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from modis_aggregation_spark.config import AggregationSpec
-from modis_aggregation_spark.functions.bits import cloudy_flag, determined_flag
 from modis_aggregation_spark.functions.dayrules import day_definition_condition
-from modis_aggregation_spark.functions.histogram import hist_bucket
+from modis_aggregation_spark.functions.histogram import hist_bucket, hist_bucket_np
 from modis_aggregation_spark.operators.densify import densify
 from modis_aggregation_spark.operators.stats import with_cell, with_cloud_mask
 
@@ -112,39 +116,102 @@ def _finalize_moments(
     return mean, F.when(count > 0, F.sqrt(F.greatest(sumsq / n - mean * mean, F.lit(0.0))))
 
 
-def _accumulators(spec: AggregationSpec) -> tuple[list, list]:
-    """(stage 1, stage 2) aggregate expressions, built side by side.
+def _granule_accumulator(spec: AggregationSpec, keys: list[str]):
+    """Stage 1, the reference's per-granule buffers as one NumPy function
+    of an Arrow batch of prepared pixels (``keys``, ``cm`` and the
+    physical variables as DOUBLE).
 
-    Stage 1 runs per (cell, granule) over the pixels: one accumulator per
-    granule — cloudy/determined pixel counts, per-variable min/max/sum/
-    count/Σv², histogram and joint-histogram bucket counts as flat long
-    columns. Stage 2 runs per cell over those rows: it merges them
-    (fmin/fmax/+), finalizes mean/std, and computes every per-granule CF
-    statistic (A13, A14, Q1/Q2/Q5) from the same rows.
+    It returns one row per distinct ``keys`` value: cloudy/determined
+    pixel counts (``g_cld``/``g_tot``), per-variable min/max/sum/count/Σv²
+    and the histogram and joint-histogram bucket counts as flat long
+    columns. A NULL measure (NaN here) counts nowhere; min, max, sum and
+    Σv² are NULL where no value counted, as Spark's aggregates are.
+    ``daily_grid`` declares the schema of its result for an empty batch:
+    ``mapInArrow`` matches columns by position and does not check types,
+    so the declared and the emitted columns must come from one place.
     """
-    partials: list = []
+    has_std = "Standard_Deviation" in spec.stats
+    extremes = [(s, fn, start) for s, stat, fn, start in (
+        ("min", "Minimum", np.minimum, np.inf), ("max", "Maximum", np.maximum, -np.inf)
+    ) if stat in spec.stats]
+    hists = "Histogram_Counts" in spec.stats
+    joints = spec.joint_hists if "Jhisto" in spec.stats else ()
+
+    def accumulate(batch: pa.RecordBatch) -> pa.RecordBatch:
+        code = np.zeros(batch.num_rows, np.int64)
+        for k in keys:
+            enc = batch.column(k).dictionary_encode(null_encoding="encode")
+            code = code * len(enc.dictionary) + enc.indices.to_numpy()
+        _, first, g = np.unique(code, return_index=True, return_inverse=True)
+        ng = len(first)
+        out = {k: batch.column(k).take(first) for k in keys}
+
+        def values(name: str) -> np.ndarray:
+            return batch.column(name).to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+
+        def group_hist(bucket: np.ndarray, nbins: int) -> np.ndarray:
+            ok = bucket >= 0
+            flat = g[ok] * nbins + bucket[ok]
+            return np.bincount(flat, minlength=ng * nbins).reshape(ng, nbins)
+
+        for v in spec.physical_variables():
+            n, x = v.name, values(v.name)
+            ok = ~np.isnan(x)
+            gv, xv = g[ok], x[ok]
+            count = np.bincount(gv, minlength=ng)
+            empty = count == 0
+            for s, fn, start in extremes:
+                acc = np.full(ng, start)
+                fn.at(acc, gv, xv)
+                out[f"{n}_{s}"] = pa.array(acc, mask=empty)
+            total = np.bincount(gv, weights=xv, minlength=ng).astype(np.float64)
+            out[f"{n}_sum"] = pa.array(total, mask=empty)
+            out[f"{n}_count"] = pa.array(count, pa.int64())
+            if has_std:
+                sumsq = np.bincount(gv, weights=xv * xv, minlength=ng).astype(np.float64)
+                out[f"{n}_sumsq"] = pa.array(sumsq, mask=empty)
+            if hists and v.bin_edges:
+                counts = group_hist(hist_bucket_np(x, v.bin_edges), len(v.bin_edges) - 1)
+                out.update({f"{n}_hist_{i}": pa.array(c) for i, c in enumerate(counts.T)})
+        for jh in joints:
+            xe, ye = spec.variable(jh.varname).bin_edges, jh.joint_edges
+            bx = hist_bucket_np(values(jh.varname), xe)
+            by = hist_bucket_np(values(jh.partner_var), ye)
+            nby = len(ye) - 1
+            pair = np.where((bx >= 0) & (by >= 0), bx * nby + by, -1)
+            counts = group_hist(pair, (len(xe) - 1) * nby)
+            out.update({
+                f"{jh.joint_name}_jhist_{i // nby}_{i % nby}": pa.array(c)
+                for i, c in enumerate(counts.T)
+            })
+        cm = values("cm")  # the flags of functions/bits.cloudy_flag, determined_flag
+        out["g_cld"] = pa.array(np.bincount(g[(cm >= 0) & (cm <= 1)], minlength=ng))
+        out["g_tot"] = pa.array(np.bincount(g[(cm >= 0) & (cm <= 3)], minlength=ng))
+        return pa.RecordBatch.from_pydict(out)
+
+    return accumulate
+
+
+def _merge(name: str) -> Column:
+    """The fmin/fmax/+ merge of one partial column."""
+    agg = F.min if name.endswith("_min") else F.max if name.endswith("_max") else F.sum
+    return agg(name).alias(name)
+
+
+def _merges(spec: AggregationSpec) -> list:
+    """Stage 2, per cell over the per-granule rows: merge them (fmin/fmax/+),
+    finalize mean/std, and compute every per-granule CF statistic (A13,
+    A14, Q1/Q2/Q5) from the same rows."""
     merges: list = []
-
-    def merge_of(name: str, partial: Column, merge) -> Column:
-        """Add a stage-1 partial; return its stage-2 merge."""
-        partials.append(partial.alias(name))
-        return merge(name)
-
-    def bucket_counts(name: str, preds: list) -> Column:
-        return F.array(
-            *[merge_of(f"{name}_{i}", F.count(F.when(p, 1)), F.sum) for i, p in enumerate(preds)]
-        )
-
     has_std = "Standard_Deviation" in spec.stats
     for v in spec.physical_variables():
-        c, n = F.col(v.name), v.name
+        n = v.name
         if "Minimum" in spec.stats:
-            merges.append(merge_of(f"{n}_min", F.min(c), F.min).alias(f"{n}_min"))
+            merges.append(_merge(f"{n}_min"))
         if "Maximum" in spec.stats:
-            merges.append(merge_of(f"{n}_max", F.max(c), F.max).alias(f"{n}_max"))
-        total = merge_of(f"{n}_sum", F.sum(c), F.sum)
-        count = merge_of(f"{n}_count", F.count(c), F.sum)
-        sumsq = merge_of(f"{n}_sumsq", F.sum(c * c), F.sum) if has_std else None
+            merges.append(_merge(f"{n}_max"))
+        total, count = F.sum(f"{n}_sum"), F.sum(f"{n}_count")
+        sumsq = F.sum(f"{n}_sumsq") if has_std else None
         mean, std = _finalize_moments(total, count, sumsq)
         merges += [total.alias(f"{n}_sum"), count.alias(f"{n}_count")]
         if has_std:
@@ -152,28 +219,22 @@ def _accumulators(spec: AggregationSpec) -> tuple[list, list]:
         if "Mean" in spec.stats:
             merges.append(mean.alias(f"{n}_mean"))
         if "Histogram_Counts" in spec.stats and v.bin_edges:
-            b = hist_bucket(c, v.bin_edges)
-            nbins = len(v.bin_edges) - 1
-            hist = bucket_counts(f"{n}_hist", [b == i for i in range(nbins)])
-            merges.append(hist.alias(f"{n}_hist"))
+            hist = [F.sum(f"{n}_hist_{i}") for i in range(len(v.bin_edges) - 1)]
+            merges.append(F.array(*hist).alias(f"{n}_hist"))
     if "Jhisto" in spec.stats:
         for jh in spec.joint_hists:
-            xv = spec.variable(jh.varname)
-            bx = hist_bucket(F.col(jh.varname), xv.bin_edges)
-            by = hist_bucket(F.col(jh.partner_var), jh.joint_edges)
+            nbx = len(spec.variable(jh.varname).bin_edges) - 1
             rows = [
-                bucket_counts(
-                    f"{jh.joint_name}_jhist_{x}",
-                    [(bx == x) & (by == y) for y in range(len(jh.joint_edges) - 1)],
-                )
-                for x in range(len(xv.bin_edges) - 1)
+                F.array(*[
+                    F.sum(f"{jh.joint_name}_jhist_{x}_{y}")
+                    for y in range(len(jh.joint_edges) - 1)
+                ])
+                for x in range(nbx)
             ]
             merges.append(F.array(*rows).alias(f"{jh.joint_name}_jhist"))
 
     # cloud-fraction pixel counts (A11) + ratio-of-sums mean (A12)
-    cm = F.col("cm")
-    cld = merge_of("g_cld", F.sum(cloudy_flag(cm)), F.sum)
-    tot = merge_of("g_tot", F.sum(determined_flag(cm)), F.sum)
+    cld, tot = F.sum("g_cld"), F.sum("g_tot")
     merges += [
         cld.alias("cld_pix"),
         tot.alias("tot_pix"),
@@ -218,7 +279,7 @@ def _accumulators(spec: AggregationSpec) -> tuple[list, list]:
             b = hist_bucket(gcf, cf_var.bin_edges)
             counts = [F.count(F.when(b == i, 1)) for i in range(nbins)]
         merges.append(F.array(*counts).alias("cf_hist"))
-    return partials, merges
+    return merges
 
 
 def daily_grid(
@@ -247,8 +308,19 @@ def daily_grid(
         raise ValueError("extra_group_cols requires densify_output=False")
     px = prepare_pixels(pixels, granules, spec, end_doy, spill_doy)
     keys = ["cell", *extra_group_cols]
-    partials, merges = _accumulators(spec)
-    agg = px.groupBy(*keys, "granule_id").agg(*partials).groupBy(*keys).agg(*merges)
+    measures = [F.col(v.name).cast("double") for v in spec.physical_variables()]
+    px = px.select(*keys, "granule_id", "cm", *measures)
+    accumulate = _granule_accumulator(spec, [*keys, "granule_id"])
+    partials = accumulate(pa.RecordBatch.from_pylist([], to_arrow_schema(px.schema))).schema
+    # a parquet split or an Arrow batch can hold part of a granule: re-merge
+    # the batches' rows so stage 2 sees one row per (cell, granule)
+    agg = (
+        px.mapInArrow(lambda batches: map(accumulate, batches), from_arrow_schema(partials))
+        .groupBy(*keys, "granule_id")
+        .agg(*[_merge(c) for c in partials.names[len(keys) + 1:]])
+        .groupBy(*keys)
+        .agg(*_merges(spec))
+    )
     if not densify_output:
         return agg
     zero_cols = [c for c in agg.columns if c.endswith(("_count", "_pix"))]

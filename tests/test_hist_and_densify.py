@@ -1,11 +1,10 @@
-"""Histogram operators (long + array forms, 1-D + joint) and densification."""
+"""Histogram operators (1-D + joint, long format) and densification."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from modis_aggregation_spark.config import default_spec
 from modis_aggregation_spark.operators import hist as ops_hist
-from modis_aggregation_spark.operators import stats as ops_stats
 from modis_aggregation_spark.operators.densify import cell_dimension, densify
 
 
@@ -13,7 +12,7 @@ def _df(spark, rows, schema="cell long, x double, y double"):
     return spark.createDataFrame(rows, schema)
 
 
-def test_hist_1d_long_and_array_agree(spark):
+def test_hist_1d_long_format(spark):
     edges = [0.0, 1.0, 2.0, 3.0]
     rows = [(0, 0.5, 0.0), (0, 0.5, 0.0), (0, 2.5, 0.0), (0, None, 0.0), (1, 3.0, 0.0)]
     df = _df(spark, rows)
@@ -22,8 +21,6 @@ def test_hist_1d_long_and_array_agree(spark):
         for r in ops_hist.hist_1d(df, "x", edges).collect()
     }
     assert long == {(0, 0): 2, (0, 2): 1, (1, 2): 1}  # 3.0 in closed last bin
-    arr = {r.cell: r.x_hist for r in ops_hist.hist_array(df, "x", edges).collect()}
-    assert arr == {0: [2, 0, 1], 1: [0, 0, 1]}
 
 
 def test_hist_2d_rowwise_pairing(spark):
@@ -41,8 +38,6 @@ def test_hist_2d_rowwise_pairing(spark):
         for r in ops_hist.hist_2d(df, "x", "y", ex, ey).collect()
     }
     assert got == {(0, 0, 0): 1, (0, 1, 1): 1}
-    arr = ops_hist.hist_array_2d(df, "x", "y", ex, ey).first()
-    assert arr[1] == [[1, 0], [0, 1]]
 
 
 def test_hist_2d_matches_numpy_histogram2d(spark):
@@ -54,8 +49,10 @@ def test_hist_2d_matches_numpy_histogram2d(spark):
     df = _df(spark, [(0, float(a), float(b)) for a, b in zip(x, y)])
     h_np, _, _ = np.histogram2d(x, y, bins=(ex, ey))
     # np.histogram2d pairs row-wise with both-valid (no NaNs here) — same rule
-    arr = ops_hist.hist_array_2d(df, "x", "y", ex, ey).first()[1]
-    assert (np.array(arr) == h_np.astype(int)).all()
+    got = np.zeros_like(h_np, dtype=int)
+    for r in ops_hist.hist_2d(df, "x", "y", ex, ey).collect():
+        got[r.bucket_x, r.bucket_y] = r.cnt
+    assert (got == h_np.astype(int)).all()
 
 
 def test_densify_full_grid(spark):
@@ -75,24 +72,3 @@ def test_cell_dimension_shape(spark):
     assert dim.count() == 12
     r = dim.filter(F.col("cell") == 7).first()
     assert (r.lat_idx, r.lon_idx) == (1, 3)
-
-
-def test_hist_array_pandas_cross_check(spark):
-    """The JVM conditional-sum histogram must equal the applyInPandas
-    np.histogram UDAF on the same data (SURVEY §2.7 cross-check)."""
-    import os
-
-    from modis_aggregation_spark.config import default_spec
-    from modis_aggregation_spark.operators import stats as ops_stats
-    from modis_aggregation_spark.operators.hist import hist_array, hist_array_pandas
-
-    fixtures = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures"
-    )
-    px = spark.read.parquet(os.path.join(fixtures, "pixels.parquet"))
-    spec = default_spec(lat_bounds=(-20.0, 20.0), lon_bounds=(0.0, 35.0))
-    df = ops_stats.with_cell(px, spec)
-    edges = (0.0, 300.0, 600.0, 900.0, 1100.0)
-    jvm = {r["cell"]: list(r["ctp_hist"]) for r in hist_array(df, "ctp", edges).collect()}
-    pd_ = {r["cell"]: list(r["ctp_hist"]) for r in hist_array_pandas(df, "ctp", edges).collect()}
-    assert jvm == pd_

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from modis_aggregation_spark.config import AggregationSpec, VariableSpec, JointHistSpec
+from modis_aggregation_spark.operators import hist as ops_hist
 from modis_aggregation_spark.operators import stats as ops_stats
 from modis_aggregation_spark.plans.pipeline import daily_grid, reaggregate
 from modis_aggregation_spark.sinks import writers
@@ -67,12 +68,26 @@ def test_daily_grid_matches_component_operators(spark, grid):
     ref_cf = {r["cell"]: r for r in ops_stats.cloud_fraction(px).collect()}
     got = {r["cell"]: r for r in grid.filter(F.col("ctp_count") > 0).collect()}
     assert set(got) == set(ref_stats)
+    edges = SPEC.variable("ctp").bin_edges
+    ref_hist = {c: np.zeros(len(edges) - 1, int) for c in got}
+    for h in ops_hist.hist_1d(px, "ctp", edges).collect():
+        ref_hist[h["cell"]][h["bucket"]] = h["cnt"]
+    ref_jhist = {}
+    for jh in SPEC.joint_hists:
+        xe = SPEC.variable(jh.varname).bin_edges
+        ref = {c: np.zeros((len(xe) - 1, len(jh.joint_edges) - 1), int) for c in got}
+        for h in ops_hist.hist_2d(px, jh.varname, jh.partner_var, xe, jh.joint_edges).collect():
+            ref[h["cell"]][h["bucket_x"], h["bucket_y"]] = h["cnt"]
+        ref_jhist[f"{jh.joint_name}_jhist"] = ref
     for cell, r in got.items():
         e = ref_stats[cell]
         for stat in ("min", "max", "sum", "count", "mean"):
             assert r[f"ctp_{stat}"] == pytest.approx(e[f"ctp_{stat}"]), (cell, stat)
         assert r["cld_pix"] == ref_cf[cell]["cld_pix"]
         assert r["tot_pix"] == ref_cf[cell]["tot_pix"]
+        assert r["ctp_hist"] == ref_hist[cell].tolist(), cell
+        for name, ref in ref_jhist.items():
+            assert r[name] == ref[cell].tolist(), (cell, name)
 
 
 def test_histogram_total_equals_inrange_count(grid):

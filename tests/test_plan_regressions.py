@@ -6,7 +6,7 @@ import os
 import __spark_entry__ as entry
 from pyspark.sql import functions as F
 
-from modis_aggregation_spark.observe import plan_metric, plan_nodes
+from modis_aggregation_spark.observe import measure, plan_metric, plan_nodes
 
 SF = "/root/testdata/sf0.001"
 FIXTURES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")
@@ -171,20 +171,19 @@ def test_daily_grid_single_pixel_pass(spark):
     px = spark.read.parquet(os.path.join(FIXTURES, "pixels.parquet"))
     gr = spark.read.parquet(os.path.join(FIXTURES, "granules.parquet"))
     spec = default_spec(lat_bounds=(-20.0, 20.0), lon_bounds=(0.0, 35.0))
-    plan = _executed(daily_grid(spark, spec, px, gr))
+    df = daily_grid(spark, spec, px, gr)
+    plan = _executed(df)
     assert plan.count("pixels.parquet") == 1
     assert "SortMergeJoin" not in plan
     assert plan.count("Exchange hashpartitioning") <= 2  # (cell, granule) + cell
+    # stage 1 is one NumPy accumulator over the pixels
+    assert [n.getClass().getSimpleName() for n in plan_nodes(df)].count("MapInArrowExec") == 1
 
 
-def test_daily_grid_single_granule_scan(spark):
-    """Over the granule DataSource every scan is a decode: exactly one."""
-    from modis_aggregation_spark.config import default_spec
-    from modis_aggregation_spark.plans.pipeline import daily_grid
+def _fake_granules(spark, spec):
     from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
 
     spark.dataSource.register(GranuleDataSource)
-    spec = default_spec()
     px = (
         spark.read.format("modis_granules")
         .option("granule_ids", "1,2")
@@ -193,8 +192,33 @@ def test_daily_grid_single_granule_scan(spark):
         .load()
     )
     gr = spark.createDataFrame([(1, 1, 10), (2, 1, 11)], "granule_id long, doy int, hour int")
-    plan = _executed(daily_grid(spark, spec, px, gr))
+    return px, gr
+
+
+def test_daily_grid_single_granule_scan(spark):
+    """Over the granule DataSource every scan is a decode: exactly one."""
+    from modis_aggregation_spark.config import default_spec
+    from modis_aggregation_spark.plans.pipeline import daily_grid
+
+    spec = default_spec()
+    plan = _executed(daily_grid(spark, spec, *_fake_granules(spark, spec)))
     assert plan.count("BatchScan modis_granules") == 1
+
+
+def test_daily_grid_never_shuffles_pixels(spark):
+    """The (cell, granule) partials are combined before any exchange, so
+    daily_grid shuffles about one record per (cell, granule) pair plus one
+    per cell, whatever the pixel count. Grouping the pixels by granule
+    before accumulating them (``applyInArrow``) shuffles every pixel."""
+    from modis_aggregation_spark.config import default_spec
+    from modis_aggregation_spark.plans.pipeline import daily_grid
+
+    spec = default_spec()
+    px, gr = _fake_granules(spark, spec)
+    pixels = px.count()
+    with measure(spark, "daily_grid_pixel_shuffle") as m:
+        daily_grid(spark, spec, px, gr).write.format("noop").mode("overwrite").save()
+    assert 0 < m["shuffle_records"] < 0.01 * pixels, (m["shuffle_records"], pixels)
 
 
 def test_x26_pii_scrub_map_only(spark):

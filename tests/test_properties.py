@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from modis_aggregation_spark.config import AggregationSpec
 from modis_aggregation_spark.functions.grid import cell_id
-from modis_aggregation_spark.functions.histogram import hist_bucket
+from modis_aggregation_spark.functions.histogram import hist_bucket, hist_bucket_np
 from modis_aggregation_spark.operators import stats as ops_stats
 
 SETTINGS = settings(
@@ -50,6 +50,11 @@ def test_null_skipping_invariants(spark, data):
         assert r["cnt"] == len(vals)
 
 
+def _np_hist(vals, edges):
+    b = hist_bucket_np(np.array(vals, dtype=np.float64), edges)
+    return np.bincount(b[b >= 0], minlength=len(edges) - 1).tolist()
+
+
 @given(
     edges=st.lists(
         st.floats(min_value=-1e4, max_value=1e4, allow_nan=False, width=64),
@@ -65,10 +70,11 @@ def test_null_skipping_invariants(spark, data):
 )
 @SETTINGS
 def test_hist_bucket_matches_numpy(spark, edges, vals):
-    """The bucket expression must reproduce np.histogram exactly:
-    half-open bins, closed last bin, out-of-range dropped (Q9)."""
+    """The bucket expression and its NumPy twin must reproduce np.histogram
+    exactly: half-open bins, closed last bin, out-of-range and NULL
+    dropped (Q9)."""
     edges = sorted(edges)
-    df = spark.createDataFrame([(float(v),) for v in vals], "v double")
+    df = spark.createDataFrame([(float(v),) for v in vals] + [(None,)], "v double")
     got = (
         df.select(hist_bucket(F.col("v"), edges).alias("b"))
         .filter(F.col("b").isNotNull())
@@ -81,6 +87,7 @@ def test_hist_bucket_matches_numpy(spark, edges, vals):
         got_counts[r["b"]] = r["count"]
     want, _ = np.histogram(np.array(vals), bins=np.array(edges))
     assert got_counts.tolist() == want.tolist()
+    assert _np_hist([*vals, np.nan], edges) == want.tolist()
 
 
 @given(
@@ -219,3 +226,5 @@ def test_hist_bucket_boundary_regressions(spark):
                 counts[r["b"]] += 1
         want, _ = np.histogram(np.array(vals), bins=np.array(edges))
         assert counts.tolist() == want.tolist(), edges
+        out_of_range = [np.nan, edges[0] - 1.0, edges[-1] + 1.0]
+        assert _np_hist([*vals, *out_of_range], edges) == want.tolist(), edges

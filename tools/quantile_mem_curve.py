@@ -29,7 +29,7 @@ import json, sys, time
 rows = int(sys.argv[1]); mode = sys.argv[2]
 sys.path.insert(0, ".")
 from pyspark.sql import SparkSession, functions as F
-from modis_aggregation_spark.observe import measure
+from modis_aggregation_spark.observe import measure, plan_nodes
 spark = (
     SparkSession.builder.master("local[4]")
     .config("spark.driver.memory", "1g")
@@ -46,14 +46,17 @@ df = spark.range(rows).select(
 with measure(spark, f"{mode}_{rows}") as m:
     t0 = time.perf_counter()
     if mode == "builtin":
-        out = df.groupBy("g").agg(F.expr("percentile(v, 0.9)").alias("p90")).collect()
+        q = df.groupBy("g").agg(F.expr("percentile(v, 0.9)").alias("p90"))
     else:
         from modis_aggregation_spark.operators.quantiles import group_percentiles
-        out = group_percentiles(df, ["g"], "v", {"p90": 0.9}).collect()
+        q = group_percentiles(df, ["g"], "v", {"p90": 0.9})
+    out = q.collect()
     wall = time.perf_counter() - t0
+# ObjectHashAggregate's buffers live on the heap, outside execution memory
+object_agg = any(n.getClass().getSimpleName() == "ObjectHashAggregateExec" for n in plan_nodes(q))
 print("RESULT " + json.dumps({
     "p90": out[0]["p90"], "wall_sec": round(wall, 1),
-    "peak_exec_mb": round(m["peak_execution_memory_bytes"] / 1e6, 1),
+    "peak_exec_mb": None if object_agg else round(m["peak_execution_memory_bytes"] / 1e6, 1),
     "spill_mem_mb": round(m["spill_memory_bytes"] / 1e6, 1),
     "spill_disk_mb": round(m["spill_disk_bytes"] / 1e6, 1),
 }))
