@@ -357,14 +357,10 @@ def reaggregate(staged: DataFrame, group_cols: list[str] | None = None) -> DataF
     for fname, dtype in staged.dtypes:
         if fname in group_cols or fname in ("lat_idx", "lon_idx", "granule_id", "date"):
             continue
-        if fname.endswith("_min"):
-            aggs.append(F.min(fname).alias(fname))
-        elif fname.endswith("_max"):
-            aggs.append(F.max(fname).alias(fname))
-        elif fname.endswith(("_sum", "_sumsq", "_count", "_pix")) or fname in (
+        if fname.endswith(("_min", "_max", "_sum", "_sumsq", "_count", "_pix")) or fname in (
             "grid_count", "grid_count_compat"
         ):
-            aggs.append(F.sum(fname).alias(fname))
+            aggs.append(_merge(fname))
         elif fname.endswith(("_hist", "_jhist")):
             # element-wise array sum: aggregate over the group with zip_with
             depth2 = dtype.startswith("array<array")
