@@ -9,7 +9,8 @@ ONE declarative DataFrame plan:
       → day-definition nulling (P4)
       → bbox/sampling filter + cell id (P2, S9, A1)
       → stage 1, one accumulator per granule (the reference's per-granule
-        buffers): a NumPy function that mapInArrow applies to each Arrow
+        buffers, ``granule_partials``, which the streaming daily grid
+        shares): a NumPy function that mapInArrow applies to each Arrow
         batch of pixels, one row per (cell, granule) in the batch of
             cloudy/determined pixel counts,
             per-variable min/max/sum/count/sumsq,
@@ -116,19 +117,21 @@ def _finalize_moments(
     return mean, F.when(count > 0, F.sqrt(F.greatest(sumsq / n - mean * mean, F.lit(0.0))))
 
 
-def _granule_accumulator(spec: AggregationSpec, keys: list[str]):
-    """Stage 1, the reference's per-granule buffers as one NumPy function
-    of an Arrow batch of prepared pixels (``keys``, ``cm`` and the
-    physical variables as DOUBLE).
+def granule_partials(px: DataFrame, spec: AggregationSpec, keys: list[str]) -> DataFrame:
+    """Stage 1, the reference's per-granule buffers: one NumPy function that
+    ``mapInArrow`` applies to each Arrow batch of ``px``'s ``keys``,
+    ``granule_id``, ``cm`` and physical variables (as DOUBLE). The batch
+    ``daily_grid`` and the stream ``stream_daily_grid`` both call it.
 
-    It returns one row per distinct ``keys`` value: cloudy/determined
-    pixel counts (``g_cld``/``g_tot``), per-variable min/max/sum/count/Σv²
-    and the histogram and joint-histogram bucket counts as flat long
-    columns. A NULL measure (NaN here) counts nowhere; min, max, sum and
-    Σv² are NULL where no value counted, as Spark's aggregates are.
-    ``daily_grid`` declares the schema of its result for an empty batch:
-    ``mapInArrow`` matches columns by position and does not check types,
-    so the declared and the emitted columns must come from one place.
+    It returns one row per distinct (``keys``, granule) of a batch:
+    cloudy/determined pixel counts (``g_cld``/``g_tot``), per-variable
+    min/max/sum/count/Σv² and the histogram and joint-histogram bucket
+    counts as flat long columns; ``_merge`` combines the rows of a granule
+    that spans batches or partitions. A NULL measure (NaN here) counts
+    nowhere; min, max, sum and Σv² are NULL where no value counted, as
+    Spark's aggregates are. The declared schema is the function's own
+    result for an empty batch: ``mapInArrow`` matches columns by position
+    and does not check types, so the two must come from one place.
     """
     has_std = "Standard_Deviation" in spec.stats
     extremes = [(s, fn, start) for s, stat, fn, start in (
@@ -137,14 +140,16 @@ def _granule_accumulator(spec: AggregationSpec, keys: list[str]):
     hists = "Histogram_Counts" in spec.stats
     joints = spec.joint_hists if "Jhisto" in spec.stats else ()
 
+    group = [*keys, "granule_id"]
+
     def accumulate(batch: pa.RecordBatch) -> pa.RecordBatch:
         code = np.zeros(batch.num_rows, np.int64)
-        for k in keys:
+        for k in group:
             enc = batch.column(k).dictionary_encode(null_encoding="encode")
             code = code * len(enc.dictionary) + enc.indices.to_numpy()
         _, first, g = np.unique(code, return_index=True, return_inverse=True)
         ng = len(first)
-        out = {k: batch.column(k).take(first) for k in keys}
+        out = {k: batch.column(k).take(first) for k in group}
 
         def values(name: str) -> np.ndarray:
             return batch.column(name).to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
@@ -189,7 +194,10 @@ def _granule_accumulator(spec: AggregationSpec, keys: list[str]):
         out["g_tot"] = pa.array(np.bincount(g[(cm >= 0) & (cm <= 3)], minlength=ng))
         return pa.RecordBatch.from_pydict(out)
 
-    return accumulate
+    measures = [F.col(v.name).cast("double") for v in spec.physical_variables()]
+    px = px.select(*group, "cm", *measures)
+    partials = accumulate(pa.RecordBatch.from_pylist([], to_arrow_schema(px.schema))).schema
+    return px.mapInArrow(lambda batches: map(accumulate, batches), from_arrow_schema(partials))
 
 
 def _merge(name: str) -> Column:
@@ -308,16 +316,11 @@ def daily_grid(
         raise ValueError("extra_group_cols requires densify_output=False")
     px = prepare_pixels(pixels, granules, spec, end_doy, spill_doy)
     keys = ["cell", *extra_group_cols]
-    measures = [F.col(v.name).cast("double") for v in spec.physical_variables()]
-    px = px.select(*keys, "granule_id", "cm", *measures)
-    accumulate = _granule_accumulator(spec, [*keys, "granule_id"])
-    partials = accumulate(pa.RecordBatch.from_pylist([], to_arrow_schema(px.schema))).schema
-    # a parquet split or an Arrow batch can hold part of a granule: re-merge
-    # the batches' rows so stage 2 sees one row per (cell, granule)
+    partials = granule_partials(px, spec, keys)
+    # re-merge a granule's rows so stage 2 sees one row per (cell, granule)
     agg = (
-        px.mapInArrow(lambda batches: map(accumulate, batches), from_arrow_schema(partials))
-        .groupBy(*keys, "granule_id")
-        .agg(*[_merge(c) for c in partials.names[len(keys) + 1:]])
+        partials.groupBy(*keys, "granule_id")
+        .agg(*[_merge(c) for c in partials.columns[len(keys) + 1:]])
         .groupBy(*keys)
         .agg(*_merges(spec))
     )

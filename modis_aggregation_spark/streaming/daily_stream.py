@@ -4,28 +4,28 @@ The reference is strictly batch over a closed date range; its "definition
 of day" ingests the first 3 hours of day D+1 into day D's product
 (reference ``MODIS_Aggregation/aggregate_functions.py:589-601``). In
 streaming terms that IS a watermark: event-time = granule acquisition
-timestamp, daily tumbling window, ``withWatermark(ts, "3 hours")`` to admit
-the late spill granules before a day's window finalizes (SURVEY §2.7).
+timestamp, daily tumbling window, a watermark of ``spec.shift_hours`` to
+admit the late spill granules (SURVEY §2.7).
 
-Every aggregate used here (sum/count/min/max via conditional sums) is a
-commutative monoid, so the whole thing runs as a standard streaming
-partial aggregation — no custom state store, no ``applyInPandasWithState``.
-
-Scale notes: the streaming state is (windows-in-flight × occupied cells)
-rows — at 1° that's ≤ 64,800 per open day, trivially small. The file
-source lists incrementally (``maxFilesPerTrigger`` for backpressure); the
-static granule-catalog join is broadcast per micro-batch.
+Stage 1 is the batch ``daily_grid``'s per-granule NumPy accumulator
+(``plans.pipeline.granule_partials``, a stateless ``mapInArrow``) and the
+windowed state merges its rows with the batch rule (``_merge``: fmin, fmax,
++), a commutative monoid: no custom state store. The broadcast catalog's
+event time is joined onto the partial rows, not onto every pixel. State
+bounds are in ``write_daily_grids``.
 """
 
 from __future__ import annotations
+
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from modis_aggregation_spark.config import AggregationSpec
-from modis_aggregation_spark.functions.bits import cloudy_flag, determined_flag
 from modis_aggregation_spark.operators.stats import with_cell, with_cloud_mask
+from modis_aggregation_spark.plans.pipeline import _merge, granule_partials
 
 
 def stream_pixels(
@@ -72,12 +72,20 @@ def write_daily_grids(
     """Continuous L3 production: sink the streaming daily grid to parquet
     PARTITIONED BY date via foreachBatch.
 
-    ``complete`` output mode re-emits every open day each micro-batch;
-    dynamic partition overwrite rewrites only the day-partitions present in
-    that batch, so closed days stop being touched once the watermark passes
-    — downstream readers see one directory per day of mergeable partials
-    (finalize with ``plans.pipeline.reaggregate`` column logic).
+    ``complete`` output mode keeps every day's state (the watermark evicts
+    nothing in this mode: days streamed × occupied cells, ≤ 64,800 rows per
+    day at 1°) and re-emits all of it, so each batch rewrites every day's
+    partition. Downstream readers see one directory per day of mergeable
+    partials (finalize with ``plans.pipeline.reaggregate`` column logic).
+
+    ``trigger_available_now`` is refused over ``modis_granules``: PySpark's
+    Python stream reader has no admission control, so the query would stop
+    after the first ``granules_per_batch`` granules.
     """
+    logical = daily_stream._jdf.queryExecution().logical().toString()
+    if trigger_available_now and "modis_granules" in logical:
+        raise ValueError("trigger_available_now over modis_granules reads only the "
+                         "first micro-batch; use the default trigger")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -101,50 +109,38 @@ def stream_daily_grid(
     pixels_stream: DataFrame,
     granules: DataFrame,
     spec: AggregationSpec,
-    watermark: str = "3 hours",
 ) -> DataFrame:
     """Daily tumbling-window per-cell aggregation over a pixel stream.
 
-    Returns a streaming DataFrame keyed (day, cell) with the mergeable
-    statistics (pixel counts, CF sums, per-variable sum/count/min/max).
+    Returns a streaming DataFrame keyed (date, cell) with the mergeable
+    statistics: pixel counts, per-variable sum/count/sumsq/min/max and
+    the CF ratio. ``granules`` carries (granule_id, date, hhmm). The
+    watermark is ``spec.shift_hours``, the definition-of-day spill.
     Finalization (mean/std) composes downstream exactly as in
     ``plans.pipeline.reaggregate`` — partials are the streaming-safe
     representation.
     """
-    df = with_event_time(pixels_stream, granules)
-    df = with_cloud_mask(df)
-    df = with_cell(df, spec)
-    df = df.withWatermark("ts", watermark)
-
-    cld, tot = cloudy_flag(F.col("cm")), determined_flag(F.col("cm"))
-    aggs = [
-        F.sum(cld).cast("long").alias("cld_pix"),
-        F.sum(tot).cast("long").alias("tot_pix"),
-    ]
-    for v in spec.physical_variables():
-        c = F.col(v.name)
-        aggs += [
-            F.sum(c).alias(f"{v.name}_sum"),
-            F.count(c).alias(f"{v.name}_count"),
-            F.sum(c * c).alias(f"{v.name}_sumsq"),
-            F.min(c).alias(f"{v.name}_min"),
-            F.max(c).alias(f"{v.name}_max"),
-        ]
-
+    moments = replace(spec, stats=("Minimum", "Maximum", "Standard_Deviation"))
+    partials = granule_partials(
+        with_cell(with_cloud_mask(pixels_stream), spec), moments, ["cell"]
+    )
+    df = with_event_time(partials, granules).withWatermark(
+        "ts", f"{spec.shift_hours} hours"
+    )
+    names = [f"{v.name}_{s}" for v in spec.physical_variables()
+             for s in ("sum", "count", "sumsq", "min", "max")]
+    # a merged count is never NULL: keep it a required column in the sink
+    out = [F.coalesce(n, F.lit(0)).alias(n) if n.endswith("_count") else n for n in names]
     return (
         df.groupBy(F.window("ts", "1 day").alias("day"), F.col("cell"))
-        .agg(*aggs)
+        .agg(
+            _merge("g_cld").alias("cld_pix"),
+            _merge("g_tot").alias("tot_pix"),
+            *map(_merge, names),
+        )
         .select(
             F.col("day.start").cast("date").alias("date"),
-            "cell",
-            *[c for c in ["cld_pix", "tot_pix"]],
-            *[
-                f"{v.name}_{s}"
-                for v in spec.physical_variables()
-                for s in ("sum", "count", "sumsq", "min", "max")
-            ],
-        )
-        .withColumn(
-            "cf_mean", F.col("cld_pix") / F.nullif(F.col("tot_pix"), F.lit(0))
+            "cell", "cld_pix", "tot_pix", *out,
+            (F.col("cld_pix") / F.nullif(F.col("tot_pix"), F.lit(0))).alias("cf_mean"),
         )
     )

@@ -180,6 +180,29 @@ def test_daily_grid_single_pixel_pass(spark):
     assert [n.getClass().getSimpleName() for n in plan_nodes(df)].count("MapInArrowExec") == 1
 
 
+def test_stream_daily_grid_single_pixel_pass(spark, tmp_path):
+    """The streaming daily grid runs the batch stage 1: one NumPy
+    accumulator over each micro-batch's pixels, not aggregates of its own."""
+    from modis_aggregation_spark.config import AggregationSpec, VariableSpec
+    from modis_aggregation_spark.streaming.daily_stream import stream_daily_grid, stream_pixels
+
+    path = os.path.join(FIXTURES, "pixels.parquet")
+    px = stream_pixels(spark, path, spark.read.parquet(path).schema)
+    gr = spark.read.parquet(os.path.join(FIXTURES, "granules.parquet"))
+    spec = AggregationSpec(lat_bounds=(-20.0, 20.0), lon_bounds=(0.0, 35.0),
+                           variables=(VariableSpec(name="ctp"),))
+    q = (
+        stream_daily_grid(px, gr, spec).writeStream.format("memory")
+        .queryName("stream_single_pass").outputMode("complete")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start()
+    )
+    assert q.awaitTermination(120)
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan()
+    spark.catalog.dropTempView("stream_single_pass")
+    assert [n.getClass().getSimpleName() for n in plan_nodes(plan)].count("MapInArrowExec") == 1
+
+
 def _fake_granules(spark, spec):
     from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
 

@@ -70,6 +70,7 @@ def test_stream_equals_batch(spark, staged_dir, tmp_path):
         F.sum(F.when(cm.between(0, 3), 1).otherwise(0)).cast("long").alias("tot_pix"),
         F.sum("ctp").alias("ctp_sum"),
         F.count("ctp").alias("ctp_count"),
+        F.sum(F.col("ctp") * F.col("ctp")).alias("ctp_sumsq"),
         F.min("ctp").alias("ctp_min"),
         F.max("ctp").alias("ctp_max"),
     )
@@ -83,7 +84,92 @@ def test_stream_equals_batch(spark, staged_dir, tmp_path):
         for c in ("ctp_sum", "ctp_min", "ctp_max"):
             a, b = g[c], w[c]
             assert (a is None and b is None) or a == pytest.approx(b, abs=1e-9), (k, c)
+        a, b = g["ctp_sumsq"], w["ctp_sumsq"]
+        assert (a is None and b is None) or a == pytest.approx(b, rel=1e-12), k
     assert len(got) > 10
+
+
+def _granule_stream(spark, ids, per_batch):
+    """A ``modis_granules`` stream of fake-decoder granules and its catalog:
+    granule ``i`` lands on day 1 + i % 2 at hour i % 24."""
+    import datetime as dt
+
+    from modis_aggregation_spark.sources.granule_datasource import GranuleDataSource
+
+    spark.dataSource.register(GranuleDataSource)
+    stream = (
+        spark.readStream.format("modis_granules")
+        .option("granule_ids", ",".join(map(str, ids)))
+        .option("granules_per_batch", str(per_batch))
+        .option("variables", "ctp")
+        .option("decoder", "fake")
+        .load()
+    )
+    catalog = spark.createDataFrame(
+        [(i, dt.date(2008, 1, 1 + i % 2), f"{i % 24:02d}00") for i in ids],
+        "granule_id long, date date, hhmm string",
+    )
+    return stream, catalog
+
+
+def test_stream_daily_grid_schema(spark, staged_dir):
+    """The streamed partials keep their column names, order, types and
+    required counts over both sources: the file stream and the granule
+    DataSource."""
+    granules = spark.read.parquet(os.path.join(FIXTURES, "granules.parquet"))
+    schema = spark.read.parquet(staged_dir).schema
+    want = [("date", "date"), ("cell", "bigint"), ("cld_pix", "bigint"), ("tot_pix", "bigint"),
+            ("ctp_sum", "double"), ("ctp_count", "bigint"), ("ctp_sumsq", "double"),
+            ("ctp_min", "double"), ("ctp_max", "double"), ("cf_mean", "double")]
+    for stream, catalog in (
+        (stream_pixels(spark, staged_dir, schema), granules),
+        _granule_stream(spark, [1, 2], 2),
+    ):
+        out = stream_daily_grid(stream, catalog, SPEC)
+        assert out.dtypes == want
+        assert [f.name for f in out.schema if not f.nullable] == ["ctp_count"]
+
+
+def test_available_now_over_granules_is_refused(spark, tmp_path):
+    """availableNow over ``modis_granules`` would stop after the first
+    micro-batch (the Python stream reader has no admission control), so it
+    is refused before the query starts. The default trigger, run until all
+    is processed, covers every granule: its pixel counts per (date, cell)
+    equal the batch counts over all 16."""
+    from modis_aggregation_spark.streaming.daily_stream import write_daily_grids
+
+    spec = AggregationSpec(variables=SPEC.variables)  # the globe at 1°
+    ids = list(range(1, 17))
+    stream, catalog = _granule_stream(spark, ids, 2)
+    daily = stream_daily_grid(stream, catalog, spec)
+    with pytest.raises(ValueError, match="modis_granules"):
+        write_daily_grids(daily, str(tmp_path / "out"), str(tmp_path / "ck"),
+                          trigger_available_now=True)
+    assert not spark.streams.active
+
+    q = write_daily_grids(daily, str(tmp_path / "out"), str(tmp_path / "ck"))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = {(str(r["date"]), r["cell"]): (r["cld_pix"], r["tot_pix"], r["ctp_count"])
+           for r in spark.read.parquet(str(tmp_path / "out")).collect()}
+
+    pixels = (spark.read.format("modis_granules")
+              .option("granule_ids", ",".join(map(str, ids)))
+              .option("variables", "ctp").option("decoder", "fake").load())
+    batch = with_cell(with_cloud_mask(with_event_time(pixels, catalog)), spec)
+    cm = F.col("cm")
+    want = {
+        (str(r["date"]), r["cell"]): (r["cld"], r["tot"], r["n"])
+        for r in batch.groupBy(F.col("ts").cast("date").alias("date"), "cell").agg(
+            F.count(F.when(cm.between(0, 1), 1)).alias("cld"),
+            F.count(F.when(cm.between(0, 3), 1)).alias("tot"),
+            F.count("ctp").alias("n"),
+        ).collect()
+    }
+    assert got == want
+    assert len({d for d, _ in got}) == 2
 
 
 def test_write_daily_grids_partitioned_sink(spark, staged_dir, tmp_path):
