@@ -7,8 +7,9 @@ a short allowlist of documented exceptions).
 
 * ``shared_frame`` — a frame with several consumers inside one call
   (both sides of a self-join, a stats aggregate plus a scoring
-  projection, a count table plus its join-back).  Spark's exchange
-  reuse does not deduplicate such references — each consumer
+  projection, a count table plus its join-back, the in-memory static
+  side of a stream-static join that every micro-batch reads).  Spark's
+  exchange reuse does not deduplicate such references — each consumer
   re-executes the whole upstream subtree (measured repeatedly since
   round 12) — so the frame must be materialized once.
 * ``loop_frame`` — a table whose lineage must be CUT: the per-round

@@ -11,8 +11,10 @@ Stage 1 is the batch ``daily_grid``'s per-granule NumPy accumulator
 (``plans.pipeline.granule_partials``, a stateless ``mapInArrow``) and the
 windowed state merges its rows with the batch rule (``_merge``: fmin, fmax,
 +), a commutative monoid: no custom state store. The broadcast catalog's
-event time is joined onto the partial rows, not onto every pixel. State
-bounds are in ``write_daily_grids``.
+event time is joined onto the partial rows, not onto every pixel; a
+catalog held in memory is computed once per stream, not once per
+micro-batch (``with_event_time``). State bounds are in
+``write_daily_grids``.
 """
 
 from __future__ import annotations
@@ -24,8 +26,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from modis_aggregation_spark.config import AggregationSpec
+from modis_aggregation_spark.functions.materialize import shared_frame
 from modis_aggregation_spark.operators.stats import with_cell, with_cloud_mask
 from modis_aggregation_spark.plans.pipeline import _merge, granule_partials
+
+# plan leaves that hold their rows in memory: nothing can add rows to them
+_IN_MEMORY = ("LocalRelation", "LogicalRDD")
 
 
 def stream_pixels(
@@ -47,7 +53,14 @@ def stream_pixels(
 
 def with_event_time(pixels: DataFrame, granules: DataFrame) -> DataFrame:
     """Attach the granule acquisition timestamp (event time) from the
-    catalog: date + hhmm parsed from the filename (F3/F5)."""
+    catalog: date + hhmm parsed from the filename (F3/F5).
+
+    Every micro-batch runs the catalog's plan again, so a catalog read
+    from files or tables sees the granules added while the stream runs.
+    A catalog held in memory (``createDataFrame``, an RDD) has nothing
+    to re-read: it is stored by the first micro-batch
+    (``materialize.shared_frame``) and read from there by the others.
+    """
     cat = granules.select(
         "granule_id",
         F.to_timestamp(
@@ -60,6 +73,9 @@ def with_event_time(pixels: DataFrame, granules: DataFrame) -> DataFrame:
             )
         ).alias("ts"),
     )
+    leaves = granules._jdf.queryExecution().analyzed().collectLeaves()
+    if all(leaves.apply(i).nodeName() in _IN_MEMORY for i in range(leaves.size())):
+        cat = shared_frame(cat)
     return pixels.join(F.broadcast(cat), "granule_id")
 
 
@@ -82,8 +98,8 @@ def write_daily_grids(
     Python stream reader has no admission control, so the query would stop
     after the first ``granules_per_batch`` granules.
     """
-    logical = daily_stream._jdf.queryExecution().logical().toString()
-    if trigger_available_now and "modis_granules" in logical:
+    logical = daily_stream._jdf.queryExecution().logical
+    if trigger_available_now and "modis_granules" in logical().toString():
         raise ValueError("trigger_available_now over modis_granules reads only the "
                          "first micro-batch; use the default trigger")
 

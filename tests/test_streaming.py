@@ -172,6 +172,26 @@ def test_available_now_over_granules_is_refused(spark, tmp_path):
     assert len({d for d, _ in got}) == 2
 
 
+def test_event_time_stores_only_an_in_memory_catalog(spark, tmp_path):
+    """Every micro-batch runs the catalog's plan again. A catalog held in
+    memory cannot change, so it is stored once; a catalog read from files
+    stays a file scan, which sees granules added while the stream runs."""
+    _, built = _granule_stream(spark, [1, 2], 2)
+    built.write.parquet(str(tmp_path / "catalog"))
+    files = spark.read.parquet(str(tmp_path / "catalog"))
+    px = spark.range(1, 3).select(F.col("id").alias("granule_id"))
+
+    def leaves(df):
+        seq = df._jdf.queryExecution().analyzed().collectLeaves()
+        return {seq.apply(i).nodeName(): seq.apply(i) for i in range(seq.size())}
+
+    stored = with_event_time(px, built)
+    read = with_event_time(px, files)
+    assert sorted(stored.collect()) == sorted(read.collect())
+    assert leaves(stored)["LogicalRDD"].rdd().isCheckpointed()
+    assert set(leaves(read)) == {"Range", "LogicalRelation"}
+
+
 def test_write_daily_grids_partitioned_sink(spark, staged_dir, tmp_path):
     from modis_aggregation_spark.streaming.daily_stream import write_daily_grids
 
