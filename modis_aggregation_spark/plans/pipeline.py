@@ -14,23 +14,23 @@ ONE declarative DataFrame plan:
         batch of pixels, one row per (cell, granule) in the batch of
             cloudy/determined pixel counts,
             per-variable min/max/sum/count/sumsq,
-            histogram + joint-histogram bucket counts,
-        then groupBy(cell, granule) merges the rows of a granule that
-        spans batches or partitions (fmin/fmax/+)
-      → stage 2, the fmin/fmax/+ merge: groupBy(cell).agg(
+            histogram + joint-histogram bucket counts
+      → stage 2, the fmin/fmax/+ merge (``cell_merge``): repartition(cell),
+        then a NumPy function that mapInArrow applies to each partition,
+        one row per cell of
             per-variable min/max/sum/count/sumsq + mean/std,  A3-A8
             cloudy/total pixel counts + CF ratio,             A11-A12
             ARRAY histograms, joint ARRAY histograms,         A9-A10
             per-granule CF min/max/std/hist,                  A13
             granule count,                                    A14
-        )
       → densify to the full grid (J3)
 
 Scale notes: the pixels are scanned (and, over granule files, decoded) once
-and never shuffled. The accumulator is narrow, and the (cell, granule)
-merge combines its rows map-side, so that shuffle is O(partitions ×
-occupied (cell, granule) pairs), independent of pixel count. The cell
-merge shuffles at most one row per (cell, granule). Nothing is joined
+and never shuffled. The accumulator is narrow; its rows, at most one per
+(cell, granule) per Arrow batch (``arrow.maxRecordsPerBatch`` pixels),
+are the one hash exchange, independent of pixel count. No Catalyst
+aggregate runs: the cell merge holds one shuffle partition's
+share of those rows. Nothing is joined
 except the broadcast catalog and the densify, which joins a generated
 dimension against the tiny aggregate. The scan and the accumulator
 dominate and scale embarrassingly with granule count, which is the same
@@ -61,7 +61,7 @@ from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from modis_aggregation_spark.config import AggregationSpec
 from modis_aggregation_spark.functions.dayrules import day_definition_condition
-from modis_aggregation_spark.functions.histogram import hist_bucket, hist_bucket_np
+from modis_aggregation_spark.functions.histogram import hist_bucket_np
 from modis_aggregation_spark.operators.densify import densify
 from modis_aggregation_spark.operators.stats import with_cell, with_cloud_mask
 
@@ -117,6 +117,26 @@ def _finalize_moments(
     return mean, F.when(count > 0, F.sqrt(F.greatest(sumsq / n - mean * mean, F.lit(0.0))))
 
 
+def _groups(columns: list[pa.Array]) -> tuple[np.ndarray, np.ndarray]:
+    """Rows grouped by equal values of ``columns``: each group's first row
+    and every row's group, from the columns' dictionary codes and
+    ``np.unique``'s inverse. NULL is a value of its own."""
+    code = np.zeros(len(columns[0]), np.int64)
+    for col in columns:
+        enc = col.dictionary_encode(null_encoding="encode")
+        if code.max(initial=0) >= 2**62 // max(len(enc.dictionary), 1):  # renumber densely
+            code = np.unique(code, return_inverse=True)[1]
+        code = code * len(enc.dictionary) + enc.indices.to_numpy()
+    _, first, g = np.unique(code, return_index=True, return_inverse=True)
+    return first, g
+
+
+def _group_hist(g: np.ndarray, ng: int, bucket: np.ndarray, nbins: int) -> np.ndarray:
+    """(groups, bins) counts of the rows' 0-based ``bucket`` (-1: none)."""
+    ok = bucket >= 0
+    return np.bincount(g[ok] * nbins + bucket[ok], minlength=ng * nbins).reshape(ng, nbins)
+
+
 def granule_partials(px: DataFrame, spec: AggregationSpec, keys: list[str]) -> DataFrame:
     """Stage 1, the reference's per-granule buffers: one NumPy function that
     ``mapInArrow`` applies to each Arrow batch of ``px``'s ``keys``,
@@ -126,8 +146,9 @@ def granule_partials(px: DataFrame, spec: AggregationSpec, keys: list[str]) -> D
     It returns one row per distinct (``keys``, granule) of a batch:
     cloudy/determined pixel counts (``g_cld``/``g_tot``), per-variable
     min/max/sum/count/Σv² and the histogram and joint-histogram bucket
-    counts as flat long columns; ``_merge`` combines the rows of a granule
-    that spans batches or partitions. A NULL measure (NaN here) counts
+    counts as flat long columns; ``cell_merge`` (batch) and ``_merge``
+    (stream) combine the rows of a granule that spans batches or
+    partitions. A NULL measure (NaN here) counts
     nowhere; min, max, sum and Σv² are NULL where no value counted, as
     Spark's aggregates are. The declared schema is the function's own
     result for an empty batch: ``mapInArrow`` matches columns by position
@@ -143,21 +164,12 @@ def granule_partials(px: DataFrame, spec: AggregationSpec, keys: list[str]) -> D
     group = [*keys, "granule_id"]
 
     def accumulate(batch: pa.RecordBatch) -> pa.RecordBatch:
-        code = np.zeros(batch.num_rows, np.int64)
-        for k in group:
-            enc = batch.column(k).dictionary_encode(null_encoding="encode")
-            code = code * len(enc.dictionary) + enc.indices.to_numpy()
-        _, first, g = np.unique(code, return_index=True, return_inverse=True)
+        first, g = _groups([batch.column(k) for k in group])
         ng = len(first)
         out = {k: batch.column(k).take(first) for k in group}
 
         def values(name: str) -> np.ndarray:
             return batch.column(name).to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-
-        def group_hist(bucket: np.ndarray, nbins: int) -> np.ndarray:
-            ok = bucket >= 0
-            flat = g[ok] * nbins + bucket[ok]
-            return np.bincount(flat, minlength=ng * nbins).reshape(ng, nbins)
 
         for v in spec.physical_variables():
             n, x = v.name, values(v.name)
@@ -176,7 +188,7 @@ def granule_partials(px: DataFrame, spec: AggregationSpec, keys: list[str]) -> D
                 sumsq = np.bincount(gv, weights=xv * xv, minlength=ng).astype(np.float64)
                 out[f"{n}_sumsq"] = pa.array(sumsq, mask=empty)
             if hists and v.bin_edges:
-                counts = group_hist(hist_bucket_np(x, v.bin_edges), len(v.bin_edges) - 1)
+                counts = _group_hist(g, ng, hist_bucket_np(x, v.bin_edges), len(v.bin_edges) - 1)
                 out.update({f"{n}_hist_{i}": pa.array(c) for i, c in enumerate(counts.T)})
         for jh in joints:
             xe, ye = spec.variable(jh.varname).bin_edges, jh.joint_edges
@@ -184,7 +196,7 @@ def granule_partials(px: DataFrame, spec: AggregationSpec, keys: list[str]) -> D
             by = hist_bucket_np(values(jh.partner_var), ye)
             nby = len(ye) - 1
             pair = np.where((bx >= 0) & (by >= 0), bx * nby + by, -1)
-            counts = group_hist(pair, (len(xe) - 1) * nby)
+            counts = _group_hist(g, ng, pair, (len(xe) - 1) * nby)
             out.update({
                 f"{jh.joint_name}_jhist_{i // nby}_{i % nby}": pa.array(c)
                 for i, c in enumerate(counts.T)
@@ -206,88 +218,183 @@ def _merge(name: str) -> Column:
     return agg(name).alias(name)
 
 
-def _merges(spec: AggregationSpec) -> list:
-    """Stage 2, per cell over the per-granule rows: merge them (fmin/fmax/+),
-    finalize mean/std, and compute every per-granule CF statistic (A13,
-    A14, Q1/Q2/Q5) from the same rows."""
-    merges: list = []
+def _merge_np(name: str, x: pa.Array | np.ndarray, g: np.ndarray, ng: int) -> np.ndarray:
+    """``_merge``'s rule in NumPy: fmin/fmax/+ of one partial column over
+    the groups ``g``. A NULL reads as the merge's identity (+inf, -inf,
+    0), and so does a group without values, which its count masks."""
+    fn, start = (np.minimum, np.inf) if name.endswith("_min") else (
+        (np.maximum, -np.inf) if name.endswith("_max") else (np.add, 0))
+    if isinstance(x, pa.Array):
+        x = x.fill_null(start).to_numpy()
+    out = np.full(ng, start, x.dtype)
+    fn.at(out, g, x)
+    return out
+
+
+def _moments_np(
+    total: np.ndarray, count: np.ndarray, sumsq: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray | None]:
+    """``_finalize_moments`` over arrays; a group without values (count 0)
+    reads NaN, which the caller masks."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        mean = total / count
+        if sumsq is None:
+            return mean, None
+        return mean, np.sqrt(np.maximum(sumsq / count - mean * mean, 0.0))
+
+
+def _lists(counts: np.ndarray, type_: pa.DataType) -> pa.Array:
+    """A (groups, bins[, bins]) count array as an Arrow list column."""
+    if counts.ndim == 1:
+        return pa.array(counts, type_)
+    inner = _lists(counts.reshape(-1, *counts.shape[2:]), type_.value_type)
+    offsets = np.arange(len(counts) + 1, dtype=np.int32) * counts.shape[1]
+    return pa.ListArray.from_arrays(pa.array(offsets), inner, type=type_)
+
+
+def cell_merge(partials: DataFrame, spec: AggregationSpec, keys: list[str]) -> DataFrame:
+    """Stage 2, the reference's fmin/fmax/+ merge and finalize
+    (``MODIS_Aggregation_DASK.py:127-134``): ``partials`` (stage 1's rows)
+    are hash-partitioned by ``keys`` and one NumPy function per partition
+    concatenates its Arrow batches (a cell's rows, and a granule's, can
+    span batches) and returns one row per distinct ``keys``.
+
+    Per cell it merges the per-variable min/max/sum/count/Σv² (A3-A8) and
+    finalizes mean and std, sums the histograms and joint histograms
+    (A9-A10) and the cloudy/determined pixel counts (A11-A12). Per (cell,
+    granule) it forms the granule's cloud fraction, and per cell the
+    statistics over those: min, max, std, histogram and the mergeable
+    sum/count/Σ (A13), the granule count (A14) and, under
+    ``strict_compat``, Q1/Q2/Q5. The declared schema is explicit: the
+    parent aggregate's types and nullability, which ``mapInArrow`` does
+    not derive from the data.
+    """
     has_std = "Standard_Deviation" in spec.stats
+    hists = "Histogram_Counts" in spec.stats
+    joints = spec.joint_hists if "Jhisto" in spec.stats else ()
+    cf_var = next((v for v in spec.variables if v.is_virtual), None)
+    cf_edges = cf_var.bin_edges if cf_var is not None and hists else ()
+
+    long_list = pa.list_(pa.int64())
+    fields = [to_arrow_schema(partials.schema).field(k) for k in keys]
     for v in spec.physical_variables():
         n = v.name
-        if "Minimum" in spec.stats:
-            merges.append(_merge(f"{n}_min"))
-        if "Maximum" in spec.stats:
-            merges.append(_merge(f"{n}_max"))
-        total, count = F.sum(f"{n}_sum"), F.sum(f"{n}_count")
-        sumsq = F.sum(f"{n}_sumsq") if has_std else None
-        mean, std = _finalize_moments(total, count, sumsq)
-        merges += [total.alias(f"{n}_sum"), count.alias(f"{n}_count")]
+        fields += [pa.field(f"{n}_{s}", pa.float64()) for s, stat in (
+            ("min", "Minimum"), ("max", "Maximum")) if stat in spec.stats]
+        fields += [pa.field(f"{n}_sum", pa.float64()), pa.field(f"{n}_count", pa.int64())]
         if has_std:
-            merges += [sumsq.alias(f"{n}_sumsq"), std.alias(f"{n}_stddev")]
+            fields += [pa.field(f"{n}_sumsq", pa.float64()), pa.field(f"{n}_stddev", pa.float64())]
         if "Mean" in spec.stats:
-            merges.append(mean.alias(f"{n}_mean"))
-        if "Histogram_Counts" in spec.stats and v.bin_edges:
-            hist = [F.sum(f"{n}_hist_{i}") for i in range(len(v.bin_edges) - 1)]
-            merges.append(F.array(*hist).alias(f"{n}_hist"))
-    if "Jhisto" in spec.stats:
-        for jh in spec.joint_hists:
-            nbx = len(spec.variable(jh.varname).bin_edges) - 1
-            rows = [
-                F.array(*[
-                    F.sum(f"{jh.joint_name}_jhist_{x}_{y}")
-                    for y in range(len(jh.joint_edges) - 1)
-                ])
-                for x in range(nbx)
-            ]
-            merges.append(F.array(*rows).alias(f"{jh.joint_name}_jhist"))
-
-    # cloud-fraction pixel counts (A11) + ratio-of-sums mean (A12)
-    cld, tot = F.sum("g_cld"), F.sum("g_tot")
-    merges += [
-        cld.alias("cld_pix"),
-        tot.alias("tot_pix"),
-        (cld / F.nullif(tot, F.lit(0))).alias("cf_mean"),
+            fields.append(pa.field(f"{n}_mean", pa.float64()))
+        if hists and v.bin_edges:
+            fields.append(pa.field(f"{n}_hist", long_list, nullable=False))
+    fields += [
+        pa.field(f"{jh.joint_name}_jhist", pa.list_(pa.field("element", long_list, nullable=False)),
+                 nullable=False)
+        for jh in joints
     ]
-    # per-granule CF extremes (A13); stage-1 rows are unique per granule (A14)
-    gcf = F.col("g_cld") / F.nullif(F.col("g_tot"), F.lit(0))
-    merges += [
-        F.min(gcf).alias("cf_min"),
-        F.max(gcf).alias("cf_max"),
-        F.count(F.lit(1)).alias("grid_count"),
-    ]
+    fields += [pa.field(c, pa.int64()) for c in ("cld_pix", "tot_pix")]
+    fields += [pa.field(c, pa.float64()) for c in ("cf_mean", "cf_min", "cf_max")]
+    fields += [pa.field("grid_count", pa.int64(), nullable=False), pa.field("cf_std", pa.float64())]
     if spec.strict_compat:
-        # Q2: the serial driver finalizes ΣCLD, ΣTOT, ΣCLD² as if they were
-        # Σv, n, Σv² — NULL for an all-undetermined cell (the reference
-        # leaves it NaN — found by the hypothesis differential harness)
-        _, std = _finalize_moments(cld, tot, F.sum(F.col("g_cld") * F.col("g_cld")))
-        # Q5: +1 per (granule, variable-with-valid-data) + the CF call
-        inflated = sum(
-            (F.when(F.col(f"{v.name}_count") > 0, 1).otherwise(0)
-             for v in spec.physical_variables()),
-            F.when(gcf.isNotNull(), 1).otherwise(0),
-        )
-        merges += [std.alias("cf_std"), F.sum(inflated).alias("grid_count_compat")]
+        fields.append(pa.field("grid_count_compat", pa.int64()))
     else:
-        merges.append(F.stddev_pop(gcf).alias("cf_std"))
-        # mergeable partials of the per-granule CF so reaggregate() can
-        # re-finalize cf_granule_mean/cf_granule_stddev across periods
-        # (cf_std itself is not mergeable; monthly std comes from these)
-        merges += [
-            F.sum(gcf).alias("cf_granule_sum"),
-            F.count(gcf).alias("cf_granule_count"),
-            F.sum(gcf * gcf).alias("cf_granule_sumsq"),
+        fields += [
+            pa.field("cf_granule_sum", pa.float64()),
+            pa.field("cf_granule_count", pa.int64(), nullable=False),
+            pa.field("cf_granule_sumsq", pa.float64()),
         ]
-    cf_var = next((v for v in spec.variables if v.is_virtual), None)
-    if cf_var is not None and cf_var.bin_edges and "Histogram_Counts" in spec.stats:
-        nbins = len(cf_var.bin_edges) - 1
+    if cf_edges:
+        fields.append(pa.field(
+            "cf_hist", pa.list_(pa.field("element", pa.int64(), nullable=False)), nullable=False
+        ))
+    schema = pa.schema(fields)
+    measures = partials.columns[len(keys) + 1:]
+
+    def merge(batches):
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        rows = pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+        # the per-granule buffers, one per (cell, granule), then the cells
+        first, g = _groups([rows.column(k) for k in (*keys, "granule_id")])
+        cells, cell_of = _groups([rows.column(k).take(first) for k in keys])
+        nc = len(cells)
+        gran = {n: _merge_np(n, rows.column(n), g, len(first)) for n in measures}
+        cell = {n: _merge_np(n, x, cell_of, nc) for n, x in gran.items()}
+        out = {k: rows.column(k).take(first[cells]) for k in keys}
+
+        def stack(names: list[str]) -> np.ndarray:
+            return np.stack([cell[n] for n in names], axis=1)
+
+        for v in spec.physical_variables():
+            n = v.name
+            count = cell[f"{n}_count"]
+            cell[f"{n}_mean"], cell[f"{n}_stddev"] = _moments_np(
+                cell[f"{n}_sum"], count, cell.get(f"{n}_sumsq"))
+            for s in ("min", "max", "sum", "sumsq", "stddev", "mean"):
+                if f"{n}_{s}" in schema.names:
+                    out[f"{n}_{s}"] = pa.array(cell[f"{n}_{s}"], mask=count == 0)
+            out[f"{n}_count"] = pa.array(count)
+            if hists and v.bin_edges:
+                out[f"{n}_hist"] = stack([f"{n}_hist_{i}" for i in range(len(v.bin_edges) - 1)])
+        for jh in joints:
+            nbx = len(spec.variable(jh.varname).bin_edges) - 1
+            nby = len(jh.joint_edges) - 1
+            out[f"{jh.joint_name}_jhist"] = stack(
+                [f"{jh.joint_name}_jhist_{x}_{y}" for x in range(nbx) for y in range(nby)]
+            ).reshape(nc, nbx, nby)
+
+        # cloud fraction: the pixel counts (A11, A12), then each granule's
+        # fraction and the statistics over a cell's granules (A13, A14)
+        cld_pix, tot_pix = cell["g_cld"], cell["g_tot"]
+        cld, tot = gran["g_cld"], gran["g_tot"]
+        seen = tot > 0
+        gcf = np.where(seen, cld / np.maximum(tot, 1), np.nan)
+        cs, fs = cell_of[seen], gcf[seen]
+        n_seen = np.bincount(cs, minlength=nc)
+        none = n_seen == 0
+        out["cld_pix"], out["tot_pix"] = pa.array(cld_pix), pa.array(tot_pix)
+        out["cf_mean"] = pa.array(_moments_np(cld_pix, tot_pix)[0], mask=tot_pix == 0)
+        out["cf_min"] = pa.array(_merge_np("_min", fs, cs, nc), mask=none)
+        out["cf_max"] = pa.array(_merge_np("_max", fs, cs, nc), mask=none)
+        out["grid_count"] = pa.array(np.bincount(cell_of, minlength=nc))
         if spec.strict_compat:
-            # Q1: the reference's CF histogram never accumulates — emit zeros
-            counts = [F.lit(0).cast("long")] * nbins
+            # Q2: the serial driver finalizes ΣCLD, ΣTOT, ΣCLD² as if they
+            # were Σv, n, Σv² — NULL for an all-undetermined cell (the
+            # reference leaves it NaN — found by the hypothesis
+            # differential harness)
+            cld2 = _merge_np("_sum", cld * cld, cell_of, nc)
+            out["cf_std"] = pa.array(_moments_np(cld_pix, tot_pix, cld2)[1], mask=tot_pix == 0)
+            # Q5: +1 per (granule, variable-with-valid-data) + the CF call
+            calls = sum((gran[f"{v.name}_count"] > 0 for v in spec.physical_variables()),
+                        seen.astype(np.int64))
+            out["grid_count_compat"] = pa.array(_merge_np("_sum", calls, cell_of, nc))
         else:
-            b = hist_bucket(gcf, cf_var.bin_edges)
-            counts = [F.count(F.when(b == i, 1)) for i in range(nbins)]
-        merges.append(F.array(*counts).alias("cf_hist"))
-    return merges
+            total = _merge_np("_sum", fs, cs, nc)
+            mean, _ = _moments_np(total, n_seen)
+            dev = fs - mean[cs]  # population std, two-pass
+            m2 = _merge_np("_sum", dev * dev, cs, nc)
+            out["cf_std"] = pa.array(np.sqrt(m2 / np.maximum(n_seen, 1)), mask=none)
+            # mergeable partials of the per-granule CF so reaggregate() can
+            # re-finalize cf_granule_mean/cf_granule_stddev across periods
+            # (cf_std itself is not mergeable; monthly std comes from these)
+            out["cf_granule_sum"] = pa.array(total, mask=none)
+            out["cf_granule_count"] = pa.array(n_seen)
+            out["cf_granule_sumsq"] = pa.array(_merge_np("_sum", fs * fs, cs, nc), mask=none)
+        if cf_edges:
+            nbins = len(cf_edges) - 1
+            if spec.strict_compat:  # Q1: the reference's CF histogram never accumulates
+                out["cf_hist"] = np.zeros((nc, nbins), np.int64)
+            else:
+                out["cf_hist"] = _group_hist(cell_of, nc, hist_bucket_np(gcf, cf_edges), nbins)
+        yield pa.RecordBatch.from_arrays(  # NumPy counts become the list columns
+            [_lists(out[f.name], f.type) if isinstance(out[f.name], np.ndarray)
+             else out[f.name] for f in schema],
+            schema=schema,
+        )
+
+    return partials.repartition(*keys).mapInArrow(merge, from_arrow_schema(schema))
 
 
 def daily_grid(
@@ -316,14 +423,7 @@ def daily_grid(
         raise ValueError("extra_group_cols requires densify_output=False")
     px = prepare_pixels(pixels, granules, spec, end_doy, spill_doy)
     keys = ["cell", *extra_group_cols]
-    partials = granule_partials(px, spec, keys)
-    # re-merge a granule's rows so stage 2 sees one row per (cell, granule)
-    agg = (
-        partials.groupBy(*keys, "granule_id")
-        .agg(*[_merge(c) for c in partials.columns[len(keys) + 1:]])
-        .groupBy(*keys)
-        .agg(*_merges(spec))
-    )
+    agg = cell_merge(granule_partials(px, spec, keys), spec, keys)
     if not densify_output:
         return agg
     zero_cols = [c for c in agg.columns if c.endswith(("_count", "_pix"))]

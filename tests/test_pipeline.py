@@ -363,3 +363,105 @@ def test_daily_grid_empty_input(spark):
     for r in rows:
         assert r["tot_pix"] == 0 and r["ctp_count"] == 0
         assert r["ctp_mean"] is None and r["cf_mean"] is None
+
+
+BOX = dict(lat_bounds=(-20.0, 20.0), lon_bounds=(0.0, 35.0))
+
+
+def _fixture_inputs(spark):
+    return (spark.read.parquet(os.path.join(FIXTURES, "pixels.parquet")),
+            spark.read.parquet(os.path.join(FIXTURES, "granules.parquet")))
+
+
+def _same_rows(want, got):
+    """Per-cell rows agree: integers and histograms exactly, sums, means
+    and extremes to 1e-12 relative. A std from Σv² is compared as its
+    variance, to 1e-12 of the cell's Σv²/n, because the subtraction in
+    ``Σv²/n − mean²`` magnifies the sums' last-bit differences."""
+    assert want.keys() == got.keys()
+    for cell, w in want.items():
+        g = got[cell]
+        for col, a in w.items():
+            b = g[col]
+            if a is None or b is None or not isinstance(a, float):
+                assert a == b, (cell, col)
+            elif col.endswith("_stddev"):
+                second = w[f"{col[:-7]}_sumsq"] / w[f"{col[:-7]}_count"]
+                assert abs(a * a - b * b) <= 1e-12 * second, (cell, col, a, b)
+            else:
+                assert math.isclose(a, b, rel_tol=1e-12), (cell, col, a, b)
+
+
+def test_daily_grid_does_not_depend_on_batch_or_partition_layout(spark):
+    """Stage 1 accumulates each Arrow batch; the cell merge concatenates
+    every batch of a partition. Batches of 50 rows (a granule spans many
+    stage-1 batches and a cell many stage-2 batches) and 1 or 7 shuffle
+    partitions give the rows of the default layout."""
+    from modis_aggregation_spark.config import default_spec
+
+    spec = default_spec(**BOX)
+    pixels, granules = _fixture_inputs(spark)
+
+    def rows():
+        df = daily_grid(spark, spec, pixels, granules, densify_output=False)
+        return {r["cell"]: r.asDict(recursive=True) for r in df.collect()}
+
+    want = rows()
+    for confs in (
+        {"spark.sql.execution.arrow.maxRecordsPerBatch": "50"},
+        {"spark.sql.shuffle.partitions": "1"},
+        {"spark.sql.shuffle.partitions": "7",
+         "spark.sql.adaptive.coalescePartitions.enabled": "false"},
+    ):
+        saved = {k: spark.conf.get(k) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            got = rows()
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+        _same_rows(want, got)
+
+
+_MOMENTS = [(f"{v}_{s}", t, n) for v in ("ctp", "ctt", "cee", "cth") for s, t, n in (
+    ("min", "double", True), ("max", "double", True), ("sum", "double", True),
+    ("count", "bigint", True), ("sumsq", "double", True), ("stddev", "double", True),
+    ("mean", "double", True), ("hist", "array<bigint>", False),
+)] + [
+    ("Emissivity_jhist", "array<array<bigint>>", False),
+    ("Pressure_jhist", "array<array<bigint>>", False),
+    ("cld_pix", "bigint", True), ("tot_pix", "bigint", True), ("cf_mean", "double", True),
+    ("cf_min", "double", True), ("cf_max", "double", True), ("grid_count", "bigint", False),
+    ("cf_std", "double", True),
+]
+_CF_HIST = [("cf_hist", "array<bigint>", False)]
+_GRANULE_CF = [("cf_granule_sum", "double", True), ("cf_granule_count", "bigint", False),
+               ("cf_granule_sumsq", "double", True)]
+
+
+@pytest.mark.parametrize("overrides, extra, want", [
+    ({}, (), [("cell", "bigint", True), *_MOMENTS, *_GRANULE_CF, *_CF_HIST]),
+    ({"strict_compat": True}, (),
+     [("cell", "bigint", True), *_MOMENTS, ("grid_count_compat", "bigint", True), *_CF_HIST]),
+    ({}, ("doy",),
+     [("cell", "bigint", True), ("doy", "int", True), *_MOMENTS, *_GRANULE_CF, *_CF_HIST]),
+], ids=["default", "strict_compat", "doy"])
+def test_daily_grid_undensified_schema(spark, overrides, extra, want):
+    """The per-cell frame's names, order, types and nullability, as the
+    Catalyst aggregate before the NumPy cell merge declared them."""
+    from modis_aggregation_spark.config import default_spec
+
+    pixels, granules = _fixture_inputs(spark)
+    df = daily_grid(spark, default_spec(**BOX, **overrides), pixels, granules,
+                    densify_output=False, extra_group_cols=extra)
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema] == want
+    contains_null = {f.name: f.dataType.containsNull for f in df.schema if f.name.endswith("hist")}
+    assert contains_null == {**{f"{v}_hist": True for v in ("ctp", "ctt", "cee", "cth")},
+                             "Emissivity_jhist": False, "Pressure_jhist": False, "cf_hist": False}
+    if extra:  # the staged per-day partials still merge into the one-shot grid
+        merged = reaggregate(df.withColumnRenamed("doy", "date"))
+        direct = daily_grid(spark, default_spec(**BOX), pixels, granules, densify_output=False)
+        cols = ["ctp_min", "ctp_max", "ctp_count", "cld_pix", "tot_pix", "grid_count", "cf_hist"]
+        assert (sorted(map(tuple, merged.select("cell", *cols).collect()))
+                == sorted(map(tuple, direct.select("cell", *cols).collect())))

@@ -164,7 +164,8 @@ def test_daily_grid_single_pixel_pass(spark):
     """daily_grid reads its pixels once: per-granule partials, then one
     per-cell merge. Aggregating the pixels a second time for the CF stats
     and joining the two results doubled the scan (and, over granule files,
-    the decode)."""
+    the decode). Both stages are NumPy functions on either side of one
+    hash exchange: no Catalyst aggregate is left to plan or run."""
     from modis_aggregation_spark.config import default_spec
     from modis_aggregation_spark.plans.pipeline import daily_grid
 
@@ -175,9 +176,14 @@ def test_daily_grid_single_pixel_pass(spark):
     plan = _executed(df)
     assert plan.count("pixels.parquet") == 1
     assert "SortMergeJoin" not in plan
-    assert plan.count("Exchange hashpartitioning") <= 2  # (cell, granule) + cell
-    # stage 1 is one NumPy accumulator over the pixels
-    assert [n.getClass().getSimpleName() for n in plan_nodes(df)].count("MapInArrowExec") == 1
+    assert plan.count("Exchange hashpartitioning") == 1  # the cell merge's
+    names = [n.getClass().getSimpleName() for n in plan_nodes(df)]
+    assert names.count("MapInArrowExec") == 2
+    assert not {"HashAggregateExec", "ObjectHashAggregateExec"} & set(names), names
+    # stage 1 (the accumulator) below the exchange, stage 2 (the merge) above it
+    (exchange,) = [n for n in plan_nodes(df)
+                   if n.getClass().getSimpleName() == "ShuffleExchangeExec"]
+    assert [n.getClass().getSimpleName() for n in plan_nodes(exchange)].count("MapInArrowExec") == 1
 
 
 def test_stream_daily_grid_single_pixel_pass(spark, tmp_path):
@@ -242,6 +248,7 @@ def test_daily_grid_never_shuffles_pixels(spark):
     with measure(spark, "daily_grid_pixel_shuffle") as m:
         daily_grid(spark, spec, px, gr).write.format("noop").mode("overwrite").save()
     assert 0 < m["shuffle_records"] < 0.01 * pixels, (m["shuffle_records"], pixels)
+    assert m["jobs"] <= 4, m
 
 
 def test_x26_pii_scrub_map_only(spark):
