@@ -265,9 +265,9 @@ def cell_merge(partials: DataFrame, spec: AggregationSpec, keys: list[str]) -> D
     granule) it forms the granule's cloud fraction, and per cell the
     statistics over those: min, max, std, histogram and the mergeable
     sum/count/Σ (A13), the granule count (A14) and, under
-    ``strict_compat``, Q1/Q2/Q5. The declared schema is explicit: the
-    parent aggregate's types and nullability, which ``mapInArrow`` does
-    not derive from the data.
+    ``strict_compat``, Q1/Q2/Q5. The schema is declared, not derived
+    from an empty batch, because it carries NOT NULL columns and list
+    items that ``mapInArrow`` cannot infer from the data.
     """
     has_std = "Standard_Deviation" in spec.stats
     hists = "Histogram_Counts" in spec.stats

@@ -448,8 +448,8 @@ _GRANULE_CF = [("cf_granule_sum", "double", True), ("cf_granule_count", "bigint"
      [("cell", "bigint", True), ("doy", "int", True), *_MOMENTS, *_GRANULE_CF, *_CF_HIST]),
 ], ids=["default", "strict_compat", "doy"])
 def test_daily_grid_undensified_schema(spark, overrides, extra, want):
-    """The per-cell frame's names, order, types and nullability, as the
-    Catalyst aggregate before the NumPy cell merge declared them."""
+    """The per-cell frame's names, order, types and nullability (list
+    items included) under the default, strict and per-day specs."""
     from modis_aggregation_spark.config import default_spec
 
     pixels, granules = _fixture_inputs(spark)
