@@ -177,12 +177,12 @@ def test_daily_grid_single_pixel_pass(spark):
     assert plan.count("pixels.parquet") == 1
     assert "SortMergeJoin" not in plan
     assert plan.count("Exchange hashpartitioning") == 1  # the cell merge's
-    names = [n.getClass().getSimpleName() for n in plan_nodes(df)]
+    nodes = list(plan_nodes(df))
+    names = [n.getClass().getSimpleName() for n in nodes]
     assert names.count("MapInArrowExec") == 2
     assert not {"HashAggregateExec", "ObjectHashAggregateExec"} & set(names), names
     # stage 1 (the accumulator) below the exchange, stage 2 (the merge) above it
-    (exchange,) = [n for n in plan_nodes(df)
-                   if n.getClass().getSimpleName() == "ShuffleExchangeExec"]
+    (exchange,) = [n for n, name in zip(nodes, names) if name == "ShuffleExchangeExec"]
     assert [n.getClass().getSimpleName() for n in plan_nodes(exchange)].count("MapInArrowExec") == 1
 
 
