@@ -55,7 +55,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
@@ -100,23 +100,6 @@ def prepare_pixels(
     return with_cell(df, spec)
 
 
-def _finalize_moments(
-    total: Column, count: Column, sumsq: Column | None = None
-) -> tuple[Column, Column | None]:
-    """``mean = Σv/n`` and population ``std = sqrt(Σv²/n − mean²)`` from
-    merged partials — the reference's finalize
-    (``aggregate_functions.py:250-254,711``). std is None without ``sumsq``.
-
-    The count>0 guard keeps greatest() (which skips NULLs) from turning an
-    empty cell's NULL std into 0.0.
-    """
-    n = F.nullif(count, F.lit(0))
-    mean = total / n
-    if sumsq is None:
-        return mean, None
-    return mean, F.when(count > 0, F.sqrt(F.greatest(sumsq / n - mean * mean, F.lit(0.0))))
-
-
 def _groups(columns: list[pa.Array]) -> tuple[np.ndarray, np.ndarray]:
     """Rows grouped by equal values of ``columns``: each group's first row
     and every row's group, from the columns' dictionary codes and
@@ -146,8 +129,8 @@ def granule_partials(px: DataFrame, spec: AggregationSpec, keys: list[str]) -> D
     It returns one row per distinct (``keys``, granule) of a batch:
     cloudy/determined pixel counts (``g_cld``/``g_tot``), per-variable
     min/max/sum/count/Σv² and the histogram and joint-histogram bucket
-    counts as flat long columns; ``cell_merge`` (batch) and ``_merge``
-    (stream) combine the rows of a granule that spans batches or
+    counts as flat long columns; ``cell_merge`` (batch) and the stream's
+    ``_merge`` combine the rows of a granule that spans batches or
     partitions. A NULL measure (NaN here) counts
     nowhere; min, max, sum and Σv² are NULL where no value counted, as
     Spark's aggregates are. The declared schema is the function's own
@@ -212,21 +195,16 @@ def granule_partials(px: DataFrame, spec: AggregationSpec, keys: list[str]) -> D
     return px.mapInArrow(lambda batches: map(accumulate, batches), from_arrow_schema(partials))
 
 
-def _merge(name: str) -> Column:
-    """The fmin/fmax/+ merge of one partial column."""
-    agg = F.min if name.endswith("_min") else F.max if name.endswith("_max") else F.sum
-    return agg(name).alias(name)
-
-
 def _merge_np(name: str, x: pa.Array | np.ndarray, g: np.ndarray, ng: int) -> np.ndarray:
-    """``_merge``'s rule in NumPy: fmin/fmax/+ of one partial column over
-    the groups ``g``. A NULL reads as the merge's identity (+inf, -inf,
-    0), and so does a group without values, which its count masks."""
+    """The reference's merge: fmin of a ``_min`` column, fmax of a ``_max``
+    one, + of any other (rows, or rows × bins), over the groups ``g``. A
+    NULL reads as the identity (+inf, -inf, 0), and so does a group
+    without values, which its count masks."""
     fn, start = (np.minimum, np.inf) if name.endswith("_min") else (
         (np.maximum, -np.inf) if name.endswith("_max") else (np.add, 0))
     if isinstance(x, pa.Array):
         x = x.fill_null(start).to_numpy()
-    out = np.full(ng, start, x.dtype)
+    out = np.full((ng, *x.shape[1:]), start, x.dtype)
     fn.at(out, g, x)
     return out
 
@@ -234,8 +212,9 @@ def _merge_np(name: str, x: pa.Array | np.ndarray, g: np.ndarray, ng: int) -> np
 def _moments_np(
     total: np.ndarray, count: np.ndarray, sumsq: np.ndarray | None = None
 ) -> tuple[np.ndarray, np.ndarray | None]:
-    """``_finalize_moments`` over arrays; a group without values (count 0)
-    reads NaN, which the caller masks."""
+    """``mean = Σv/n`` and population ``std = sqrt(Σv²/n − mean²)``, the
+    reference's finalize (``aggregate_functions.py:250-254,711``); std is
+    None without ``sumsq``. A count of 0 reads NaN, which the caller masks."""
     with np.errstate(divide="ignore", invalid="ignore"):
         mean = total / count
         if sumsq is None:
@@ -250,6 +229,14 @@ def _lists(counts: np.ndarray, type_: pa.DataType) -> pa.Array:
     inner = _lists(counts.reshape(-1, *counts.shape[2:]), type_.value_type)
     offsets = np.arange(len(counts) + 1, dtype=np.int32) * counts.shape[1]
     return pa.ListArray.from_arrays(pa.array(offsets), inner, type=type_)
+
+
+def _counts(col: pa.Array) -> np.ndarray:
+    """``_lists``' inverse: equal-length list rows as a (rows, bins[, bins]) array."""
+    if not pa.types.is_list(col.type):
+        return col.to_numpy(zero_copy_only=False)
+    inner = _counts(col.flatten())
+    return inner.reshape(len(col), -1, *inner.shape[1:])
 
 
 def cell_merge(partials: DataFrame, spec: AggregationSpec, keys: list[str]) -> DataFrame:
@@ -436,64 +423,67 @@ def daily_grid(
 
 
 def reaggregate(staged: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
-    """Monthly (or any period) L3 from staged daily partials (A15/A16).
+    """Monthly (or any period) L3 from staged partials (A15/A16): the
+    undensified per-cell frame (``densify_output=False``) with a period
+    column (e.g. ``date``), or the stream's day partials.
 
-    Input: the UNdensified per-cell daily frame (``densify_output=False``)
-    with an extra period column (e.g. ``date``). Mergeable partials re-add
-    (sum/count/sumsq/hists/pixel counts), extremes re-extremize, and
-    mean/std/cf are re-finalized from the merged partials — the exact
-    fmin/fmax/+ merge semantics of the distributed drivers
-    (``MODIS_Aggregation_DASK.py:127-134``).
-
-    Array histograms merge with element-wise sums via ``zip_with`` chained
-    through ``reduce``-style aggregation (JVM-side, no UDF).
-
-    Finalized-only columns (daily ``cf_std``, ``cf_mean`` …) are dropped
-    and recomputed from merged partials where those exist: cf_mean from
-    cld/tot sums; cf_granule_mean/cf_granule_stddev from the
-    cf_granule_{sum,count,sumsq} partials emitted by ``daily_grid``.
-    (strict_compat's Q2 cf_std is intentionally daily-only — the reference
-    drivers themselves disagree on its monthly form, SURVEY Q2.)
+    The rows are hash-partitioned by ``group_cols`` and one NumPy function
+    per partition merges them by ``_merge_np``'s fmin/fmax/+ rule
+    (``MODIS_Aggregation_DASK.py:127-134``): the scalar partials
+    (``_min/_max/_sum/_sumsq/_count/_pix``, ``grid_count[_compat]``), NULL
+    where every row of the group is, and the ``_hist``/``_jhist`` arrays
+    element by element. ``{base}_mean``/``{base}_stddev`` (wherever
+    ``{base}_sum`` and ``{base}_count`` exist, ``cf_granule_*`` included;
+    std needs ``_sumsq``) and ``cf_mean`` are computed again, NULL where
+    the count is 0; other columns (daily ``cf_std``, ``lat_idx`` …) are
+    dropped. strict_compat's Q2 cf_std is daily-only: the reference
+    drivers disagree on its monthly form (SURVEY Q2). Columns keep the
+    staged order; computed columns it lacks come last.
     """
     group_cols = group_cols or ["cell"]
-    aggs = []
-    for fname, dtype in staged.dtypes:
-        if fname in group_cols or fname in ("lat_idx", "lon_idx", "granule_id", "date"):
-            continue
-        if fname.endswith(("_min", "_max", "_sum", "_sumsq", "_count", "_pix")) or fname in (
-            "grid_count", "grid_count_compat"
-        ):
-            aggs.append(_merge(fname))
-        elif fname.endswith(("_hist", "_jhist")):
-            # element-wise array sum: aggregate over the group with zip_with
-            depth2 = dtype.startswith("array<array")
-            if depth2:
-                merge = lambda a, b: F.zip_with(  # noqa: E731
-                    a, b, lambda x, y: F.zip_with(x, y, lambda p, q: p + q)
-                )
-            else:
-                merge = lambda a, b: F.zip_with(a, b, lambda x, y: x + y)  # noqa: E731
-            lst = F.collect_list(fname)
-            rest = F.slice(lst, 2, F.greatest(F.size(lst) - 1, F.lit(0)))
-            aggs.append(
-                F.aggregate(rest, F.element_at(lst, 1), merge).alias(fname)
-            )
-        # finalized columns (mean/std/cf_mean/...) are recomputed below
-    merged = staged.groupBy(*group_cols).agg(*aggs)
+    scalars = [c for c in staged.columns if c not in group_cols and (
+        c.endswith(("_min", "_max", "_sum", "_sumsq", "_count", "_pix"))
+        or c in ("grid_count", "grid_count_compat"))]
+    hists = [c for c in staged.columns
+             if c not in group_cols and c.endswith(("_hist", "_jhist"))]
+    moments = {}  # computed column -> its (sum, count, sumsq or None) partials
+    for c in scalars:
+        base = c[:-4]
+        if c.endswith("_sum") and f"{base}_count" in scalars:
+            moments[f"{base}_mean"] = (c, f"{base}_count", None)
+            if f"{base}_sumsq" in scalars:
+                moments[f"{base}_stddev"] = (c, f"{base}_count", f"{base}_sumsq")
+    if {"cld_pix", "tot_pix"} <= set(scalars):
+        moments["cf_mean"] = ("cld_pix", "tot_pix", None)
 
-    # re-finalize from merged partials
-    out_cols: dict[str, F.Column] = {}
-    names = set(merged.columns)
-    for n in names:
-        base = n[:-4]
-        if n.endswith("_sum") and f"{base}_count" in names:
-            ss = f"{base}_sumsq"
-            mean, std = _finalize_moments(
-                F.col(n), F.col(f"{base}_count"), F.col(ss) if ss in names else None
-            )
-            out_cols[f"{base}_mean"] = mean
-            if std is not None:
-                out_cols[f"{base}_stddev"] = std
-    if {"cld_pix", "tot_pix"} <= names:
-        out_cols["cf_mean"] = F.col("cld_pix") / F.nullif(F.col("tot_pix"), F.lit(0))
-    return merged.withColumns(out_cols)
+    rows_in = staged.select(*[c for c in staged.columns
+                              if c in group_cols or c in scalars or c in hists])
+    kept = to_arrow_schema(rows_in.schema)
+    names = [c for c in staged.columns if c in kept.names or c in moments]
+    names += [c for c in moments if c not in names]
+    schema = pa.schema([kept.field(c) if c in kept.names else pa.field(c, pa.float64())
+                        for c in names])
+
+    def merge(batches):
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        rows = pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+        first, g = _groups([rows.column(k) for k in group_cols])
+        ng = len(first)
+        out = {k: rows.column(k).take(first) for k in group_cols}
+        merged = {}
+        for c in scalars:
+            x = rows.column(c)
+            merged[c] = _merge_np(c, x, g, ng)
+            valid = np.bincount(g[x.is_valid().to_numpy(zero_copy_only=False)], minlength=ng)
+            out[c] = pa.array(merged[c], schema.field(c).type, mask=valid == 0)
+        for c in hists:
+            out[c] = _lists(_merge_np(c, _counts(rows.column(c)), g, ng), schema.field(c).type)
+        for c, (total, count, sumsq) in moments.items():
+            mean, std = _moments_np(merged[total], merged[count],
+                                    None if sumsq is None else merged[sumsq])
+            out[c] = pa.array(mean if sumsq is None else std, mask=merged[count] == 0)
+        yield pa.RecordBatch.from_arrays([out[f.name] for f in schema], schema=schema)
+
+    return rows_in.repartition(*group_cols).mapInArrow(merge, from_arrow_schema(schema))

@@ -21,17 +21,23 @@ from __future__ import annotations
 
 from dataclasses import replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from modis_aggregation_spark.config import AggregationSpec
 from modis_aggregation_spark.functions.materialize import shared_frame
 from modis_aggregation_spark.operators.stats import with_cell, with_cloud_mask
-from modis_aggregation_spark.plans.pipeline import _merge, granule_partials
+from modis_aggregation_spark.plans.pipeline import granule_partials
 
 # plan leaves that hold their rows in memory: nothing can add rows to them
 _IN_MEMORY = ("LocalRelation", "LogicalRDD")
+
+
+def _merge(name: str) -> Column:
+    """The fmin/fmax/+ merge of one partial column."""
+    agg = F.min if name.endswith("_min") else F.max if name.endswith("_max") else F.sum
+    return agg(name).alias(name)
 
 
 def stream_pixels(
@@ -92,7 +98,7 @@ def write_daily_grids(
     nothing in this mode: days streamed × occupied cells, ≤ 64,800 rows per
     day at 1°) and re-emits all of it, so each batch rewrites every day's
     partition. Downstream readers see one directory per day of mergeable
-    partials (finalize with ``plans.pipeline.reaggregate`` column logic).
+    partials, which ``plans.pipeline.reaggregate`` merges and finalizes.
 
     ``trigger_available_now`` is refused over ``modis_granules``: PySpark's
     Python stream reader has no admission control, so the query would stop
@@ -132,9 +138,8 @@ def stream_daily_grid(
     statistics: pixel counts, per-variable sum/count/sumsq/min/max and
     the CF ratio. ``granules`` carries (granule_id, date, hhmm). The
     watermark is ``spec.shift_hours``, the definition-of-day spill.
-    Finalization (mean/std) composes downstream exactly as in
-    ``plans.pipeline.reaggregate`` — partials are the streaming-safe
-    representation.
+    Mean and std are left to ``plans.pipeline.reaggregate``, which merges
+    and finalizes these partials — the streaming-safe representation.
     """
     moments = replace(spec, stats=("Minimum", "Maximum", "Standard_Deviation"))
     partials = granule_partials(

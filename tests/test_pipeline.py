@@ -3,6 +3,8 @@ strict-compat quirks (Q1/Q2/Q5), packing rules (Q10), CLI."""
 
 import math
 import os
+import subprocess
+import sys
 
 import numpy as np
 import pytest
@@ -100,49 +102,90 @@ def test_histogram_total_equals_inrange_count(grid):
 
 def test_reaggregate_equals_direct(spark):
     """Partial/final equivalence (SURVEY §5.2.3): per-granule-group staged
-    dailies re-merged == one-shot aggregation over everything."""
-    pixels = spark.read.parquet(os.path.join(FIXTURES, "pixels.parquet"))
-    granules = spark.read.parquet(os.path.join(FIXTURES, "granules.parquet"))
-    direct = daily_grid(spark, SPEC, pixels, granules, densify_output=False)
-
-    # stage per "day" (split granules by doy), then merge
-    staged = []
-    for doy in [r["doy"] for r in granules.select("doy").distinct().collect()]:
-        ids = granules.filter(F.col("doy") == doy).select("granule_id")
-        sub = pixels.join(ids, "granule_id", "left_semi")
-        staged.append(
-            daily_grid(spark, SPEC, sub, granules, densify_output=False)
-            .withColumn("date", F.lit(str(doy)))
-        )
+    dailies re-merged == one-shot aggregation over everything, for every
+    column of the merged frame, under ``SPEC`` and its ``strict_compat``
+    copy. The pixels of lat [0, 1) × lon [10, 11) have no ctp in any
+    period: that cell's ctp stays NULL with a count of 0."""
+    from dataclasses import replace
     from functools import reduce
-    merged = reaggregate(reduce(lambda a, b: a.unionByName(b), staged))
 
-    d = {r["cell"]: r for r in direct.collect()}
-    m = {r["cell"]: r for r in merged.collect()}
-    assert set(d) == set(m)
-    for cell in d:
-        for col in ("ctp_min", "ctp_max", "ctp_sum", "ctp_count", "ctp_mean",
-                    "ctp_stddev", "cld_pix", "tot_pix", "cf_mean"):
-            a, b = d[cell][col], m[cell][col]
-            if a is None or b is None:
-                assert a == b, (cell, col)
-            else:
-                # stddev: both paths finalize from Σv² (the reference's own
-                # formula, aggregate_functions.py:711), summed in different
-                # orders — cancellation costs ~1e-8
-                tol = 1e-6 if col.endswith("_stddev") else 1e-9
-                assert a == pytest.approx(b, abs=tol), (cell, col)
-        assert list(d[cell]["ctp_hist"]) == list(m[cell]["ctp_hist"])
-        assert [list(x) for x in d[cell]["ctp_cee_jhist"]] == [
-            list(x) for x in m[cell]["ctp_cee_jhist"]
-        ]
-        # merged per-granule CF std (re-finalized from cf_granule_* partials)
-        # equals the direct daily stddev_pop over all granules
-        a, b = d[cell]["cf_std"], m[cell]["cf_granule_stddev"]
-        if a is None or b is None:
-            assert (a is None) == (b is None or d[cell]["cf_granule_count"] == 0), cell
-        else:
-            assert a == pytest.approx(b, abs=1e-6), cell
+    pixels, granules = _fixture_inputs(spark)
+    no_ctp = (F.floor("lat") == 0) & (F.floor("lon") == 10)
+    pixels = pixels.withColumn("ctp", F.when(no_ctp, None).otherwise(F.col("ctp")))
+    days = [r["doy"] for r in granules.select("doy").distinct().collect()]
+    for spec in (SPEC, replace(SPEC, strict_compat=True)):
+        direct = daily_grid(spark, spec, pixels, granules, densify_output=False)
+        # stage per "day" (split granules by doy), then merge
+        staged = []
+        for doy in days:
+            ids = granules.filter(F.col("doy") == doy).select("granule_id")
+            sub = pixels.join(ids, "granule_id", "left_semi")
+            staged.append(
+                daily_grid(spark, spec, sub, granules, densify_output=False)
+                .withColumn("date", F.lit(str(doy)))
+            )
+        merged = reaggregate(reduce(lambda a, b: a.unionByName(b), staged))
+
+        d = {r["cell"]: r.asDict(recursive=True) for r in direct.collect()}
+        m = {r["cell"]: r.asDict(recursive=True) for r in merged.collect()}
+        refinalized = ("cf_granule_mean", "cf_granule_stddev")
+        cols = [c for c in merged.columns if c not in refinalized]
+        assert {"cf_min", "cf_max", "grid_count", "ctp_cee_jhist", "cf_hist"} <= set(cols)
+        assert ("grid_count_compat" in cols) == spec.strict_compat
+        assert ("cf_granule_count" in cols) != spec.strict_compat
+        _same_rows({cell: {c: r[c] for c in cols} for cell, r in d.items()},
+                   {cell: {c: r[c] for c in cols} for cell, r in m.items()})
+
+        r = m[20 * SPEC.nlon + 10]  # lat_idx 20 (lat 0), lon_idx 10
+        assert r["tot_pix"] > 0 and r["ctp_count"] == 0
+        assert r["ctp_min"] is r["ctp_mean"] is r["ctp_stddev"] is None
+
+        if spec.strict_compat:
+            assert not set(refinalized) & set(merged.columns)
+            continue
+        # the merged per-granule CF mean and std (re-finalized from the
+        # cf_granule_* partials) equal the mean and stddev_pop of the
+        # direct grid's per-granule fractions
+        for cell, r in d.items():
+            mean, std = m[cell]["cf_granule_mean"], m[cell]["cf_granule_stddev"]
+            if r["cf_granule_count"] == 0:
+                assert mean is std is r["cf_std"] is None, cell
+                continue
+            assert math.isclose(mean, r["cf_granule_sum"] / r["cf_granule_count"],
+                                rel_tol=1e-12), cell
+            # both finalize from Σv², summed in different orders:
+            # cancellation costs ~1e-8
+            assert std == pytest.approx(r["cf_std"], abs=1e-6), cell
+
+
+def test_reaggregate_schema_does_not_depend_on_hash_seed():
+    """reaggregate's columns come in one order whatever the process's
+    string-hash seed: two interpreters with PYTHONHASHSEED 1 and 2 build
+    the same schema for the doy-staged default product."""
+    repo = os.path.dirname(FIXTURES)
+    script = f"""
+from modis_aggregation_spark import get_spark
+from modis_aggregation_spark.config import default_spec
+from modis_aggregation_spark.plans.pipeline import daily_grid, reaggregate
+spark = get_spark("reaggregate_schema", master="local[1]", shuffle_partitions=1)
+pixels = spark.read.parquet({os.path.join(FIXTURES, "pixels.parquet")!r})
+granules = spark.read.parquet({os.path.join(FIXTURES, "granules.parquet")!r})
+spec = default_spec(lat_bounds=(-20.0, 20.0), lon_bounds=(0.0, 35.0))
+staged = daily_grid(spark, spec, pixels, granules, densify_output=False,
+                    extra_group_cols=("doy",))
+print("SCHEMA", reaggregate(staged).schema.json())
+spark.stop()
+"""
+    schemas = []
+    for seed in ("1", "2"):
+        path = os.pathsep.join(filter(None, (repo, os.environ.get("PYTHONPATH"))))
+        env = {**os.environ, "PYTHONHASHSEED": seed, "PYTHONPATH": path}
+        run = subprocess.run([sys.executable, "-c", script], env=env, capture_output=True,
+                             text=True, timeout=600)
+        assert run.returncode == 0, run.stderr[-3000:]
+        schemas.append([line for line in run.stdout.splitlines() if line.startswith("SCHEMA ")])
+    assert len(schemas[0]) == 1
+    assert schemas[0] == schemas[1]
 
 
 def test_strict_compat_quirks(spark):

@@ -149,11 +149,19 @@ def test_runtime_bloom_filter_injects_on_selective_join(spark):
 
 def test_m13_single_pass_staging(spark):
     """Monthly reagg must stage per-day partials in ONE pass over the
-    pixels (round 1 unioned a plan branch per day: 51 redundant scans)."""
-    plan = _plan(spark, "m13_monthly_reagg")
+    pixels (round 1 unioned a plan branch per day: 51 redundant scans).
+    Both merges are NumPy functions after a hash exchange, the (cell, doy)
+    merge of the staged partials and ``reaggregate``'s period merge: no
+    Catalyst aggregate and no ``collect_list`` of histogram arrays."""
+    df = entry.queries()["m13_monthly_reagg"](spark, SF)
+    plan = _executed(df)
     assert plan.count("pixels.parquet") == 1  # one scan, branches reused
-    assert plan.count("Exchange hashpartitioning") <= 3  # (cell,doy) stage + cell merge
+    assert plan.count("Exchange hashpartitioning") == 2
     assert "SortMergeJoin" not in plan
+    assert "collect_list" not in plan
+    names = [n.getClass().getSimpleName() for n in plan_nodes(df)]
+    assert names.count("MapInArrowExec") == 3
+    assert not {"HashAggregateExec", "ObjectHashAggregateExec"} & set(names), names
 
 
 def _executed(df):

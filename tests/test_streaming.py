@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from modis_aggregation_spark.config import AggregationSpec, VariableSpec
 from modis_aggregation_spark.operators.stats import with_cell, with_cloud_mask
+from modis_aggregation_spark.plans.pipeline import daily_grid, reaggregate
 from modis_aggregation_spark.streaming.daily_stream import (
     stream_daily_grid,
     stream_pixels,
@@ -221,6 +222,22 @@ def test_write_daily_grids_partitioned_sink(spark, staged_dir, tmp_path):
         F.sum(F.when(F.col("cm").between(0, 1), 1).otherwise(0))
     ).first()[0]
     assert total_cld == want_cld
+    # the day partials merge and finalize into the one-shot batch grid
+    cols = ["ctp_min", "ctp_max", "ctp_count", "ctp_mean", "ctp_stddev",
+            "cld_pix", "tot_pix", "cf_mean"]
+    merged = reaggregate(result, ["cell"]).select("cell", *cols)
+    batch = daily_grid(spark, SPEC, px, granules, densify_output=False).select("cell", *cols)
+    got = {r["cell"]: r for r in merged.collect()}
+    want = {r["cell"]: r for r in batch.collect()}
+    assert got.keys() == want.keys()
+    for cell, w in want.items():
+        g = got[cell]
+        for col in cols:
+            if w[col] is None or col not in ("ctp_mean", "ctp_stddev"):
+                assert g[col] == w[col], (cell, col)
+            else:
+                tol = 1e-6 if col == "ctp_stddev" else 1e-9
+                assert g[col] == pytest.approx(w[col], abs=tol), (cell, col)
 
 
 def test_stream_interval_join_equals_batch(spark, tmp_path):
